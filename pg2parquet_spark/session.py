@@ -17,16 +17,10 @@ import os
 from pyspark.sql import SparkSession
 
 ENV_CPUS = "SPARK_GRAFT_CPUS"
-ENV_SF_DIR = "SPARK_GRAFT_SF_DIR"
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
 def default_cpus() -> int:
     return int(os.environ.get(ENV_CPUS, "32"))
-
-
-def default_sf_dir() -> str:
-    return os.environ.get(ENV_SF_DIR, DEFAULT_SF_DIR)
 
 
 def get_spark(

@@ -81,6 +81,41 @@ def test_copy_partitioned_read_preserves_all_rows(spark, live_pg):
     assert df.select("id").distinct().count() == 1000
     # range splits are disjoint: the global sum survives
     assert df.agg(F.sum("id")).collect()[0][0] == 1000 * 1001 // 2
+    # every range gets its own task: partition i holds exactly range i
+    per_part = (
+        df.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*").alias("n"), F.min("id").alias("lo"))
+        .orderBy("p")
+        .collect()
+    )
+    assert [(r.p, r.n, r.lo) for r in per_part] == [
+        (0, 250, 1), (1, 250, 251), (2, 250, 501), (3, 250, 751)
+    ]
+    # ...placed without a shuffle
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def test_copy_table_scan_keeps_identifier_case_and_quotes(spark, live_pg):
+    """probe_schema resolves the table exactly as the scan's quote_ident
+    does: PG must not case-fold "MixedCase", and a quote in the name must
+    not break the catalog SQL."""
+    from pg2parquet_spark.sources import pgcopy
+
+    argv = pgcopy.resolve_target(live_pg).argv()
+    for table in ("MixedCase", "it's"):
+        ident = '"' + table.replace('"', '""') + '"'
+        subprocess.run(
+            argv + ["-c", (
+                f"DROP TABLE IF EXISTS {ident}; "
+                f"CREATE TABLE {ident} (id int, \"Label\" text); "
+                f"INSERT INTO {ident} VALUES (1, 'a'), (2, NULL)"
+            )],
+            check=True, capture_output=True,
+        )
+        df = pgcopy.read(spark, live_pg, table=table)
+        assert dict(df.dtypes) == {"id": "int", "Label": "string"}
+        assert sorted(df.collect()) == [(1, "a"), (2, None)]
 
 
 def test_copy_query_pushdown_runs_server_side(spark, live_pg):

@@ -1,200 +1,13 @@
-"""Registry rotation-policy tests: the ordering that decides which queries
-enter the driver's next verification window must be change-aware (r6 review
-item) — a rewritten module re-enters the window; a still-proven query
-rotates by age."""
+"""Registry contract: ``load_all()`` imports every operator module and
+returns the registry in registration order."""
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
-
-from pg2parquet_spark import registry as reg
+from pg2parquet_spark.registry import REGISTRY, load_all
 
 
-def test_rotation_key_groups_and_order():
-    verified = {"a_old": 1, "b_new": 0, "c_changed": 5, "d_recent": 6}
-    changed = {"c_changed"}
-    names = sorted(verified, key=lambda n: reg._rotation_key(n, verified, changed))
-    # group 0 alphabetical (never-green + changed), then group 1 by age
-    assert names == ["b_new", "c_changed", "a_old", "d_recent"]
-
-
-def test_rotation_group0_cycles_from_cursor():
-    """r7 ADVICE: plain alphabetical order within group 0 starved
-    late-alphabet members whenever the group outgrew the sampled window.
-    With the cursor (= alphabetically-greatest name the newest round
-    verified), group 0 resumes AFTER the last window's end and wraps."""
-    verified = {"b_seen": 7, "a_stale": 0, "m_stale": 0, "z_stale": 0}
-    changed = set()
-    cursor = reg._group0_cursor(verified)
-    assert cursor == "b_seen"
-    names = sorted(
-        ("a_stale", "m_stale", "z_stale"),
-        key=lambda n: reg._rotation_key(n, verified, changed, cursor),
-    )
-    # names after the cursor first (m, z), then the wrap-around (a)
-    assert names == ["m_stale", "z_stale", "a_stale"]
-    # ties to the newest round: the greatest name wins the cursor
-    assert reg._group0_cursor({"x": 3, "y": 3, "c": 2}) == "y"
-    assert reg._group0_cursor({}) == ""
-
-
-def test_changed_since_verified_flags_blob_drift(tmp_path):
-    """A query whose module's current blob id differs from the one recorded
-    at its last green round is flagged; matching blobs and unknown rounds
-    degrade to 'unchanged' (the pre-tool age-only behavior).
-
-    The fingerprints file lives under tmp_path (r7 ADVICE: the old in-place
-    swap of the committed VERIFIED_FINGERPRINTS.json meant a hard
-    interruption or a parallel load_all() observed — or permanently kept —
-    a corrupted file and a different registry ordering); module paths still
-    resolve against the live package, so the blob-id comparison is real."""
-    reg.load_all()  # import side effect populates REGISTRY
-    spec = reg.REGISTRY["dedup_exact"]
-    mod_rel = "pg2parquet_spark/operators/dedup.py"
-    real_root = Path(reg.__file__).resolve().parent.parent
-    cur = reg._git_blob_id(real_root / mod_rel)
-    fp_path = tmp_path / "VERIFIED_FINGERPRINTS.json"
-    verified = {"dedup_exact": 3}
-    fp_path.write_text(json.dumps({"rounds": {"3": {mod_rel: cur}}}))
-    assert (
-        reg._changed_since_verified(tmp_path, {"dedup_exact": spec}, verified)
-        == set()
-    )
-    fp_path.write_text(json.dumps({"rounds": {"3": {mod_rel: "0" * 40}}}))
-    assert reg._changed_since_verified(
-        tmp_path, {"dedup_exact": spec}, verified
-    ) == {"dedup_exact"}
-    # unknown round → unchanged
-    assert (
-        reg._changed_since_verified(
-            tmp_path, {"dedup_exact": spec}, {"dedup_exact": 99}
-        )
-        == set()
-    )
-
-
-def test_git_blob_id_matches_git(tmp_path):
-    """_git_blob_id must agree with `git hash-object` — the committed
-    VERIFIED_FINGERPRINTS.json stores ls-tree blob ids and the registry
-    compares working-tree files against them."""
-    import subprocess
-
-    f = tmp_path / "x.py"
-    f.write_bytes(b"print('hello')\n")
-    want = subprocess.run(
-        ["git", "hash-object", str(f)], capture_output=True, text=True, check=True
-    ).stdout.strip()
-    assert reg._git_blob_id(f) == want
-
-
-def test_group0_cursor_ignores_group1_reverifications():
-    """r8 ADVICE: a late-alphabet GROUP-1 re-verification (first green in an
-    older round) must not push the cursor past every group-0 member. Only
-    names whose FIRST green is the newest round (provably group 0 in that
-    window) set the cursor."""
-    verified = {"b_new": 7, "z_reverified": 7, "a_stale": 3}
-    first_green = {"b_new": 7, "z_reverified": 2, "a_stale": 3}
-    assert reg._group0_cursor(verified, first_green) == "b_new"
-    # no first-greens in the newest window → plain alphabetical fallback
-    assert reg._group0_cursor({"z": 5}, {"z": 1}) == ""
-
-
-SRC_V1 = '''
-import math
-
-SCALE = 10
-
-def helper(x):
-    return x * SCALE
-
-@register("q_a", oracle="SELECT 1 AS one")
-def q_a(spark, sf_dir):
-    """docstring"""
-    return helper(1)
-
-@register("q_b", oracle="SELECT 2 AS two", doc="prose")
-def q_b(spark, sf_dir):
-    return math.floor(2.5)
-
-@register("q_composed")
-def q_composed(spark, sf_dir):
-    return q_a(spark, sf_dir)
-'''
-
-
-def test_fn_fingerprints_ignore_prose_edits():
-    """The r8 verdict's 'Done' criterion: a comment-only / docstring-only /
-    doc=-only module edit flags ZERO queries."""
-    from pg2parquet_spark.fingerprint import module_fingerprints
-
-    base = module_fingerprints(SRC_V1)
-    assert set(base) == {"q_a", "q_b", "q_composed"}
-    prose = (
-        SRC_V1.replace('"""docstring"""', '"""rewritten docstring"""')
-        .replace('doc="prose"', 'doc="new prose"')
-        .replace("import math", "import math  # a new comment\n# another")
-    )
-    assert module_fingerprints(prose) == base
-
-
-def test_fn_fingerprints_scope_to_name_closure():
-    from pg2parquet_spark.fingerprint import module_fingerprints
-
-    base = module_fingerprints(SRC_V1)
-    # editing q_b's body changes ONLY q_b
-    v2 = module_fingerprints(SRC_V1.replace("math.floor(2.5)", "math.floor(3.5)"))
-    assert v2["q_a"] == base["q_a"] and v2["q_composed"] == base["q_composed"]
-    assert v2["q_b"] != base["q_b"]
-    # editing the helper changes q_a (direct ref) and q_composed
-    # (transitively via q_a) but not q_b
-    v3 = module_fingerprints(SRC_V1.replace("x * SCALE", "x + SCALE"))
-    assert v3["q_b"] == base["q_b"]
-    assert v3["q_a"] != base["q_a"] and v3["q_composed"] != base["q_composed"]
-    # editing a module constant flags its users
-    v4 = module_fingerprints(SRC_V1.replace("SCALE = 10", "SCALE = 11"))
-    assert v4["q_b"] == base["q_b"] and v4["q_a"] != base["q_a"]
-    # the oracle string is semantic: changing it flags the query
-    v5 = module_fingerprints(SRC_V1.replace("SELECT 2 AS two", "SELECT 3 AS two"))
-    assert v5["q_b"] != base["q_b"] and v5["q_a"] == base["q_a"]
-
-
-def test_changed_since_verified_v2_fn_granularity(tmp_path):
-    """v2 entries: a module whose blob drifted but whose per-query
-    fingerprint is unchanged (prose edit elsewhere in the module) is NOT
-    flagged; a recorded fn hash that differs IS; a query missing from the
-    recorded fns falls back to the blob comparison."""
-    from pg2parquet_spark.fingerprint import module_fingerprints
-
-    reg.load_all()
-    spec = reg.REGISTRY["dedup_exact"]
-    mod_rel = "pg2parquet_spark/operators/dedup.py"
-    real_root = Path(reg.__file__).resolve().parent.parent
-    cur_blob = reg._git_blob_id(real_root / mod_rel)
-    cur_fns = module_fingerprints((real_root / mod_rel).read_text())
-    fp = tmp_path / "VERIFIED_FINGERPRINTS.json"
-    verified = {"dedup_exact": 3}
-
-    # blob drifted, fn fingerprint identical → unchanged
-    fp.write_text(json.dumps({"rounds": {"3": {mod_rel: {
-        "blob": "0" * 40, "fns": {"dedup_exact": cur_fns["dedup_exact"]}}}}}))
-    assert reg._changed_since_verified(tmp_path, {"dedup_exact": spec}, verified) == set()
-
-    # fn fingerprint drifted → flagged
-    fp.write_text(json.dumps({"rounds": {"3": {mod_rel: {
-        "blob": "0" * 40, "fns": {"dedup_exact": "f" * 40}}}}}))
-    assert reg._changed_since_verified(
-        tmp_path, {"dedup_exact": spec}, verified
-    ) == {"dedup_exact"}
-
-    # query absent from recorded fns + blob drift → blob-fallback flag
-    fp.write_text(json.dumps({"rounds": {"3": {mod_rel: {
-        "blob": "0" * 40, "fns": {}}}}}))
-    assert reg._changed_since_verified(
-        tmp_path, {"dedup_exact": spec}, verified
-    ) == {"dedup_exact"}
-
-    # byte-identical module short-circuits regardless of recorded fns
-    fp.write_text(json.dumps({"rounds": {"3": {mod_rel: {
-        "blob": cur_blob, "fns": {"dedup_exact": "f" * 40}}}}}))
-    assert reg._changed_since_verified(tmp_path, {"dedup_exact": spec}, verified) == set()
+def test_load_all_returns_registration_order():
+    reg = load_all()
+    assert list(reg) == list(REGISTRY)
+    assert len(reg) == 217
+    assert all(reg[name] is REGISTRY[name] for name in reg)
