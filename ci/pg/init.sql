@@ -1,4 +1,5 @@
--- Fixture schema for the live-PG wire tests (tests/test_live_pg.py).
+-- Fixture schema for the live-PG wire tests (tests/test_live_pg_copy.py),
+-- loaded by tools/livepg.py.
 -- Exercises the exotic-type surface the A3 schema probe + typemap rewrite
 -- chain handles (enum / range / composite / pgvector / multidim array),
 -- mirroring the fixtures the reference's py-tests create per-test

@@ -3,7 +3,7 @@
 
 Two source modes:
 - PostgreSQL (the reference's only mode): --connection/--host/--dbname …
-  via the JDBC source (needs the PG JDBC jar on the classpath);
+  via the COPY source (needs ``psql`` on PATH);
 - parquet fixture dir (ours, for PG-less environments): --input-dir
   registers each table file as a view and --query runs Spark SQL over them.
 
@@ -69,7 +69,6 @@ def build_parser() -> argparse.ArgumentParser:
     e.add_argument("--output-format", choices=["parquet", "csv", "json", "orc"],
                    default="parquet")
     e.add_argument("--quiet", action="store_true")
-    e.add_argument("--fetchsize", type=int, default=10_000)
     e.add_argument("--partition-column")
     e.add_argument("--lower-bound", type=int)
     e.add_argument("--upper-bound", type=int)
@@ -109,16 +108,17 @@ def run_export(args: argparse.Namespace) -> int:
         query = args.query or f"SELECT * FROM {args.table}"
         df = spark.sql(query)
     else:
-        from pg2parquet_spark.sources.jdbc import PostgresConnection, read
+        from pg2parquet_spark.sources import pgcopy
+        from pg2parquet_spark.sources.jdbc import PostgresConnection
 
         conn = PostgresConnection(
             url=args.connection, host=args.host, port=args.port,
             dbname=args.dbname, user=args.user, password=args.password,
             sslmode=args.sslmode,
         )
-        df = read(
+        df = pgcopy.read(
             spark, conn, query=args.query, table=args.table,
-            fetchsize=args.fetchsize, partition_column=args.partition_column,
+            partition_column=args.partition_column,
             lower_bound=args.lower_bound, upper_bound=args.upper_bound,
             num_partitions=args.num_partitions,
         )

@@ -215,7 +215,7 @@ def export_audited(
     from pg2parquet_spark import audit
 
     # ONE source scan feeds audit + write + (capture mode) the report: for a
-    # JDBC source, audit-then-write without a cache point re-reads the whole
+    # COPY source, audit-then-write without a cache point re-reads the whole
     # Postgres table per consumer. Persist for the duration, release on exit.
     df = df.persist()
     try:
@@ -276,7 +276,7 @@ def export_query(
     """Reference main path: one SQL query → one Parquet dataset.
 
     The query runs against whatever sources are registered in the session
-    (JDBC-backed temp views from sources.jdbc, or parquet fixture views).
+    (temp views over ``pgcopy.read`` frames, or parquet fixture views).
     Returns the DataFrame for inspection (schema printing — A36's analog is
     Spark's own UI/listener; ``df.schema`` mirrors format_schema).
     """

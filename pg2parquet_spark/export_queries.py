@@ -182,11 +182,11 @@ FROM region
     "(::text casts per exotic column), EXECUTED on a stand-in server (DuckDB "
     "— which casts a real native ENUM through the rewrite's ::text, and "
     "renders range/composite/pgvector wire text), shipped row-wise as text "
-    "(the JDBC transport analog), then rebuilt client-side by the typemap "
+    "(the COPY transport analog), then rebuilt client-side by the typemap "
     "parsers (enums/ranges/composites/pgvector) into typed columns — the "
     "exact chain a live-PG export runs. Fixture is bounded (5 region rows) "
     "so the driver-side transport stand-in is O(1); in production read() "
-    "streams the same text through N partitioned JDBC cursors and the parse "
+    "streams the same text through N partitioned COPY streams and the parse "
     "chain is the same pure-Column expressions (no UDF, no shuffle). "
     "Multidim arrays' dims-shipping rewrite is string-verified in pytest "
     "(array_dims has no DuckDB analog to execute).",
@@ -235,7 +235,7 @@ FROM region
         rows, "id bigint, mood string, rng string, pt string, vec string, sv string"
     )
 
-    # --- client-side rebuild: the same typemap chain the JDBC export runs --
+    # --- client-side rebuild: the same typemap chain the COPY export runs --
     rng = tm.parse_range(F.col("rng"), lambda c: c.cast("int"))
     pt = tm.parse_composite_fast(
         F.col("pt"), ["x", "y"], [lambda c: c.cast("double")] * 2

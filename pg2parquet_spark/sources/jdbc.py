@@ -1,88 +1,38 @@
-"""PostgreSQL source over JDBC (SURVEY §2.A A1-A4).
+"""PostgreSQL connection args, catalog SQL and the exotic-type rewrite.
 
-The reference connects with the native wire protocol and streams rows
-single-threaded (postgres_cloner.rs:141-320). The Spark-native equivalent is
-the JDBC DataSource:
+The transport that moves rows is :mod:`pg2parquet_spark.sources.pgcopy`
+(COPY through ``psql``); this module holds the transport-independent
+pieces it and its callers share:
 
-- A1 table scan  → ``dbtable`` option (we quote identifiers, unlike the
-  reference's naive format at main.rs:297-299 — deviation in our favor);
-- A2 query passthrough → ``query`` option: the whole SQL still executes
-  server-side (total pushdown by construction, same as the reference), and
-  DSv2 JDBC additionally pushes filters/pruning/limit/aggregates for
-  dbtable scans;
-- A3 schema probe → JDBC derives ResultSetMetaData without reading rows
-  (same prepared-statement trick);
-- A4 connection/TLS → URL properties (sslmode passthrough), password from
-  args or PGPASSWORD, URL from DATABASE_URL/POSTGRES_URL env — the same
-  precedence the reference implements (postgres_cloner.rs:222-292).
-
-Scale design (the capability the reference lacks entirely):
-- ``fetchsize`` defaults to 10_000 — the PG JDBC driver otherwise
-  materializes the whole result set per partition;
-- ``partition_column/lower/upper/num_partitions`` split one logical scan
-  into N server cursors read by N executors in parallel;
-- exotic-type fidelity: ``rewrite_query_for_exotics`` wraps enum/range/
-  composite/vector columns in ::text casts server-side so the typemap text
-  parsers (typemap/*) can rebuild structured values — the moral equivalent
-  of the reference's binary decoders in pg_custom_types.rs.
-
-This module's ``read`` cannot run in the test container (a JDBC jar is
-absent and unfetchable); it is import-safe and unit-tested for its pure
-parts (URL/property/query synthesis), and ``read`` raises a clear error
-when the driver jar is absent. The catalog SQL, identifier quoting, and
-exotic rewrite ARE wire-proven live: r9's COPY/psql transport twin
-(:mod:`pg2parquet_spark.sources.pgcopy` + ``tests/test_live_pg_copy.py``)
-runs them against a real local PostgreSQL 15 in the default suite.
+- A1 table scan → :func:`table_query` (identifiers are quoted, unlike the
+  reference's naive format at main.rs:297-299 — a deviation in our favor);
+- A3 exotic types → :data:`ENUM_LABELS_SQL` / :data:`COMPOSITE_FIELDS_SQL`
+  catalog probes, and :func:`rewrite_query_for_exotics`, which wraps
+  enum/range/composite/vector columns in ::text casts server-side so the
+  typemap text parsers (typemap/*) can rebuild structured values — the
+  moral equivalent of the reference's binary decoders in
+  pg_custom_types.rs;
+- A4 connection → :class:`PostgresConnection`, resolved by
+  :func:`~pg2parquet_spark.sources.pgcopy.resolve_target` with the
+  reference's precedence (postgres_cloner.rs:222-292).
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
-
-JDBC_DRIVER = "org.postgresql.Driver"
 
 
 @dataclass
 class PostgresConnection:
     """Connection args with the reference's precedence rules."""
 
-    url: str | None = None  # jdbc:postgresql://... or postgres://... form
+    url: str | None = None  # postgres://... (or jdbc:postgresql://...) form
     host: str | None = None
     port: int = 5432
     dbname: str | None = None
     user: str | None = None
     password: str | None = None
     sslmode: str | None = None  # disable | prefer | require
-
-    def resolve_url(self) -> str:
-        """connection arg > DATABASE_URL > POSTGRES_URL > host/dbname parts
-        (postgres_cloner.rs:222-240 precedence)."""
-        url = self.url or os.environ.get("DATABASE_URL") or os.environ.get("POSTGRES_URL")
-        if url:
-            if url.startswith("postgres://") or url.startswith("postgresql://"):
-                url = "jdbc:postgresql://" + url.split("://", 1)[1]
-            return url
-        if not (self.host and self.dbname):
-            raise ValueError(
-                "either a connection URL or host+dbname must be provided "
-                "(or set DATABASE_URL)"
-            )
-        return f"jdbc:postgresql://{self.host}:{self.port}/{self.dbname}"
-
-    def properties(self) -> dict[str, str]:
-        props: dict[str, str] = {"driver": JDBC_DRIVER}
-        if self.user:
-            props["user"] = self.user
-        password = self.password or os.environ.get("PGPASSWORD")
-        if password:
-            props["password"] = password
-        if self.sslmode:
-            props["ssl"] = "false" if self.sslmode == "disable" else "true"
-            props["sslmode"] = self.sslmode
-        return props
 
 
 def quote_ident(name: str) -> str:
@@ -99,56 +49,9 @@ def table_query(table: str) -> str:
     return f"SELECT * FROM {quote_ident(table)}"
 
 
-def read(
-    spark: SparkSession,
-    conn: PostgresConnection,
-    query: str | None = None,
-    table: str | None = None,
-    fetchsize: int = 10_000,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Build the JDBC scan. Exactly one of query/table (main.rs:252-260)."""
-    if (query is None) == (table is None):
-        raise ValueError("exactly one of query= or table= must be given")
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", conn.resolve_url())
-        .option("fetchsize", str(fetchsize))
-    )
-    for k, v in conn.properties().items():
-        reader = reader.option(k, v)
-    partitioned = partition_column is not None
-    if table is not None:
-        reader = reader.option("dbtable", quote_ident(table))
-    elif partitioned:
-        # partitioned reads require dbtable (a subquery alias), not `query`
-        reader = reader.option("dbtable", f"({query}) AS q")
-    else:
-        reader = reader.option("query", query)
-    if partitioned:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions or 8))
-        )
-    try:
-        return reader.load()
-    except Exception as exc:  # pragma: no cover - depends on environment
-        if "postgresql" in str(exc) or "ClassNotFound" in str(exc):
-            raise RuntimeError(
-                "PostgreSQL JDBC driver not on the Spark classpath; add "
-                "org.postgresql:postgresql to spark.jars.packages"
-            ) from exc
-        raise
-
-
-# Catalog introspection SQL (A3 for exotic types): run these through the same
-# JDBC source to build typemap conversion plans. Kept as public constants so
-# the export driver and tests can reuse them verbatim.
+# Catalog introspection SQL (A3 for exotic types): run these through
+# pgcopy.run_sql to build typemap conversion plans. Kept as public constants
+# so the export driver and tests can reuse them verbatim.
 ENUM_LABELS_SQL = """
 SELECT t.typname AS enum_name, e.enumlabel AS label
 FROM pg_type t JOIN pg_enum e ON e.enumtypid = t.oid
@@ -169,7 +72,7 @@ ORDER BY t.typname, a.attnum
 def rewrite_query_for_exotics(
     query: str, columns: list[str], exotic_columns: dict[str, str]
 ) -> str:
-    """Wrap exotic output columns in ::text so JDBC can transport them.
+    """Wrap exotic output columns in ::text so they transport as text.
 
     ``columns`` is the query's full output column list (from the A3 schema
     probe); ``exotic_columns`` maps column name → pg type class

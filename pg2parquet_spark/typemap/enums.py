@@ -9,7 +9,8 @@
   surface NULL and offer a strict variant).
 
 The label list comes from the PG catalog (`pg_enum` ordered by
-enumsortorder) via sources.jdbc, or is supplied directly in tests.
+enumsortorder) via ``ENUM_LABELS_SQL`` through ``pgcopy.run_sql``, or is
+supplied directly in tests.
 """
 
 from __future__ import annotations

@@ -5,10 +5,10 @@ Reference:
   type/annotation → canonical string form (or 16-byte binary), documented.
 - macaddr → text "aa:bb:cc:dd:ee:ff" / raw FLBA(6) / int64 with the address
   in the low 6 bytes, big-endian (myfrom.rs:99-117, postgres_cloner.rs:620-628).
-- inet → text via display form (myfrom.rs:118-123) — JDBC delivers text.
+- inet → text via display form (myfrom.rs:118-123) — COPY delivers text.
 - bit/varbit → '0101' text, bit by bit (myfrom.rs:124-130).
 - jsonb: binary wire form has a version byte (must be 1) before the UTF-8
-  payload; strip it (datatypes/jsonb.rs:11-31). json/jsonb over JDBC arrive
+  payload; strip it (datatypes/jsonb.rs:11-31). json/jsonb over COPY arrive
   as text already — normalize is for raw binary ingestion paths.
 """
 
@@ -68,7 +68,7 @@ def jsonb_normalize(raw: Column) -> Column:
 
 
 def oid_to_long(col: Column) -> Column:
-    """PG `oid` is uint32; JDBC/int32 channels deliver it signed. Reinterpret
+    """PG `oid` is uint32; int32 channels deliver it signed. Reinterpret
     the signed value as unsigned into a LongType (the documented stand-in for
     the reference's Integer(32, unsigned) annotation, postgres_cloner.rs:589)."""
     c = col.cast("long")

@@ -5,7 +5,7 @@ PG-shaped input (numeric strings, range/composite/vector text forms, byte
 strings) deterministically from the testdata tables, runs the typemap
 operator under test, and flattens the result to scalar columns the DuckDB
 oracle can reproduce exactly. The operators themselves are the same
-expressions the JDBC export path applies (see typemap/*, export.py).
+expressions the COPY export path applies (see typemap/*, export.py).
 
 Determinism: inputs are integer/string-derived; every float output is either
 a float32 whose text source is identical in both engines or an exact decimal

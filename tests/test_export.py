@@ -85,7 +85,7 @@ def test_export_query_over_views(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == 2
 
 
-# ------------------------------------------------------------- jdbc (pure) --
+# ------------------------------------------------- connection/SQL (pure) --
 def test_quote_ident():
     assert quote_ident("t") == '"t"'
     assert quote_ident("public.my table") == '"public"."my table"'
@@ -94,17 +94,47 @@ def test_quote_ident():
 
 
 def test_connection_precedence(monkeypatch):
-    monkeypatch.delenv("DATABASE_URL", raising=False)
-    monkeypatch.delenv("POSTGRES_URL", raising=False)
-    c = PostgresConnection(host="h", dbname="d", user="u")
-    assert c.resolve_url() == "jdbc:postgresql://h:5432/d"
+    """connection arg > DATABASE_URL > POSTGRES_URL > parts, as the reference
+    resolves it; PGPASSWORD fills a missing password."""
+    from pg2parquet_spark.sources.pgcopy import resolve_target
+
+    for var in ("DATABASE_URL", "POSTGRES_URL", "PGPASSWORD"):
+        monkeypatch.delenv(var, raising=False)
+    t = resolve_target(PostgresConnection(host="h", dbname="d", user="u"))
+    assert (t.host, t.port, t.dbname, t.user, t.password) == ("h", 5432, "d", "u", None)
+    monkeypatch.setenv("POSTGRES_URL", "postgres://pu@pg/pdb")
+    t = resolve_target(PostgresConnection(host="h", dbname="d"))
+    assert (t.host, t.user, t.dbname) == ("pg", "pu", "pdb")
     monkeypatch.setenv("DATABASE_URL", "postgres://x/db")
-    assert PostgresConnection().resolve_url() == "jdbc:postgresql://x/db"
+    t = resolve_target(PostgresConnection(host="h", dbname="d"))
+    assert (t.host, t.dbname) == ("x", "db")
+    t = resolve_target(PostgresConnection(url="postgres://arg/adb"))
+    assert (t.host, t.dbname) == ("arg", "adb")
+    monkeypatch.delenv("DATABASE_URL")
+    monkeypatch.delenv("POSTGRES_URL")
     with pytest.raises(ValueError):
-        monkeypatch.delenv("DATABASE_URL")
-        PostgresConnection(host="h").resolve_url()
+        resolve_target(PostgresConnection(host="h"))
     monkeypatch.setenv("PGPASSWORD", "sekret")
-    assert PostgresConnection(host="h", dbname="d").properties()["password"] == "sekret"
+    t = resolve_target(PostgresConnection(host="h", dbname="d"))
+    assert t.password == "sekret" and t.env()["PGPASSWORD"] == "sekret"
+
+
+def test_resolve_target_carries_sslmode(monkeypatch):
+    """--sslmode must reach psql as PGSSLMODE, from the argument or from a
+    URL's ?sslmode=; the explicit argument wins."""
+    from pg2parquet_spark.sources.pgcopy import resolve_target
+
+    for var in ("DATABASE_URL", "POSTGRES_URL", "PGSSLMODE"):
+        monkeypatch.delenv(var, raising=False)
+    t = resolve_target(PostgresConnection(host="h", dbname="d", sslmode="require"))
+    assert t.sslmode == "require" and t.env()["PGSSLMODE"] == "require"
+    t = resolve_target(PostgresConnection(url="postgres://u@h/db?sslmode=require"))
+    assert t.env()["PGSSLMODE"] == "require"
+    t = resolve_target(PostgresConnection(
+        url="postgres://u@h/db?sslmode=require", sslmode="disable"
+    ))
+    assert t.env()["PGSSLMODE"] == "disable"
+    assert "PGSSLMODE" not in resolve_target(PostgresConnection(host="h", dbname="d")).env()
 
 
 def test_resolve_target_percent_decodes_url_parts():
@@ -122,6 +152,35 @@ def test_resolve_target_percent_decodes_url_parts():
     assert (t.host, t.port, t.user, t.dbname) == ("/tmp", 5432, "u", "db")
 
 
+def test_copy_row_blocks_keep_rows_whole(monkeypatch):
+    """The COPY decoder cuts its stream only between rows: a newline or a
+    quote inside a quoted field never ends a block, and a row longer than a
+    block arrives whole, whatever the block size."""
+    import io
+
+    from pg2parquet_spark.sources import pgcopy
+
+    def pg_csv(v):
+        if v is None:
+            return ""
+        if v == "" or any(c in v for c in ',"\n'):
+            return '"' + v.replace('"', '""') + '"'
+        return v
+
+    values = ["", None, 'a,"b', "x\ny\n", "long " * 40, '"\n"', "\n", "plain"]
+    rows = [(str(i), v) for i, v in enumerate(values)]
+    raw = "".join(f"{i},{pg_csv(v)}\n" for i, v in rows).encode()
+    for block in (1, 2, 3, 5, 8, 13, 64, 1 << 20):
+        monkeypatch.setattr(pgcopy, "_BLOCK", block)
+        blocks = list(pgcopy._row_blocks(io.BytesIO(raw)))
+        assert b"".join(blocks) == raw
+        got = [r for b in blocks for r in zip(*pgcopy._decode(b, ["i", "v"]).to_pydict().values())]
+        assert got == rows, block
+    assert pgcopy._text_rows(raw) == rows
+    # one-column rows: NULL is an empty line, and the width comes from a row
+    assert pgcopy._text_rows(b'x\n""\n\n') == [("x",), ("",), (None,)]
+
+
 def test_rewrite_query_for_exotics():
     q = rewrite_query_for_exotics(
         "SELECT * FROM t",
@@ -136,9 +195,9 @@ def test_rewrite_query_for_exotics():
 
 
 def test_exotic_rewrite_chains_into_typemap_parsers(spark):
-    """End-to-end JDBC exotic path without a live PG (SURVEY §7.3 step 4):
+    """End-to-end exotic path without a live PG (SURVEY §7.3 step 4):
     rewrite_query_for_exotics ships every exotic column as ::text; this
-    fixture is shaped exactly like the JDBC result of that rewritten query,
+    fixture is shaped exactly like the COPY result of that rewritten query,
     and each text column must rebuild its struct through the typemap parsers
     — all five exotic kinds (enum, range, composite, vector+sparsevec,
     multidim array)."""
@@ -165,7 +224,7 @@ def test_exotic_rewrite_chains_into_typemap_parsers(spark):
         assert f'"{c}"' in q
     assert '"grid__dims"' in q
 
-    jdbc_shaped = spark.createDataFrame(
+    copy_shaped = spark.createDataFrame(
         [
             (1, "happy", "[2,5)", "(main st,42)", "[1,2.5]", "{1:0.5,3:2}/4",
              "{{1,2},{3,4}}", "[0:1][1:2]"),
@@ -185,7 +244,7 @@ def test_exotic_rewrite_chains_into_typemap_parsers(spark):
             lambda x: x.cast("int"),
         ),
     )
-    parsed = jdbc_shaped.select(
+    parsed = copy_shaped.select(
         "id",
         enum_to_int(F.col("mood"), ["happy", "sad"]).alias("mood"),
         parse_range(F.col("span"), lambda c: c.cast("int")).alias("span"),

@@ -1,33 +1,40 @@
 """LIVE PostgreSQL wire tests over the COPY transport (sources/pgcopy.py).
 
-r9 closes the eight-round 'live-PG coverage is an environment limit' gap:
-this sandbox has no docker daemon and no JDBC jar, but it DOES have a full
-PostgreSQL 15 install — so the COPY/psql transport added this round gets
-wire-proven here, against a real server, in the default suite. The module
-self-manages the server through tools/livepg.py (throwaway cluster under
-/tmp, trust auth, port 55432) and skips cleanly where initdb/psql are
-absent. The JDBC twins in tests/test_live_pg.py keep their `pg` marker and
-their docker recipe — same fixture schema (ci/pg/init.sql), two transports.
+COPY through ``psql`` is the package's one PG transport, proven here against
+a real PostgreSQL 15 server in the default suite. The module self-manages
+the server through tools/livepg.py (throwaway cluster under /tmp, trust
+auth, port 55432, fixture schema from ci/pg/init.sql) and skips cleanly
+where initdb/psql are absent.
 
 Wire-proven here (vs the string/fixture unit tests):
-- A1 table scans and A2 query pushdown transport real rows via COPY,
-- partitioned reads split into per-range server cursors without row loss,
-- the A4 precedence (DATABASE_URL with libpq ?host= socket syntax) resolves,
+- A1 table scans and A2 query pushdown transport real rows via COPY, and
+  the CLI exports a live table;
+- partitioned reads split into per-range tasks without row loss;
+- NULL, '' and sentinel-looking text stay distinct, and rows of several
+  MiB decode whole;
+- no psql child outlives its task, whether the consumer stops early or the
+  server fails mid-stream;
+- the A4 precedence (DATABASE_URL with libpq ?host= socket syntax) and
+  sslmode reach psql;
 - the A3 catalog probes (ENUM_LABELS_SQL / COMPOSITE_FIELDS_SQL / column
-  probe) run against the real pg_catalog,
+  probe) run against the real pg_catalog;
 - the exotic rewrite -> text wire -> typemap-parse chain round-trips REAL
   server-rendered enum/range/composite/vector/multidim text (reference
-  parity: /root/reference/py-tests/wrappers.py:96-129 exercises the same
+  parity: the reference's py-tests/wrappers.py:96-129 exercises the same
   surface against its CI container).
 """
 
 from __future__ import annotations
 
+import dataclasses
+import os
 import shutil
 import subprocess
 import sys
+import time
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 _HAVE_PG = all(shutil.which(t) for t in ("initdb", "pg_ctl", "psql"))
@@ -43,13 +50,20 @@ def live_pg():
         [sys.executable, "tools/livepg.py", "start"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     if r.returncode != 0:
         pytest.skip(f"local PG could not start: {r.stdout} {r.stderr}"[:300])
     from pg2parquet_spark.sources.jdbc import PostgresConnection
 
     return PostgresConnection(host="/tmp", port=55432, dbname="postgres", user="postgres")
+
+
+def _psql(live_pg, sql: str) -> None:
+    from pg2parquet_spark.sources import pgcopy
+
+    argv = pgcopy.resolve_target(live_pg).argv()
+    subprocess.run(argv + ["-c", sql], check=True, capture_output=True)
 
 
 def test_copy_table_scan_transports_typed_rows(spark, live_pg):
@@ -102,17 +116,13 @@ def test_copy_table_scan_keeps_identifier_case_and_quotes(spark, live_pg):
     not break the catalog SQL."""
     from pg2parquet_spark.sources import pgcopy
 
-    argv = pgcopy.resolve_target(live_pg).argv()
     for table in ("MixedCase", "it's"):
         ident = '"' + table.replace('"', '""') + '"'
-        subprocess.run(
-            argv + ["-c", (
-                f"DROP TABLE IF EXISTS {ident}; "
-                f"CREATE TABLE {ident} (id int, \"Label\" text); "
-                f"INSERT INTO {ident} VALUES (1, 'a'), (2, NULL)"
-            )],
-            check=True, capture_output=True,
-        )
+        _psql(live_pg, (
+            f"DROP TABLE IF EXISTS {ident}; "
+            f"CREATE TABLE {ident} (id int, \"Label\" text); "
+            f"INSERT INTO {ident} VALUES (1, 'a'), (2, NULL)"
+        ))
         df = pgcopy.read(spark, live_pg, table=table)
         assert dict(df.dtypes) == {"id": "int", "Label": "string"}
         assert sorted(df.collect()) == [(1, "a"), (2, None)]
@@ -218,47 +228,147 @@ def test_exotic_rewrite_roundtrip_live(spark, live_pg):
 
 
 def test_copy_null_vs_empty_string_fidelity(spark, live_pg):
-    """The sentinel NULL marker must keep '' (empty string) distinct from
-    SQL NULL across the wire — the classic CSV-transport trap."""
+    """PG's CSV NULL is an unquoted empty field and '' goes out quoted: the
+    decoder must keep NULL, '', the old sentinel's text and CSV-hostile text
+    apart — in text reads, typed table reads and one-column rows (whose
+    NULL is an empty line)."""
+    from pg2parquet_spark.sources import pgcopy
+
+    row = pgcopy.read(
+        spark, live_pg,
+        query=(
+            "SELECT 1 AS i, ''::text AS empty_s, NULL::text AS null_s, "
+            "'__PG_NULL__'::text AS marker, 'a,\"b'::text AS quoted"
+        ),
+    ).collect()[0]
+    assert row.empty_s == "" and row.null_s is None
+    assert row.marker == "__PG_NULL__" == pgcopy.NULL_MARKER
+    assert row.quoted == 'a,"b'
+
+    values = ["", None, "__PG_NULL__", 'a,"b', "line\nbreak"]
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS null_fidelity, null_one_col; "
+        "CREATE TABLE null_fidelity (id int, s text); "
+        "INSERT INTO null_fidelity VALUES (1, ''), (2, NULL), "
+        "(3, '__PG_NULL__'), (4, 'a,\"b'), (5, E'line\\nbreak'); "
+        "CREATE TABLE null_one_col AS SELECT s FROM null_fidelity"
+    ))
+    got = sorted(pgcopy.read(spark, live_pg, table="null_fidelity").collect())
+    assert [r.s for r in got] == values
+    one_col = [r.s for r in pgcopy.read(spark, live_pg, table="null_one_col").collect()]
+    assert sorted(one_col, key=repr) == sorted(values, key=repr)
+
+
+def test_copy_reads_rows_larger_than_a_block(spark, live_pg):
+    """Values of several MiB (bytea travels as hex, twice its size) and a
+    quoted value with a million newlines must read whole: no row may
+    straddle two of pyarrow's decode blocks."""
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS big_rows; "
+        "CREATE TABLE big_rows (id int, t text, b bytea); "
+        "INSERT INTO big_rows VALUES "
+        "(1, repeat('x', 5000000), decode(repeat('ab', 3000000), 'hex')), "
+        "(2, repeat(E'a,\"b\\n', 1000000), NULL), (3, 'small', '\\x00')"
+    ))
+    got = sorted(pgcopy.read(spark, live_pg, table="big_rows").collect())
+    assert [(r.id, len(r.t), r.b and len(r.b)) for r in got] == [
+        (1, 5_000_000, 6_000_002), (2, 5_000_000, None), (3, 5, 4)
+    ]
+    assert got[0].t == "x" * 5_000_000 and got[0].b == "\\x" + "ab" * 3_000_000
+    assert got[1].t == 'a,"b\n' * 1_000_000
+    ((t,),) = pgcopy.run_sql(live_pg, "SELECT t FROM big_rows WHERE id = 2")
+    assert t == 'a,"b\n' * 1_000_000
+
+
+def _live_psql(token: str) -> list[int]:
+    """Pids of running psql processes whose command line carries ``token``."""
+    pids = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                argv = f.read().split(b"\0")
+            with open(f"/proc/{pid}/stat") as f:
+                state = f.read().rpartition(")")[2].split()[0]
+        except OSError:
+            continue
+        if (
+            os.path.basename(argv[0]) == b"psql"
+            and token.encode() in b" ".join(argv)
+            and state != "Z"
+        ):
+            pids.append(int(pid))
+    return pids
+
+
+def _assert_no_psql_left(token: str, seconds: float = 10.0) -> None:
+    deadline = time.monotonic() + seconds
+    while _live_psql(token):
+        assert time.monotonic() < deadline, f"psql {_live_psql(token)} outlived its task"
+        time.sleep(0.2)
+
+
+def test_no_psql_outlives_an_early_stop(spark, live_pg):
+    """limit(1) stops consuming a 10M-row COPY after the first batch: the
+    task's psql child must go with it."""
     from pg2parquet_spark.sources import pgcopy
 
     df = pgcopy.read(
         spark, live_pg,
-        query="SELECT 1 AS i, ''::text AS empty_s, NULL::text AS null_s",
+        query="SELECT g AS early_stop_probe, md5(g::text) FROM generate_series(1, 10000000) g",
     )
-    row = df.collect()[0]
-    assert row.empty_s == "" and row.null_s is None
+    assert len(df.limit(1).collect()) == 1
+    _assert_no_psql_left("early_stop_probe")
 
 
-def test_copy_sentinel_collision_guard_trips(spark, live_pg):
-    """r9 VERDICT nit: data containing the literal NULL sentinel would
-    silently transport as NULL (pandas can't see PG's CSV quoting). The
-    sampled runtime guard must RAISE on such data instead, and a
-    collision-free null_marker= must read the same value through clean."""
+def test_no_psql_outlives_a_failed_copy(spark, live_pg):
+    """A COPY the server aborts mid-stream fails the task with PG's own
+    error, and leaves no psql child behind."""
     from pg2parquet_spark.sources import pgcopy
 
-    poisoned = f"SELECT 1 AS i, '{pgcopy.NULL_MARKER}'::text AS s"
-    with pytest.raises(ValueError, match="NULL sentinel"):
-        pgcopy.read(spark, live_pg, query=poisoned)
-    row = pgcopy.read(
-        spark, live_pg, query=poisoned, null_marker="__ALT_NULL__"
-    ).collect()[0]
-    assert row.s == pgcopy.NULL_MARKER
+    df = pgcopy.read(
+        spark, live_pg,
+        query="SELECT 1 / (g - 50000) AS mid_stream_probe FROM generate_series(1, 100000) g",
+    )
+    with pytest.raises(PySparkException, match="division by zero"):
+        df.collect()
+    _assert_no_psql_left("mid_stream_probe")
 
 
-def test_copy_sentinel_guard_sees_whole_row(spark, live_pg):
-    """r10 ADVICE: the collision probe renders the WHOLE row. With the old
-    bare `s` subquery alias, a user column literally named `s` won name
-    resolution and the guard silently inspected only that column — a
-    poisoned value in any OTHER column slipped through. The fixed
-    __pgcopy_probe_row alias must catch it."""
+def test_sslmode_disable_connects(spark, live_pg):
     from pg2parquet_spark.sources import pgcopy
 
-    poisoned = (
-        f"SELECT 'clean'::text AS s, '{pgcopy.NULL_MARKER}'::text AS other"
-    )
-    with pytest.raises(ValueError, match="NULL sentinel"):
-        pgcopy.read(spark, live_pg, query=poisoned)
+    conn = dataclasses.replace(live_pg, host="127.0.0.1", sslmode="disable")
+    assert pgcopy.read(spark, conn, query="SELECT 1 AS one").collect()[0].one == "1"
+
+
+def test_sslmode_require_refuses_plain_server(spark, live_pg):
+    """The fixture server has no SSL: sslmode=require over TCP must refuse
+    rather than silently connect in clear text."""
+    from pg2parquet_spark.sources import pgcopy
+
+    conn = dataclasses.replace(live_pg, host="127.0.0.1", sslmode="require")
+    with pytest.raises(RuntimeError, match="SSL"):
+        pgcopy.read(spark, conn, query="SELECT 1")
+
+
+def test_cli_exports_live_table(spark, live_pg, tmp_path, monkeypatch):
+    from pg2parquet_spark.cli import main
+
+    for var in ("DATABASE_URL", "POSTGRES_URL"):
+        monkeypatch.delenv(var, raising=False)
+    out = str(tmp_path / "plain.parquet")
+    assert main([
+        "export", "-t", "plain", "-o", out, "-H", "/tmp", "-p", "55432",
+        "-d", "postgres", "-U", "postgres", "--quiet",
+    ]) == 0
+    back = spark.read.parquet(out)
+    types = dict(back.dtypes)
+    assert (types["id"], types["score"], types["created"]) == ("bigint", "double", "date")
+    assert back.count() == 1000
+    row = back.filter(F.col("id") == 7).collect()[0]
+    assert (row.name, row.score, str(row.created)) == ("row_7", 3.5, "2024-01-08")
 
 
 def test_copy_empty_partition_ranges_yield_no_rows(spark, live_pg):

@@ -1,9 +1,7 @@
 #!/usr/bin/env python
 """Local live-PostgreSQL fixture manager for the wire tests.
 
-The docker-compose recipe (``ci/pg/docker-compose.yml``) stays the
-production path; THIS tool covers the sandbox case discovered in r9: no
-docker daemon, but a full PostgreSQL server install (initdb/pg_ctl/psql).
+It needs a PostgreSQL server install (initdb/pg_ctl/psql), no docker.
 It initializes a throwaway cluster under /tmp, starts it on port 55432
 (unix socket dir /tmp), and loads ``ci/pg/init.sql`` — degrading the
 pgvector column to ``text`` when the extension isn't installed (the COPY
