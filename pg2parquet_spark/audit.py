@@ -4,12 +4,12 @@ The reference aborts on a bad row and prints the first identifiable column
 value of the offending row (postgresutils.rs:4-51). A distributed engine
 can't usefully abort per-row; our conversion layer's contract is
 NULL-on-invalid (try_cast semantics, matching the reference's documented
-NULL-on-overflow/NaN paths). This module makes those casualties *visible*:
-one aggregate pass reports, per converted column, how many non-null inputs
-became NULL and a sample offending input value — the distributed analog of
-"error in row with id=X".
-
-One job, map-side combined aggregation — no extra scans per column.
+NULL-on-overflow/NaN paths). This module makes those casualties *visible*.
+The audit rides the write: ``export.export_audited`` observes
+:func:`nulled_mark` over the rows it writes, which gives per converted
+column how many non-null inputs became NULL and the lowest offending row —
+the distributed analog of "error in row with id=X" — with no extra scan.
+:func:`identify_bad_rows` lists every offending row when a caller wants them.
 """
 
 from __future__ import annotations
@@ -18,43 +18,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def audit_conversions(
-    df: DataFrame, conversions: dict[str, tuple[Column, Column]]
-) -> DataFrame:
-    """Report conversion casualties.
-
-    ``conversions`` maps output name -> (source_col, converted_col). Returns
-    one row per conversion: n_rows, n_source_nonnull, n_nulled (source
-    non-null but converted NULL), sample_bad (one offending source value,
-    rendered as string).
-    """
-    aggs: list[Column] = []
-    for name, (src, conv) in conversions.items():
-        bad = src.isNotNull() & conv.isNull()
-        aggs.extend(
-            [
-                F.count(F.lit(1)).alias(f"{name}__n_rows"),
-                F.count(src).alias(f"{name}__n_source_nonnull"),
-                F.sum(bad.cast("long")).alias(f"{name}__n_nulled"),
-                F.first(F.when(bad, src.cast("string")), ignorenulls=True).alias(
-                    f"{name}__sample_bad"
-                ),
-            ]
-        )
-    wide = df.agg(*aggs)
-    # unpivot the single wide row into one row per conversion
-    names = list(conversions)
-    structs = [
+def nulled_mark(name: str, src: Column, conv: Column, id_col: str) -> Column:
+    """The offending-row marker of one conversion: the struct
+    ``(row_id, col_name, bad_value)`` where a non-null ``src`` became a NULL
+    ``conv``, else NULL. Structs order by ``row_id`` first, so ``min`` over
+    the markers is the lowest offending row."""
+    return F.when(
+        src.isNotNull() & conv.isNull(),
         F.struct(
-            F.lit(n).alias("column"),
-            F.col(f"{n}__n_rows").alias("n_rows"),
-            F.col(f"{n}__n_source_nonnull").alias("n_source_nonnull"),
-            F.col(f"{n}__n_nulled").alias("n_nulled"),
-            F.col(f"{n}__sample_bad").alias("sample_bad"),
-        )
-        for n in names
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("r")).select("r.*")
+            F.col(id_col).alias("row_id"),
+            F.lit(name).alias("col_name"),
+            src.cast("string").alias("bad_value"),
+        ),
+    )
 
 
 def first_identifiable_column(df: DataFrame) -> str:
@@ -101,17 +77,7 @@ def identify_bad_rows(
     (column, value) structs, explode drops clean rows entirely — no join, no
     shuffle, scales as a pure filter.
     """
-    marks = [
-        F.when(
-            src.isNotNull() & conv.isNull(),
-            F.struct(
-                F.lit(name).alias("col_name"), src.cast("string").alias("bad_value")
-            ),
-        )
-        for name, (src, conv) in conversions.items()
-    ]
+    marks = [nulled_mark(name, src, conv, id_col) for name, (src, conv) in conversions.items()]
     arr = F.filter(F.array(*marks), lambda x: x.isNotNull())
-    out = df.select(F.col(id_col).alias("row_id"), F.explode(arr).alias("m")).select(
-        F.col("m.col_name").alias("col_name"), "row_id", F.col("m.bad_value").alias("bad_value")
-    )
+    out = df.select(F.explode(arr).alias("m")).select("m.col_name", "m.row_id", "m.bad_value")
     return out.limit(max_rows) if max_rows is not None else out

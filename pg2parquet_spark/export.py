@@ -7,7 +7,11 @@ surface*:
 
 - compression codec map incl. levels (main.rs:228-250; zstd level 3 default)
 - row-group sizing: 500 MiB raw / parquet.block.size (postgres_cloner.rs:305)
-- overwrite-on-exists (main.rs output_file docs)
+- overwrite-on-exists as an atomic replace (main.rs output_file docs): every
+  export is staged at ``<path>._tmp`` and published by :func:`_publish`'s
+  rename-aside swap, so a failed export leaves the previous dataset intact.
+  Two concurrent exports to one path are not supported (they share the
+  staging directory).
 - optional single-file output (the reference is single-file by construction;
   at 100 TB you want many files — single_file=False default keeps the
   parallel writer, one file per task)
@@ -21,7 +25,11 @@ preserved — sort first, then coalesce(1) keeps one ordered partition.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager, nullcontext
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from pg2parquet_spark.options import ExportOptions
 
@@ -31,19 +39,26 @@ def export(
 ) -> None:
     """Write ``df`` to ``path`` per the export options (parquet default).
 
+    The write lands at ``<path>._tmp`` and replaces ``path`` only once it
+    has succeeded (:func:`_publish`).
+
     Like the reference, a live progress meter (A36: MiB written, MiB/s, task
     completion — ref cli/src/parquet_writer.rs:100-151) prints to stderr
     during the write by default; ``quiet=True`` (CLI ``--quiet``) suppresses.
     """
-    from contextlib import nullcontext
-
-    from pg2parquet_spark.progress import ProgressReporter
-
     options = options or ExportOptions()
     if options.sort_by:
         df = df.orderBy(*options.sort_by)
-    out = df.coalesce(1) if options.single_file else df
-    writer = out.write.mode("overwrite")
+    with _publish(df.sparkSession, path) as tmp:
+        _write(df, tmp, options, quiet)
+
+
+def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> None:
+    """One write job of the (already ordered) ``df`` into the fresh
+    directory ``path``, then the float16 narrowing over it."""
+    from pg2parquet_spark.progress import ProgressReporter
+
+    writer = (df.coalesce(1) if options.single_file else df).write
     if options.output_format == "parquet":
         codec = options.spark_codec  # raises for lzo — same error contract as writer absence
         writer = writer.option("compression", codec).option(
@@ -53,21 +68,53 @@ def export(
             writer = writer.option(
                 "parquet.compression.codec.zstd.level", str(options.compression_level)
             )
+    elif options.output_format == "csv":
+        writer = writer.option("header", "true")
     if options.partition_by:
         # hive-style layout: readers get partition pruning on these columns
         writer = writer.partitionBy(*options.partition_by)
-    meter = nullcontext() if quiet else ProgressReporter(df.sparkSession, path)
-    with meter:
-        if options.output_format == "parquet":
-            writer.parquet(path)
-        elif options.output_format == "csv":
-            writer.option("header", "true").csv(path)
-        elif options.output_format == "json":
-            writer.json(path)
-        else:
-            writer.orc(path)
+    with nullcontext() if quiet else ProgressReporter(df.sparkSession, path):
+        writer.format(options.output_format).save(path)
     if options.output_format == "parquet" and options.float16_handling == "float16":
         _narrow_to_float16(df.sparkSession, path, options)
+
+
+@contextmanager
+def _publish(spark: SparkSession, path: str) -> Iterator[str]:
+    """The one commit protocol: yield the staging directory ``<path>._tmp``
+    for the body to write, then swap it into place.
+
+    If the body raises, the staging directory is deleted, the error
+    re-raised, and ``path`` is untouched (Spark's ``mode("overwrite")``
+    would have deleted it first). Otherwise the swap is rename-aside (path →
+    ``<path>._old``), rename-into-place, delete-old-last: at every instant
+    the data exists in full at path, old or tmp, and a failed rename-in
+    rolls the old dir back; a swap cut short by a crash is rolled back by
+    the next publish. Hadoop FileSystem API throughout, resolved from the
+    path's own scheme (file://, hdfs://, s3a://).
+    """
+    base = path.rstrip("/")
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    dst, tmp, old = hpath(base), hpath(base + "._tmp"), hpath(base + "._old")
+    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(old) and not fs.exists(dst):
+        fs.rename(old, dst)  # a crashed swap: the old copy is the dataset
+    fs.delete(old, True)
+    fs.delete(tmp, True)  # stale leftover of a crashed export
+    try:
+        yield base + "._tmp"
+        had = fs.exists(dst)
+        if had and not fs.rename(dst, old):
+            raise IOError(f"publish: could not move {path} aside; dataset untouched")
+    except BaseException:
+        fs.delete(tmp, True)
+        raise
+    if not fs.rename(tmp, dst):
+        if had:
+            fs.rename(old, dst)  # roll back: restore the original dataset
+        fs.delete(tmp, True)
+        raise IOError(f"publish: rename {base}._tmp -> {path} failed; dataset restored")
+    fs.delete(old, True)
 
 
 def _fs_from_root_uri(root_uri):
@@ -75,9 +122,8 @@ def _fs_from_root_uri(root_uri):
     the export root's original URI (scheme+authority pick the backend),
     NEVER from a per-file listing path — ``from_uri`` would misparse the
     scheme-less paths ``get_file_info`` returns for remote stores (e.g.
-    ``bucket/key/part.parquet`` for s3://) as local relative paths. Kept as
-    a seam so the mock-remote integration test can pin exactly this
-    contract (tests/test_export.py::test_float16_remote_uri_*)."""
+    ``bucket/key/part.parquet`` for s3://) as local relative paths. A seam
+    the mock-remote test pins (tests/test_export.py::test_float16_remote_uri_*)."""
     from pyarrow import fs as pafs
 
     if root_uri is None:
@@ -85,7 +131,9 @@ def _fs_from_root_uri(root_uri):
     return pafs.FileSystem.from_uri(root_uri)[0]
 
 
-def _rewrite_one_float16(path: str, root_uri: str | None, wanted: frozenset, codec: str) -> str:
+def _rewrite_one_float16(
+    path: str, root_uri: str | None, wanted: frozenset, codec: str, level: int | None = None
+) -> str:
     """Rewrite ONE parquet file's ``wanted`` columns to Float16 (FLBA-2).
 
     Runs as a Spark TASK — never on the driver: the file list of a 100 TB
@@ -93,49 +141,42 @@ def _rewrite_one_float16(path: str, root_uri: str | None, wanted: frozenset, cod
     write_table would be the export's long pole. The guard below pins that
     contract (and the pytest relies on it).
 
-    ``path`` is the filesystem-native path as returned by the DRIVER's
-    ``get_file_info`` listing (scheme-less, e.g. ``bucket/key/part.parquet``
-    for s3://). The filesystem is therefore reconstructed from ``root_uri``
-    — the export root's original URI, whose scheme+authority resolve the
-    right backend — never ``from_uri(path)``, which would misparse a
-    scheme-less listing path as local.
-
-    Crash safety: a task killed mid-write (speculation, preemption, OOM)
+    ``path`` is as the driver's listing returned it, so the filesystem comes
+    from ``root_uri`` (:func:`_fs_from_root_uri`). The rewrite keeps the file's layout: one output row group per source
+    row group (Spark already sized them by ``row_group_bytes``), written
+    with the export's codec and zstd ``level``. Crash safety: a task killed mid-write (speculation, preemption, OOM)
     must not leave a truncated file for the retry to trip over, so the
-    rewrite lands at ``<path>.f16tmp`` and is renamed into place, mirroring
-    :func:`compact`'s rename-aside swap. A retry that finds a stale tmp
-    simply overwrites it.
+    rewrite lands at ``<path>.f16tmp`` and is renamed into place. A retry
+    that finds a stale tmp simply overwrites it.
     """
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyspark import TaskContext
 
     if TaskContext.get() is None:
         raise RuntimeError("float16 narrowing must run as a Spark task, not on the driver")
     fsys = _fs_from_root_uri(root_uri)
-    t = pq.read_table(path, filesystem=fsys)
-    cols = {}
-    for name in t.schema.names:
-        col = t[name]
-        if name in wanted:
-            typ = col.type
-            if pa.types.is_float32(typ) or pa.types.is_float64(typ):
-                col = pc.cast(col, pa.float16())
-            elif pa.types.is_list(typ):
-                col = pc.cast(col, pa.list_(pa.float16()))
-            else:
-                raise ValueError(
-                    f"float16_columns: column {name!r} has non-float type {typ}"
-                )
-        cols[name] = col
+
+    def narrow(field: pa.Field) -> pa.Field:
+        if field.name not in wanted:
+            return field
+        typ = field.type
+        if pa.types.is_float32(typ) or pa.types.is_float64(typ):
+            return field.with_type(pa.float16())
+        if pa.types.is_list(typ):
+            return field.with_type(pa.list_(typ.value_field.with_type(pa.float16())))
+        raise ValueError(f"float16_columns: column {field.name!r} has non-float type {typ}")
+
+    src = pq.ParquetFile(fsys.open_input_file(path))
+    schema = pa.schema([narrow(f) for f in src.schema_arrow])
     tmp = path + ".f16tmp"
-    pq.write_table(
-        pa.table(cols),
-        tmp,
-        filesystem=fsys,
-        compression="none" if codec == "uncompressed" else codec,
-    )
+    compression = "none" if codec == "uncompressed" else codec
+    with pq.ParquetWriter(
+        tmp, schema, filesystem=fsys, compression=compression, compression_level=level
+    ) as out:
+        for i in range(src.num_row_groups):
+            group = src.read_row_group(i).cast(schema)
+            out.write_table(group, row_group_size=max(1, group.num_rows))
     fsys.move(tmp, path)
     return path
 
@@ -153,14 +194,9 @@ def _narrow_to_float16(spark: SparkSession, path: str, options: ExportOptions) -
     """
     from pyarrow import fs as pafs
 
-    # Resolve the filesystem ONCE from the export root's full URI; tasks get
-    # that same root URI (not the scheme-less per-file listing paths, which
-    # from_uri would misparse) and rebuild an equivalent filesystem from it.
-    root_uri: str | None = path if "://" in path else None
-    if root_uri is not None:
-        fsys, root = pafs.FileSystem.from_uri(path)
-    else:
-        fsys, root = pafs.LocalFileSystem(), path
+    # tasks get the root URI, never the scheme-less listing paths
+    root_uri = path if "://" in path else None
+    fsys, root = pafs.FileSystem.from_uri(path) if root_uri else (pafs.LocalFileSystem(), path)
     files = [
         fi.path
         for fi in fsys.get_file_info(pafs.FileSelector(root, recursive=True))
@@ -170,10 +206,14 @@ def _narrow_to_float16(spark: SparkSession, path: str, options: ExportOptions) -
         return
     wanted = frozenset(options.float16_columns)
     codec = options.spark_codec  # same name space as pyarrow's
+    # Spark's zstd default is level 3, pyarrow's is 1: pass Spark's explicitly
+    level = None
+    if options.compression == "zstd":
+        level = 3 if options.compression_level is None else options.compression_level
     sc = spark.sparkContext
     done = (
         sc.parallelize(files, len(files))
-        .map(lambda f: _rewrite_one_float16(f, root_uri, wanted, codec))
+        .map(lambda f: _rewrite_one_float16(f, root_uri, wanted, codec, level))
         .collect()  # bounded: one path string per file
     )
     if sorted(done) != sorted(files):
@@ -185,7 +225,7 @@ class ConversionError(RuntimeError):
 
     Mirrors the reference's abort-with-row-identification contract
     (cli/src/postgresutils.rs:4-51): the message carries the first
-    identifiable key of the first offending row.
+    identifiable key of the lowest offending row.
     """
 
 
@@ -201,51 +241,58 @@ def export_audited(
 
     ``conversions`` maps output column name -> (source Column, converted
     Column). The converted columns are appended/replaced on ``df`` and the
-    result written to ``path``. Before writing, a map-side audit pass finds
-    rows where a conversion turned a non-null source into NULL:
+    result written to ``path``. The audit rides the write job: a
+    ``DataFrame.observe`` counts, per conversion, the non-null sources that
+    became NULL, and keeps the lowest offending row.
 
-    - ``fail_on_nulled=True`` (reference behavior): raise ConversionError
-      naming the offending column and the first identifiable key of the
-      first offending row — the distributed analog of the reference
-      printing the failing row before aborting.
-    - ``fail_on_nulled=False``: write anyway and return the full bad-row
-      report DataFrame (badRecordsPath-style capture) for the caller to
-      persist next to the dataset.
+    - ``fail_on_nulled=True`` (reference behavior): if anything was nulled,
+      drop the staged output, leave ``path`` as it was, and raise
+      ConversionError naming the column, the source value and the lowest
+      ``id_col`` key among the offending rows.
+    - ``fail_on_nulled=False``: publish anyway and return the bad-row
+      report (badRecordsPath-style capture), materialized here by
+      ``localCheckpoint`` from one more scan of ``df`` over only the
+      conversions that nulled values (empty, with no job, if none did).
     """
+    from pyspark.sql import Observation
+
     from pg2parquet_spark import audit
 
-    # ONE source scan feeds audit + write + (capture mode) the report: for a
-    # COPY source, audit-then-write without a cache point re-reads the whole
-    # Postgres table per consumer. Persist for the duration, release on exit.
-    df = df.persist()
-    try:
-        id_col = id_col or audit.first_identifiable_column(df)
-        bad = audit.identify_bad_rows(df, conversions, id_col)
-        if fail_on_nulled:
-            first = bad.limit(1).collect()  # bounded: one row
-            if first:
-                r = first[0]
-                raise ConversionError(
-                    f"conversion to column {r.col_name!r} failed: source value "
-                    f"{r.bad_value!r} became NULL in row with {id_col}={r.row_id!r}"
-                )
-        else:
-            # materialize the report off the cached source NOW — the caller
-            # consumes it after df is unpersisted, which would otherwise be
-            # a third full read of the source. localCheckpoint (not persist):
-            # it truncates lineage so the report outlives the source cache,
-            # and its blocks are released by the ContextCleaner when the
-            # frame is garbage-collected — a persist() here would leak
-            # executor storage for the session lifetime unless every caller
-            # remembered to unpersist the returned frame.
-            bad = bad.localCheckpoint(eager=True)
-        out = df
-        for name, (_src, conv) in conversions.items():
-            out = out.withColumn(name, conv)
-        export(out, path, options)
-        return bad
-    finally:
-        df.unpersist()
+    options = options or ExportOptions()
+    id_col = id_col or audit.first_identifiable_column(df)
+    # one evaluation per conversion, into an internal column that both the
+    # output column and its offending-row marker read
+    convs = [f"__conv{i}" for i in range(len(conversions))]
+    marks = [f"__nulled{i}" for i in range(len(conversions))]
+    staged = df.select("*", *[c.alias(a) for (_s, c), a in zip(conversions.values(), convs)])
+    cols = {}
+    for (name, (src, _c)), conv, mark in zip(conversions.items(), convs, marks):
+        cols[name] = F.col(conv)
+        cols[mark] = audit.nulled_mark(name, src, F.col(conv), id_col)
+    staged = staged.withColumns(cols).drop(*convs)
+    if options.sort_by:
+        staged = staged.orderBy(*options.sort_by)
+    # observed above the sort: the range partitioner's sampling job runs the
+    # sort's input once more, and an observation below it would count twice
+    seen = Observation("conversion_audit")
+    staged = staged.observe(
+        seen,
+        *[F.count(c).alias(c) for c in marks],
+        F.min(F.array_min(F.array(*marks))).alias("__first"),
+    )
+    with _publish(df.sparkSession, path) as tmp:
+        _write(staged.drop(*marks), tmp, options, quiet=False)
+        got = seen.get  # only after the write: it blocks if the action failed
+        nulled = {n: c for (n, c), m in zip(conversions.items(), marks) if got[m]}
+        if nulled and fail_on_nulled:
+            r = got["__first"]
+            raise ConversionError(
+                f"conversion to column {r.col_name!r} failed: source value "
+                f"{r.bad_value!r} became NULL in row with {id_col}={r.row_id!r}"
+            )
+    if not nulled:
+        return audit.identify_bad_rows(df, conversions, id_col, max_rows=0)
+    return audit.identify_bad_rows(df, nulled, id_col).localCheckpoint(eager=True)
 
 
 def export_bucketed(
@@ -299,30 +346,23 @@ def compact(
     File count = ceil(current_bytes / target); data is round-robin
     repartitioned so output files are uniform. Returns the new file count.
 
-    Crash safety: the rewrite lands in a temp dir, then the swap is
-    rename-aside (src → src._compact_old), rename-into-place (tmp → src),
-    delete-old-last — at every instant the data exists in full at src, the
-    old path, or the tmp path, and a failed rename-in rolls the old dir
-    back. (delete-then-rename would leave src EMPTY if the process died
-    between the two.)
+    Crash safety is :func:`export`'s: the rewrite is staged beside the
+    dataset and published by the rename-aside swap of :func:`_publish`.
 
     Hive-partitioned datasets are rejected explicitly: a flat repartition
     would destroy the partition layout (and a non-recursive size probe
     would see 0 bytes and compact 100 TB into one file). Partition-wise
     compaction is `compact(part_dir)` per leaf directory.
 
-    All listing/measuring/deleting/renaming goes through the Hadoop
-    FileSystem API resolved from the path's own scheme — so the same code
-    compacts file://, hdfs:// and s3a:// datasets (the 100 TB deployment is
-    never a local filesystem; glob/os/shutil would silently report 0 bytes
-    there and delete nothing real).
+    Listing and measuring go through the Hadoop FileSystem API resolved
+    from the path's own scheme — so the same code compacts file://, hdfs://
+    and s3a:// datasets (the 100 TB deployment is never a local filesystem;
+    glob/os would silently report 0 bytes there).
     """
     import math
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(path)
-    fs = src.getFileSystem(hconf)
+    src = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = src.getFileSystem(spark._jsc.hadoopConfiguration())
 
     for st in fs.listStatus(src):
         if st.isDirectory() and "=" in st.getPath().getName():
@@ -332,30 +372,18 @@ def compact(
                 "leaf partition directory instead"
             )
 
-    def parquet_sizes(p) -> list[int]:
+    def parquet_sizes() -> list[int]:
         sizes = []
-        it = fs.listFiles(p, True)  # recursive: nested task dirs still count
+        it = fs.listFiles(src, True)  # recursive: nested task dirs still count
         while it.hasNext():
             st = it.next()
             if st.getPath().getName().endswith(".parquet"):
                 sizes.append(st.getLen())
         return sizes
 
-    current_bytes = sum(parquet_sizes(src))
-    n_files = max(1, math.ceil(current_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    tmp_str = path.rstrip("/") + "._compact_tmp"
-    export(df.repartition(n_files), tmp_str, options)
-    tmp = jvm.org.apache.hadoop.fs.Path(tmp_str)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._compact_old")
-    fs.delete(old, True)  # stale leftover from a previous crashed compaction
-    if not fs.rename(src, old):
-        raise IOError(f"compact: could not move {path} aside; dataset untouched")
-    if not fs.rename(tmp, src):
-        fs.rename(old, src)  # roll back: restore the original dataset
-        raise IOError(f"compact: rename {tmp_str} -> {path} failed; dataset restored")
-    fs.delete(old, True)
-    return len(parquet_sizes(src))
+    n_files = max(1, math.ceil(sum(parquet_sizes()) / (target_file_mb * 1024 * 1024)))
+    export(spark.read.parquet(path).repartition(n_files), path, options)
+    return len(parquet_sizes())
 
 
 def compact_partitioned(
@@ -368,15 +396,15 @@ def compact_partitioned(
     """Partition-wise compaction for hive-layout datasets: walk the
     ``key=value`` directory tree to its leaves and run :func:`compact` on
     each leaf independently. The partition layout is untouched — each leaf
-    is rewritten in place through the same crash-safe rename-aside swap.
+    is rewritten in place through the same crash-safe publish.
 
     Returns {leaf path: new file count}. Leaves are independent, so they run
     ``max_concurrency`` at a time through a driver-side thread pool: each
     leaf's work is mostly cluster work (a read+repartition+write job), so
     overlapping leaves keeps the executors busy while one leaf is in its
     metadata-only rename phase. Spark job submission is thread-safe; each
-    leaf writes to its own tmp dir, so no two threads ever touch the same
-    path. ``max_concurrency=1`` degrades to the sequential loop.
+    leaf stages in its own sibling directory, so no two threads ever touch
+    the same path. ``max_concurrency=1`` degrades to the sequential loop.
     """
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()

@@ -16,8 +16,8 @@ from dataclasses import dataclass
 
 
 def _files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if os.path.isdir(path):  # recursive: a partition_by export nests its files
+        return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
     return [path]
 
 

@@ -5,7 +5,8 @@ The reference prints rows/s + MiB/s continuously WHILE writing
 The Spark-native analog is observation, not instrumentation: a background
 thread polls
 
-- bytes landed so far in the output directory, through the Hadoop
+- bytes landed so far in the directory being written (for ``export()``,
+  its ``<path>._tmp`` staging directory), through the Hadoop
   FileSystem API (scheme-resolved: file://, hdfs://, s3a:// all work; the
   in-flight ``_temporary`` task files count, which is exactly "written so
   far" while the job runs), and

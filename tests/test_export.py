@@ -449,30 +449,92 @@ def test_sorted_multifile_export_global_order(spark, sf_dir, tmp_path):
         assert hi1 <= lo2, f"files overlap: {hi1} > {lo2}"
 
 
-def test_audit_conversions(spark):
-    """A37 analog: the audit reports NULLed conversions with a sample value."""
-    from pyspark.sql import functions as F
+@pytest.fixture
+def observations(monkeypatch):
+    """Every ``Observation`` created while the test runs, to read after the
+    action that fills it."""
+    import pyspark.sql
 
-    from pg2parquet_spark.audit import audit_conversions
+    seen = []
+
+    class Spy(pyspark.sql.Observation):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            seen.append(self)
+
+    monkeypatch.setattr(pyspark.sql, "Observation", Spy)
+    return seen
+
+
+def _tree(path: str) -> dict[str, bytes]:
+    """Every file under ``path`` by relative name, with its bytes."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def _no_staging_left(path: str) -> bool:
+    return not glob.glob(path.rstrip("/") + "._*")
+
+
+def test_audit_conversions(spark, tmp_path, observations):
+    """A37 analog: the audit riding the write counts the NULLed conversions
+    per column and names the lowest offending row with its value."""
+    from pg2parquet_spark.export import export_audited
 
     df = spark.createDataFrame(
         [("1", "x"), ("2", "9999999999"), (None, "3"), ("oops", "4")],
         ["a", "b"],
     )
-    report = audit_conversions(
+    out = str(tmp_path / "audited")
+    report = export_audited(
         df,
+        out,
         {
             "a_int": (F.col("a"), F.col("a").try_cast("int")),
             "b_short": (F.col("b"), F.col("b").try_cast("smallint")),
         },
+        fail_on_nulled=False,
     )
-    rows = {r.column: r for r in report.collect()}
-    assert rows["a_int"].n_rows == 4
-    assert rows["a_int"].n_source_nonnull == 3
-    assert rows["a_int"].n_nulled == 1
-    assert rows["a_int"].sample_bad == "oops"
-    assert rows["b_short"].n_nulled == 2
-    assert rows["b_short"].sample_bad in {"x", "9999999999"}
+    (obs,) = observations
+    got = obs.get
+    assert (got["__nulled0"], got["__nulled1"]) == (1, 2)  # a_int, b_short
+    first = got["__first"]
+    assert (first.row_id, first.col_name, first.bad_value) == ("1", "b_short", "x")
+    assert sorted(tuple(r) for r in report.collect()) == [
+        ("a_int", "oops", "oops"), ("b_short", "1", "x"), ("b_short", "2", "9999999999"),
+    ]
+    back = spark.read.parquet(out)
+    assert back.count() == 4
+    assert back.filter(F.col("a").isNotNull()).count() == 3
+    assert back.filter(F.col("a_int").isNotNull()).count() == 2  # 3 non-null - 1 nulled
+
+
+def test_audit_is_exact_under_sort_and_single_file(spark, tmp_path, observations):
+    """The observation sits above the sort, so the range partitioner's
+    sampling pass does not count a row twice; the error names the LOWEST
+    offending id even when a higher one comes first in partition order."""
+    from pg2parquet_spark.export import ConversionError, export_audited
+
+    # ids 400..301 in the first partition, 100..1 in the last
+    df = spark.range(0, 400, numPartitions=4).select(
+        (F.lit(400) - F.col("id")).alias("id")
+    ).select("id", F.when(F.col("id").isin(350, 20), F.lit("bad")).otherwise(
+        F.col("id").cast("string")).alias("raw"))
+    assert df.rdd.getNumPartitions() == 4
+    conversions = {"n": (F.col("raw"), F.col("raw").try_cast("int"))}
+    opts = ExportOptions(sort_by=("id",), single_file=True)
+    with pytest.raises(ConversionError, match=r"id=20\b"):
+        export_audited(df, str(tmp_path / "fail"), conversions, opts)
+    assert observations[-1].get["__nulled0"] == 2
+    assert not os.path.exists(tmp_path / "fail") and _no_staging_left(str(tmp_path / "fail"))
+    report = export_audited(df, str(tmp_path / "cap"), conversions, opts, fail_on_nulled=False)
+    assert observations[-1].get["__nulled0"] == 2
+    assert sorted(r.row_id for r in report.collect()) == [20, 350]
 
 
 def test_export_audited_identifies_error_row(spark, tmp_path):
@@ -490,7 +552,8 @@ def test_export_audited_identifies_error_row(spark, tmp_path):
         export_audited(df, str(tmp_path / "out"), conversions)
     msg = str(exc.value)
     assert "'price'" in msg and "'not-a-number'" in msg and "id=2" in msg
-    assert not (tmp_path / "out").exists()  # aborted before writing
+    assert not (tmp_path / "out").exists()  # aborted before publishing
+    assert _no_staging_left(str(tmp_path / "out"))
 
     # capture mode: write anyway, return the bad-row report
     report = export_audited(
@@ -534,6 +597,29 @@ def test_float16_mode_emits_flba2(spark, tmp_path):
     back = pq.read_table(out).sort_by("id")
     # f16-representable values survive the round trip exactly
     assert [float(x.as_py()) for x in back["val"]] == [1.5, -3.0, 0.25]
+
+
+def test_float16_keeps_row_groups_of_float32_export(spark, tmp_path):
+    """The float16 pass rewrites each file row group by row group, so the
+    row-group sizing of the export survives it."""
+    df = spark.range(60_000).select(
+        "id", F.rand(7).cast("float").alias("val"),
+        F.sha2(F.col("id").cast("string"), 256).alias("h"),
+    )
+
+    def groups(mode: str) -> int:
+        out = str(tmp_path / mode)
+        cols = ("val",) if mode == "float16" else ()
+        export(df, out, ExportOptions(
+            float16_handling=mode, float16_columns=cols,
+            row_group_bytes=256 * 1024, single_file=True,
+        ), quiet=True)
+        (f,) = glob.glob(f"{out}/*.parquet")
+        return pq.ParquetFile(f).num_row_groups
+
+    n32 = groups("float32")
+    assert n32 > 1
+    assert groups("float16") == n32
 
 
 def test_float16_mode_requires_columns():
@@ -599,7 +685,8 @@ def test_compact_via_filesystem_uri(spark, sf_dir, tmp_path):
     n = compact(spark, out, target_file_mb=512)
     assert n == 1
     assert spark.read.parquet(out).count() == ords.count()
-    assert not (tmp_path / "fragmented_uri._compact_tmp").exists()
+    assert not (tmp_path / "fragmented_uri._tmp").exists()
+    assert not (tmp_path / "fragmented_uri._old").exists()
 
 
 def test_parquet_info_and_write_stats(spark, sf_dir, tmp_path):
@@ -617,6 +704,63 @@ def test_parquet_info_and_write_stats(spark, sf_dir, tmp_path):
     stats = write_stats(out, time.time() - 1.0)
     assert stats.rows == 5 and stats.files == 1 and stats.row_groups == 1
     assert "5 rows" in str(stats)
+
+
+def test_write_stats_counts_a_partitioned_export(spark, sf_dir, tmp_path):
+    """A partition_by export nests its files under key=value directories;
+    the summary must still count every row."""
+    import time
+
+    from pg2parquet_spark.parquetinfo import write_stats
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    out = str(tmp_path / "byflag")
+    export(li, out, ExportOptions(partition_by=("l_returnflag",)), quiet=True)
+    stats = write_stats(out, time.time() - 1.0)
+    assert stats.rows == li.count()
+    assert stats.files == len(glob.glob(f"{out}/*/*.parquet")) > 0
+
+
+def test_failed_export_leaves_previous_dataset(spark, tmp_path):
+    """A write job that dies midway (here a UDF raising on one row) or an
+    audited export that finds a nulled value leaves the previous dataset at
+    the path byte-identical, and no staging directory behind."""
+    from pyspark.sql.types import LongType
+
+    from pg2parquet_spark.export import ConversionError, export_audited
+
+    out = str(tmp_path / "ds")
+    df = spark.range(0, 2000, numPartitions=4)
+    export(df, out, quiet=True)
+    before = _tree(out)
+
+    @F.udf(LongType())
+    def explode_on_1234(v):
+        if v == 1234:
+            raise ValueError("boom at 1234")
+        return v
+
+    with pytest.raises(Exception, match="boom at 1234"):
+        export(df.select(explode_on_1234("id").alias("id")), out, quiet=True)
+    assert _tree(out) == before and _no_staging_left(out)
+
+    raw = df.select("id", F.when(F.col("id") == 7, "x").otherwise(
+        F.col("id").cast("string")).alias("raw"))
+    with pytest.raises(ConversionError, match="id=7"):
+        export_audited(raw, out, {"n": (F.col("raw"), F.col("raw").try_cast("int"))})
+    assert _tree(out) == before and _no_staging_left(out)
+
+    export(df.filter("id < 10"), out, quiet=True)  # and a good export replaces it
+    assert spark.read.parquet(out).count() == 10 and _no_staging_left(out)
+
+
+def test_export_meter_watches_the_staging_dir(spark, sf_dir, tmp_path, capsys):
+    """The bytes land in the staging directory during the write: the meter's
+    final line, taken before publish, must already count them."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    export(li, str(tmp_path / "metered"), ExportOptions(compression="none"))
+    last = [l for l in capsys.readouterr().err.splitlines() if "[export]" in l][-1]
+    assert float(last.split("MiB written")[0].split()[-1]) > 0
 
 
 def test_salted_left_join_keeps_unmatched(spark):
@@ -719,7 +863,7 @@ def test_compact_partitioned_concurrent(spark, tmp_path):
     assert sorted(os.path.basename(p) for p in result) == [f"p={i}" for i in range(5)]
     for i in range(5):
         assert len(glob.glob(f"{out}/p={i}/*.parquet")) == 1
-        assert glob.glob(f"{out}/p={i}._compact_*") == []
+        assert glob.glob(f"{out}/p={i}._*") == []
     after = sorted((r.id, r.p, r.v) for r in spark.read.parquet(out).collect())
     assert after == rows_before
 

@@ -13,7 +13,8 @@ Wire-proven here (vs the string/fixture unit tests):
 - NULL, '' and sentinel-looking text stay distinct, and rows of several
   MiB decode whole;
 - no psql child outlives its task, whether the consumer stops early or the
-  server fails mid-stream;
+  server fails mid-stream, and an export failing that way keeps the
+  previous dataset at its path;
 - the A4 precedence (DATABASE_URL with libpq ?host= socket syntax) and
   sslmode reach psql;
 - the A3 catalog probes (ENUM_LABELS_SQL / COMPOSITE_FIELDS_SQL / column
@@ -334,6 +335,35 @@ def test_no_psql_outlives_a_failed_copy(spark, live_pg):
     with pytest.raises(PySparkException, match="division by zero"):
         df.collect()
     _assert_no_psql_left("mid_stream_probe")
+
+
+def test_failed_copy_export_keeps_previous_dataset(spark, live_pg, tmp_path):
+    """An export whose COPY the server aborts after rows have flowed raises,
+    and the dataset a previous export published at the same path survives
+    byte for byte, with no staging directory and no psql child left."""
+    from pg2parquet_spark.export import export
+    from pg2parquet_spark.sources import pgcopy
+
+    out = str(tmp_path / "plain")
+    export(pgcopy.read(spark, live_pg, table="plain"), out, quiet=True)
+
+    def tree() -> dict[str, bytes]:
+        return {
+            os.path.relpath(os.path.join(d, f), out): open(os.path.join(d, f), "rb").read()
+            for d, _, fs in os.walk(out) for f in fs
+        }
+
+    before = tree()
+    failing = pgcopy.read(
+        spark, live_pg,
+        query="SELECT g AS publish_probe, 1 / (g - 50000) AS q FROM generate_series(1, 100000) g",
+    )
+    with pytest.raises(PySparkException, match="division by zero"):
+        export(failing, out, quiet=True)
+    assert tree() == before
+    assert not os.path.exists(out + "._tmp") and not os.path.exists(out + "._old")
+    assert spark.read.parquet(out).count() == 1000
+    _assert_no_psql_left("publish_probe")
 
 
 def test_sslmode_disable_connects(spark, live_pg):
