@@ -16,7 +16,10 @@ into one Parquet file, implementing (a) a PG-catalog→Parquet schema compiler,
 - beyond parity: large-scale training-data pipeline operators (dedup,
   similarity search, text analysis, multimodal plumbing) — see ``operators/``.
 
-Everything here is plain public PySpark; no RDDs, no private APIs.
+Mostly public PySpark DataFrame API. Exceptions: the float16 pass uses
+``sc.parallelize``; ``export.py`` and the meter reach Hadoop's FileSystem and
+Parquet footers through ``spark._jvm``; ``tables.py`` and ``operators/dedup.py``
+inspect plans and RDDs.
 """
 
 __version__ = "0.1.0"

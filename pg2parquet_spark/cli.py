@@ -125,14 +125,9 @@ def run_export(args: argparse.Namespace) -> int:
     if not args.quiet:
         # A36/A38 analog: schema print (format_schema) + summary stats
         df.printSchema()
-    import time
-
-    t0 = time.time()
-    export(df, args.output_file, options, quiet=args.quiet)
+    report = export(df, args.output_file, options, quiet=args.quiet)
     if not args.quiet:
-        from pg2parquet_spark.parquetinfo import write_stats
-
-        print(write_stats(args.output_file, t0))
+        print(report)
     return 0
 
 

@@ -12,6 +12,8 @@ surface*:
   rename-aside swap, so a failed export leaves the previous dataset intact.
   Two concurrent exports to one path are not supported (they share the
   staging directory).
+- the writer's summary counters (``WriterStats``, parquet_writer.rs:8-14):
+  :func:`export` returns them as an :class:`ExportReport`.
 - optional single-file output (the reference is single-file by construction;
   at 100 TB you want many files — single_file=False default keeps the
   parallel writer, one file per task)
@@ -25,19 +27,43 @@ preserved — sort first, then coalesce(1) keeps one ordered partition.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from contextlib import contextmanager, nullcontext
+import time
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager, nullcontext, suppress
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from pg2parquet_spark.options import ExportOptions
 
 
+@dataclass(frozen=True)
+class ExportReport:
+    """What one export wrote: the reference's ``WriterStats`` counters
+    (rows, bytes, row groups; parquet_writer.rs:8-14) plus the data files
+    and the export's wall time. ``str()`` is the reference's summary line."""
+
+    rows: int
+    files: int
+    bytes: int
+    row_groups: int  # 0 for non-Parquet output formats
+    seconds: float
+
+    def __str__(self) -> str:
+        rate = self.rows / self.seconds if self.seconds > 0 else float("inf")
+        return (
+            f"Wrote {self.rows} rows / {self.bytes / (1024 * 1024):.2f} MiB in "
+            f"{self.files} file(s), {self.row_groups} row group(s), "
+            f"{self.seconds:.2f}s ({rate:,.0f} rows/s)"
+        )
+
+
 def export(
     df: DataFrame, path: str, options: ExportOptions | None = None, quiet: bool = False
-) -> None:
-    """Write ``df`` to ``path`` per the export options (parquet default).
+) -> ExportReport:
+    """Write ``df`` to ``path`` per the export options (parquet default) and
+    return what was written.
 
     The write lands at ``<path>._tmp`` and replaces ``path`` only once it
     has succeeded (:func:`_publish`).
@@ -46,11 +72,46 @@ def export(
     completion — ref cli/src/parquet_writer.rs:100-151) prints to stderr
     during the write by default; ``quiet=True`` (CLI ``--quiet``) suppresses.
     """
-    options = options or ExportOptions()
+    return _export(df, path, options or ExportOptions(), quiet)[0]
+
+
+def _export(
+    df: DataFrame,
+    path: str,
+    options: ExportOptions,
+    quiet: bool,
+    metrics: Sequence[Column] = (),
+    hidden: Sequence[str] = (),
+    check: Callable[[Row], None] | None = None,
+) -> tuple[ExportReport, Row]:
+    """Sort, observe, write, list, publish: the one write path. Returns the
+    report and the observed row; if ``check`` raises on that row, ``path``
+    is left as it was. The unnamed ``Observation`` (row count + ``metrics``
+    over the ``hidden`` columns) sits above the sort: the range
+    partitioner's sampling job reruns the sort's input, so below it every
+    row would count twice."""
+    from pyspark.sql import Observation
+
+    t0 = time.monotonic()
+    spark = df.sparkSession
     if options.sort_by:
         df = df.orderBy(*options.sort_by)
-    with _publish(df.sparkSession, path) as tmp:
+    seen = Observation()
+    df = df.observe(seen, F.count(F.lit(1)).alias("__rows"), *metrics).drop(*hidden)
+    with _publish(spark, path) as tmp:
         _write(df, tmp, options, quiet)
+        got = seen.get  # only after the write: it blocks if the action failed
+        if check is not None:
+            check(got)
+        files = data_files(spark, tmp)
+        groups = _row_groups(spark, files) if options.output_format == "parquet" else 0
+    return ExportReport(
+        rows=got["__rows"],
+        files=len(files),
+        bytes=sum(size for _f, size in files),
+        row_groups=groups,
+        seconds=time.monotonic() - t0,
+    ), got
 
 
 def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> None:
@@ -77,6 +138,38 @@ def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> Non
         writer.format(options.output_format).save(path)
     if options.output_format == "parquet" and options.float16_handling == "float16":
         _narrow_to_float16(df.sparkSession, path, options)
+
+
+def data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(path, bytes) of every data file under ``path`` (not ``_*`` or
+    ``.*`` names; a running write's ``_temporary`` files count), listed
+    through the Hadoop FileSystem of the path's scheme. One ``listStatus``
+    per directory: the local ``listFiles`` forks a ``stat`` per file."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    files, dirs = [], [root]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            p = st.getPath()
+            if st.isDirectory():
+                dirs.append(p)
+            elif not p.getName().startswith(("_", ".")):
+                files.append((p.toString(), st.getLen()))
+    return files
+
+
+def _row_groups(spark: SparkSession, files: list[tuple[str, int]]) -> int:
+    """Row groups in the Parquet footers of ``files``."""
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path
+    input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath
+    # readFooter, not ParquetFileReader.open: a footer is all this needs
+    read_footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter
+    everything = jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    return sum(
+        read_footer(input_file(hpath(f), conf), everything).getBlocks().size()
+        for f, _size in files
+    )
 
 
 @contextmanager
@@ -149,6 +242,8 @@ def _rewrite_one_float16(
     rewrite lands at ``<path>.f16tmp`` and is renamed into place. A retry
     that finds a stale tmp simply overwrites it.
     """
+    import posixpath
+
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark import TaskContext
@@ -178,6 +273,11 @@ def _rewrite_one_float16(
             group = src.read_row_group(i).cast(schema)
             out.write_table(group, row_group_size=max(1, group.num_rows))
     fsys.move(tmp, path)
+    # Hadoop's local filesystem keeps a checksum of the old bytes beside the
+    # file; left stale, it fails every later read of the file through Hadoop
+    head, name = posixpath.split(path)
+    with suppress(FileNotFoundError):
+        fsys.delete_file(posixpath.join(head, f".{name}.crc"))
     return path
 
 
@@ -254,8 +354,6 @@ def export_audited(
       ``localCheckpoint`` from one more scan of ``df`` over only the
       conversions that nulled values (empty, with no job, if none did).
     """
-    from pyspark.sql import Observation
-
     from pg2parquet_spark import audit
 
     options = options or ExportOptions()
@@ -270,26 +368,21 @@ def export_audited(
         cols[name] = F.col(conv)
         cols[mark] = audit.nulled_mark(name, src, F.col(conv), id_col)
     staged = staged.withColumns(cols).drop(*convs)
-    if options.sort_by:
-        staged = staged.orderBy(*options.sort_by)
-    # observed above the sort: the range partitioner's sampling job runs the
-    # sort's input once more, and an observation below it would count twice
-    seen = Observation("conversion_audit")
-    staged = staged.observe(
-        seen,
-        *[F.count(c).alias(c) for c in marks],
-        F.min(F.array_min(F.array(*marks))).alias("__first"),
-    )
-    with _publish(df.sparkSession, path) as tmp:
-        _write(staged.drop(*marks), tmp, options, quiet=False)
-        got = seen.get  # only after the write: it blocks if the action failed
-        nulled = {n: c for (n, c), m in zip(conversions.items(), marks) if got[m]}
-        if nulled and fail_on_nulled:
+
+    def refuse_nulled(got: Row) -> None:
+        if fail_on_nulled and any(got[m] for m in marks):
             r = got["__first"]
             raise ConversionError(
                 f"conversion to column {r.col_name!r} failed: source value "
                 f"{r.bad_value!r} became NULL in row with {id_col}={r.row_id!r}"
             )
+
+    metrics = [F.count(c).alias(c) for c in marks]
+    metrics.append(F.min(F.array_min(F.array(*marks))).alias("__first"))
+    _, got = _export(
+        staged, path, options, quiet=False, metrics=metrics, hidden=marks, check=refuse_nulled
+    )
+    nulled = {n: c for (n, c), m in zip(conversions.items(), marks) if got[m]}
     if not nulled:
         return audit.identify_bad_rows(df, conversions, id_col, max_rows=0)
     return audit.identify_bad_rows(df, nulled, id_col).localCheckpoint(eager=True)
@@ -317,21 +410,6 @@ def export_bucketed(
     writer.saveAsTable(table_name)
 
 
-def export_query(
-    spark: SparkSession, query: str, path: str, options: ExportOptions | None = None
-) -> DataFrame:
-    """Reference main path: one SQL query → one Parquet dataset.
-
-    The query runs against whatever sources are registered in the session
-    (temp views over ``pgcopy.read`` frames, or parquet fixture views).
-    Returns the DataFrame for inspection (schema printing — A36's analog is
-    Spark's own UI/listener; ``df.schema`` mirrors format_schema).
-    """
-    df = spark.sql(query)
-    export(df, path, options)
-    return df
-
-
 def compact(
     spark: SparkSession,
     path: str,
@@ -354,10 +432,8 @@ def compact(
     would see 0 bytes and compact 100 TB into one file). Partition-wise
     compaction is `compact(part_dir)` per leaf directory.
 
-    Listing and measuring go through the Hadoop FileSystem API resolved
-    from the path's own scheme — so the same code compacts file://, hdfs://
-    and s3a:// datasets (the 100 TB deployment is never a local filesystem;
-    glob/os would silently report 0 bytes there).
+    Listing and measuring go through the Hadoop FileSystem of the path's
+    own scheme, so file://, hdfs:// and s3a:// datasets compact alike.
     """
     import math
 
@@ -372,18 +448,9 @@ def compact(
                 "leaf partition directory instead"
             )
 
-    def parquet_sizes() -> list[int]:
-        sizes = []
-        it = fs.listFiles(src, True)  # recursive: nested task dirs still count
-        while it.hasNext():
-            st = it.next()
-            if st.getPath().getName().endswith(".parquet"):
-                sizes.append(st.getLen())
-        return sizes
-
-    n_files = max(1, math.ceil(sum(parquet_sizes()) / (target_file_mb * 1024 * 1024)))
-    export(spark.read.parquet(path).repartition(n_files), path, options)
-    return len(parquet_sizes())
+    size = sum(n for _f, n in data_files(spark, path))
+    n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
+    return export(spark.read.parquet(path).repartition(n_files), path, options).files
 
 
 def compact_partitioned(

@@ -1,18 +1,13 @@
-"""Debug tooling mirroring the reference's hidden subcommands.
-
-- `parquet_info` ≙ `pg2parquet parquet-info <file>` (parquetinfo.rs:36-70):
-  dump schema, row-group/column metadata, and a bounded sample of values.
-- `write_stats` ≙ the progress/summary meter (parquet_writer.rs:100-165,
-  WriterStats): rows, output bytes, row groups, rows/s — printed after an
-  export unless quiet.
+"""Debug tooling mirroring the reference's hidden subcommand
+``pg2parquet parquet-info <file>`` (parquetinfo.rs:36-70): dump schema,
+row-group/column metadata, and a bounded sample of values. The write
+summary (WriterStats) is the ``ExportReport`` that ``export()`` returns.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-import time
-from dataclasses import dataclass
 
 
 def _files(path: str) -> list[str]:
@@ -53,45 +48,3 @@ def parquet_info(path: str, max_records: int = 300) -> str:
                 break
     return "\n".join(out)
 
-
-@dataclass
-class WriteStats:
-    rows: int
-    output_bytes: int
-    files: int
-    row_groups: int
-    seconds: float
-
-    @property
-    def rows_per_sec(self) -> float:
-        return self.rows / self.seconds if self.seconds > 0 else float("inf")
-
-    def __str__(self) -> str:
-        mib = self.output_bytes / (1024 * 1024)
-        return (
-            f"Wrote {self.rows} rows / {mib:.2f} MiB in {self.files} file(s), "
-            f"{self.row_groups} row group(s), {self.seconds:.2f}s "
-            f"({self.rows_per_sec:,.0f} rows/s)"
-        )
-
-
-def write_stats(path: str, started_at: float) -> WriteStats:
-    """Collect the reference's summary counters from the written dataset."""
-    import pyarrow.parquet as pq
-
-    rows = 0
-    bytes_ = 0
-    groups = 0
-    files = _files(path)
-    for f in files:
-        pf = pq.ParquetFile(f)
-        rows += pf.metadata.num_rows
-        groups += pf.num_row_groups
-        bytes_ += os.path.getsize(f)
-    return WriteStats(
-        rows=rows,
-        output_bytes=bytes_,
-        files=len(files),
-        row_groups=groups,
-        seconds=time.time() - started_at,
-    )

@@ -6,14 +6,15 @@ The Spark-native analog is observation, not instrumentation: a background
 thread polls
 
 - bytes landed so far in the directory being written (for ``export()``,
-  its ``<path>._tmp`` staging directory), through the Hadoop
-  FileSystem API (scheme-resolved: file://, hdfs://, s3a:// all work; the
+  its ``<path>._tmp`` staging directory), by :func:`export.data_files`,
+  the recursive Hadoop FileSystem listing the export report also uses
+  (scheme-resolved: file://, hdfs://, s3a:// all work; the
   in-flight ``_temporary`` task files count, which is exactly "written so
   far" while the job runs), and
 - task completion of the active jobs from ``SparkStatusTracker`` (the
   public API; per-task row counts are not exposed to Python, so the live
-  row meter is task-granular — exact row totals come from
-  ``parquetinfo.write_stats`` after commit).
+  row meter is task-granular — the exact row total is in the
+  ``ExportReport`` that ``export()`` returns).
 
 Everything prints to stderr so stdout stays machine-readable (the CLI and
 bench print JSON there).
@@ -25,6 +26,8 @@ import sys
 import threading
 import time
 from collections.abc import Callable
+
+from pg2parquet_spark.export import data_files
 
 
 class ProgressReporter:
@@ -49,62 +52,17 @@ class ProgressReporter:
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
         self._t0 = 0.0
-        # committed task/output files are immutable once visible — size each
-        # exactly once. {path-string: bytes}
-        self._committed: dict[str, int] = {}
-        # per-tick probe telemetry (unit-tested): dir listings performed and
-        # how many file sizes came from cache vs fresh listing entries
-        self.last_probe: dict[str, int] = {}
+        self._bytes = 0
 
     # -- probes ------------------------------------------------------------
     def _bytes_written(self) -> int:
-        """Incremental probe. The old shape — ``getContentSummary(root)`` per
-        tick — is a full server-side recursive walk of everything written so
-        far, O(total files) per tick on an object store. This one:
-
-        - lists each live directory once per tick (one LIST RPC each, sizes
-          come with the entries — never a recursive content summary),
-        - caches committed-file sizes forever (task outputs are immutable
-          once visible, so a cached size can never go stale),
-        - recurses only under ``_temporary`` (in-flight task attempts) and
-          any nested partition dirs, reusing the same cache.
-
-        Remote round trips per tick are O(live directories), not a
-        recursive walk of every byte landed so far; per-entry work for
-        already-committed files is a cache hit.
-        """
-        stats = {"dirs_listed": 0, "files_new": 0, "files_cached": 0}
+        """One recursive listing per tick. While the directory does not
+        exist yet, or changes under the listing, the last figure stands."""
         try:
-            jvm = self._spark._jvm
-            root = jvm.org.apache.hadoop.fs.Path(self._path)
-            fs = root.getFileSystem(self._spark._jsc.hadoopConfiguration())
-            if not fs.exists(root):
-                self.last_probe = stats
-                return 0
-            inflight = 0
-            pending = [root]
-            while pending:
-                d = pending.pop()
-                stats["dirs_listed"] += 1
-                for st in fs.listStatus(d):
-                    if st.isDirectory():
-                        pending.append(st.getPath())
-                        continue
-                    key = st.getPath().toString()
-                    if "_temporary" in key:
-                        # in-flight attempt files get rewritten/renamed —
-                        # never cache, always count the listed size
-                        inflight += st.getLen()
-                    elif key in self._committed:
-                        stats["files_cached"] += 1
-                    else:
-                        stats["files_new"] += 1
-                        self._committed[key] = st.getLen()
-            self.last_probe = stats
-            return sum(self._committed.values()) + inflight
+            self._bytes = sum(size for _f, size in data_files(self._spark, self._path))
         except Exception:  # never let the meter kill the write
-            self.last_probe = stats
-            return sum(self._committed.values())
+            pass
+        return self._bytes
 
     def _task_progress(self) -> tuple[int, int]:
         try:

@@ -16,7 +16,7 @@ Scale design:
 - **Arrow batches**: the executor cuts the COPY stream into blocks of
   whole rows (a row of any length fits), decodes each with ``pyarrow.csv``
   into text columns and hands the batches to the JVM (``mapInArrow``).
-  ``_PG_TO_SPARK`` types them with one codegen'd cast (`_cast_plan`).
+  `_cast_plan` types them JVM-side in one codegen'd projection.
 - **NULL fidelity**: COPY's CSV NULL is an unquoted empty field, while an
   empty string goes out quoted (``""``). The decoder reads only unquoted
   empty fields as NULL, so NULL and ``''`` stay distinct with no sentinel.
@@ -235,9 +235,10 @@ def run_sql(conn: PostgresConnection, sql: str) -> list[tuple[str | None, ...]]:
     return _text_rows(_copy_stdout(resolve_target(conn), sql))
 
 
-# PG type name (pg_type.typname / information_schema udt_name) → Spark cast.
+# PG type name (pg_type.typname / information_schema udt_name) → Spark type.
 # Everything absent from this map transports as text (which is exactly what
 # the exotic rewrite path wants — the typemap parsers take it from there).
+# ``numeric`` is typed by the typemap's decimal conversion (`_cast_plan`).
 _PG_TO_SPARK: dict[str, str] = {
     "int2": "smallint",
     "int4": "int",
@@ -248,7 +249,6 @@ _PG_TO_SPARK: dict[str, str] = {
     "date": "date",
     "timestamp": "timestamp_ntz",
     "timestamptz": "timestamp",
-    "numeric": "decimal(38,18)",
 }
 
 
@@ -341,8 +341,8 @@ def read(
     (main.rs:252-260).
 
     ``table=`` reads return typed columns: the live A3 probe names each
-    column's PG type, and ``_PG_TO_SPARK`` maps plain scalars (cast
-    JVM-side); everything exotic stays text for the typemap
+    column's PG type, and `_cast_plan` types plain scalars and
+    ``numeric`` JVM-side; everything exotic stays text for the typemap
     parsers. ``query=`` reads run a LIMIT 0 probe for the column NAMES
     only, so every column arrives as text. Either way the driver runs one
     ``psql`` probe before the scan.
@@ -388,8 +388,28 @@ def read(
 
 
 def _cast_plan(col: str, pg_type: str):
-    """JVM-side cast from transported text — codegen'd, never Python."""
+    """JVM-side typing of transported text — codegen'd, never Python.
+    ``numeric`` NaN and overflow become NULL (the reference's decimal mode),
+    a BC date keeps PG's day, and a date or timestamp no cast takes
+    (``infinity``, BC timestamps) fails the read naming the column."""
+    # imported here, not at module level: every executor worker that runs
+    # the COPY reader imports this module, and typemap pulls in pandas
+    from pg2parquet_spark.typemap import numeric_to_decimal
+
+    text = F.col(col)
+    if pg_type == "numeric":
+        return numeric_to_decimal(text, 38, 18).alias(col)
     spark_t = _PG_TO_SPARK.get(pg_type)
     if spark_t is None:
-        return F.col(col)
-    return F.col(col).cast(spark_t).alias(col)
+        return text
+    if pg_type not in ("date", "timestamp", "timestamptz"):
+        return text.cast(spark_t).alias(col)  # PG's text of these always casts
+    typed = text.try_cast(spark_t)
+    if pg_type == "date":  # a cast reads PG's "YYYY-MM-DD BC" as AD
+        typed = F.when(text.endswith(" BC"), F.to_date(text, "yyyy-MM-dd G")).otherwise(typed)
+    refused = F.raise_error(F.concat(
+        F.lit(f"column {col!r}: cannot convert PostgreSQL {pg_type} value '"),
+        text, F.lit(f"' to {spark_t}"),
+    ))
+    # coalesce evaluates the cast once; a CASE over it would cast twice
+    return F.coalesce(typed, F.when(text.isNotNull(), refused)).alias(col)

@@ -9,7 +9,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from pg2parquet_spark.export import export, export_query
+from pg2parquet_spark.export import export
 from pg2parquet_spark.options import ExportOptions
 from pg2parquet_spark.sources.jdbc import (
     PostgresConnection,
@@ -80,8 +80,8 @@ def test_row_group_size_applied(spark, sf_dir, tmp_path):
 def test_export_query_over_views(spark, sf_dir, tmp_path):
     register_views(spark, sf_dir, ["region"])
     out = str(tmp_path / "q.parquet")
-    df = export_query(spark, "SELECT r_name FROM region WHERE r_regionkey < 2", out)
-    assert df.count() == 2
+    report = export(spark.sql("SELECT r_name FROM region WHERE r_regionkey < 2"), out)
+    assert report.rows == 2
     assert spark.read.parquet(out).count() == 2
 
 
@@ -286,6 +286,21 @@ def test_cli_export_fixture_mode(spark, sf_dir, tmp_path):
     ])
     assert rc == 0
     assert spark.read.parquet(out).count() == 7
+
+
+def test_cli_exports_to_a_file_uri(spark, sf_dir, tmp_path, capsys):
+    """Without --quiet the CLI prints the export's own report, so a URI
+    output path works like a local one."""
+    from pg2parquet_spark.cli import main
+
+    out = tmp_path / "cli_uri"
+    rc = main([
+        "export", "-o", f"file://{out}", "--input-dir", sf_dir,
+        "-q", "SELECT n_nationkey, n_name FROM nation",
+    ])
+    assert rc == 0
+    assert "Wrote 25 rows" in capsys.readouterr().out
+    assert spark.read.parquet(str(out)).count() == 25
 
 
 def test_cli_rejects_query_and_table():
@@ -689,36 +704,104 @@ def test_compact_via_filesystem_uri(spark, sf_dir, tmp_path):
     assert not (tmp_path / "fragmented_uri._old").exists()
 
 
-def test_parquet_info_and_write_stats(spark, sf_dir, tmp_path):
-    """A36/A38 tooling: the info dump names schema+row groups; stats count
-    rows/bytes/files like the reference's summary meter."""
-    import time
-
-    from pg2parquet_spark.parquetinfo import parquet_info, write_stats
+def test_parquet_info_and_export_report(spark, sf_dir, tmp_path):
+    """A36/A38 tooling: the info dump names schema+row groups; the report
+    counts rows/files/row groups like the reference's summary meter."""
+    from pg2parquet_spark.parquetinfo import parquet_info
 
     region = spark.read.parquet(f"{sf_dir}/region.parquet")
     out = str(tmp_path / "info.parquet")
-    export(region, out, ExportOptions(compression="snappy", single_file=True))
+    report = export(region, out, ExportOptions(compression="snappy", single_file=True))
     info = parquet_info(out)
     assert "r_name" in info and "row group 0" in info and "rows=5" in info
-    stats = write_stats(out, time.time() - 1.0)
-    assert stats.rows == 5 and stats.files == 1 and stats.row_groups == 1
-    assert "5 rows" in str(stats)
+    assert report.rows == 5 and report.files == 1 and report.row_groups == 1
+    assert "5 rows" in str(report)
 
 
-def test_write_stats_counts_a_partitioned_export(spark, sf_dir, tmp_path):
+def test_report_counts_a_partitioned_export(spark, sf_dir, tmp_path):
     """A partition_by export nests its files under key=value directories;
-    the summary must still count every row."""
-    import time
-
-    from pg2parquet_spark.parquetinfo import write_stats
-
+    the report must still count every row."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     out = str(tmp_path / "byflag")
-    export(li, out, ExportOptions(partition_by=("l_returnflag",)), quiet=True)
-    stats = write_stats(out, time.time() - 1.0)
-    assert stats.rows == li.count()
-    assert stats.files == len(glob.glob(f"{out}/*/*.parquet")) > 0
+    report = export(li, out, ExportOptions(partition_by=("l_returnflag",)), quiet=True)
+    assert report.rows == li.count()
+    assert report.files == len(glob.glob(f"{out}/*/*.parquet")) > 0
+
+
+def _published(path: str) -> tuple[list[str], int]:
+    """The data files under a published dataset (no ``_SUCCESS``, no
+    ``.crc``) and their total bytes, by walking the local directory."""
+    files = [
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(path)
+        for f in names
+        if not f.startswith(("_", "."))
+    ]
+    return files, sum(os.path.getsize(f) for f in files)
+
+
+def _assert_report_matches(report, path: str, parquet: bool = True) -> None:
+    files, size = _published(path)
+    assert (report.files, report.bytes) == (len(files), size)
+    groups = sum(pq.ParquetFile(f).num_row_groups for f in files) if parquet else 0
+    assert report.row_groups == groups
+
+
+def test_report_rows_of_a_sorted_multi_file_export(spark, tmp_path):
+    """The row count rides the write above the sort: the range sampler's
+    extra pass over the sort's input must not count a row twice."""
+    df = spark.range(0, 20_000, numPartitions=4).select(
+        "id", F.rand(3).alias("k"), F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    out = str(tmp_path / "sorted")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep the sort's partitions as files
+    try:
+        report = export(df, out, ExportOptions(sort_by=("k",)), quiet=True)
+    finally:
+        spark.conf.set(key, before)
+    assert report.rows == 20_000 == df.count()
+    assert report.files > 1
+    _assert_report_matches(report, out)
+
+
+@pytest.mark.parametrize("case", ["partition_by", "csv", "file_uri", "float16"])
+def test_report_matches_the_published_files(spark, tmp_path, case):
+    """Files and bytes equal a walk of the published data files, row groups
+    the Parquet footers (after the float16 pass rewrote them), rows the
+    source count."""
+    df = spark.range(0, 6000, numPartitions=3).select(
+        "id", (F.col("id") % 4).alias("p"), F.rand(5).cast("float").alias("v")
+    )
+    out = tmp_path / case
+    target, opts = str(out), {
+        "partition_by": ExportOptions(partition_by=("p",)),
+        "csv": ExportOptions(output_format="csv"),
+        "file_uri": ExportOptions(row_group_bytes=16 * 1024),
+        "float16": ExportOptions(float16_handling="float16", float16_columns=("v",)),
+    }[case]
+    if case == "file_uri":
+        target = f"file://{out}"
+    report = export(df, target, opts, quiet=True)
+    assert report.rows == 6000
+    assert report.files >= 3
+    _assert_report_matches(report, str(out), parquet=case != "csv")
+
+
+def test_report_of_an_empty_frame(spark, tmp_path):
+    """An empty frame reports 0 rows, whether it has no rows or no
+    partitions at all."""
+    empties = [
+        spark.range(0),
+        spark.range(10).filter("id < 0"),
+        spark.createDataFrame(spark.sparkContext.emptyRDD(), "a int"),
+    ]
+    for i, df in enumerate(empties):
+        out = str(tmp_path / f"empty{i}")
+        report = export(df, out, quiet=True)
+        assert report.rows == 0
+        _assert_report_matches(report, out)
 
 
 def test_failed_export_leaves_previous_dataset(spark, tmp_path):
@@ -773,31 +856,6 @@ def test_salted_left_join_keeps_unmatched(spark):
         (r.k, r.v, r.w) for r in salted_join(large, small, "k", n_salts=4, how="left").collect()
     )
     assert got == [(1, "a", "x"), (2, "b", "y"), (99, "zz", None)]
-
-
-def test_progress_probe_is_incremental(spark, tmp_path):
-    """The byte probe must cache committed-file sizes: a second tick over an
-    unchanged dataset re-sizes ZERO files, and the listing count tracks
-    directories, not files — the per-tick cost that matters on an object
-    store where the old getContentSummary shape was a full recursive walk
-    of everything written so far."""
-    from pg2parquet_spark.progress import ProgressReporter
-
-    df = spark.range(1000).withColumnRenamed("id", "v").repartition(6)
-    out = str(tmp_path / "probe")
-    df.write.mode("overwrite").parquet(out)
-
-    rep = ProgressReporter(spark, out)
-    total1 = rep._bytes_written()
-    first = dict(rep.last_probe)
-    total2 = rep._bytes_written()
-    second = dict(rep.last_probe)
-
-    assert total1 == total2 > 0
-    assert first["files_new"] > 0
-    assert second["files_new"] == 0  # every committed size served from cache
-    assert second["files_cached"] == first["files_new"] + first["files_cached"]
-    assert second["dirs_listed"] == 1  # flat dataset: one LIST RPC per tick
 
 
 def test_compact_partitioned_preserves_layout(spark, tmp_path):

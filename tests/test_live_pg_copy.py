@@ -29,10 +29,12 @@ from __future__ import annotations
 
 import dataclasses
 import os
+import re
 import shutil
 import subprocess
 import sys
 import time
+from decimal import Decimal
 
 import pytest
 from pyspark.errors import PySparkException
@@ -54,7 +56,9 @@ def live_pg():
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     if r.returncode != 0:
-        pytest.skip(f"local PG could not start: {r.stdout} {r.stderr}"[:300])
+        # PostgreSQL is installed (else the module is skipped): a server that
+        # cannot start is a failure, not a reason to skip the wire suite
+        pytest.fail(f"local PG could not start: {r.stdout} {r.stderr}"[:300])
     from pg2parquet_spark.sources.jdbc import PostgresConnection
 
     return PostgresConnection(host="/tmp", port=55432, dbname="postgres", user="postgres")
@@ -399,6 +403,87 @@ def test_cli_exports_live_table(spark, live_pg, tmp_path, monkeypatch):
     assert back.count() == 1000
     row = back.filter(F.col("id") == 7).collect()[0]
     assert (row.name, row.score, str(row.created)) == ("row_7", 3.5, "2024-01-08")
+
+
+def test_numeric_nan_and_overflow_read_as_null(spark, live_pg):
+    """A typed ``numeric`` read goes through the decimal(38,18) conversion:
+    NaN and a value too wide become NULL instead of failing the read."""
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS numeric_edges; "
+        "CREATE TABLE numeric_edges (id int, n numeric); "
+        "INSERT INTO numeric_edges VALUES (1, 'NaN'), (2, 1e30), (3, 1.5), (4, NULL)"
+    ))
+    df = pgcopy.read(spark, live_pg, table="numeric_edges")
+    assert dict(df.dtypes)["n"] == "decimal(38,18)"
+    got = [r.n for r in df.orderBy("id").collect()]
+    assert got == [None, None, Decimal("1.5"), None]
+
+
+def test_bc_dates_keep_the_day_pg_stores(spark, live_pg, tmp_path):
+    """COPY renders a BC date as ``YYYY-MM-DD BC``; the exported day number
+    must equal PG's own ``d - DATE '1970-01-01'``, AD dates included."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg2parquet_spark.export import export
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS bc_dates; "
+        "CREATE TABLE bc_dates (id int, d date); "
+        "INSERT INTO bc_dates VALUES (1, '4713-01-01 BC'), (2, '0001-12-31 BC'), "
+        "(3, '0044-03-15 BC'), (4, '0001-01-01'), (5, '1582-10-04'), "
+        "(6, '2024-02-29'), (7, NULL), (8, '0001-02-29 BC')"
+    ))
+    truth = {
+        int(i): None if n is None else int(n)
+        for i, n in pgcopy.run_sql(
+            live_pg, "SELECT id, d - DATE '1970-01-01' FROM bc_dates"
+        )
+    }
+    out = str(tmp_path / "bc")
+    export(pgcopy.read(spark, live_pg, table="bc_dates"), out, quiet=True)
+    back = pq.read_table(out)
+    days = back["d"].cast(pa.int32()).to_pylist()
+    assert dict(zip(back["id"].to_pylist(), days)) == truth
+
+
+@pytest.mark.parametrize("pg_type, value", [
+    ("date", "infinity"), ("date", "-infinity"),
+    ("timestamp", "infinity"), ("timestamptz", "-infinity"),
+    ("timestamp", "0044-03-15 12:00:00 BC"),
+])
+def test_unconvertible_temporal_names_its_column(spark, live_pg, pg_type, value):
+    """A value Spark's types cannot hold fails the read with an error that
+    names the column and the value."""
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS odd_temporal; "
+        f"CREATE TABLE odd_temporal (id int, when_seen {pg_type}); "
+        f"INSERT INTO odd_temporal VALUES (1, NULL), (2, '{value}')"
+    ))
+    df = pgcopy.read(spark, live_pg, table="odd_temporal")
+    with pytest.raises(PySparkException, match=rf"column 'when_seen'.*{re.escape(value)}"):
+        df.collect()
+
+
+def test_report_rows_match_pg_count(spark, live_pg, tmp_path):
+    """The export report's row count equals PG's count(*) for a
+    partitioned COPY read."""
+    from pg2parquet_spark.export import export
+    from pg2parquet_spark.sources import pgcopy
+
+    ((count,),) = pgcopy.run_sql(live_pg, "SELECT count(*) FROM plain")
+    df = pgcopy.read(
+        spark, live_pg, table="plain", partition_column="id",
+        lower_bound=1, upper_bound=1001, num_partitions=4,
+    )
+    report = export(df, str(tmp_path / "plain"), quiet=True)
+    assert report.rows == int(count) == 1000
+    assert report.files == 4
 
 
 def test_copy_empty_partition_ranges_yield_no_rows(spark, live_pg):
