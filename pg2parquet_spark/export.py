@@ -84,12 +84,12 @@ def _export(
     hidden: Sequence[str] = (),
     check: Callable[[Row], None] | None = None,
 ) -> tuple[ExportReport, Row]:
-    """Sort, observe, write, list, publish: the one write path. Returns the
-    report and the observed row; if ``check`` raises on that row, ``path``
-    is left as it was. The unnamed ``Observation`` (row count + ``metrics``
-    over the ``hidden`` columns) sits above the sort: the range
-    partitioner's sampling job reruns the sort's input, so below it every
-    row would count twice."""
+    """Sort, observe, write, list, narrow float16 columns, publish: the one
+    write path. Returns the report and the observed row; if ``check``
+    raises on that row, ``path`` is left as it was. The unnamed
+    ``Observation`` (row count + ``metrics`` over the ``hidden`` columns)
+    sits above the sort: the range partitioner's sampling job reruns the
+    sort's input, so below it every row would count twice."""
     from pyspark.sql import Observation
 
     t0 = time.monotonic()
@@ -104,6 +104,8 @@ def _export(
         if check is not None:
             check(got)
         files = data_files(spark, tmp)
+        if options.output_format == "parquet" and options.float16_handling == "float16":
+            files = _narrow_to_float16(spark, files, options)
         groups = _row_groups(spark, files) if options.output_format == "parquet" else 0
     return ExportReport(
         rows=got["__rows"],
@@ -116,7 +118,7 @@ def _export(
 
 def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> None:
     """One write job of the (already ordered) ``df`` into the fresh
-    directory ``path``, then the float16 narrowing over it."""
+    directory ``path``."""
     from pg2parquet_spark.progress import ProgressReporter
 
     writer = (df.coalesce(1) if options.single_file else df).write
@@ -136,8 +138,6 @@ def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> Non
         writer = writer.partitionBy(*options.partition_by)
     with nullcontext() if quiet else ProgressReporter(df.sparkSession, path):
         writer.format(options.output_format).save(path)
-    if options.output_format == "parquet" and options.float16_handling == "float16":
-        _narrow_to_float16(df.sparkSession, path, options)
 
 
 def data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
@@ -210,39 +210,37 @@ def _publish(spark: SparkSession, path: str) -> Iterator[str]:
     fs.delete(old, True)
 
 
-def _fs_from_root_uri(root_uri):
-    """Task-side filesystem resolution for the float16 rewrite: ALWAYS from
-    the export root's original URI (scheme+authority pick the backend),
-    NEVER from a per-file listing path — ``from_uri`` would misparse the
-    scheme-less paths ``get_file_info`` returns for remote stores (e.g.
-    ``bucket/key/part.parquet`` for s3://) as local relative paths. A seam
-    the mock-remote test pins (tests/test_export.py::test_float16_remote_uri_*)."""
+def _filesystem(uri: str):
+    """(pyarrow filesystem, path) for a full file URI; a seam for tests."""
     from pyarrow import fs as pafs
 
-    if root_uri is None:
-        return pafs.LocalFileSystem()
-    return pafs.FileSystem.from_uri(root_uri)[0]
+    return pafs.FileSystem.from_uri(uri)
 
 
 def _rewrite_one_float16(
-    path: str, root_uri: str | None, wanted: frozenset, codec: str, level: int | None = None
-) -> str:
-    """Rewrite ONE parquet file's ``wanted`` columns to Float16 (FLBA-2).
+    uri: str, wanted: frozenset, codec: str, level: int | None = None
+) -> tuple[str, int]:
+    """Rewrite ONE parquet file's ``wanted`` columns to Float16 (FLBA-2) and
+    return its listing entry: ``uri`` and its new size.
 
     Runs as a Spark TASK — never on the driver: the file list of a 100 TB
     export is thousands of files, and a serial driver loop over read_table/
     write_table would be the export's long pole. The guard below pins that
     contract (and the pytest relies on it).
 
-    ``path`` is as the driver's listing returned it, so the filesystem comes
-    from ``root_uri`` (:func:`_fs_from_root_uri`). The rewrite keeps the file's layout: one output row group per source
+    ``uri`` is the file's full URI as the export's Hadoop listing printed it
+    (``file:/…``, ``s3a://bucket/…``), so its scheme and authority pick the
+    filesystem; Hadoop prints the path raw, so it is percent-encoded first.
+    The rewrite keeps the file's layout: one output row group per source
     row group (Spark already sized them by ``row_group_bytes``), written
-    with the export's codec and zstd ``level``. Crash safety: a task killed mid-write (speculation, preemption, OOM)
-    must not leave a truncated file for the retry to trip over, so the
-    rewrite lands at ``<path>.f16tmp`` and is renamed into place. A retry
-    that finds a stale tmp simply overwrites it.
+    with the export's codec and zstd ``level``. Crash safety: a task killed
+    mid-write (speculation, preemption, OOM) must not leave a truncated file
+    for the retry to trip over, so the rewrite lands at ``<path>.f16tmp``
+    and is renamed into place. A retry that finds a stale tmp simply
+    overwrites it.
     """
     import posixpath
+    from urllib.parse import quote
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -250,7 +248,7 @@ def _rewrite_one_float16(
 
     if TaskContext.get() is None:
         raise RuntimeError("float16 narrowing must run as a Spark task, not on the driver")
-    fsys = _fs_from_root_uri(root_uri)
+    fsys, path = _filesystem(quote(uri, safe=":/@!$&'()*+,;="))
 
     def narrow(field: pa.Field) -> pa.Field:
         if field.name not in wanted:
@@ -278,46 +276,39 @@ def _rewrite_one_float16(
     head, name = posixpath.split(path)
     with suppress(FileNotFoundError):
         fsys.delete_file(posixpath.join(head, f".{name}.crc"))
-    return path
+    return uri, fsys.get_file_info(path).size
 
 
-def _narrow_to_float16(spark: SparkSession, path: str, options: ExportOptions) -> None:
+def _narrow_to_float16(
+    spark: SparkSession, files: list[tuple[str, int]], options: ExportOptions
+) -> list[tuple[str, int]]:
     """A35 float16 mode (ref cli/src/postgres_cloner.rs:660-666): rewrite the
-    named columns to the Parquet FLOAT16 logical type (FLBA-2).
+    named columns of the export's listed ``files`` to the Parquet FLOAT16
+    logical type (FLBA-2); returns the listing with the new sizes.
 
     Spark's writer has no 16-bit float type, so f16 sources travel widened
     to f32 (exactly — PG already rounded them to half precision) and this
-    pyarrow post-pass narrows the storage back per file. The driver only
-    LISTS the files; the per-file read→cast→write runs distributed, one
-    Spark task per file (`sc.parallelize(files, len(files))`), so the pass
-    scales with the cluster instead of serializing on the driver.
+    pyarrow post-pass narrows the storage back per file, one Spark task per
+    file (`sc.parallelize(uris, len(uris))`), so the pass scales with the
+    cluster instead of serializing on the driver.
     """
-    from pyarrow import fs as pafs
-
-    # tasks get the root URI, never the scheme-less listing paths
-    root_uri = path if "://" in path else None
-    fsys, root = pafs.FileSystem.from_uri(path) if root_uri else (pafs.LocalFileSystem(), path)
-    files = [
-        fi.path
-        for fi in fsys.get_file_info(pafs.FileSelector(root, recursive=True))
-        if fi.is_file and fi.path.endswith(".parquet")
-    ]
     if not files:
-        return
+        return files
     wanted = frozenset(options.float16_columns)
     codec = options.spark_codec  # same name space as pyarrow's
     # Spark's zstd default is level 3, pyarrow's is 1: pass Spark's explicitly
     level = None
     if options.compression == "zstd":
         level = 3 if options.compression_level is None else options.compression_level
-    sc = spark.sparkContext
+    uris = [uri for uri, _size in files]
     done = (
-        sc.parallelize(files, len(files))
-        .map(lambda f: _rewrite_one_float16(f, root_uri, wanted, codec, level))
-        .collect()  # bounded: one path string per file
+        spark.sparkContext.parallelize(uris, len(uris))
+        .map(lambda uri: _rewrite_one_float16(uri, wanted, codec, level))
+        .collect()  # bounded: one listing entry per file
     )
-    if sorted(done) != sorted(files):
+    if sorted(uri for uri, _size in done) != sorted(uris):
         raise RuntimeError("float16 narrowing: task results do not cover the file list")
+    return done
 
 
 class ConversionError(RuntimeError):
@@ -388,28 +379,6 @@ def export_audited(
     return audit.identify_bad_rows(df, nulled, id_col).localCheckpoint(eager=True)
 
 
-def export_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write ``df`` as a bucketed+sorted managed parquet table.
-
-    The scale story: two tables bucketed on their join key by the same
-    bucket count join WITHOUT a shuffle (SortMergeJoin reads co-located
-    buckets directly) — the Spark analog of co-partitioned storage. Used for
-    fact tables that are joined repeatedly on the same key; verified
-    shuffle-free by tests/test_export.py::test_bucketed_join_no_shuffle.
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, *bucket_cols
-    )
-    writer = writer.sortBy(*(sort_cols or bucket_cols))
-    writer.saveAsTable(table_name)
-
-
 def compact(
     spark: SparkSession,
     path: str,
@@ -471,7 +440,8 @@ def compact_partitioned(
     overlapping leaves keeps the executors busy while one leaf is in its
     metadata-only rename phase. Spark job submission is thread-safe; each
     leaf stages in its own sibling directory, so no two threads ever touch
-    the same path. ``max_concurrency=1`` degrades to the sequential loop.
+    the same path. ``max_concurrency=1`` runs the leaves one after another
+    on a single worker thread.
     """
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
@@ -498,11 +468,9 @@ def compact_partitioned(
             f"compact_partitioned: {path} has no key=value partition dirs — "
             "use compact() for flat datasets"
         )
-    if max_concurrency <= 1 or len(leaves) == 1:
-        return {leaf: compact(spark, leaf, target_file_mb, options) for leaf in leaves}
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=min(max_concurrency, len(leaves))) as pool:
+    with ThreadPoolExecutor(max_workers=max(1, min(max_concurrency, len(leaves)))) as pool:
         counts = list(
             pool.map(lambda leaf: compact(spark, leaf, target_file_mb, options), leaves)
         )

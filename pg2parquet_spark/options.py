@@ -97,6 +97,11 @@ class ExportOptions:
                 "those columns to FLBA(2)/Float16 in a pyarrow post-pass "
                 "(reference: cli/src/postgres_cloner.rs:660-666)"
             )
+        if self.float16_handling == "float32" and self.float16_columns:
+            raise ValueError(
+                "float16_columns are only narrowed under float16_handling='float16'; "
+                "with 'float32' they would be ignored"
+            )
         if self.decimal_precision > 38:
             raise ValueError(
                 "decimal_precision > 38 is not representable by Spark DecimalType; "

@@ -12,9 +12,10 @@ pieces it and its callers share:
   typemap text parsers (typemap/*) can rebuild structured values — the
   moral equivalent of the reference's binary decoders in
   pg_custom_types.rs;
-- A4 connection → :class:`PostgresConnection`, resolved by
-  :func:`~pg2parquet_spark.sources.pgcopy.resolve_target` with the
-  reference's precedence (postgres_cloner.rs:222-292).
+- A4 connection → :class:`PostgresConnection`, which
+  :func:`~pg2parquet_spark.sources.pgcopy.psql_command` turns into psql's
+  argv and ``PG*`` variables with the reference's precedence
+  (postgres_cloner.rs:222-292); a URL goes to libpq unparsed.
 """
 
 from __future__ import annotations

@@ -16,7 +16,8 @@ Wire-proven here (vs the string/fixture unit tests):
   server fails mid-stream, and an export failing that way keeps the
   previous dataset at its path;
 - the A4 precedence (DATABASE_URL with libpq ?host= socket syntax) and
-  sslmode reach psql;
+  sslmode reach psql, and libpq parses whatever a URL carries: ``options``,
+  multi-host netlocs, socket-directory hosts, JDBC's ``ssl=true``;
 - the A3 catalog probes (ENUM_LABELS_SQL / COMPOSITE_FIELDS_SQL / column
   probe) run against the real pg_catalog;
 - the exotic rewrite -> text wire -> typemap-parse chain round-trips REAL
@@ -67,8 +68,8 @@ def live_pg():
 def _psql(live_pg, sql: str) -> None:
     from pg2parquet_spark.sources import pgcopy
 
-    argv = pgcopy.resolve_target(live_pg).argv()
-    subprocess.run(argv + ["-c", sql], check=True, capture_output=True)
+    argv, env = pgcopy.psql_command(live_pg)
+    subprocess.run(argv + ["-c", sql], check=True, capture_output=True, env={**os.environ, **env})
 
 
 def test_copy_table_scan_transports_typed_rows(spark, live_pg):
@@ -149,14 +150,47 @@ def test_env_precedence_database_url(spark, live_pg, monkeypatch):
     from pg2parquet_spark.sources import pgcopy
     from pg2parquet_spark.sources.jdbc import PostgresConnection
 
-    monkeypatch.setenv(
-        "DATABASE_URL", "postgres://postgres@/postgres?host=/tmp&port=55432"
-    )
-    tgt = pgcopy.resolve_target(PostgresConnection())
-    assert (tgt.host, tgt.port, tgt.dbname, tgt.user) == (
-        "/tmp", 55432, "postgres", "postgres",
-    )
+    url = "postgres://postgres@/postgres?host=/tmp&port=55432"
+    monkeypatch.setenv("DATABASE_URL", url)
+    argv, _ = pgcopy.psql_command(PostgresConnection())
+    assert argv[-2:] == ["-d", url]
     assert pgcopy.read(spark, PostgresConnection(), table="plain").count() == 1000
+
+
+def test_url_options_set_the_search_path(spark, live_pg):
+    """A URL's ``?options=-csearch_path%3D<schema>`` reaches the server: a
+    ``table=`` read resolves a table that exists only in that schema."""
+    from pg2parquet_spark.sources import pgcopy
+    from pg2parquet_spark.sources.jdbc import PostgresConnection
+
+    _psql(live_pg, (
+        "DROP SCHEMA IF EXISTS url_stage CASCADE; CREATE SCHEMA url_stage; "
+        "CREATE TABLE url_stage.staged_only (id int, s text); "
+        "INSERT INTO url_stage.staged_only VALUES (1, 'a'), (2, 'b')"
+    ))
+    conn = PostgresConnection(
+        url="postgres://postgres@%2Ftmp:55432/postgres?options=-csearch_path%3Durl_stage"
+    )
+    assert sorted(pgcopy.read(spark, conn, table="staged_only").collect()) == [(1, "a"), (2, "b")]
+
+
+def test_multi_host_url_skips_a_dead_host(spark, live_pg):
+    """libpq tries a multi-host URL's hosts in order: a dead first host
+    falls through to the live one."""
+    from pg2parquet_spark.sources import pgcopy
+    from pg2parquet_spark.sources.jdbc import PostgresConnection
+
+    conn = PostgresConnection(url="postgres://postgres@127.0.0.1:1,127.0.0.1:55432/postgres")
+    assert pgcopy.read(spark, conn, table="plain").count() == 1000
+
+
+def test_socket_dir_host_in_the_url_connects(spark, live_pg):
+    """A percent-encoded host is a socket directory, as libpq reads it."""
+    from pg2parquet_spark.sources import pgcopy
+    from pg2parquet_spark.sources.jdbc import PostgresConnection
+
+    conn = PostgresConnection(url="postgres://postgres@%2Ftmp:55432/postgres")
+    assert pgcopy.run_sql(conn, "SELECT inet_server_port()") == [(None,)]  # not TCP
 
 
 def test_live_catalog_probe_enum_and_composite(live_pg):
@@ -383,6 +417,20 @@ def test_sslmode_require_refuses_plain_server(spark, live_pg):
     from pg2parquet_spark.sources import pgcopy
 
     conn = dataclasses.replace(live_pg, host="127.0.0.1", sslmode="require")
+    with pytest.raises(RuntimeError, match="SSL"):
+        pgcopy.read(spark, conn, query="SELECT 1")
+
+
+def test_jdbc_ssl_true_refuses_plain_server(spark, live_pg):
+    """JDBC's ``?ssl=true`` means sslmode=require to libpq: against the
+    fixture server, which has no SSL, the read refuses rather than connect
+    in clear text."""
+    from pg2parquet_spark.sources import pgcopy
+    from pg2parquet_spark.sources.jdbc import PostgresConnection
+
+    conn = PostgresConnection(
+        url="jdbc:postgresql://127.0.0.1:55432/postgres?user=postgres&ssl=true"
+    )
     with pytest.raises(RuntimeError, match="SSL"):
         pgcopy.read(spark, conn, query="SELECT 1")
 
