@@ -17,6 +17,7 @@ Examples:
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import sys
 
 from pg2parquet_spark.options import (
@@ -51,23 +52,24 @@ def build_parser() -> argparse.ArgumentParser:
     e.add_argument("--sslmode", choices=["disable", "prefer", "require"])
     # ours: fixture-dir source for PG-less runs
     e.add_argument("--input-dir", help="directory of <table>.parquet files used as views")
-    # schema settings (reference SchemaSettingsArgs, same defaults)
-    e.add_argument("--macaddr-handling", choices=MACADDR_HANDLING, default="text")
-    e.add_argument("--json-handling", choices=JSON_HANDLING, default="text")
-    e.add_argument("--enum-handling", choices=ENUM_HANDLING, default="text")
-    e.add_argument("--interval-handling", choices=INTERVAL_HANDLING, default="interval")
-    e.add_argument("--numeric-handling", choices=NUMERIC_HANDLING, default="double")
-    e.add_argument("--decimal-scale", type=int, default=18)
-    e.add_argument("--decimal-precision", type=int, default=38)
-    e.add_argument("--array-handling", choices=ARRAY_HANDLING, default="plain")
-    e.add_argument("--float16-handling", choices=FLOAT16_HANDLING, default="float32")
-    e.add_argument("--compression", choices=COMPRESSIONS, default="zstd")
+    # schema settings (reference SchemaSettingsArgs) and sink options: a
+    # flag left out keeps ExportOptions' own default
+    e.add_argument("--macaddr-handling", choices=MACADDR_HANDLING)
+    e.add_argument("--json-handling", choices=JSON_HANDLING)
+    e.add_argument("--enum-handling", choices=ENUM_HANDLING)
+    e.add_argument("--interval-handling", choices=INTERVAL_HANDLING)
+    e.add_argument("--numeric-handling", choices=NUMERIC_HANDLING)
+    e.add_argument("--decimal-scale", type=int)
+    e.add_argument("--decimal-precision", type=int)
+    e.add_argument("--array-handling", choices=ARRAY_HANDLING)
+    e.add_argument("--float16-handling", choices=FLOAT16_HANDLING)
+    e.add_argument("--compression", choices=COMPRESSIONS)
     e.add_argument("--compression-level", type=int)
-    e.add_argument("--single-file", action="store_true",
+    e.add_argument("--single-file", action="store_true", default=None,
                    help="one ordered output file (the reference's shape); default = parallel files")
-    e.add_argument("--partition-by", help="comma-separated hive partition columns")
-    e.add_argument("--output-format", choices=["parquet", "csv", "json", "orc"],
-                   default="parquet")
+    e.add_argument("--partition-by", type=lambda v: tuple(v.split(",")),
+                   help="comma-separated hive partition columns")
+    e.add_argument("--output-format", choices=["parquet", "csv", "json", "orc"])
     e.add_argument("--quiet", action="store_true")
     e.add_argument("--partition-column")
     e.add_argument("--lower-bound", type=int)
@@ -83,22 +85,8 @@ def run_export(args: argparse.Namespace) -> int:
     from pg2parquet_spark.export import export
     from pg2parquet_spark.session import get_spark
 
-    options = ExportOptions(
-        macaddr_handling=args.macaddr_handling,
-        json_handling=args.json_handling,
-        enum_handling=args.enum_handling,
-        interval_handling=args.interval_handling,
-        numeric_handling=args.numeric_handling,
-        decimal_scale=args.decimal_scale,
-        decimal_precision=args.decimal_precision,
-        array_handling=args.array_handling,
-        float16_handling=args.float16_handling,
-        compression=args.compression,
-        compression_level=args.compression_level,
-        single_file=args.single_file,
-        partition_by=tuple(args.partition_by.split(",")) if args.partition_by else (),
-        output_format=args.output_format,
-    )
+    given = {f.name: getattr(args, f.name, None) for f in dataclasses.fields(ExportOptions)}
+    options = ExportOptions(**{k: v for k, v in given.items() if v is not None})
     spark = get_spark(app_name="pg2parquet_spark_cli")
     if args.input_dir:
         # any mix of <table>.parquet/csv/json/jsonl/orc registers as views

@@ -8,10 +8,10 @@ surface*:
 - compression codec map incl. levels (main.rs:228-250; zstd level 3 default)
 - row-group sizing: 500 MiB raw / parquet.block.size (postgres_cloner.rs:305)
 - overwrite-on-exists as an atomic replace (main.rs output_file docs): every
-  export is staged at ``<path>._tmp`` and published by :func:`_publish`'s
-  rename-aside swap, so a failed export leaves the previous dataset intact.
-  Two concurrent exports to one path are not supported (they share the
-  staging directory).
+  export is staged at ``<parent>/.<name>._tmp`` and published by
+  :func:`_publish`'s rename-aside swap, so a failed export leaves the
+  previous dataset intact. Two concurrent exports to one path are not
+  supported (they share the staging directory).
 - the writer's summary counters (``WriterStats``, parquet_writer.rs:8-14):
   :func:`export` returns them as an :class:`ExportReport`.
 - optional single-file output (the reference is single-file by construction;
@@ -21,12 +21,18 @@ surface*:
 Deviations (documented, value-preserving): LZO unsupported by Spark's
 writer (hard error, same contract); `created_by` metadata not settable.
 
-Ordering (SURVEY §7.2): with single_file=True the input's sort order is
-preserved — sort first, then coalesce(1) keeps one ordered partition.
+Ordering (SURVEY §7.2): with single_file=True and sort_by, one shuffle
+gathers the input into one partition that is sorted within itself; with
+single_file alone, coalesce(1) keeps an already ordered input's order.
+
+Compaction (:func:`compact`) rewrites each leaf of a flat or hive dataset
+into right-sized files through :func:`export`.
 """
 
 from __future__ import annotations
 
+import math
+import posixpath
 import time
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager, nullcontext, suppress
@@ -65,8 +71,9 @@ def export(
     """Write ``df`` to ``path`` per the export options (parquet default) and
     return what was written.
 
-    The write lands at ``<path>._tmp`` and replaces ``path`` only once it
-    has succeeded (:func:`_publish`).
+    The write lands at ``<parent>/.<name>._tmp``, hidden from readers of
+    the parent, and replaces ``path`` only once it has succeeded
+    (:func:`_publish`).
 
     Like the reference, a live progress meter (A36: MiB written, MiB/s, task
     completion — ref cli/src/parquet_writer.rs:100-151) prints to stderr
@@ -84,18 +91,24 @@ def _export(
     hidden: Sequence[str] = (),
     check: Callable[[Row], None] | None = None,
 ) -> tuple[ExportReport, Row]:
-    """Sort, observe, write, list, narrow float16 columns, publish: the one
-    write path. Returns the report and the observed row; if ``check``
+    """Lay out, observe, write, list, narrow float16 columns, publish: the
+    one write path. Returns the report and the observed row; if ``check``
     raises on that row, ``path`` is left as it was. The unnamed
     ``Observation`` (row count + ``metrics`` over the ``hidden`` columns)
     sits above the sort: the range partitioner's sampling job reruns the
-    sort's input, so below it every row would count twice."""
+    sort's input, so below it every row would count twice. A single sorted
+    file needs no range partitioner: one shuffle into one partition, sorted
+    within it, evaluates the input once."""
     from pyspark.sql import Observation
 
     t0 = time.monotonic()
     spark = df.sparkSession
-    if options.sort_by:
+    if options.single_file and options.sort_by:
+        df = df.repartition(1).sortWithinPartitions(*options.sort_by)
+    elif options.sort_by:
         df = df.orderBy(*options.sort_by)
+    elif options.single_file:
+        df = df.coalesce(1)
     seen = Observation()
     df = df.observe(seen, F.count(F.lit(1)).alias("__rows"), *metrics).drop(*hidden)
     with _publish(spark, path) as tmp:
@@ -117,11 +130,11 @@ def _export(
 
 
 def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> None:
-    """One write job of the (already ordered) ``df`` into the fresh
+    """One write job of the (already laid out) ``df`` into the fresh
     directory ``path``."""
     from pg2parquet_spark.progress import ProgressReporter
 
-    writer = (df.coalesce(1) if options.single_file else df).write
+    writer = df.write
     if options.output_format == "parquet":
         codec = options.spark_codec  # raises for lzo — same error contract as writer absence
         writer = writer.option("compression", codec).option(
@@ -174,28 +187,35 @@ def _row_groups(spark: SparkSession, files: list[tuple[str, int]]) -> int:
 
 @contextmanager
 def _publish(spark: SparkSession, path: str) -> Iterator[str]:
-    """The one commit protocol: yield the staging directory ``<path>._tmp``
-    for the body to write, then swap it into place.
+    """The one commit protocol: yield the staging directory
+    ``<parent>/.<name>._tmp`` for the body to write, then swap it into place.
+
+    Both staging names start with ``.``, which Spark, pyarrow and Hive skip:
+    when ``path`` is a leaf of a hive layout, a reader of the root sees
+    neither the staged nor the moved-aside copy as a partition.
 
     If the body raises, the staging directory is deleted, the error
     re-raised, and ``path`` is untouched (Spark's ``mode("overwrite")``
     would have deleted it first). Otherwise the swap is rename-aside (path →
-    ``<path>._old``), rename-into-place, delete-old-last: at every instant
-    the data exists in full at path, old or tmp, and a failed rename-in
-    rolls the old dir back; a swap cut short by a crash is rolled back by
-    the next publish. Hadoop FileSystem API throughout, resolved from the
-    path's own scheme (file://, hdfs://, s3a://).
+    ``<parent>/.<name>._old``), rename-into-place, delete-old-last: at every
+    instant the data exists in full at path, old or tmp, and a failed
+    rename-in rolls the old dir back; a swap cut short by a crash is rolled
+    back by the next publish. Hadoop FileSystem API throughout, resolved
+    from the path's own scheme (file://, hdfs://, s3a://).
     """
     base = path.rstrip("/")
+    head, name = posixpath.split(base)
+    staged = posixpath.join(head, f".{name}._tmp")
     hpath = spark._jvm.org.apache.hadoop.fs.Path
-    dst, tmp, old = hpath(base), hpath(base + "._tmp"), hpath(base + "._old")
+    dst, tmp = hpath(base), hpath(staged)
+    old = hpath(posixpath.join(head, f".{name}._old"))
     fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(old) and not fs.exists(dst):
         fs.rename(old, dst)  # a crashed swap: the old copy is the dataset
     fs.delete(old, True)
     fs.delete(tmp, True)  # stale leftover of a crashed export
     try:
-        yield base + "._tmp"
+        yield staged
         had = fs.exists(dst)
         if had and not fs.rename(dst, old):
             raise IOError(f"publish: could not move {path} aside; dataset untouched")
@@ -206,7 +226,7 @@ def _publish(spark: SparkSession, path: str) -> Iterator[str]:
         if had:
             fs.rename(old, dst)  # roll back: restore the original dataset
         fs.delete(tmp, True)
-        raise IOError(f"publish: rename {base}._tmp -> {path} failed; dataset restored")
+        raise IOError(f"publish: rename {staged} -> {path} failed; dataset restored")
     fs.delete(old, True)
 
 
@@ -379,99 +399,56 @@ def export_audited(
     return audit.identify_bad_rows(df, nulled, id_col).localCheckpoint(eager=True)
 
 
+# leaves compacted at once: each is mostly cluster work, so overlapping them
+# keeps the executors busy while one leaf is in its metadata-only publish
+_COMPACT_WORKERS = 8
+
+
 def compact(
     spark: SparkSession,
     path: str,
     target_file_mb: int = 512,
     options: ExportOptions | None = None,
 ) -> int:
-    """Small-file compaction: rewrite a parquet dataset into files of
-    ~target_file_mb. The many-small-files problem is the chronic failure
-    mode of incremental ingestion at scale (every NameNode/footer-read
-    scales with file count); this is the maintenance pass that fixes it.
+    """Small-file compaction: rewrite each leaf of the parquet dataset at
+    ``path`` into ``ceil(bytes / target_file_mb)`` files and return the
+    number of files written. The many-small-files problem is the chronic
+    failure mode of incremental ingestion at scale (every NameNode/footer
+    read scales with file count); this is the maintenance pass that fixes
+    it.
 
-    File count = ceil(current_bytes / target); data is round-robin
-    repartitioned so output files are uniform. Returns the new file count.
-
-    Crash safety is :func:`export`'s: the rewrite is staged beside the
-    dataset and published by the rename-aside swap of :func:`_publish`.
-
-    Hive-partitioned datasets are rejected explicitly: a flat repartition
-    would destroy the partition layout (and a non-recursive size probe
-    would see 0 bytes and compact 100 TB into one file). Partition-wise
-    compaction is `compact(part_dir)` per leaf directory.
-
-    Listing and measuring go through the Hadoop FileSystem of the path's
-    own scheme, so file://, hdfs:// and s3a:// datasets compact alike.
+    A flat dataset is its own single leaf; a hive layout's leaves are its
+    deepest ``key=value`` directories, so the partition layout survives.
+    Each leaf is round-robin repartitioned and rewritten in place by
+    :func:`export`, which stages it beside the leaf and publishes it by the
+    rename-aside swap of :func:`_publish`. Leaves run on a driver-side
+    thread pool (Spark job submission is thread-safe, and each leaf stages
+    in its own directory). Listing and measuring go through the Hadoop
+    FileSystem of the path's own scheme, so file://, hdfs:// and s3a://
+    datasets compact alike.
     """
-    import math
-
-    src = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = src.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    for st in fs.listStatus(src):
-        if st.isDirectory() and "=" in st.getPath().getName():
-            raise ValueError(
-                f"compact: {path} is hive-partitioned ({st.getPath().getName()!r}); "
-                "flat compaction would drop the partition layout — compact each "
-                "leaf partition directory instead"
-            )
-
-    size = sum(n for _f, n in data_files(spark, path))
-    n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-    return export(spark.read.parquet(path).repartition(n_files), path, options).files
-
-
-def compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 512,
-    options: ExportOptions | None = None,
-    max_concurrency: int = 8,
-) -> dict[str, int]:
-    """Partition-wise compaction for hive-layout datasets: walk the
-    ``key=value`` directory tree to its leaves and run :func:`compact` on
-    each leaf independently. The partition layout is untouched — each leaf
-    is rewritten in place through the same crash-safe publish.
-
-    Returns {leaf path: new file count}. Leaves are independent, so they run
-    ``max_concurrency`` at a time through a driver-side thread pool: each
-    leaf's work is mostly cluster work (a read+repartition+write job), so
-    overlapping leaves keeps the executors busy while one leaf is in its
-    metadata-only rename phase. Spark job submission is thread-safe; each
-    leaf stages in its own sibling directory, so no two threads ever touch
-    the same path. ``max_concurrency=1`` runs the leaves one after another
-    on a single worker thread.
-    """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
-
-    leaves: list[str] = []
-
-    def walk(p) -> None:
-        subdirs = [
-            st.getPath()
-            for st in fs.listStatus(p)
-            if st.isDirectory() and "=" in st.getPath().getName()
-        ]
-        if subdirs:
-            for d in subdirs:
-                walk(d)
-        elif p is not root:
-            leaves.append(p.toString())
-
-    walk(root)
-    if not leaves:
-        raise ValueError(
-            f"compact_partitioned: {path} has no key=value partition dirs — "
-            "use compact() for flat datasets"
-        )
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=max(1, min(max_concurrency, len(leaves)))) as pool:
-        counts = list(
-            pool.map(lambda leaf: compact(spark, leaf, target_file_mb, options), leaves)
-        )
-    return dict(zip(leaves, counts))
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def leaves(p) -> list[str]:
+        # readers skip ``.``/``_`` names, and so does the walk: a crashed
+        # leaf's ``.p=0._tmp`` is no partition
+        parts = [
+            st.getPath()
+            for st in fs.listStatus(p)
+            if st.isDirectory()
+            and "=" in st.getPath().getName()
+            and not st.getPath().getName().startswith(("_", "."))
+        ]
+        return [leaf for d in parts for leaf in leaves(d)] or [p.toString()]
+
+    def rewrite(leaf: str) -> int:
+        size = sum(n for _f, n in data_files(spark, leaf))
+        n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
+        return export(spark.read.parquet(leaf).repartition(n_files), leaf, options).files
+
+    todo = leaves(root)
+    with ThreadPoolExecutor(max_workers=min(_COMPACT_WORKERS, len(todo))) as pool:
+        return sum(pool.map(rewrite, todo))

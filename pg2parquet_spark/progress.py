@@ -6,9 +6,10 @@ The Spark-native analog is observation, not instrumentation: a background
 thread polls
 
 - bytes landed so far in the directory being written (for ``export()``,
-  its ``<path>._tmp`` staging directory), by :func:`export.data_files`,
-  the recursive Hadoop FileSystem listing the export report also uses
-  (scheme-resolved: file://, hdfs://, s3a:// all work; the
+  its ``<parent>/.<name>._tmp`` staging directory), by
+  :func:`export.data_files`, the recursive Hadoop FileSystem listing the
+  export report also uses (scheme-resolved: file://, hdfs://, s3a:// all
+  work; the
   in-flight ``_temporary`` task files count, which is exactly "written so
   far" while the job runs), and
 - task completion of the active jobs from ``SparkStatusTracker`` (the

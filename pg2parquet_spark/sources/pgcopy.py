@@ -348,6 +348,8 @@ def read(
             raise ValueError(f"{', '.join(unused)} would be ignored without partition_column")
     elif lower_bound is None or upper_bound is None:
         raise ValueError("partitioned reads need lower_bound/upper_bound")
+    elif num_partitions is not None and num_partitions < 1:
+        raise ValueError(f"num_partitions must be at least 1, got {num_partitions}")
     if shutil.which("psql") is None:
         raise RuntimeError("psql not on PATH — the COPY transport needs the PG client")
     command = psql_command(conn)

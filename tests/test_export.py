@@ -52,6 +52,29 @@ def test_single_file_preserves_order(spark, sf_dir, tmp_path):
     assert keys == sorted(keys)
 
 
+def test_single_sorted_file_evaluates_its_input_once(spark, tmp_path):
+    """single_file + sort_by needs no range partitioner, whose sampling job
+    would run the whole input (for a PG source, the COPY) a second time."""
+    from pyspark.sql.types import DoubleType
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        calls.add(1)
+        return v
+
+    count = F.udf(counted, DoubleType()).asNondeterministic()
+    df = spark.range(0, 10_000, numPartitions=4).select(
+        "id", count(F.rand(11)).alias("k")
+    )
+    out = str(tmp_path / "sorted_once")
+    export(df, out, ExportOptions(single_file=True, sort_by=("k",)), quiet=True)
+    assert calls.value == 10_000
+    (f,) = glob.glob(f"{out}/*.parquet")
+    keys = pq.read_table(f, columns=["k"]).column(0).to_pylist()
+    assert len(keys) == 10_000 and keys == sorted(keys)
+
+
 def test_decimal_physical_widths(spark, tmp_path):
     """The reference picks INT32/INT64/BYTE_ARRAY physical storage by decimal
     precision (postgres_cloner.rs:706-712); Spark's writer must do the same."""
@@ -216,7 +239,8 @@ def test_psql_command_passes_the_url_to_libpq_intact(monkeypatch, url):
 
 def test_read_refuses_split_arguments_without_a_partition_column(spark):
     """num_partitions or bounds without partition_column would read one
-    COPY range: the read refuses them, naming them, before any psql call."""
+    COPY range, and num_partitions < 1 none or one: the read refuses them,
+    naming them, before any psql call."""
     from pg2parquet_spark.sources import pgcopy
 
     conn = PostgresConnection(host="/nonexistent-socket-dir", dbname="d")
@@ -224,6 +248,11 @@ def test_read_refuses_split_arguments_without_a_partition_column(spark):
         pgcopy.read(spark, conn, table="t", num_partitions=8)
     with pytest.raises(ValueError, match="lower_bound, upper_bound would be ignored"):
         pgcopy.read(spark, conn, query="SELECT 1", lower_bound=1, upper_bound=9)
+    # fewer than one range would read nothing (negative) or one (zero)
+    for n in (-3, 0):
+        with pytest.raises(ValueError, match="num_partitions"):
+            pgcopy.read(spark, conn, table="t", partition_column="id",
+                        lower_bound=1, upper_bound=100, num_partitions=n)
 
 
 def test_copy_row_blocks_keep_rows_whole(monkeypatch):
@@ -375,6 +404,24 @@ def test_cli_exports_to_a_file_uri(spark, sf_dir, tmp_path, capsys):
     assert rc == 0
     assert "Wrote 25 rows" in capsys.readouterr().out
     assert spark.read.parquet(str(out)).count() == 25
+
+
+def test_cli_options_come_from_the_given_flags(spark, monkeypatch):
+    """The CLI builds ExportOptions from the flags given, by field name: a
+    flag left out keeps the dataclass default."""
+    from pg2parquet_spark import export as export_mod
+    from pg2parquet_spark.cli import main
+    from pg2parquet_spark.sources import pgcopy
+
+    built = []
+    monkeypatch.setattr(pgcopy, "read", lambda *a, **k: spark.range(1))
+    monkeypatch.setattr(export_mod, "export", lambda _df, _out, opts, **k: built.append(opts))
+    main(["export", "-o", "x", "-t", "t"])
+    main(["export", "-o", "x", "-t", "t", "--numeric-handling", "string", "--partition-by", "a,b"])
+    assert built == [
+        ExportOptions(),
+        ExportOptions(numeric_handling="string", partition_by=("a", "b")),
+    ]
 
 
 def test_cli_rejects_query_and_table():
@@ -537,7 +584,8 @@ def _tree(path: str) -> dict[str, bytes]:
 
 
 def _no_staging_left(path: str) -> bool:
-    return not glob.glob(path.rstrip("/") + "._*")
+    head, name = os.path.split(path.rstrip("/"))
+    return not glob.glob(os.path.join(head, f".{name}._*"))
 
 
 def test_audit_conversions(spark, tmp_path, observations):
@@ -750,8 +798,8 @@ def test_compact_via_filesystem_uri(spark, sf_dir, tmp_path):
     n = compact(spark, out, target_file_mb=512)
     assert n == 1
     assert spark.read.parquet(out).count() == ords.count()
-    assert not (tmp_path / "fragmented_uri._tmp").exists()
-    assert not (tmp_path / "fragmented_uri._old").exists()
+    assert not (tmp_path / ".fragmented_uri._tmp").exists()
+    assert not (tmp_path / ".fragmented_uri._old").exists()
 
 
 def test_parquet_info_and_export_report(spark, sf_dir, tmp_path):
@@ -908,32 +956,64 @@ def test_salted_left_join_keeps_unmatched(spark):
     assert got == [(1, "a", "x"), (2, "b", "y"), (99, "zz", None)]
 
 
-def test_compact_partitioned_preserves_layout(spark, tmp_path):
-    """Partition-wise compaction: per-leaf file counts drop, the key=value
-    layout survives, and the data reads back identically. Flat compact()
-    must keep rejecting the partitioned root."""
-    from pg2parquet_spark.export import compact, compact_partitioned
+def _assert_compacts_each_leaf(spark, out: str, leaves: list[str], cols: str) -> None:
+    """compact() on a hive root writes one file per leaf, keeps the leaf set
+    and the rows, and leaves no staging directory beside any leaf."""
+    from pg2parquet_spark.export import compact
 
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(out).select(*cols.split()).collect())
+
+    def leaf_dirs():
+        return sorted(os.path.relpath(os.path.dirname(f), out)
+                      for f in glob.glob(f"{out}/**/*.parquet", recursive=True))
+
+    before = rows()
+    assert len(glob.glob(f"{out}/{leaves[0]}/*.parquet")) > 1
+    assert sorted(set(leaf_dirs())) == leaves
+    assert compact(spark, out, target_file_mb=512) == len(leaves)
+    assert leaf_dirs() == leaves  # one file in each leaf, the same leaves
+    assert rows() == before
+    assert all(_no_staging_left(f"{out}/{leaf}") for leaf in leaves)
+
+
+def test_compact_preserves_a_hive_layout(spark, tmp_path):
+    """A one-level hive root compacts leaf by leaf: per-leaf file counts
+    drop, the key=value layout survives, the data reads back identically."""
     df = spark.range(2000).select(
         F.col("id"), (F.col("id") % 3).alias("p"), (F.col("id") * 2).alias("v")
     )
     out = str(tmp_path / "part_ds")
     df.repartition(8).write.partitionBy("p").parquet(out)
+    _assert_compacts_each_leaf(spark, out, ["p=0", "p=1", "p=2"], "id p v")
 
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        compact(spark, out, target_file_mb=512)
 
-    before = spark.read.parquet(out)
-    rows_before = sorted((r.id, r.p, r.v) for r in before.collect())
-    per_leaf_before = len(glob.glob(f"{out}/p=0/*.parquet"))
-    assert per_leaf_before > 1  # 8 input partitions → multiple files per leaf
+def test_compact_nested_hive_leaves(spark, tmp_path):
+    """A two-level p=*/q=* layout: every deepest key=value directory is a
+    leaf, compacted in place."""
+    df = spark.range(3000).select(
+        F.col("id"), (F.col("id") % 2).alias("p"), (F.col("id") % 3).alias("q")
+    )
+    out = str(tmp_path / "nested")
+    df.repartition(8).write.partitionBy("p", "q").parquet(out)
+    leaves = [f"p={p}/q={q}" for p in range(2) for q in range(3)]
+    _assert_compacts_each_leaf(spark, out, leaves, "id p q")
 
-    result = compact_partitioned(spark, out, target_file_mb=512)
-    assert len(result) == 3 and all(n == 1 for n in result.values())
-    assert sorted(os.path.basename(p) for p in result) == ["p=0", "p=1", "p=2"]
-    assert len(glob.glob(f"{out}/p=0/*.parquet")) == 1
-    after = spark.read.parquet(out)
-    assert sorted((r.id, r.p, r.v) for r in after.collect()) == rows_before
+
+def test_staging_is_hidden_from_readers_of_the_parent(spark, tmp_path):
+    """A leaf being rewritten stages beside itself: a reader of the hive
+    root still sees the old rows and types the partition column as int."""
+    from pg2parquet_spark.export import _publish
+
+    root = str(tmp_path / "hive")
+    spark.range(30).select("id", (F.col("id") % 3).cast("int").alias("p")).write.partitionBy(
+        "p"
+    ).parquet(root)
+    with _publish(spark, f"{root}/p=0") as tmp:
+        spark.range(10).write.parquet(tmp)
+        seen = spark.read.parquet(root)
+        assert seen.count() == 30
+        assert dict(seen.dtypes)["p"] == "int"
 
 
 def test_float16_rewrite_leaves_no_tmp_files(spark, tmp_path):
@@ -952,28 +1032,15 @@ def test_float16_rewrite_leaves_no_tmp_files(spark, tmp_path):
     assert len(glob.glob(f"{out}/*.parquet")) >= 1
 
 
-def test_compact_partitioned_concurrent(spark, tmp_path):
-    """max_concurrency > 1 runs independent leaves through a thread pool and
-    must produce byte-identical results to the sequential path: same leaf
-    set, same per-leaf file counts, same data."""
-    from pg2parquet_spark.export import compact_partitioned
-
+def test_compact_leaves_concurrently(spark, tmp_path):
+    """Leaves run through a thread pool: five leaves compacted at once give
+    one file each, the same leaf set and the same data."""
     df = spark.range(4000).select(
         F.col("id"), (F.col("id") % 5).alias("p"), (F.col("id") * 3).alias("v")
     )
     out = str(tmp_path / "part_conc")
     df.repartition(8).write.partitionBy("p").parquet(out)
-    rows_before = sorted((r.id, r.p, r.v) for r in spark.read.parquet(out).collect())
-    assert len(glob.glob(f"{out}/p=0/*.parquet")) > 1
-
-    result = compact_partitioned(spark, out, target_file_mb=512, max_concurrency=4)
-    assert len(result) == 5 and all(n == 1 for n in result.values())
-    assert sorted(os.path.basename(p) for p in result) == [f"p={i}" for i in range(5)]
-    for i in range(5):
-        assert len(glob.glob(f"{out}/p={i}/*.parquet")) == 1
-        assert glob.glob(f"{out}/p={i}._*") == []
-    after = sorted((r.id, r.p, r.v) for r in spark.read.parquet(out).collect())
-    assert after == rows_before
+    _assert_compacts_each_leaf(spark, out, [f"p={i}" for i in range(5)], "id p v")
 
 
 def test_sweep_reaps_dead_pid_bucket_tables(spark):

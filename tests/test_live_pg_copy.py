@@ -399,7 +399,9 @@ def test_failed_copy_export_keeps_previous_dataset(spark, live_pg, tmp_path):
     with pytest.raises(PySparkException, match="division by zero"):
         export(failing, out, quiet=True)
     assert tree() == before
-    assert not os.path.exists(out + "._tmp") and not os.path.exists(out + "._old")
+    head, name = os.path.split(out)
+    staged, aside = os.path.join(head, f".{name}._tmp"), os.path.join(head, f".{name}._old")
+    assert not os.path.exists(staged) and not os.path.exists(aside)
     assert spark.read.parquet(out).count() == 1000
     _assert_no_psql_left("publish_probe")
 
