@@ -185,6 +185,17 @@ def _row_groups(spark: SparkSession, files: list[tuple[str, int]]) -> int:
     )
 
 
+def _restore_aside(spark: SparkSession, fs, path: str) -> None:
+    """Roll back a swap cut short after its rename-aside: where ``path`` is
+    missing and ``<parent>/.<name>._old`` exists, the old copy is the
+    dataset, so it is renamed back."""
+    head, name = posixpath.split(path.rstrip("/"))
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    dst, old = hpath(path), hpath(posixpath.join(head, f".{name}._old"))
+    if fs.exists(old) and not fs.exists(dst):
+        fs.rename(old, dst)
+
+
 @contextmanager
 def _publish(spark: SparkSession, path: str) -> Iterator[str]:
     """The one commit protocol: yield the staging directory
@@ -200,8 +211,9 @@ def _publish(spark: SparkSession, path: str) -> Iterator[str]:
     ``<parent>/.<name>._old``), rename-into-place, delete-old-last: at every
     instant the data exists in full at path, old or tmp, and a failed
     rename-in rolls the old dir back; a swap cut short by a crash is rolled
-    back by the next publish. Hadoop FileSystem API throughout, resolved
-    from the path's own scheme (file://, hdfs://, s3a://).
+    back (:func:`_restore_aside`) by the next publish or compaction. Hadoop
+    FileSystem API throughout, resolved from the path's own scheme (file://,
+    hdfs://, s3a://).
     """
     base = path.rstrip("/")
     head, name = posixpath.split(base)
@@ -210,8 +222,7 @@ def _publish(spark: SparkSession, path: str) -> Iterator[str]:
     dst, tmp = hpath(base), hpath(staged)
     old = hpath(posixpath.join(head, f".{name}._old"))
     fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(old) and not fs.exists(dst):
-        fs.rename(old, dst)  # a crashed swap: the old copy is the dataset
+    _restore_aside(spark, fs, base)
     fs.delete(old, True)
     fs.delete(tmp, True)  # stale leftover of a crashed export
     try:
@@ -421,9 +432,10 @@ def compact(
     deepest ``key=value`` directories, so the partition layout survives.
     Each leaf is round-robin repartitioned and rewritten in place by
     :func:`export`, which stages it beside the leaf and publishes it by the
-    rename-aside swap of :func:`_publish`. Leaves run on a driver-side
-    thread pool (Spark job submission is thread-safe, and each leaf stages
-    in its own directory). Listing and measuring go through the Hadoop
+    rename-aside swap of :func:`_publish`. A leaf, directory or root that a
+    cut-short swap left only as ``.<name>._old`` is restored before the
+    walk sizes anything. Leaves run on a driver-side thread pool (Spark job
+    submission is thread-safe, and each leaf stages in its own directory). Listing and measuring go through the Hadoop
     FileSystem of the path's own scheme, so file://, hdfs:// and s3a://
     datasets compact alike.
     """
@@ -431,8 +443,15 @@ def compact(
 
     root = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    _restore_aside(spark, fs, path)
 
     def leaves(p) -> list[str]:
+        # a swap cut short leaves a directory only as ``.<name>._old``: put
+        # it back first, since no leaf's own publish may touch a sibling
+        for st in fs.listStatus(p):
+            name = st.getPath().getName()
+            if name.startswith(".") and name.endswith("._old"):
+                _restore_aside(spark, fs, posixpath.join(p.toString(), name[1 : -len("._old")]))
         # readers skip ``.``/``_`` names, and so does the walk: a crashed
         # leaf's ``.p=0._tmp`` is no partition
         parts = [

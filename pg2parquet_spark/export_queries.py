@@ -237,7 +237,7 @@ FROM region
 
     # --- client-side rebuild: the same typemap chain the COPY export runs --
     rng = tm.parse_range(F.col("rng"), lambda c: c.cast("int"))
-    pt = tm.parse_composite_fast(
+    pt = tm.parse_composite(
         F.col("pt"), ["x", "y"], [lambda c: c.cast("double")] * 2
     )
     vec = tm.parse_vector(F.col("vec"))

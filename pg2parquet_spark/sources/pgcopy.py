@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg2parquet_spark.sources.jdbc import PostgresConnection, quote_ident, table_query
+from pg2parquet_spark.typemap import numeric_to_decimal
 
 # Not used by the transport (COPY's default CSV NULL keeps NULL and '' apart);
 # kept for callers that run their own COPY with an explicit NULL string.
@@ -390,10 +391,6 @@ def _cast_plan(col: str, pg_type: str):
     ``numeric`` NaN and overflow become NULL (the reference's decimal mode),
     a BC date keeps PG's day, and a date or timestamp no cast takes
     (``infinity``, BC timestamps) fails the read naming the column."""
-    # imported here, not at module level: every executor worker that runs
-    # the COPY reader imports this module, and typemap pulls in pandas
-    from pg2parquet_spark.typemap import numeric_to_decimal
-
     text = F.col(col)
     if pg_type == "numeric":
         return numeric_to_decimal(text, 38, 18).alias(col)

@@ -1,9 +1,9 @@
 """Type-mapping operators (SURVEY §2.A) as Spark Column expressions.
 
 Each module re-expresses one family of the reference's per-column conversion
-operators. These are *expressions*, not UDFs, wherever possible — they run
-JVM-side inside whole-stage codegen; the few genuinely imperative parsers
-(composite text format) are Arrow-batched pandas UDFs.
+operators. These are *expressions*, never UDFs: they run JVM-side inside
+whole-stage codegen, the quoted field grammar of composites and ranges
+included (one tokenizer, composites.py::split_fields).
 """
 
 from pg2parquet_spark.typemap.numeric import (
@@ -28,9 +28,14 @@ from pg2parquet_spark.typemap.textual import (
 )
 from pg2parquet_spark.typemap.enums import enum_to_int, enum_to_text
 from pg2parquet_spark.typemap.ranges import parse_range, RANGE_FIELDS
-from pg2parquet_spark.typemap.composites import parse_composite_fast, parse_composite_udf
+from pg2parquet_spark.typemap.composites import parse_composite
 from pg2parquet_spark.typemap.arrays import flatten_with_dims
 from pg2parquet_spark.typemap.pgvector import parse_vector, parse_sparsevec
+
+# the names perfbench's exotic job calls; they go when a benchmark change
+# moves that job to parse_composite
+parse_composite_fast = parse_composite
+parse_composite_udf = parse_composite
 
 __all__ = [
     "numeric_to_decimal", "numeric_to_double", "numeric_to_float32",
@@ -39,6 +44,6 @@ __all__ = [
     "uuid_to_string", "uuid_string_to_bytes", "macaddr_to_text",
     "macaddr_to_int64", "int_to_bitstring", "jsonb_normalize",
     "enum_to_int", "enum_to_text", "parse_range", "RANGE_FIELDS",
-    "parse_composite_fast", "parse_composite_udf", "flatten_with_dims",
+    "parse_composite", "flatten_with_dims",
     "parse_vector", "parse_sparsevec",
 ]

@@ -80,8 +80,9 @@ def parse_array_text(col: Column, spark_type: str) -> Column:
     value text: brace→bracket translation + from_json, e.g.
     ``parse_array_text(c, "array<array<int>>")``. Valid for NUMERIC/BOOLEAN
     subtypes (their literals contain no braces/quotes); text subtypes need a
-    quote-aware tokenizer (composites.py's _tokenize family) — refuse them
-    upstream rather than mis-parse. Pure Column expressions, codegen'd,
-    NULL-safe (from_json of NULL is NULL).
+    quote-aware tokenizer for array literals, which PG quotes and nests unlike
+    composites.py's field grammar — refuse them upstream rather than
+    mis-parse. Pure Column expressions, codegen'd, NULL-safe (from_json of
+    NULL is NULL).
     """
     return F.from_json(F.translate(col, "{}", "[]"), spark_type)

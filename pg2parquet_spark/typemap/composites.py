@@ -1,115 +1,68 @@
-"""PG composite/record types → struct (postgres_cloner.rs:541-558).
+"""PG composite types → struct (postgres_cloner.rs:541-558), and the field
+grammar composites share with ranges (ranges.py).
 
 The reference walks the binary record format (oid + length per field,
-pg_custom_types.rs:169-213). Over text transport a composite renders as
-``(f1,f2,…)`` with CSV-ish quoting: a field is double-quoted if it contains
-``, ( ) " \\`` or whitespace; ``""`` escapes a quote; an unquoted empty
-field is NULL (so ``'(,,A)'`` → {None, None, 'A'} — struct-of-NULLs is NOT
-a NULL struct, FIXTURES F17).
+pg_custom_types.rs:169-213). Over text transport PostgreSQL renders a
+composite (``record_out``) as ``(f1,f2,…)`` and a range (``range_out``) as
+``[lo,hi)``, quoting each field the same way: a field that is empty or
+holds a delimiter, quote, backslash or whitespace is double-quoted; inside
+quotes ``""`` is a quote; a backslash escapes the next character anywhere;
+an unquoted empty field is NULL (so ``'(,,A)'`` → {None, None, 'A'} —
+struct-of-NULLs is NOT a NULL struct, FIXTURES F17).
 
-Two implementations:
-- `parse_composite_fast`: pure Column expressions (split on commas) — valid
-  when no field can contain a comma/quote (fixed-width codes, ints, …).
-  JVM-side, codegen, zero Python cost. Prefer at scale when the schema
-  allows it.
-- `parse_composite_udf`: Arrow-batched pandas UDF implementing the full
-  quoting grammar — the moral equivalent of the reference's binary decoder.
+:func:`split_fields` tokenizes that grammar with Spark's JVM regex
+functions, so parsing stays inside whole-stage codegen: one
+``regexp_extract_all`` cuts a value into its fields, and only a field
+holding a quote or backslash pays the two unescaping ``regexp_replace``
+passes.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+# one field: quoted sections, backslash escapes and plain characters, ended
+# by a comma (split_fields appends one after the last field)
+_FIELD = r'(?s)((?:"(?:[^"\\]|""|\\.)*"|\\.|[^,"\\])*),'
+# unescaping, pass 1: drop the quote delimiters, keep every escape pair
+_DELIMITERS = r'(?s)(\\.)|"((?:[^"\\]|""|\\.)*)"'
+# pass 2: each escape pair ("" inside quotes, \x anywhere) → its character
+_ESCAPE = r'(?s)["\\](.)'
 
 
-def parse_composite_fast(
+def split_fields(body: Column, n: int) -> list[Column]:
+    """The text between a record's or range's delimiters → its first ``n``
+    field values: unquoted and unescaped, NULL for an unquoted empty field
+    and past the last field."""
+    tokens = F.regexp_extract_all(F.concat(body, F.lit(",")), F.lit(_FIELD), 1)
+    values = []
+    for i in range(n):
+        tok = F.try_element_at(tokens, F.lit(i + 1))
+        plain = F.regexp_replace(F.regexp_replace(tok, _DELIMITERS, "$1$2"), _ESCAPE, "$1")
+        escaped = tok.rlike(r'["\\]')
+        values.append(F.when(tok == "", F.lit(None)).when(escaped, plain).otherwise(tok))
+    return values
+
+
+def struct_or_null(col: Column, *fields: Column) -> Column:
+    """``struct(*fields)``, NULL where ``col`` is NULL. A NULL index picks the
+    NULL, not a CASE: Catalyst shares a common subexpression (here the one
+    ``regexp_extract_all`` per value) across the fields only outside
+    conditional branches."""
+    return F.try_element_at(F.array(F.struct(*fields)), F.when(col.isNotNull(), F.lit(1)))
+
+
+def parse_composite(
     col: Column,
     fields: Sequence[str],
     casts: Sequence[Callable[[Column], Column]] | None = None,
 ) -> Column:
-    """'(a,b,c)' → struct; fields must not contain commas or quotes."""
-    body = F.substring(col, 2, F.length(col) - 2)
-    parts = F.split(body, ",")
+    """Composite text ``'(a,"b,c",)'`` → struct with one field per name, each
+    converted by its ``casts`` entry (text when ``casts`` is omitted).
+    Fields missing from the text are NULL; NULL input → NULL struct."""
     casts = casts or [lambda c: c] * len(fields)
-    cols = []
-    for i, (name, cast) in enumerate(zip(fields, casts)):
-        raw = F.nullif(F.element_at(parts, i + 1), F.lit(""))
-        cols.append(cast(raw).alias(name))
-    return F.when(col.isNull(), F.lit(None)).otherwise(F.struct(*cols))
-
-
-def _tokenize(text: str) -> list[str | None]:
-    """Full PG composite text grammar (quotes, escapes, NULL-as-empty)."""
-    assert text.startswith("(") and text.endswith(")")
-    body = text[1:-1]
-    out: list[str | None] = []
-    buf: list[str] = []
-    quoted_field = False
-    in_quotes = False
-    i = 0
-    while i <= len(body):
-        ch = body[i] if i < len(body) else None  # sentinel terminator
-        if in_quotes:
-            if ch == '"':
-                if i + 1 < len(body) and body[i + 1] == '"':
-                    buf.append('"')
-                    i += 2
-                    continue
-                in_quotes = False
-            elif ch == "\\":
-                buf.append(body[i + 1])
-                i += 2
-                continue
-            else:
-                buf.append(ch)
-            i += 1
-            continue
-        if ch == '"':
-            in_quotes = True
-            quoted_field = True
-        elif ch == "," or ch is None:
-            if not buf and not quoted_field:
-                out.append(None)  # unquoted empty field = NULL
-            else:
-                out.append("".join(buf))
-            buf, quoted_field = [], False
-        elif ch == "\\":
-            buf.append(body[i + 1])
-            i += 1
-        else:
-            buf.append(ch)
-        i += 1
-    return out
-
-
-def parse_composite_udf(col: Column, fields: Sequence[str]) -> Column:
-    """Faithful text-grammar parser as an Arrow-batched pandas UDF.
-
-    Returns struct<field: string, …>; cast fields afterwards. This is the
-    slow path — use parse_composite_fast when the schema permits. At scale
-    the Arrow batching keeps the Python cost to one serialization per
-    column-batch, not per row.
-    """
-    schema = T.StructType([T.StructField(f, T.StringType(), True) for f in fields])
-    n = len(fields)
-
-    @F.pandas_udf(schema)
-    def _parse(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for v in s:
-            if v is None:
-                rows.append([None] * n)
-                continue
-            toks = _tokenize(v)
-            toks = (toks + [None] * n)[:n]
-            rows.append(toks)
-        return pd.DataFrame(rows, columns=list(fields))
-
-    # NULL input → NULL struct (the UDF returns a row of NULLs; distinguish
-    # by masking with the input's nullity)
-    return F.when(col.isNull(), F.lit(None)).otherwise(_parse(col))
+    values = split_fields(F.substring(col, 2, F.length(col) - 2), len(fields))
+    return struct_or_null(col, *[cast(v).alias(f) for f, cast, v in zip(fields, casts, values)])

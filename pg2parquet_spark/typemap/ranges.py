@@ -2,10 +2,10 @@
 
 The reference decodes the binary flags byte (empty / inclusive / infinite,
 pg_custom_types.rs:100-161). Over text transport a range renders as
-``empty`` | ``[lo,hi)`` | ``(,hi]`` | ``(,)`` …, with bounds optionally
-double-quoted (timestamps). This parser is pure Column expressions —
-JVM-side, codegen-friendly — for scalar subtypes (no embedded commas
-inside bounds other than inside one pair of quotes).
+``empty`` | ``[lo,hi)`` | ``(,hi]`` | ``(,)`` …, its two bounds quoted by
+the same rules as a composite's fields, so they are cut by the one
+tokenizer in composites.py: pure Column expressions, JVM-side and
+codegen'd, for any subtype's text (a quoted comma, ``""``, a backslash).
 
 Output struct fields exactly match the reference:
 {lower, upper, lower_inclusive, upper_inclusive, is_empty}.
@@ -20,15 +20,9 @@ from collections.abc import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pg2parquet_spark.typemap.composites import split_fields, struct_or_null
+
 RANGE_FIELDS = ("lower", "upper", "lower_inclusive", "upper_inclusive", "is_empty")
-
-
-def _unquote(bound: Column) -> Column:
-    """Strip one layer of double quotes and unescape doubled quotes."""
-    quoted = bound.startswith('"') & bound.endswith('"')
-    inner = F.substring(bound, 2, F.length(bound) - 2)
-    inner = F.replace(inner, F.lit('""'), F.lit('"'))
-    return F.when(quoted, inner).otherwise(bound)
 
 
 def parse_range(
@@ -40,29 +34,15 @@ def parse_range(
     ``cast_bound`` converts the bound text to the subtype (e.g.
     ``lambda c: c.cast("int")``). NULL input → NULL struct (≠ empty range).
     """
-    is_empty = col == "empty"
-    body = F.substring(col, 2, F.length(col) - 2)
-    lower_txt = F.substring_index(body, ",", 1)
-    upper_txt = F.substring_index(body, ",", -1)
-    lower = cast_bound(_unquote(F.nullif(lower_txt, F.lit(""))))
-    upper = cast_bound(_unquote(F.nullif(upper_txt, F.lit(""))))
-    lower_inc = F.substring(col, 1, 1) == "["
-    upper_inc = col.endswith("]")
-    empty_struct = F.struct(
-        cast_bound(F.lit(None).cast("string")).alias("lower"),
-        cast_bound(F.lit(None).cast("string")).alias("upper"),
-        F.lit(False).alias("lower_inclusive"),
-        F.lit(False).alias("upper_inclusive"),
-        F.lit(True).alias("is_empty"),
-    )
-    full_struct = F.struct(
+    is_empty = col.eqNullSafe("empty")  # null-safe: a non-nullable field
+    body = F.when(~is_empty, F.substring(col, 2, F.length(col) - 2))
+    lower, upper = (cast_bound(b) for b in split_fields(body, 2))
+    return struct_or_null(
+        col,
         lower.alias("lower"),
         upper.alias("upper"),
         # an absent bound is never inclusive (matches PG canonical output)
-        (lower_inc & lower.isNotNull()).alias("lower_inclusive"),
-        (upper_inc & upper.isNotNull()).alias("upper_inclusive"),
-        F.lit(False).alias("is_empty"),
-    )
-    return F.when(col.isNull(), F.lit(None)).when(is_empty, empty_struct).otherwise(
-        full_struct
+        ((F.substring(col, 1, 1) == "[") & lower.isNotNull()).alias("lower_inclusive"),
+        (col.endswith("]") & upper.isNotNull()).alias("upper_inclusive"),
+        is_empty.alias("is_empty"),
     )

@@ -346,7 +346,7 @@ def tm_composite_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     casts = [lambda c: c, lambda c: c.cast("bigint"), lambda c: c]
-    comp = tm.parse_composite_fast(txt, ["name", "key", "segment"], casts)
+    comp = tm.parse_composite(txt, ["name", "key", "segment"], casts)
     return cust.select(
         "c_custkey",
         txt.alias("comp_txt"),

@@ -307,7 +307,7 @@ def test_exotic_rewrite_chains_into_typemap_parsers(spark):
     from pyspark.sql import functions as F
 
     from pg2parquet_spark.typemap.arrays import flatten_with_dims
-    from pg2parquet_spark.typemap.composites import parse_composite_fast
+    from pg2parquet_spark.typemap.composites import parse_composite
     from pg2parquet_spark.typemap.enums import enum_to_int
     from pg2parquet_spark.typemap.pgvector import parse_sparsevec, parse_vector
     from pg2parquet_spark.typemap.ranges import parse_range
@@ -351,7 +351,7 @@ def test_exotic_rewrite_chains_into_typemap_parsers(spark):
         "id",
         enum_to_int(F.col("mood"), ["happy", "sad"]).alias("mood"),
         parse_range(F.col("span"), lambda c: c.cast("int")).alias("span"),
-        parse_composite_fast(
+        parse_composite(
             F.col("addr"), ["street", "num"], [lambda c: c, lambda c: c.cast("int")]
         ).alias("addr"),
         parse_vector(F.col("emb")).alias("emb"),
@@ -1014,6 +1014,36 @@ def test_staging_is_hidden_from_readers_of_the_parent(spark, tmp_path):
         seen = spark.read.parquet(root)
         assert seen.count() == 30
         assert dict(seen.dtypes)["p"] == "int"
+
+
+def test_compact_restores_a_leaf_whose_swap_was_cut_short(spark, tmp_path):
+    """A hive leaf left only as ``.p=0._old`` by a crash after the
+    rename-aside is put back and compacted with its siblings."""
+    from pg2parquet_spark.export import compact
+
+    root = str(tmp_path / "hive_cut")
+    df = spark.range(30).select("id", (F.col("id") % 3).cast("int").alias("p"))
+    df.repartition(4).write.partitionBy("p").parquet(root)
+    os.rename(f"{root}/p=0", f"{root}/.p=0._old")
+    assert spark.read.parquet(root).count() == 20
+    assert compact(spark, root) == 3
+    seen = spark.read.parquet(root)
+    assert seen.count() == 30 and dict(seen.dtypes)["p"] == "int"
+    assert not glob.glob(f"{root}/.*._old")
+
+
+def test_compact_restores_a_flat_dataset_whose_swap_was_cut_short(spark, tmp_path):
+    """A flat dataset left only as ``.<name>._old`` is restored and
+    compacted, not refused as a missing path."""
+    from pg2parquet_spark.export import compact
+
+    out = str(tmp_path / "flat_cut")
+    spark.range(100).repartition(4).write.parquet(out)
+    os.rename(out, str(tmp_path / ".flat_cut._old"))
+    assert compact(spark, out) == 1
+    assert len(glob.glob(f"{out}/*.parquet")) == 1
+    assert spark.read.parquet(out).count() == 100
+    assert _no_staging_left(out)
 
 
 def test_float16_rewrite_leaves_no_tmp_files(spark, tmp_path):

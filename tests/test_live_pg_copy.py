@@ -20,6 +20,8 @@ Wire-proven here (vs the string/fixture unit tests):
   multi-host netlocs, socket-directory hosts, JDBC's ``ssl=true``;
 - the A3 catalog probes (ENUM_LABELS_SQL / COMPOSITE_FIELDS_SQL / column
   probe) run against the real pg_catalog;
+- range and composite text holding every character the field grammar
+  quotes parses to PG's own bound, flag and field accessors;
 - the exotic rewrite -> text wire -> typemap-parse chain round-trips REAL
   server-rendered enum/range/composite/vector/multidim text (reference
   parity: the reference's py-tests/wrappers.py:96-129 exercises the same
@@ -217,7 +219,7 @@ def test_exotic_rewrite_roundtrip_live(spark, live_pg):
     from pg2parquet_spark.sources import pgcopy
     from pg2parquet_spark.sources.jdbc import rewrite_query_for_exotics
     from pg2parquet_spark.typemap.arrays import flatten_with_dims, parse_array_text
-    from pg2parquet_spark.typemap.composites import parse_composite_fast
+    from pg2parquet_spark.typemap.composites import parse_composite
     from pg2parquet_spark.typemap.enums import enum_to_int
     from pg2parquet_spark.typemap.pgvector import parse_vector
     from pg2parquet_spark.typemap.ranges import parse_range
@@ -241,7 +243,7 @@ def test_exotic_rewrite_roundtrip_live(spark, live_pg):
         F.col("m").alias("mood_name"),
         enum_to_int(F.col("m"), ["sad", "ok", "happy"]).alias("mood_ord"),
         parse_range(F.col("r"), lambda c: c.cast("int")).alias("rng"),
-        parse_composite_fast(
+        parse_composite(
             F.col("d"), ["w", "h"], [lambda c: c.cast("int")] * 2
         ).alias("d"),
         parse_vector(F.col("v")).alias("v"),
@@ -264,6 +266,65 @@ def test_exotic_rewrite_roundtrip_live(spark, live_pg):
     assert rows[3].mood_name is None and rows[3].mood_ord is None
     assert rows[3].rng.is_empty
     assert rows[3].d is None and rows[3].v is None
+
+
+def test_range_and_composite_text_parse_to_pg_truth(spark, live_pg):
+    """Server-rendered range and composite text holding every character the
+    field grammar quotes (comma, quote, backslash, parenthesis, whitespace,
+    '' and NULL) parses to PG's own lower/upper/lower_inc/upper_inc/isempty
+    and (c).s/(c).n."""
+    from pg2parquet_spark.sources import pgcopy
+    from pg2parquet_spark.typemap import parse_composite, parse_range
+
+    _psql(live_pg, r"""
+        DROP TABLE IF EXISTS grammar_truth;
+        DROP TYPE IF EXISTS grammar_textrange, grammar_pair;
+        CREATE TYPE grammar_textrange AS RANGE (subtype = text);
+        CREATE TYPE grammar_pair AS (s text, n int);
+        CREATE TABLE grammar_truth (id int, r grammar_textrange, c grammar_pair);
+        INSERT INTO grammar_truth VALUES
+          (1, grammar_textrange('a,b', 'z'), ROW('a,b', 2)),
+          (2, grammar_textrange(E'a\\b', 'c"d'), ROW('c"d', NULL)),
+          (3, grammar_textrange('', ' x'), ROW(E'e\\f', -1)),
+          (4, grammar_textrange('(p', '(q)'), ROW('(g)', 0)),
+          (5, grammar_textrange(NULL, ' sp ace '), ROW(' ', 3)),
+          (6, grammar_textrange('', '', '[]'), ROW('', 4)),
+          (7, grammar_textrange('x', 'x'), ROW(NULL, NULL)),
+          (8, grammar_textrange(E'a\tb', E'b\nc"\\', '(]'), ROW(E't\tn\n,"\\', 5)),
+          (9, grammar_textrange('a', NULL, '(]'), NULL),
+          (10, NULL, ROW('""', 6));
+    """)
+    raw = pgcopy.read(spark, live_pg, query=(
+        "SELECT id, r::text AS r, lower(r) AS lo, upper(r) AS hi, lower_inc(r) AS lo_inc, "
+        "upper_inc(r) AS hi_inc, isempty(r) AS emp, c::text AS c, (c).s AS s, (c).n AS n "
+        "FROM grammar_truth"
+    ))
+    parsed = raw.select(
+        "*",
+        parse_range(F.col("r")).alias("rng"),
+        parse_composite(F.col("c"), ["s", "n"], [lambda c: c, lambda c: c.cast("int")])
+        .alias("comp"),
+    ).orderBy(F.col("id").cast("int"))
+    rows = parsed.collect()
+    assert len(rows) == 10
+    flag = {"t": True, "f": False}
+    for r in rows:
+        if r.r is None:
+            assert r.rng is None
+        else:
+            want = (r.lo, r.hi, flag[r.lo_inc], flag[r.hi_inc], flag[r.emp])
+            assert tuple(r.rng) == want, (r.id, r.r)
+        if r.c is None:
+            assert r.comp is None
+        else:
+            want = (r.s, None if r.n is None else int(r.n))
+            assert (r.comp.s, r.comp.n) == want, (r.id, r.c)
+    # the rows are the edge cases they claim to be
+    by_id = {r.id: r for r in rows}
+    assert by_id["1"].r == '["a,b",z)' and by_id["1"].c == '("a,b",2)'
+    assert by_id["2"].r == r'["a\\b","c""d")'
+    assert by_id["6"].rng.lower == "" and by_id["7"].rng.is_empty
+    assert by_id["10"].comp.s == '""'
 
 
 def test_copy_null_vs_empty_string_fidelity(spark, live_pg):

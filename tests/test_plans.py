@@ -859,3 +859,52 @@ def test_plan_snapshot(spark):
         "plan topology drifted (rerun tools/plansnap.py if intentional): "
         + json.dumps(drifted, indent=1)[:4000]
     )
+
+
+def test_typemap_conversions_run_no_python(spark):
+    """Every conversion of the benchmark's exotic job (enum, range, both
+    composites, array + dims, vector, numeric, interval), called by the
+    names that job uses, executes JVM-side: no Python evaluation node."""
+    from pyspark.sql import functions as F
+
+    from pg2parquet_spark import typemap as tm
+    from pg2parquet_spark.typemap.arrays import parse_array_text
+
+    src = spark.createDataFrame(
+        [("happy", "[1,5)", '("1 Main St","a,b",12345)', "(3,4)", "{{1,2},{3,4}}",
+          "[0.5,1]", "1.5", 1, 2, 3)],
+        "m string, r string, d string, p string, grid string, v string, num string, "
+        "iv_months int, iv_days int, iv_us bigint",
+    )
+    c = F.col
+    as_int = lambda x: x.cast("int")  # noqa: E731
+    typed = src.select(
+        tm.enum_to_int(c("m"), ["sad", "happy"]).alias("mood_ord"),
+        tm.parse_range(c("r"), as_int).alias("rng"),
+        tm.parse_composite_udf(c("d"), ["street", "city", "zip"]).alias("addr"),
+        tm.parse_composite_fast(c("p"), ["w", "h"], [as_int, as_int]).alias("dims"),
+        tm.flatten_with_dims(parse_array_text(c("grid"), "array<array<int>>"), 2, "dims")
+        .alias("grid_flat"),
+        tm.parse_vector(c("v")).alias("vec"),
+        tm.numeric_to_decimal(c("num"), 38, 18).alias("num_dec"),
+        tm.interval_to_flba12(c("iv_months"), c("iv_days"), c("iv_us")).alias("iv_flba"),
+    )
+    (row,) = typed.collect()
+    assert row.addr.city == "a,b" and row.dims.h == 4
+    plan = typed._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
+
+
+def test_typemap_imports_no_pandas():
+    """The typemap is Column expressions only: importing it (as the COPY
+    reader's executors do) loads no pandas."""
+    import os
+    import subprocess
+    import sys
+
+    probe = "import sys, pg2parquet_spark.typemap; print('pandas' in sys.modules)"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, check=True, cwd=repo
+    )
+    assert out.stdout.strip() == "False"

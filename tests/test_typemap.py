@@ -163,23 +163,39 @@ def test_parse_range_quoted_timestamp(spark):
     assert r.r.lower_inclusive and not r.r.upper_inclusive
 
 
+def test_parse_range_quoted_text_bounds(spark):
+    # PG 15 renders textrange(E'a\\b','c"d') as ["a\\b","c""d"); a quoted
+    # bound may hold the delimiter, and a quoted empty bound is '', not NULL
+    df = one_col(spark, ['["a,b",z)', '["a\\\\b","c""d")', '["",x]', "(,)"])
+    r = df.select(tm.parse_range(F.col("v")).alias("r")).collect()
+    as_t = [tuple(x.r) for x in r]
+    assert as_t[0] == ("a,b", "z", True, False, False)
+    assert as_t[1] == ("a\\b", 'c"d', True, False, False)
+    assert as_t[2] == ("", "x", True, True, False)
+    assert as_t[3] == (None, None, False, False, False)
+
+
 # ------------------------------------------------------------- composites --
 def test_composite_fast(spark):
-    # F17 chain_id: '(1ehz,1,A)' and partial '(,,A)'
-    df = one_col(spark, ["(1ehz,1,A)", "(,,A)", None])
+    # F17 chain_id: '(1ehz,1,A)' and partial '(,,A)'; PG 15 renders
+    # ROW('a,b',2,'C') as ("a,b",2,C); a value with fewer fields than names
+    # reads the missing ones as NULL, also under ANSI mode
+    df = one_col(spark, ["(1ehz,1,A)", "(,,A)", None, '("a,b",2,C)', "(x)"])
     casts = [lambda c: c, lambda c: c.cast("int"), lambda c: c]
     r = df.select(
-        tm.parse_composite_fast(F.col("v"), ["pdbid", "model", "chain"], casts).alias("c")
+        tm.parse_composite(F.col("v"), ["pdbid", "model", "chain"], casts).alias("c")
     ).collect()
     assert r[0].c.asDict() == {"pdbid": "1ehz", "model": 1, "chain": "A"}
     assert r[1].c.asDict() == {"pdbid": None, "model": None, "chain": "A"}  # struct-of-NULLs
     assert r[2].c is None  # NULL struct ≠ struct-of-NULLs
+    assert r[3].c.asDict() == {"pdbid": "a,b", "model": 2, "chain": "C"}
+    assert r[4].c.asDict() == {"pdbid": "x", "model": None, "chain": None}
 
 
-def test_composite_udf_quoting(spark):
+def test_composite_quoting(spark):
     df = one_col(spark, ['("a,b",2,"c""d")', "(,,)", None])
     r = df.select(
-        tm.parse_composite_udf(F.col("v"), ["x", "y", "z"]).alias("c")
+        tm.parse_composite(F.col("v"), ["x", "y", "z"]).alias("c")
     ).collect()
     assert r[0].c.asDict() == {"x": "a,b", "y": "2", "z": 'c"d'}
     assert r[1].c.asDict() == {"x": None, "y": None, "z": None}
