@@ -69,7 +69,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="one ordered output file (the reference's shape); default = parallel files")
     e.add_argument("--partition-by", type=lambda v: tuple(v.split(",")),
                    help="comma-separated hive partition columns")
-    e.add_argument("--output-format", choices=["parquet", "csv", "json", "orc"])
     e.add_argument("--quiet", action="store_true")
     e.add_argument("--partition-column")
     e.add_argument("--lower-bound", type=int)

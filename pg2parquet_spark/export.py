@@ -53,7 +53,7 @@ class ExportReport:
     rows: int
     files: int
     bytes: int
-    row_groups: int  # 0 for non-Parquet output formats
+    row_groups: int
     seconds: float
 
     def __str__(self) -> str:
@@ -117,9 +117,9 @@ def _export(
         if check is not None:
             check(got)
         files = data_files(spark, tmp)
-        if options.output_format == "parquet" and options.float16_handling == "float16":
+        if options.float16_handling == "float16":
             files = _narrow_to_float16(spark, files, options)
-        groups = _row_groups(spark, files) if options.output_format == "parquet" else 0
+        groups = _row_groups(spark, files)
     return ExportReport(
         rows=got["__rows"],
         files=len(files),
@@ -134,23 +134,19 @@ def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> Non
     directory ``path``."""
     from pg2parquet_spark.progress import ProgressReporter
 
-    writer = df.write
-    if options.output_format == "parquet":
-        codec = options.spark_codec  # raises for lzo — same error contract as writer absence
-        writer = writer.option("compression", codec).option(
-            "parquet.block.size", str(options.row_group_bytes)
+    codec = options.spark_codec  # raises for lzo — same error contract as writer absence
+    writer = df.write.option("compression", codec).option(
+        "parquet.block.size", str(options.row_group_bytes)
+    )
+    if options.compression == "zstd" and options.compression_level is not None:
+        writer = writer.option(
+            "parquet.compression.codec.zstd.level", str(options.compression_level)
         )
-        if options.compression == "zstd" and options.compression_level is not None:
-            writer = writer.option(
-                "parquet.compression.codec.zstd.level", str(options.compression_level)
-            )
-    elif options.output_format == "csv":
-        writer = writer.option("header", "true")
     if options.partition_by:
         # hive-style layout: readers get partition pruning on these columns
         writer = writer.partitionBy(*options.partition_by)
     with nullcontext() if quiet else ProgressReporter(df.sparkSession, path):
-        writer.format(options.output_format).save(path)
+        writer.parquet(path)
 
 
 def data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:

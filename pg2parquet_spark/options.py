@@ -66,10 +66,9 @@ class ExportOptions:
     # want many files — default keeps Spark's parallel writer):
     single_file: bool = False
     row_group_bytes: int = 500 * 1024 * 1024  # postgres_cloner.rs:305
-    # Ours-only sink extensions: hive-style partition columns (partition
-    # pruning on read at scale) and non-parquet output formats.
+    # Ours-only sink extension: hive-style partition columns (partition
+    # pruning on read at scale).
     partition_by: tuple[str, ...] = ()
-    output_format: str = "parquet"  # parquet | csv | json | orc
     # Global sort before write. With single_file this is the reference's
     # ordered-single-stream shape; without it Spark's range partitioner
     # yields MANY files that are globally ordered end-to-end — the
@@ -85,7 +84,6 @@ class ExportOptions:
         _check(self.array_handling, ARRAY_HANDLING, "array_handling")
         _check(self.float16_handling, FLOAT16_HANDLING, "float16_handling")
         _check(self.compression, COMPRESSIONS, "compression")
-        _check(self.output_format, ("parquet", "csv", "json", "orc"), "output_format")
         if self.single_file and self.partition_by:
             raise ValueError("single_file and partition_by are mutually exclusive")
         if self.float16_handling == "float16" and not self.float16_columns:

@@ -20,7 +20,8 @@ ENV_CPUS = "SPARK_GRAFT_CPUS"
 
 
 def default_cpus() -> int:
-    return int(os.environ.get(ENV_CPUS, "32"))
+    """``SPARK_GRAFT_CPUS``, else the host's CPU count."""
+    return int(os.environ.get(ENV_CPUS) or os.cpu_count() or 1)
 
 
 def get_spark(

@@ -6,8 +6,8 @@ pieces it and its callers share:
 
 - A1 table scan → :func:`table_query` (identifiers are quoted, unlike the
   reference's naive format at main.rs:297-299 — a deviation in our favor);
-- A3 exotic types → :data:`ENUM_LABELS_SQL` / :data:`COMPOSITE_FIELDS_SQL`
-  catalog probes, and :func:`rewrite_query_for_exotics`, which wraps
+- A3 exotic types → the :data:`ENUM_LABELS_SQL` catalog read, and
+  :func:`rewrite_query_for_exotics`, which wraps
   enum/range/composite/vector columns in ::text casts server-side so the
   typemap text parsers (typemap/*) can rebuild structured values — the
   moral equivalent of the reference's binary decoders in
@@ -50,23 +50,12 @@ def table_query(table: str) -> str:
     return f"SELECT * FROM {quote_ident(table)}"
 
 
-# Catalog introspection SQL (A3 for exotic types): run these through
-# pgcopy.run_sql to build typemap conversion plans. Kept as public constants
-# so the export driver and tests can reuse them verbatim.
+# Enum labels in ordinal order (A3 for enums): run through pgcopy.run_sql.
+# Column types and a composite's fields come from pgcopy._describe.
 ENUM_LABELS_SQL = """
 SELECT t.typname AS enum_name, e.enumlabel AS label
 FROM pg_type t JOIN pg_enum e ON e.enumtypid = t.oid
 ORDER BY t.typname, e.enumsortorder
-"""
-
-COMPOSITE_FIELDS_SQL = """
-SELECT t.typname AS composite_name, a.attname AS field_name,
-       ft.typname AS field_type, a.attnum
-FROM pg_type t
-JOIN pg_class c ON c.oid = t.typrelid AND c.relkind = 'c'
-JOIN pg_attribute a ON a.attrelid = c.oid AND a.attnum > 0
-JOIN pg_type ft ON ft.oid = a.atttypid
-ORDER BY t.typname, a.attnum
 """
 
 

@@ -20,15 +20,20 @@ Scale design:
 - **NULL fidelity**: COPY's CSV NULL is an unquoted empty field, while an
   empty string goes out quoted (``""``). The decoder reads only unquoted
   empty fields as NULL, so NULL and ``''`` stay distinct with no sentinel.
-- **Executor prerequisites**: ``psql`` on PATH (it is on any PG client
+- **One schema probe**: before the scan the driver asks PostgreSQL to
+  describe the statement it will COPY (`_describe`), as the reference
+  compiles its schema from ``client.prepare(query)`` →
+  ``statement.columns()`` (``postgres_cloner.rs:297-303``). Nothing runs.
+- **Prerequisites**: ``psql`` 12+ on the driver (``--csv``; ``\\gdesc``
+  needs 11) and ``psql`` on every executor's PATH (it is on any PG client
   image), and this package importable, as for every Python kernel in it.
   The connection travels as :func:`psql_command`'s result: a URL whole as
   psql's ``-d`` conninfo (libpq parses it), parts and defaults as ``PG*``
   variables merged into the executor's own environment, and the password
   only in PGPASSWORD, never in argv.
 
-Exotic types: run the A3 catalog probe
-(:data:`~pg2parquet_spark.sources.jdbc.ENUM_LABELS_SQL` etc.) through
+Exotic types: read enum labels
+(:data:`~pg2parquet_spark.sources.jdbc.ENUM_LABELS_SQL`) through
 :func:`run_sql`, rewrite the query with
 :func:`~pg2parquet_spark.sources.jdbc.rewrite_query_for_exotics` (::text
 casts), read it here, and rebuild structure with the typemap parsers.
@@ -37,6 +42,7 @@ casts), read it here, and rebuild structure with the typemap parsers.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import subprocess
 import tempfile
@@ -116,9 +122,9 @@ def psql_command(conn: PostgresConnection) -> tuple[list[str], dict[str, str]]:
     return argv, env
 
 
-def _copy(sql: str, header: bool = False) -> str:
+def _copy(sql: str) -> str:
     """COPY in PG's default CSV dialect: NULL is an unquoted empty field."""
-    return f"COPY ({sql}) TO STDOUT (FORMAT csv, HEADER {str(header).lower()})"
+    return f"COPY ({sql}) TO STDOUT (FORMAT csv)"
 
 
 # quoted values may span lines; an empty line is a one-column row holding NULL
@@ -200,18 +206,18 @@ def _text_rows(raw: bytes) -> list[tuple[str | None, ...]]:
     return list(zip(*table.to_pydict().values()))
 
 
-def _copy_stdout(
-    command: tuple[list[str], dict[str, str]], sql: str, header: bool = False
+def _run_psql(
+    command: tuple[list[str], dict[str, str]], args: list[str], script: bytes = b""
 ) -> bytes:
-    """Run one server-side COPY through ``psql_command``'s result and return
-    its raw CSV bytes."""
+    """The driver's one ``psql`` call: ``psql_command``'s result plus
+    ``args``, with ``script`` on stdin. Returns stdout."""
     argv, env = command
     proc = subprocess.run(
-        argv + ["-c", _copy(sql, header)], capture_output=True, env={**os.environ, **env}
+        argv + args, input=script, capture_output=True, env={**os.environ, **env}
     )
     if proc.returncode != 0:
         raise RuntimeError(
-            f"psql COPY failed (rc={proc.returncode}): "
+            f"psql failed (rc={proc.returncode}): "
             f"{proc.stderr.decode(errors='replace').strip()[:500]}"
         )
     return proc.stdout
@@ -219,44 +225,51 @@ def _copy_stdout(
 
 def run_sql(conn: PostgresConnection, sql: str) -> list[tuple[str | None, ...]]:
     """Driver-side catalog/DDL helper: run ``sql`` through one COPY and
-    return rows as tuples of (text | None). This is how the A3 probes
-    (ENUM_LABELS_SQL, COMPOSITE_FIELDS_SQL, schema introspection) execute
-    live — bounded catalog reads, never table data."""
-    return _text_rows(_copy_stdout(psql_command(conn), sql))
+    return rows as tuples of (text | None). Meant for bounded catalog reads
+    such as ENUM_LABELS_SQL, never table data."""
+    return _text_rows(_run_psql(psql_command(conn), ["-c", _copy(sql)]))
 
 
-# PG type name (pg_type.typname / information_schema udt_name) → Spark type.
-# Everything absent from this map transports as text (which is exactly what
-# the exotic rewrite path wants — the typemap parsers take it from there).
-# ``numeric`` is typed by the typemap's decimal conversion (`_cast_plan`).
+# psql's script reader runs meta-commands (``\!`` included) wherever they
+# appear, so the caller's text travels only in ``-c``, which goes to the
+# server unlexed. stdin holds this fixed script. DEALLOCATE inside the one
+# transaction leaves no statement behind on a pooler's server connection.
+_GDESC = b"EXECUTE p \\gdesc\nDEALLOCATE p\n"
+
+
+def _describe(command: tuple[list[str], dict[str, str]], query: str) -> list[tuple[str, str]]:
+    """Ordered (name, ``format_type`` text with typmods) of the columns of
+    ``SELECT * FROM (<query>) q``. PostgreSQL prepares the statement and
+    describes it without executing it, so a read-only server serves it, and
+    ``-1`` keeps PREPARE and EXECUTE in one transaction. A domain reports
+    its base type. The leading constant column keeps psql printing rows for
+    a statement with no columns of its own: it would print a translated
+    notice instead."""
+    rows = _text_rows(_run_psql(command, [
+        "-t", "--csv", "-1", "-c", f"PREPARE p AS SELECT NULL AS _, * FROM ({query}) q",
+        "-f", "-",
+    ], _GDESC))
+    if len(rows) < 2:
+        raise ValueError(f"query has no columns to export: {query}")
+    return rows[1:]  # type: ignore[return-value]
+
+
+# format_type name, typmod stripped → Spark type. Everything absent from this
+# map (arrays, enums, ranges, composites, varchar, ...) transports as text,
+# which is what the exotic rewrite path wants — the typemap parsers take it
+# from there. ``numeric`` is typed by the typemap's decimal conversion.
 _PG_TO_SPARK: dict[str, str] = {
-    "int2": "smallint",
-    "int4": "int",
-    "int8": "bigint",
-    "float4": "float",
-    "float8": "double",
-    "bool": "boolean",
+    "smallint": "smallint",
+    "integer": "int",
+    "bigint": "bigint",
+    "real": "float",
+    "double precision": "double",
+    "boolean": "boolean",
     "date": "date",
-    "timestamp": "timestamp_ntz",
-    "timestamptz": "timestamp",
+    "timestamp without time zone": "timestamp_ntz",
+    "timestamp with time zone": "timestamp",
 }
-
-
-def probe_schema(conn: PostgresConnection, table: str) -> list[tuple[str, str]]:
-    """A3 live: ordered (column, pg type name) pairs for ``table``.
-
-    ``table`` resolves exactly as the scan's ``quote_ident`` does: the quoted
-    identifier travels as an escaped SQL literal, so case and quotes survive.
-    """
-    regclass = quote_ident(table).replace("'", "''")
-    rows = run_sql(
-        conn,
-        "SELECT a.attname, t.typname FROM pg_attribute a "
-        "JOIN pg_type t ON t.oid = a.atttypid "
-        f"WHERE a.attrelid = '{regclass}'::regclass AND a.attnum > 0 "
-        "AND NOT a.attisdropped ORDER BY a.attnum",
-    )
-    return [(c, t) for c, t in rows]  # type: ignore[misc]
+_TYPMOD = re.compile(r"\(\d+(,\d+)?\)")
 
 
 def _range_queries(
@@ -333,12 +346,12 @@ def read(
     """COPY scan (A1/A2 + range splitter). Exactly one of query/table
     (main.rs:252-260).
 
-    ``table=`` reads return typed columns: the live A3 probe names each
-    column's PG type, and `_cast_plan` types plain scalars and
-    ``numeric`` JVM-side; everything exotic stays text for the typemap
-    parsers. ``query=`` reads run a LIMIT 0 probe for the column NAMES
-    only, so every column arrives as text. Either way the driver runs one
-    ``psql`` probe before the scan.
+    The driver runs one ``psql`` probe before the scan, for both modes:
+    `_describe` of the statement it will COPY. ``table=`` reads return
+    typed columns: `_cast_plan` types plain scalars and ``numeric``
+    JVM-side, and everything else stays text for the typemap parsers.
+    ``query=`` reads take only the column names, so every column arrives
+    as text.
     """
     if (query is None) == (table is None):
         raise ValueError("exactly one of query= or table= must be given")
@@ -355,15 +368,12 @@ def read(
         raise RuntimeError("psql not on PATH — the COPY transport needs the PG client")
     command = psql_command(conn)
     if table is not None:
-        cols = probe_schema(conn, table)
         query = table_query(table)
-    else:
-        # A3 for ad-hoc queries: PG plans `LIMIT 0` without executing the
-        # subquery — a HEADER-only round-trip yields the output column
-        # names. It carries no types, so ad-hoc queries transport as text
-        # and the caller casts where it needs to.
-        header = _copy_stdout(command, f"SELECT * FROM ({query}) q LIMIT 0", header=True)
-        cols = [(n, "text") for n in _text_rows(header)[0]]
+    cols = _describe(command, query)
+    # query= columns stay text (README A2): typed, numeric NaN would be NULL before
+    # perfbench's exotic job audits it (ROADMAP item 1)
+    if table is None:
+        cols = [(name, "text") for name, _ in cols]
 
     if partition_column is not None:
         part_queries = _range_queries(
@@ -392,15 +402,16 @@ def _cast_plan(col: str, pg_type: str):
     a BC date keeps PG's day, and a date or timestamp no cast takes
     (``infinity``, BC timestamps) fails the read naming the column."""
     text = F.col(col)
+    pg_type = _TYPMOD.sub("", pg_type)
     if pg_type == "numeric":
         return numeric_to_decimal(text, 38, 18).alias(col)
     spark_t = _PG_TO_SPARK.get(pg_type)
     if spark_t is None:
         return text
-    if pg_type not in ("date", "timestamp", "timestamptz"):
+    if spark_t not in ("date", "timestamp_ntz", "timestamp"):
         return text.cast(spark_t).alias(col)  # PG's text of these always casts
     typed = text.try_cast(spark_t)
-    if pg_type == "date":  # a cast reads PG's "YYYY-MM-DD BC" as AD
+    if spark_t == "date":  # a cast reads PG's "YYYY-MM-DD BC" as AD
         typed = F.when(text.endswith(" BC"), F.to_date(text, "yyyy-MM-dd G")).otherwise(typed)
     refused = F.raise_error(F.concat(
         F.lit(f"column {col!r}: cannot convert PostgreSQL {pg_type} value '"),

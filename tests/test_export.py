@@ -472,21 +472,6 @@ def test_partitioned_export_prunes(spark, sf_dir, tmp_path):
            "l_returnflag" in str(back._jdf.queryExecution().executedPlan())
 
 
-def test_export_csv_format(spark, sf_dir, tmp_path):
-    from pg2parquet_spark.export import export
-    from pg2parquet_spark.options import ExportOptions
-
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    out = str(tmp_path / "region_csv")
-    export(region, out, ExportOptions(output_format="csv", single_file=True))
-    back = (
-        spark.read.option("header", "true").option("inferSchema", "true").csv(out)
-    )
-    assert sorted(r.r_name for r in back.collect()) == sorted(
-        r.r_name for r in region.collect()
-    )
-
-
 # ------------------------------------------------------------ skew + sort --
 def test_salted_join_matches_plain_join(spark, sf_dir):
     from pg2parquet_spark.operators.skew import salted_join
@@ -816,6 +801,38 @@ def test_parquet_info_and_export_report(spark, sf_dir, tmp_path):
     assert "5 rows" in str(report)
 
 
+def test_parquet_info_lists_what_readers_read(tmp_path):
+    """parquet-info dumps the data files a reader reads: not the
+    ``_temporary`` files of a running write, and a ``file://`` URI of a
+    directory works like its path."""
+    import pyarrow as pa
+
+    from pg2parquet_spark.parquetinfo import parquet_info
+
+    out = tmp_path / "info"
+    (out / "k=1").mkdir(parents=True)
+    (out / "_temporary" / "0").mkdir(parents=True)
+    for f in ("part-0.parquet", "k=1/part-1.parquet", "_temporary/0/part-2.parquet"):
+        pq.write_table(pa.table({"a": [1, 2]}), out / f)
+    (out / "_SUCCESS").touch()
+    for target in (str(out), f"file://{out}"):
+        info = parquet_info(target)
+        assert info.count("file: ") == 2 and "_temporary" not in info, info
+        assert "part-0.parquet" in info and "k=1/part-1.parquet" in info
+
+
+def test_default_cpus_fits_the_host(monkeypatch):
+    """A session built without ``cpus=`` takes SPARK_GRAFT_CPUS, else the
+    host's CPU count."""
+    from pg2parquet_spark.session import ENV_CPUS, default_cpus
+
+    monkeypatch.delenv(ENV_CPUS, raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 3)
+    assert default_cpus() == 3
+    monkeypatch.setenv(ENV_CPUS, "5")
+    assert default_cpus() == 5
+
+
 def test_report_counts_a_partitioned_export(spark, sf_dir, tmp_path):
     """A partition_by export nests its files under key=value directories;
     the report must still count every row."""
@@ -838,11 +855,10 @@ def _published(path: str) -> tuple[list[str], int]:
     return files, sum(os.path.getsize(f) for f in files)
 
 
-def _assert_report_matches(report, path: str, parquet: bool = True) -> None:
+def _assert_report_matches(report, path: str) -> None:
     files, size = _published(path)
     assert (report.files, report.bytes) == (len(files), size)
-    groups = sum(pq.ParquetFile(f).num_row_groups for f in files) if parquet else 0
-    assert report.row_groups == groups
+    assert report.row_groups == sum(pq.ParquetFile(f).num_row_groups for f in files)
 
 
 def test_report_rows_of_a_sorted_multi_file_export(spark, tmp_path):
@@ -864,7 +880,7 @@ def test_report_rows_of_a_sorted_multi_file_export(spark, tmp_path):
     _assert_report_matches(report, out)
 
 
-@pytest.mark.parametrize("case", ["partition_by", "csv", "file_uri", "float16"])
+@pytest.mark.parametrize("case", ["partition_by", "file_uri", "float16"])
 def test_report_matches_the_published_files(spark, tmp_path, case):
     """Files and bytes equal a walk of the published data files, row groups
     the Parquet footers (after the float16 pass rewrote them), rows the
@@ -875,7 +891,6 @@ def test_report_matches_the_published_files(spark, tmp_path, case):
     out = tmp_path / case
     target, opts = str(out), {
         "partition_by": ExportOptions(partition_by=("p",)),
-        "csv": ExportOptions(output_format="csv"),
         "file_uri": ExportOptions(row_group_bytes=16 * 1024),
         "float16": ExportOptions(float16_handling="float16", float16_columns=("v",)),
     }[case]
@@ -884,7 +899,7 @@ def test_report_matches_the_published_files(spark, tmp_path, case):
     report = export(df, target, opts, quiet=True)
     assert report.rows == 6000
     assert report.files >= 3
-    _assert_report_matches(report, str(out), parquet=case != "csv")
+    _assert_report_matches(report, str(out))
 
 
 def test_report_of_an_empty_frame(spark, tmp_path):

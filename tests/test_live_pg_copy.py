@@ -18,8 +18,10 @@ Wire-proven here (vs the string/fixture unit tests):
 - the A4 precedence (DATABASE_URL with libpq ?host= socket syntax) and
   sslmode reach psql, and libpq parses whatever a URL carries: ``options``,
   multi-host netlocs, socket-directory hosts, JDBC's ``ssl=true``;
-- the A3 catalog probes (ENUM_LABELS_SQL / COMPOSITE_FIELDS_SQL / column
-  probe) run against the real pg_catalog;
+- the A3 schema probe (PostgreSQL describing the statement it will COPY)
+  serves table= and query= reads, types columns through typmods and
+  domains, works on a read-only server and never runs psql meta-commands
+  found in a query; ENUM_LABELS_SQL reads the real pg_catalog;
 - range and composite text holding every character the field grammar
   quotes parses to PG's own bound, flag and field accessors;
 - the exotic rewrite -> text wire -> typemap-parse chain round-trips REAL
@@ -119,9 +121,8 @@ def test_copy_partitioned_read_preserves_all_rows(spark, live_pg):
 
 
 def test_copy_table_scan_keeps_identifier_case_and_quotes(spark, live_pg):
-    """probe_schema resolves the table exactly as the scan's quote_ident
-    does: PG must not case-fold "MixedCase", and a quote in the name must
-    not break the catalog SQL."""
+    """The probe describes the scan's own quoted ``table_query``: PG must
+    not case-fold "MixedCase", and a quote in the name must not break it."""
     from pg2parquet_spark.sources import pgcopy
 
     for table in ("MixedCase", "it's"):
@@ -195,22 +196,102 @@ def test_socket_dir_host_in_the_url_connects(spark, live_pg):
     assert pgcopy.run_sql(conn, "SELECT inet_server_port()") == [(None,)]  # not TCP
 
 
-def test_live_catalog_probe_enum_and_composite(live_pg):
+def test_live_catalog_probe_enum_and_composite(spark, live_pg):
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import COMPOSITE_FIELDS_SQL, ENUM_LABELS_SQL
+    from pg2parquet_spark.sources.jdbc import ENUM_LABELS_SQL
 
     labels = [
         lab for name, lab in pgcopy.run_sql(live_pg, ENUM_LABELS_SQL) if name == "mood"
     ]
     assert labels == ["sad", "ok", "happy"]  # pg_enum order = ordinal order
-    fields = [
-        (f, t)
-        for name, f, t, _ in pgcopy.run_sql(live_pg, COMPOSITE_FIELDS_SQL)
-        if name == "dims"
+    fields = pgcopy._describe(pgcopy.psql_command(live_pg), "SELECT (NULL::dims).*")
+    assert fields == [("w", "integer"), ("h", "integer")]
+    types = dict(pgcopy.read(spark, live_pg, table="exotic").dtypes)
+    assert types["id"] == "bigint" and types["m"] == "string"
+
+
+def test_describe_types_through_typmods_and_domains(spark, live_pg):
+    """The probe's ``format_type`` names carry typmods: the typed columns
+    get the same Spark types as without them. Arrays and varchar stay text.
+    A domain reports its base type, as it does in the wire protocol's row
+    description (the reference's ``statement.columns()``)."""
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, """
+        DROP TABLE IF EXISTS typmods; DROP DOMAIN IF EXISTS posint;
+        CREATE DOMAIN posint AS int CHECK (VALUE > 0);
+        CREATE TABLE typmods (n numeric(12,2), ts timestamp(3), tz timestamptz(0),
+          s int2, f float4, b bool, v varchar(5), a int4[], d posint);
+        INSERT INTO typmods VALUES (1.25, '2024-01-02 03:04:05.678', '2024-01-02 03:04:05+00',
+          7, 1.5, true, 'abc', '{1,2}', 9), (NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL);
+    """)
+    df = pgcopy.read(spark, live_pg, table="typmods")
+    assert df.dtypes == [
+        ("n", "decimal(38,18)"), ("ts", "timestamp_ntz"), ("tz", "timestamp"),
+        ("s", "smallint"), ("f", "float"), ("b", "boolean"), ("v", "string"),
+        ("a", "string"), ("d", "int"),
     ]
-    assert fields == [("w", "int4"), ("h", "int4")]
-    cols = pgcopy.probe_schema(live_pg, "exotic")
-    assert cols[0] == ("id", "int8") and ("m", "mood") in cols
+    got = df.filter(F.col("s").isNotNull()).collect()[0]
+    assert (got.n, got.s, got.f, got.b, got.v, got.a, got.d) == (
+        Decimal("1.25"), 7, 1.5, True, "abc", "{1,2}", 9
+    )
+    assert str(got.ts) == "2024-01-02 03:04:05.678000"
+    assert df.filter(F.col("s").isNull()).count() == 1
+
+
+def test_read_runs_one_driver_psql(spark, live_pg, monkeypatch):
+    """A ``table=`` and a ``query=`` read each start exactly one psql on
+    the driver: the describe probe."""
+    from pg2parquet_spark.sources import pgcopy
+
+    calls, real_run = [], subprocess.run
+
+    def run(argv, *a, **k):
+        calls.append(argv[0])
+        return real_run(argv, *a, **k)
+
+    monkeypatch.setattr(subprocess, "run", run)
+    pgcopy.read(spark, live_pg, table="plain")
+    pgcopy.read(spark, live_pg, query="SELECT id FROM plain")
+    assert calls == ["psql", "psql"]
+
+
+def test_query_meta_commands_never_run(spark, live_pg, tmp_path):
+    """A query is server text only: a psql meta-command inside it is a
+    syntax error at the server, and never runs on the driver."""
+    from pg2parquet_spark.sources import pgcopy
+
+    marker = tmp_path / "x"
+    with pytest.raises(RuntimeError, match="syntax error"):
+        pgcopy.read(spark, live_pg, query=f"SELECT 1 AS a \\! touch {marker}")
+    assert not marker.exists()
+
+
+def test_read_only_server_serves_both_reads(spark, live_pg):
+    """Describing a statement writes nothing: under
+    ``default_transaction_read_only=on`` both read modes work."""
+    from pg2parquet_spark.sources import pgcopy
+    from pg2parquet_spark.sources.jdbc import PostgresConnection
+
+    conn = PostgresConnection(
+        url="postgres://postgres@%2Ftmp:55432/postgres"
+        "?options=-cdefault_transaction_read_only%3Don"
+    )
+    on = "SELECT current_setting('default_transaction_read_only')"
+    assert pgcopy.run_sql(conn, on) == [("on",)]
+    df = pgcopy.read(spark, conn, table="plain")
+    assert dict(df.dtypes)["id"] == "bigint" and df.count() == 1000
+    row = pgcopy.read(spark, conn, query="SELECT count(*) AS n FROM plain").collect()[0]
+    assert row.n == "1000"
+
+
+def test_zero_column_query_names_the_query(spark, live_pg):
+    """A statement without columns has nothing to export: the read refuses,
+    naming the query."""
+    from pg2parquet_spark.sources import pgcopy
+
+    with pytest.raises(ValueError, match="SELECT FROM plain"):
+        pgcopy.read(spark, live_pg, query="SELECT FROM plain")
 
 
 def test_exotic_rewrite_roundtrip_live(spark, live_pg):
