@@ -31,7 +31,7 @@ def main() -> None:
     from pg2parquet_spark.session import get_spark
     from pg2parquet_spark.registry import load_all
 
-    spark = get_spark(app_name="pg2parquet_spark_bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app_name="pg2parquet_spark_bench", cpus=cpus)
     registry = load_all()
 
     headline = [

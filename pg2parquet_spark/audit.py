@@ -66,7 +66,6 @@ def identify_bad_rows(
     df: DataFrame,
     conversions: dict[str, tuple[Column, Column]],
     id_col: str,
-    max_rows: int | None = None,
 ) -> DataFrame:
     """Error-ROW identification (A37, ref cli/src/postgresutils.rs:4-51): for
     every row where a conversion turned a non-null source value into NULL,
@@ -79,5 +78,4 @@ def identify_bad_rows(
     """
     marks = [nulled_mark(name, src, conv, id_col) for name, (src, conv) in conversions.items()]
     arr = F.filter(F.array(*marks), lambda x: x.isNotNull())
-    out = df.select(F.explode(arr).alias("m")).select("m.col_name", "m.row_id", "m.bad_value")
-    return out.limit(max_rows) if max_rows is not None else out
+    return df.select(F.explode(arr).alias("m")).select("m.col_name", "m.row_id", "m.bad_value")

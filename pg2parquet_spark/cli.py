@@ -96,9 +96,8 @@ def run_export(args: argparse.Namespace) -> int:
         df = spark.sql(query)
     else:
         from pg2parquet_spark.sources import pgcopy
-        from pg2parquet_spark.sources.jdbc import PostgresConnection
 
-        conn = PostgresConnection(
+        conn = pgcopy.PostgresConnection(
             url=args.connection, host=args.host, port=args.port,
             dbname=args.dbname, user=args.user, password=args.password,
             sslmode=args.sslmode,

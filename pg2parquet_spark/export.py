@@ -68,7 +68,7 @@ class ExportReport:
 def export(
     df: DataFrame, path: str, options: ExportOptions | None = None, quiet: bool = False
 ) -> ExportReport:
-    """Write ``df`` to ``path`` per the export options (parquet default) and
+    """Write ``df`` to ``path`` as Parquet per the export options and
     return what was written.
 
     The write lands at ``<parent>/.<name>._tmp``, hidden from readers of
@@ -402,7 +402,7 @@ def export_audited(
     )
     nulled = {n: c for (n, c), m in zip(conversions.items(), marks) if got[m]}
     if not nulled:
-        return audit.identify_bad_rows(df, conversions, id_col, max_rows=0)
+        return audit.identify_bad_rows(df, conversions, id_col).limit(0)
     return audit.identify_bad_rows(df, nulled, id_col).localCheckpoint(eager=True)
 
 

@@ -178,10 +178,11 @@ SELECT r_regionkey AS id,
 FROM region
 """,
     doc="A2+A3 exotic-type fidelity END-TO-END (ref postgres_cloner.rs:407-561 "
-    "analog): the PG-side query is rewritten by rewrite_query_for_exotics "
-    "(::text casts per exotic column), EXECUTED on a stand-in server (DuckDB "
-    "— which casts a real native ENUM through the rewrite's ::text, and "
-    "renders range/composite/pgvector wire text), shipped row-wise as text "
+    "analog): the PG-side query goes through rewrite_query_for_exotics "
+    "(with no multidim column it comes back unchanged: COPY already renders "
+    "every column as its type's text), is EXECUTED on a stand-in server "
+    "(DuckDB — which returns a real native ENUM as its label, and renders "
+    "range/composite/pgvector wire text), shipped row-wise as text "
     "(the COPY transport analog), then rebuilt client-side by the typemap "
     "parsers (enums/ranges/composites/pgvector) into typed columns — the "
     "exact chain a live-PG export runs. Fixture is bounded (5 region rows) "
@@ -195,7 +196,7 @@ def source_exotic_rewrite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     import duckdb
 
     from pg2parquet_spark import typemap as tm
-    from pg2parquet_spark.sources.jdbc import rewrite_query_for_exotics
+    from pg2parquet_spark.sources.pgcopy import rewrite_query_for_exotics
 
     # --- the "server": a DuckDB database with a native enum over fixtures --
     con = duckdb.connect()

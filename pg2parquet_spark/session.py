@@ -24,18 +24,14 @@ def default_cpus() -> int:
     return int(os.environ.get(ENV_CPUS) or os.cpu_count() or 1)
 
 
-def get_spark(
-    app_name: str = "pg2parquet_spark",
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's tuned defaults."""
+def get_spark(app_name: str = "pg2parquet_spark", cpus: int | None = None) -> SparkSession:
+    """Build (or reuse) a SparkSession with the engine's tuned defaults;
+    shuffles get one partition per core."""
     cpus = cpus or default_cpus()
-    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -32,11 +32,11 @@ Scale design:
   variables merged into the executor's own environment, and the password
   only in PGPASSWORD, never in argv.
 
-Exotic types: read enum labels
-(:data:`~pg2parquet_spark.sources.jdbc.ENUM_LABELS_SQL`) through
-:func:`run_sql`, rewrite the query with
-:func:`~pg2parquet_spark.sources.jdbc.rewrite_query_for_exotics` (::text
-casts), read it here, and rebuild structure with the typemap parsers.
+Exotic types: read enum labels (:data:`ENUM_LABELS_SQL`) through
+:func:`run_sql`, read the query here (COPY renders every column through its
+type's output function, the text a ``::text`` cast would give; a
+multidim array also needs :func:`rewrite_query_for_exotics` for its
+``array_dims``), and rebuild structure with the typemap parsers.
 """
 
 from __future__ import annotations
@@ -47,6 +47,7 @@ import shutil
 import subprocess
 import tempfile
 from collections.abc import Iterator
+from dataclasses import dataclass
 from urllib.parse import unquote
 
 import pyarrow as pa
@@ -55,12 +56,81 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pg2parquet_spark.sources.jdbc import PostgresConnection, quote_ident, table_query
 from pg2parquet_spark.typemap import numeric_to_decimal
 
 # Not used by the transport (COPY's default CSV NULL keeps NULL and '' apart);
 # kept for callers that run their own COPY with an explicit NULL string.
 NULL_MARKER = "__PG_NULL__"
+
+
+@dataclass
+class PostgresConnection:
+    """Connection args with the reference's precedence rules (A4)."""
+
+    url: str | None = None  # postgres://... (or jdbc:postgresql://...) form
+    host: str | None = None
+    port: int = 5432
+    dbname: str | None = None
+    user: str | None = None
+    password: str | None = None
+    sslmode: str | None = None  # disable | prefer | require
+
+
+def quote_ident(name: str) -> str:
+    """Double-quote one PG identifier, dots and all.
+
+    The reference interpolates the table name unquoted (main.rs:297-299);
+    quoting is strictly safer and changes nothing for ordinary names.
+    """
+    return '"' + name.replace('"', '""') + '"'
+
+
+def table_query(table: str) -> str:
+    """A1: ``--table t`` → SELECT * FROM t; a dot separates schema and table."""
+    return "SELECT * FROM " + ".".join(map(quote_ident, table.split(".")))
+
+
+def _subquery(query: str) -> str:
+    """The caller's query in parentheses, the one way it is embedded.
+
+    Trailing whitespace and one trailing ``;`` go, and a newline before the
+    closing paren ends a trailing ``--`` comment. A ``;`` followed by
+    a comment stays, and fails at the server: finding it needs a lexer.
+    """
+    return f"({query.rstrip().removesuffix(';')}\n)"
+
+
+# Enum labels in ordinal order (A3 for enums): run through run_sql.
+# Column types and a composite's fields come from _describe.
+ENUM_LABELS_SQL = """
+SELECT t.typname AS enum_name, e.enumlabel AS label
+FROM pg_type t JOIN pg_enum e ON e.enumtypid = t.oid
+ORDER BY t.typname, e.enumsortorder
+"""
+
+
+def rewrite_query_for_exotics(
+    query: str, columns: list[str], exotic_columns: dict[str, str]
+) -> str:
+    """Ship each multidim array's server-side dims as ``<col>__dims``, right
+    after the column.
+
+    ``columns`` is the query's full output column list (from the A3 schema
+    probe); ``exotic_columns`` maps column name → pg type class
+    ('enum'|'range'|'composite'|'vector'|'sparsevec'|'multidim_array').
+    Every column keeps its name and COPY's text, which the typemap parsers
+    rebuild client-side (SURVEY §7.3 step 4 strategy): COPY renders each
+    value through its type's output function, as a ``::text`` cast would.
+    Without a multidim array the query comes back unchanged.
+    """
+    if "multidim_array" not in exotic_columns.values():
+        return query
+    parts: list[str] = []
+    for c in columns:
+        parts.append(f"q.{quote_ident(c)}")
+        if exotic_columns.get(c) == "multidim_array":
+            parts.append(f"array_dims({parts[-1]}) AS {quote_ident(c + '__dims')}")
+    return f"SELECT {', '.join(parts)} FROM {_subquery(query)} q"
 
 
 def psql_command(conn: PostgresConnection) -> tuple[list[str], dict[str, str]]:
@@ -124,7 +194,7 @@ def psql_command(conn: PostgresConnection) -> tuple[list[str], dict[str, str]]:
 
 def _copy(sql: str) -> str:
     """COPY in PG's default CSV dialect: NULL is an unquoted empty field."""
-    return f"COPY ({sql}) TO STDOUT (FORMAT csv)"
+    return f"COPY {_subquery(sql)} TO STDOUT (FORMAT csv)"
 
 
 # quoted values may span lines; an empty line is a one-column row holding NULL
@@ -246,7 +316,7 @@ def _describe(command: tuple[list[str], dict[str, str]], query: str) -> list[tup
     a statement with no columns of its own: it would print a translated
     notice instead."""
     rows = _text_rows(_run_psql(command, [
-        "-t", "--csv", "-1", "-c", f"PREPARE p AS SELECT NULL AS _, * FROM ({query}) q",
+        "-t", "--csv", "-1", "-c", f"PREPARE p AS SELECT NULL AS _, * FROM {_subquery(query)} q",
         "-f", "-",
     ], _GDESC))
     if len(rows) < 2:
@@ -298,7 +368,7 @@ def _range_queries(
             preds.append(f"q.{col} >= {lo}")
         else:
             preds.append(f"q.{col} >= {lo} AND q.{col} < {hi}")
-    return [f"SELECT * FROM ({query}) q WHERE {p}" for p in preds]
+    return [f"SELECT * FROM {_subquery(query)} q WHERE {p}" for p in preds]
 
 
 def _stream_copy(command: tuple[list[str], dict[str, str]], sql: str, names: list[str]):
@@ -401,7 +471,7 @@ def _cast_plan(col: str, pg_type: str):
     ``numeric`` NaN and overflow become NULL (the reference's decimal mode),
     a BC date keeps PG's day, and a date or timestamp no cast takes
     (``infinity``, BC timestamps) fails the read naming the column."""
-    text = F.col(col)
+    text = F.col("`" + col.replace("`", "``") + "`")  # whole: a dot is no field access
     pg_type = _TYPMOD.sub("", pg_type)
     if pg_type == "numeric":
         return numeric_to_decimal(text, 38, 18).alias(col)

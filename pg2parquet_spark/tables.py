@@ -23,12 +23,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor we target.
-# region/nation are bounded (5 / 25 rows); supplier and part grow with SF but
-# stay several orders of magnitude under the fact tables.
-BROADCAST_SAFE = frozenset({"region", "nation"})
-
-
 # Loaded-table memo. spark.read.parquet pays driver-side file listing plus a
 # footer read for schema inference on EVERY call; the corpus dirs are
 # immutable, so the analyzed DataFrame (a plan, not data) is reused across

@@ -74,9 +74,9 @@ def flatten_with_dims(
 def parse_array_text(col: Column, spark_type: str) -> Column:
     """PG array-literal TEXT → nested Spark array (wire-transport decode).
 
-    The live rewrite path (`sources/jdbc.py::rewrite_query_for_exotics`)
-    ships multidim columns as ``(col)::text`` — ``'{{1,2},{3,4}}'`` — plus a
-    sibling ``array_dims`` column; this is the client-side decode for the
+    COPY ships a multidim column as its array text — ``'{{1,2},{3,4}}'`` —
+    and `pgcopy.rewrite_query_for_exotics` adds a sibling ``array_dims``
+    column; this is the client-side decode for the
     value text: brace→bracket translation + from_json, e.g.
     ``parse_array_text(c, "array<array<int>>")``. Valid for NUMERIC/BOOLEAN
     subtypes (their literals contain no braces/quotes); text subtypes need a

@@ -9,7 +9,7 @@
   surface NULL and offer a strict variant).
 
 The label list comes from the PG catalog (`pg_enum` ordered by
-enumsortorder) via ``ENUM_LABELS_SQL`` through ``pgcopy.run_sql``, or is
+enumsortorder) via ``pgcopy.ENUM_LABELS_SQL`` through ``pgcopy.run_sql``, or is
 supplied directly in tests.
 """
 

@@ -13,7 +13,7 @@ SF_RECALL = "/root/testdata/sf0.1"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="pg2parquet_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="pg2parquet_spark_tests", cpus=8)
     yield spark
 
 

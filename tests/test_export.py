@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from pg2parquet_spark.export import export
 from pg2parquet_spark.options import ExportOptions
-from pg2parquet_spark.sources.jdbc import (
+from pg2parquet_spark.sources.pgcopy import (
     PostgresConnection,
     quote_ident,
     rewrite_query_for_exotics,
@@ -110,10 +110,13 @@ def test_export_query_over_views(spark, sf_dir, tmp_path):
 
 # ------------------------------------------------- connection/SQL (pure) --
 def test_quote_ident():
+    """One identifier is quoted whole, dots and all; only a table name
+    splits into schema and table."""
     assert quote_ident("t") == '"t"'
-    assert quote_ident("public.my table") == '"public"."my table"'
+    assert quote_ident("public.my table") == '"public.my table"'
     assert quote_ident('we"ird') == '"we""ird"'
     assert table_query("s.t") == 'SELECT * FROM "s"."t"'
+    assert table_query('s.we"ird') == 'SELECT * FROM "s"."we""ird"'
 
 
 def _dsn(argv: list[str]) -> str | None:
@@ -285,22 +288,39 @@ def test_copy_row_blocks_keep_rows_whole(monkeypatch):
 
 
 def test_rewrite_query_for_exotics():
-    q = rewrite_query_for_exotics(
-        "SELECT * FROM t",
-        ["id", "mood", "span", "grid"],
-        {"mood": "enum", "span": "range", "grid": "multidim_array"},
+    """COPY already renders every column as its type's text: the rewrite
+    casts nothing and only adds each multidim array's dims after it."""
+    exotics = {"mood": "enum", "span": "range", "grid": "multidim_array"}
+    q = rewrite_query_for_exotics("SELECT * FROM t;", ["id", "mood", "span", "grid"], exotics)
+    assert "::text" not in q
+    assert q == (
+        'SELECT q."id", q."mood", q."span", q."grid", '
+        'array_dims(q."grid") AS "grid__dims" FROM (SELECT * FROM t\n) q'
     )
-    assert '(q."mood")::text AS "mood"' in q
-    assert '(q."span")::text AS "span"' in q
-    assert 'array_dims(q."grid") AS "grid__dims"' in q
-    assert 'q."id"' in q
-    assert q.endswith("FROM (SELECT * FROM t) q")
+    del exotics["grid"]
+    assert rewrite_query_for_exotics("SELECT * FROM t", ["id", "mood", "span"], exotics) == (
+        "SELECT * FROM t"
+    )
+
+
+def test_range_queries_quote_a_dotted_column_whole():
+    """A column named ``a.b`` is one identifier, and a trailing ``;`` or
+    ``--`` comment in the caller's query ends inside the subquery."""
+    from pg2parquet_spark.sources.pgcopy import _range_queries
+
+    lo, hi = _range_queries("SELECT * FROM dotted; ", "a.b", 1, 11, 2)
+    assert lo == 'SELECT * FROM (SELECT * FROM dotted\n) q WHERE q."a.b" < 6 OR q."a.b" IS NULL'
+    assert hi == 'SELECT * FROM (SELECT * FROM dotted\n) q WHERE q."a.b" >= 6'
+    assert _range_queries("SELECT 1 AS a -- note", "a", 0, 1, 1) == [
+        "SELECT * FROM (SELECT 1 AS a -- note\n) q WHERE TRUE"
+    ]
 
 
 def test_exotic_rewrite_chains_into_typemap_parsers(spark):
     """End-to-end exotic path without a live PG (SURVEY §7.3 step 4):
-    rewrite_query_for_exotics ships every exotic column as ::text; this
-    fixture is shaped exactly like the COPY result of that rewritten query,
+    COPY ships every exotic column as its type's text and
+    rewrite_query_for_exotics adds the multidim dims; this fixture is
+    shaped exactly like the COPY result of that rewritten query,
     and each text column must rebuild its struct through the typemap parsers
     — all five exotic kinds (enum, range, composite, vector+sparsevec,
     multidim array)."""

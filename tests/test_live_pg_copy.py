@@ -64,9 +64,9 @@ def live_pg():
         # PostgreSQL is installed (else the module is skipped): a server that
         # cannot start is a failure, not a reason to skip the wire suite
         pytest.fail(f"local PG could not start: {r.stdout} {r.stderr}"[:300])
-    from pg2parquet_spark.sources.jdbc import PostgresConnection
+    from pg2parquet_spark.sources import pgcopy
 
-    return PostgresConnection(host="/tmp", port=55432, dbname="postgres", user="postgres")
+    return pgcopy.PostgresConnection(host="/tmp", port=55432, dbname="postgres", user="postgres")
 
 
 def _psql(live_pg, sql: str) -> None:
@@ -151,27 +151,25 @@ def test_copy_query_pushdown_runs_server_side(spark, live_pg):
 
 def test_env_precedence_database_url(spark, live_pg, monkeypatch):
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import PostgresConnection
 
     url = "postgres://postgres@/postgres?host=/tmp&port=55432"
     monkeypatch.setenv("DATABASE_URL", url)
-    argv, _ = pgcopy.psql_command(PostgresConnection())
+    argv, _ = pgcopy.psql_command(pgcopy.PostgresConnection())
     assert argv[-2:] == ["-d", url]
-    assert pgcopy.read(spark, PostgresConnection(), table="plain").count() == 1000
+    assert pgcopy.read(spark, pgcopy.PostgresConnection(), table="plain").count() == 1000
 
 
 def test_url_options_set_the_search_path(spark, live_pg):
     """A URL's ``?options=-csearch_path%3D<schema>`` reaches the server: a
     ``table=`` read resolves a table that exists only in that schema."""
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import PostgresConnection
 
     _psql(live_pg, (
         "DROP SCHEMA IF EXISTS url_stage CASCADE; CREATE SCHEMA url_stage; "
         "CREATE TABLE url_stage.staged_only (id int, s text); "
         "INSERT INTO url_stage.staged_only VALUES (1, 'a'), (2, 'b')"
     ))
-    conn = PostgresConnection(
+    conn = pgcopy.PostgresConnection(
         url="postgres://postgres@%2Ftmp:55432/postgres?options=-csearch_path%3Durl_stage"
     )
     assert sorted(pgcopy.read(spark, conn, table="staged_only").collect()) == [(1, "a"), (2, "b")]
@@ -181,27 +179,24 @@ def test_multi_host_url_skips_a_dead_host(spark, live_pg):
     """libpq tries a multi-host URL's hosts in order: a dead first host
     falls through to the live one."""
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import PostgresConnection
 
-    conn = PostgresConnection(url="postgres://postgres@127.0.0.1:1,127.0.0.1:55432/postgres")
+    conn = pgcopy.PostgresConnection(url="postgres://postgres@127.0.0.1:1,127.0.0.1:55432/postgres")
     assert pgcopy.read(spark, conn, table="plain").count() == 1000
 
 
 def test_socket_dir_host_in_the_url_connects(spark, live_pg):
     """A percent-encoded host is a socket directory, as libpq reads it."""
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import PostgresConnection
 
-    conn = PostgresConnection(url="postgres://postgres@%2Ftmp:55432/postgres")
+    conn = pgcopy.PostgresConnection(url="postgres://postgres@%2Ftmp:55432/postgres")
     assert pgcopy.run_sql(conn, "SELECT inet_server_port()") == [(None,)]  # not TCP
 
 
 def test_live_catalog_probe_enum_and_composite(spark, live_pg):
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import ENUM_LABELS_SQL
 
     labels = [
-        lab for name, lab in pgcopy.run_sql(live_pg, ENUM_LABELS_SQL) if name == "mood"
+        lab for name, lab in pgcopy.run_sql(live_pg, pgcopy.ENUM_LABELS_SQL) if name == "mood"
     ]
     assert labels == ["sad", "ok", "happy"]  # pg_enum order = ordinal order
     fields = pgcopy._describe(pgcopy.psql_command(live_pg), "SELECT (NULL::dims).*")
@@ -271,9 +266,8 @@ def test_read_only_server_serves_both_reads(spark, live_pg):
     """Describing a statement writes nothing: under
     ``default_transaction_read_only=on`` both read modes work."""
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import PostgresConnection
 
-    conn = PostgresConnection(
+    conn = pgcopy.PostgresConnection(
         url="postgres://postgres@%2Ftmp:55432/postgres"
         "?options=-cdefault_transaction_read_only%3Don"
     )
@@ -295,10 +289,9 @@ def test_zero_column_query_names_the_query(spark, live_pg):
 
 
 def test_exotic_rewrite_roundtrip_live(spark, live_pg):
-    """The full A2+A3 chain against a REAL server: rewrite ::text ->
-    COPY wire -> typemap parsers -> typed values."""
+    """The full A2+A3 chain against a REAL server: rewrite (multidim dims)
+    -> COPY's text wire -> typemap parsers -> typed values."""
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import rewrite_query_for_exotics
     from pg2parquet_spark.typemap.arrays import flatten_with_dims, parse_array_text
     from pg2parquet_spark.typemap.composites import parse_composite
     from pg2parquet_spark.typemap.enums import enum_to_int
@@ -306,7 +299,7 @@ def test_exotic_rewrite_roundtrip_live(spark, live_pg):
     from pg2parquet_spark.typemap.ranges import parse_range
 
     q = "SELECT id, m, r, d, v, grid FROM exotic"
-    rewritten = rewrite_query_for_exotics(
+    rewritten = pgcopy.rewrite_query_for_exotics(
         q,
         ["id", "m", "r", "d", "v", "grid"],
         {
@@ -347,6 +340,49 @@ def test_exotic_rewrite_roundtrip_live(spark, live_pg):
     assert rows[3].mood_name is None and rows[3].mood_ord is None
     assert rows[3].rng.is_empty
     assert rows[3].d is None and rows[3].v is None
+
+
+def test_copy_renders_exotics_as_their_text_cast(spark, live_pg):
+    """COPY writes each column through its type's output function, the one
+    a ``::text`` cast calls: every uncast exotic value equals its cast
+    twin, NULLs included. The exotic rewrite casts nothing on this."""
+    from pg2parquet_spark.sources import pgcopy
+
+    rows = pgcopy.run_sql(live_pg, (
+        "SELECT m, m::text, r, r::text, d, d::text, v, v::text, grid, grid::text "
+        "FROM exotic ORDER BY id"
+    ))
+    assert len(rows) == 3 and None in rows[2]
+    for row in rows:
+        assert row[0::2] == row[1::2], row
+
+
+@pytest.mark.parametrize("query", ["SELECT 1 AS a;", "SELECT 1 AS a -- note"])
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_query_ending_in_semicolon_or_comment_reads(spark, live_pg, query, partitioned):
+    """The caller's query is embedded one way: a trailing ``;`` goes and a
+    trailing ``--`` comment ends before the closing paren."""
+    from pg2parquet_spark.sources import pgcopy
+
+    split = {"partition_column": "a", "lower_bound": 0, "upper_bound": 2,
+             "num_partitions": 2} if partitioned else {}
+    assert pgcopy.read(spark, live_pg, query=query, **split).collect() == [("1",)]
+    assert pgcopy.run_sql(live_pg, "SELECT 1;") == [("1",)]
+
+
+def test_partitioned_read_on_a_dotted_column(spark, live_pg):
+    """A column named ``a.b`` is one identifier to the range predicates."""
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, (
+        'DROP TABLE IF EXISTS dotted; CREATE TABLE dotted ("a.b" int, s text); '
+        "INSERT INTO dotted SELECT i, 's' || i FROM generate_series(1, 10) AS g(i)"
+    ))
+    df = pgcopy.read(
+        spark, live_pg, table="dotted", partition_column="a.b",
+        lower_bound=1, upper_bound=11, num_partitions=2,
+    )
+    assert sorted(r["a.b"] for r in df.collect()) == list(range(1, 11))
 
 
 def test_range_and_composite_text_parse_to_pg_truth(spark, live_pg):
@@ -570,9 +606,8 @@ def test_jdbc_ssl_true_refuses_plain_server(spark, live_pg):
     fixture server, which has no SSL, the read refuses rather than connect
     in clear text."""
     from pg2parquet_spark.sources import pgcopy
-    from pg2parquet_spark.sources.jdbc import PostgresConnection
 
-    conn = PostgresConnection(
+    conn = pgcopy.PostgresConnection(
         url="jdbc:postgresql://127.0.0.1:55432/postgres?user=postgres&ssl=true"
     )
     with pytest.raises(RuntimeError, match="SSL"):

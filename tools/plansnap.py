@@ -76,7 +76,7 @@ def main() -> None:
     from pg2parquet_spark.registry import load_all
     from pg2parquet_spark.session import get_spark
 
-    spark = get_spark(app_name="plansnap", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="plansnap", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     snap = {}
     entries = {name: spec.fn for name, spec in load_all().items()}

@@ -31,7 +31,7 @@ def main() -> None:
     from pg2parquet_spark.session import get_spark
     from pg2parquet_spark.registry import load_all
 
-    spark = get_spark(app_name="scaleprobe", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="scaleprobe", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
 
@@ -218,7 +218,7 @@ def decade2(out_path: str) -> None:
     from pg2parquet_spark.session import get_spark
     from pg2parquet_spark.registry import load_all
 
-    spark = get_spark(app_name="scaleprobe2", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="scaleprobe2", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
     # fixed, reused synth corpus (r6 review: per-run regeneration put 2-3x
@@ -309,7 +309,7 @@ def embdial(out_path: str) -> None:
     from pg2parquet_spark.session import get_spark
     from pg2parquet_spark.registry import load_all
 
-    spark = get_spark(app_name="embdial", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="embdial", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
     lo = synth_dir(spark, factor=3, tables=("embeddings",))   # 6,000 vectors
@@ -369,7 +369,7 @@ def embdial3(out_path: str) -> None:
     from pg2parquet_spark.session import get_spark
     from pg2parquet_spark.registry import load_all
 
-    spark = get_spark(app_name="embdial3", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="embdial3", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
     lo = synth_dir(spark, factor=30, tables=("embeddings",))   # 60,000 / 11 bits
@@ -428,7 +428,7 @@ def embrecall(out_path: str) -> int:
     from pg2parquet_spark.registry import load_all
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
-    spark = get_spark(app_name="embrecall", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="embrecall", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
     lsh = reg["dedup_embedding_cosine_lsh"].fn
@@ -499,7 +499,7 @@ def embrecall2(out_path: str) -> int:
     from pg2parquet_spark.registry import load_all
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
-    spark = get_spark(app_name="embrecall2", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="embrecall2", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
     arms = {
@@ -578,7 +578,7 @@ def ivfrecall(out_path: str, with_600k: bool = False) -> int:
     from pg2parquet_spark.registry import load_all
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
-    spark = get_spark(app_name="ivfrecall", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="ivfrecall", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
     arms = {
@@ -668,7 +668,7 @@ def ivfdial(out_path: str) -> int:
     from pg2parquet_spark.operators import dedup
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
-    spark = get_spark(app_name="ivfdial", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="ivfdial", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
 
     p0 = {(r.a_id, r.b_id) for r in dedup_embedding_cosine_exact(spark, SF_BIG).collect()}
@@ -826,7 +826,7 @@ def ivfasym(out_path: str, big_probe: int = 0) -> int:
     from pg2parquet_spark.operators import dedup
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
-    spark = get_spark(app_name="ivfasym", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="ivfasym", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
 
     p0 = {(r.a_id, r.b_id) for r in dedup_embedding_cosine_exact(spark, SF_BIG).collect()}
@@ -916,7 +916,7 @@ def ivfgrid(out_path: str) -> int:
     from pg2parquet_spark.operators import dedup
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
-    spark = get_spark(app_name="ivfgrid", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="ivfgrid", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     p0 = {(r.a_id, r.b_id) for r in dedup_embedding_cosine_exact(spark, SF_BIG).collect()}
     d60 = synth_dir(spark, factor=30, tables=("embeddings",))
@@ -1136,7 +1136,7 @@ def ivfgrid600(out_path: str) -> int:
     from pg2parquet_spark.operators import dedup
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
-    spark = get_spark(app_name="ivfgrid600", cpus=16, shuffle_partitions=16)
+    spark = get_spark(app_name="ivfgrid600", cpus=16)
     spark.sparkContext.setLogLevel("ERROR")
     p0 = {(r.a_id, r.b_id)
           for r in dedup_embedding_cosine_exact(spark, SF_BIG).collect()}
@@ -1258,7 +1258,7 @@ def ivfband800(out_path: str, factor: int = 400) -> int:
     from pg2parquet_spark.session import get_spark
     from pg2parquet_spark.operators import dedup
 
-    spark = get_spark(app_name="ivfband800", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="ivfband800", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     d800 = synth_dir(spark, factor=factor, tables=("embeddings",))
     n = spark.read.parquet(f"{d800}/embeddings.parquet").count()
@@ -1377,7 +1377,7 @@ def ivfdup600(out_path: str) -> int:
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
     t_all = _t.time()
-    spark = get_spark(app_name="ivfdup600", cpus=16, shuffle_partitions=16)
+    spark = get_spark(app_name="ivfdup600", cpus=16)
     spark.sparkContext.setLogLevel("ERROR")
     p0 = {(r.a_id, r.b_id)
           for r in dedup_embedding_cosine_exact(spark, SF_BIG).collect()}
@@ -1512,7 +1512,7 @@ def ivfmt(
     from pg2parquet_spark.operators.dedup import dedup_embedding_cosine_exact
 
     fn = getattr(dedup, arm)
-    spark = get_spark(app_name="ivfmt", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="ivfmt", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     p0 = {(r.a_id, r.b_id) for r in dedup_embedding_cosine_exact(spark, SF_BIG).collect()}
     shift = 10_000
@@ -1564,7 +1564,7 @@ def docdecade3(out_path: str) -> int:
     from pg2parquet_spark.session import get_spark
     from pg2parquet_spark.registry import load_all
 
-    spark = get_spark(app_name="docdecade3", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="docdecade3", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_all()
     lo = synth_dir(spark, factor=10, tables=("documents",))
