@@ -256,8 +256,10 @@ def _rewrite_one_float16(
     contract (and the pytest relies on it).
 
     ``uri`` is the file's full URI as the export's Hadoop listing printed it
-    (``file:/…``, ``s3a://bucket/…``), so its scheme and authority pick the
-    filesystem; Hadoop prints the path raw, so it is percent-encoded first.
+    (``file:/…``), so its scheme and authority pick the pyarrow filesystem;
+    Hadoop prints the path raw, so it is percent-encoded first. pyarrow
+    knows no ``s3a://`` (``ArrowInvalid``) and opens ``hdfs://`` only where
+    libhdfs is installed, so the pass fails on an ``s3a://`` export.
     The rewrite keeps the file's layout: one output row group per source
     row group (Spark already sized them by ``row_group_bytes``), written
     with the export's codec and zstd ``level``. Crash safety: a task killed
@@ -409,31 +411,27 @@ def export_audited(
 # leaves compacted at once: each is mostly cluster work, so overlapping them
 # keeps the executors busy while one leaf is in its metadata-only publish
 _COMPACT_WORKERS = 8
+_COMPACT_FILE_BYTES = 512 * 1024 * 1024  # at most, per compacted file
 
 
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 512,
-    options: ExportOptions | None = None,
-) -> int:
+def compact(spark: SparkSession, path: str) -> int:
     """Small-file compaction: rewrite each leaf of the parquet dataset at
-    ``path`` into ``ceil(bytes / target_file_mb)`` files and return the
-    number of files written. The many-small-files problem is the chronic
-    failure mode of incremental ingestion at scale (every NameNode/footer
-    read scales with file count); this is the maintenance pass that fixes
-    it.
+    ``path`` into ``ceil(bytes / 512 MiB)`` files and return the number of
+    files written.
 
     A flat dataset is its own single leaf; a hive layout's leaves are its
     deepest ``key=value`` directories, so the partition layout survives.
     Each leaf is round-robin repartitioned and rewritten in place by
-    :func:`export`, which stages it beside the leaf and publishes it by the
-    rename-aside swap of :func:`_publish`. A leaf, directory or root that a
-    cut-short swap left only as ``.<name>._old`` is restored before the
-    walk sizes anything. Leaves run on a driver-side thread pool (Spark job
-    submission is thread-safe, and each leaf stages in its own directory). Listing and measuring go through the Hadoop
-    FileSystem of the path's own scheme, so file://, hdfs:// and s3a://
-    datasets compact alike.
+    :func:`export` with the default :class:`ExportOptions`, which stages it
+    beside the leaf and publishes it by the rename-aside swap of
+    :func:`_publish`. The exports are quiet: a meter counts the tasks of
+    every active job, and the leaves overlap. A leaf, directory or root
+    that a cut-short swap left only as ``.<name>._old`` is restored before
+    the walk sizes anything. Leaves run on a driver-side thread pool (Spark
+    job submission is thread-safe, and each leaf stages in its own
+    directory). Listing and measuring go through the Hadoop FileSystem of
+    the path's own scheme, so file://, hdfs:// and s3a:// datasets compact
+    alike.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -461,8 +459,8 @@ def compact(
 
     def rewrite(leaf: str) -> int:
         size = sum(n for _f, n in data_files(spark, leaf))
-        n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-        return export(spark.read.parquet(leaf).repartition(n_files), leaf, options).files
+        n_files = max(1, math.ceil(size / _COMPACT_FILE_BYTES))
+        return export(spark.read.parquet(leaf).repartition(n_files), leaf, quiet=True).files
 
     todo = leaves(root)
     with ThreadPoolExecutor(max_workers=min(_COMPACT_WORKERS, len(todo))) as pool:

@@ -7,9 +7,12 @@ summary (WriterStats) is the ``ExportReport`` that ``export()`` returns.
 from __future__ import annotations
 
 
-def parquet_info(path: str, max_records: int = 300) -> str:
+_MAX_RECORDS = 300  # sampled per file, the reference's cap
+
+
+def parquet_info(path: str) -> str:
     """Human-readable dump: schema + per-row-group column stats + values
-    (bounded to max_records like the reference's 300-record cap)."""
+    (at most ``_MAX_RECORDS``)."""
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
@@ -35,8 +38,8 @@ def parquet_info(path: str, max_records: int = 300) -> str:
                         f"    {c.path_in_schema}: {c.compression} "
                         f"compressed={c.total_compressed_size} raw={c.total_uncompressed_size}"
                     )
-            sample = pf.read_row_group(0).slice(0, max_records).to_pylist() if pf.num_row_groups else []
-            for i, row in enumerate(sample[:max_records]):
+            sample = pf.read_row_group(0).slice(0, _MAX_RECORDS).to_pylist() if pf.num_row_groups else []
+            for i, row in enumerate(sample):
                 out.append(f"  [{i}] {row}")
                 if i >= 9:  # keep the console dump bounded; full data via readers
                     out.append(f"  … ({len(sample)} sampled records)")

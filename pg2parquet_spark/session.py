@@ -3,7 +3,8 @@
 Local mode is the test bed (one JVM, N threads); the conf choices are the
 ones that matter on a real cluster too:
 
-- AQE on (runtime coalesce / skew-join handling),
+- AQE and Parquet filter pushdown: Spark's defaults, so not set here,
+- a launcher's (``spark-submit``'s) master and driver memory stand,
 - shuffle partitions sized to the parallelism at hand (not the 200 default),
 - UTC session timezone (oracle comparisons; the reference writes UTC-adjusted
   timestamptz, SURVEY §1.3),
@@ -26,21 +27,22 @@ def default_cpus() -> int:
 
 def get_spark(app_name: str = "pg2parquet_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's tuned defaults;
-    shuffles get one partition per core."""
+    shuffles get one partition per ``cpus``. Unless a launcher started the
+    JVM (it sets ``PYSPARK_GATEWAY_PORT``), the session is ``local[cpus]``
+    with a ``SPARK_GRAFT_DRIVER_MEM`` (24g) heap; under one, shuffle
+    partitions still follow ``cpus``, not the launcher's cores."""
     cpus = cpus or default_cpus()
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
     )
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -7,10 +7,9 @@ dirs can mix formats: `<table>.parquet|csv|json|jsonl|orc` all register as
 views.
 
 Scale notes: CSV/JSON are line-splittable (gz is not — a 100 TB landing zone
-should use bzip2/zstd-seekable or many files); schemas are supplied or
-sampled with `samplingRatio` rather than full-scan inferred; every view is
-still a lazy scan, so Catalyst prunes columns and (for parquet/orc) pushes
-predicates.
+should use bzip2/zstd-seekable or many files); a schema not supplied is
+inferred, which reads the data once more; every view is still a lazy scan,
+so Catalyst prunes columns and (for parquet/orc) pushes predicates.
 """
 
 from __future__ import annotations
@@ -29,35 +28,24 @@ _EXT_FORMAT = {
 }
 
 
-def infer_format(path: str) -> str:
-    ext = os.path.splitext(path)[1].lower()
-    if ext not in _EXT_FORMAT:
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> DataFrame:
+    """Read one table from a file/dir in the format its extension names.
+
+    CSV has a header row; without ``schema`` its types are inferred (pass an
+    explicit ``schema`` in production — inference reads data twice).
+    """
+    fmt = _EXT_FORMAT.get(os.path.splitext(path)[1].lower())
+    if fmt is None:
         raise ValueError(
             f"cannot infer source format from {path!r}; expected one of {sorted(_EXT_FORMAT)}"
         )
-    return _EXT_FORMAT[ext]
-
-
-def read_table(
-    spark: SparkSession,
-    path: str,
-    fmt: str | None = None,
-    schema: StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    """Read one table from a file/dir in any supported format.
-
-    CSV defaults: header on, schema inference bounded by samplingRatio (pass
-    an explicit ``schema`` in production — inference reads data twice).
-    """
-    fmt = fmt or infer_format(path)
     reader = spark.read.format(fmt)
     if fmt == "csv":
         reader = reader.option("header", "true").option("inferSchema", schema is None)
     if schema is not None:
         reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
     return reader.load(path)
 
 

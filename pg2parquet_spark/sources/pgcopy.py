@@ -20,6 +20,10 @@ Scale design:
 - **NULL fidelity**: COPY's CSV NULL is an unquoted empty field, while an
   empty string goes out quoted (``""``). The decoder reads only unquoted
   empty fields as NULL, so NULL and ``''`` stay distinct with no sentinel.
+- **Pinned text**: every COPY session (each task's and :func:`run_sql`'s)
+  first sets ``datestyle = ISO``, ``intervalstyle = postgres`` and
+  ``extra_float_digits = 3``, so the text a server, database, role or URL
+  ``options`` would render otherwise never reaches `_cast_plan` or Parquet.
 - **One schema probe**: before the scan the driver asks PostgreSQL to
   describe the statement it will COPY (`_describe`), as the reference
   compiles its schema from ``client.prepare(query)`` →
@@ -192,9 +196,15 @@ def psql_command(conn: PostgresConnection) -> tuple[list[str], dict[str, str]]:
     return argv, env
 
 
-def _copy(sql: str) -> str:
-    """COPY in PG's default CSV dialect: NULL is an unquoted empty field."""
-    return f"COPY {_subquery(sql)} TO STDOUT (FORMAT csv)"
+def _copy(sql: str) -> list[str]:
+    """psql's args for a COPY in PG's default CSV dialect (NULL is an
+    unquoted empty field), after a ``-c`` that pins the session's text
+    settings as pg_dump does: `_cast_plan` reads ISO dates, and a float
+    keeps every digit only with extra_float_digits >= 1 (0 before PG 12)."""
+    return [
+        "-c", "SET datestyle = ISO; SET intervalstyle = postgres; SET extra_float_digits = 3",
+        "-c", f"COPY {_subquery(sql)} TO STDOUT (FORMAT csv)",
+    ]
 
 
 # quoted values may span lines; an empty line is a one-column row holding NULL
@@ -297,7 +307,7 @@ def run_sql(conn: PostgresConnection, sql: str) -> list[tuple[str | None, ...]]:
     """Driver-side catalog/DDL helper: run ``sql`` through one COPY and
     return rows as tuples of (text | None). Meant for bounded catalog reads
     such as ENUM_LABELS_SQL, never table data."""
-    return _text_rows(_run_psql(psql_command(conn), ["-c", _copy(sql)]))
+    return _text_rows(_run_psql(psql_command(conn), _copy(sql)))
 
 
 # psql's script reader runs meta-commands (``\!`` included) wherever they
@@ -385,7 +395,7 @@ def _stream_copy(command: tuple[list[str], dict[str, str]], sql: str, names: lis
     argv, env = command
     with tempfile.TemporaryFile() as errf:
         proc = subprocess.Popen(
-            argv + ["-c", _copy(sql)],
+            argv + _copy(sql),
             stdout=subprocess.PIPE, stderr=errf, env={**os.environ, **env},
         )
         try:

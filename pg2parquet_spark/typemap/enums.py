@@ -6,7 +6,7 @@
 - plain-text: label string, no annotation → identical to ours.
 - int: 1-based ordinal in type-declaration order (pg_custom_types.rs:13-31
   builds the HashMap from type metadata; unknown label panics there — we
-  surface NULL and offer a strict variant).
+  surface NULL, which ``export_audited`` refuses as a nulled conversion).
 
 The label list comes from the PG catalog (`pg_enum` ordered by
 enumsortorder) via ``pgcopy.ENUM_LABELS_SQL`` through ``pgcopy.run_sql``, or is
@@ -25,7 +25,7 @@ def enum_to_text(col: Column) -> Column:
     return col.cast("string")
 
 
-def enum_to_int(col: Column, labels: Sequence[str], strict: bool = False) -> Column:
+def enum_to_int(col: Column, labels: Sequence[str]) -> Column:
     """Label → 1-based ordinal per the declaration order.
 
     A literal map keeps this a pure expression (constant-folded by Catalyst,
@@ -36,9 +36,4 @@ def enum_to_int(col: Column, labels: Sequence[str], strict: bool = False) -> Col
     for i, label in enumerate(labels, start=1):
         pairs.append(F.lit(label))
         pairs.append(F.lit(i))
-    ordinal = F.element_at(F.create_map(*pairs), col.cast("string"))
-    if strict:
-        ordinal = F.when(col.isNotNull() & ordinal.isNull(), F.raise_error(
-            F.concat(F.lit("unknown enum label: "), col.cast("string"))
-        )).otherwise(ordinal)
-    return ordinal.cast("int")
+    return F.element_at(F.create_map(*pairs), col.cast("string")).cast("int")

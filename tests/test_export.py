@@ -786,9 +786,23 @@ def test_compact_small_files(spark, sf_dir, tmp_path):
     out = str(tmp_path / "fragmented")
     export(li.repartition(24), out, ExportOptions(compression="snappy"))
     assert len(glob.glob(f"{out}/*.parquet")) == 24
-    n = compact(spark, out, target_file_mb=512)
+    n = compact(spark, out)
     assert n == 1  # sf0.001 lineitem ≪ 512 MB
     assert spark.read.parquet(out).count() == li.count()
+
+
+def test_compact_prints_no_meter(spark, tmp_path, capsys):
+    """The leaves of a hive root compact concurrently and quietly: no
+    leaf's meter writes an ``[export]`` line."""
+    from pg2parquet_spark.export import compact
+
+    out = str(tmp_path / "quiet_hive")
+    spark.range(300).select("id", (F.col("id") % 3).alias("p")).repartition(4).write.partitionBy(
+        "p"
+    ).parquet(out)
+    capsys.readouterr()
+    assert compact(spark, out) == 3
+    assert "[export]" not in capsys.readouterr().err
 
 
 def test_compact_via_filesystem_uri(spark, sf_dir, tmp_path):
@@ -800,7 +814,7 @@ def test_compact_via_filesystem_uri(spark, sf_dir, tmp_path):
     ords = spark.read.parquet(f"{sf_dir}/orders.parquet")
     out = f"file://{tmp_path}/fragmented_uri"
     export(ords.repartition(8), out, ExportOptions(compression="snappy"))
-    n = compact(spark, out, target_file_mb=512)
+    n = compact(spark, out)
     assert n == 1
     assert spark.read.parquet(out).count() == ords.count()
     assert not (tmp_path / ".fragmented_uri._tmp").exists()
@@ -841,6 +855,16 @@ def test_parquet_info_lists_what_readers_read(tmp_path):
         assert "part-0.parquet" in info and "k=1/part-1.parquet" in info
 
 
+def test_livepg_marker_follows_the_fixture_text():
+    """The live cluster outlives a checkout: its fixture marker is named
+    after the fixture text, so an edited ``init.sql`` reloads."""
+    from tools.livepg import MARKER_PREFIX, _fixture_sql, fixture_marker
+
+    sql = _fixture_sql()
+    assert fixture_marker(sql + "\n-- one more row") != fixture_marker(sql)
+    assert fixture_marker(sql).startswith(MARKER_PREFIX)
+
+
 def test_default_cpus_fits_the_host(monkeypatch):
     """A session built without ``cpus=`` takes SPARK_GRAFT_CPUS, else the
     host's CPU count."""
@@ -851,6 +875,30 @@ def test_default_cpus_fits_the_host(monkeypatch):
     assert default_cpus() == 3
     monkeypatch.setenv(ENV_CPUS, "5")
     assert default_cpus() == 5
+
+
+def test_get_spark_keeps_what_spark_submit_set(tmp_path):
+    """Under spark-submit the launcher's master and driver memory stand,
+    whatever ``cpus`` the caller asks for."""
+    import subprocess
+
+    import pyspark
+
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "from pg2parquet_spark.session import get_spark\n"
+        "spark = get_spark(cpus=3)\n"
+        "print('SESSION', spark.sparkContext.master, spark.conf.get('spark.driver.memory'))\n"
+    )
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [submit, "--master", "local[2]", "--driver-memory", "1g", str(script)],
+        capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": repo},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "SESSION local[2] 1g" in r.stdout.splitlines()
 
 
 def test_report_counts_a_partitioned_export(spark, sf_dir, tmp_path):
@@ -1006,7 +1054,7 @@ def _assert_compacts_each_leaf(spark, out: str, leaves: list[str], cols: str) ->
     before = rows()
     assert len(glob.glob(f"{out}/{leaves[0]}/*.parquet")) > 1
     assert sorted(set(leaf_dirs())) == leaves
-    assert compact(spark, out, target_file_mb=512) == len(leaves)
+    assert compact(spark, out) == len(leaves)
     assert leaf_dirs() == leaves  # one file in each leaf, the same leaves
     assert rows() == before
     assert all(_no_staging_left(f"{out}/{leaf}") for leaf in leaves)

@@ -279,6 +279,29 @@ def test_read_only_server_serves_both_reads(spark, live_pg):
     assert row.n == "1000"
 
 
+def test_copy_text_ignores_the_sessions_text_settings(spark, live_pg):
+    """A connection whose settings change how the server renders dates,
+    floats and intervals reads the same values: every COPY pins them."""
+    from pg2parquet_spark.sources import pgcopy
+
+    conn = pgcopy.PostgresConnection(
+        url="postgres://postgres@%2Ftmp:55432/postgres?options="
+        "-c%20DateStyle%3DSQL%2CDMY%20-c%20extra_float_digits%3D0"
+        "%20-c%20IntervalStyle%3Dsql_standard"
+    )
+    style = "SELECT current_setting('DateStyle'), current_setting('extra_float_digits')"
+    assert pgcopy._text_rows(pgcopy._run_psql(pgcopy.psql_command(conn), [
+        "-t", "--csv", "-c", style,
+    ])) == [("SQL, DMY", "0")]
+
+    def rows(c):
+        return sorted(pgcopy.read(spark, c, table="plain").collect())
+
+    assert rows(conn) == rows(live_pg)
+    got = pgcopy.run_sql(conn, "SELECT DATE '2024-03-15', 1.2345678::real, interval '1 year 2 mons'")
+    assert got == [("2024-03-15", "1.2345678", "1 year 2 mons")]
+
+
 def test_zero_column_query_names_the_query(spark, live_pg):
     """A statement without columns has nothing to export: the read refuses,
     naming the query."""

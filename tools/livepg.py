@@ -6,7 +6,10 @@ It initializes a throwaway cluster under /tmp, starts it on port 55432
 (unix socket dir /tmp), and loads ``ci/pg/init.sql`` — degrading the
 pgvector column to ``text`` when the extension isn't installed (the COPY
 wire ships the same ``[x,y,...]`` literal either way; only the server-side
-type tag differs, and the typemap parser consumes the text form).
+type tag differs, and the typemap parser consumes the text form). The
+cluster outlives a checkout, so a marker table named after a hash of
+``init.sql`` records which fixture text it holds; `start` reloads the
+fixture when that text changes.
 
 Root can't run postgres directly; when euid==0 the cluster runs as the
 ``daemon`` user via setpriv.
@@ -17,6 +20,7 @@ Exit 0 when the requested state holds. `start` is idempotent.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import subprocess
@@ -27,7 +31,18 @@ SOCKET_DIR = "/tmp"
 PORT = 55432
 DSN = f"postgres://postgres@/postgres?host={SOCKET_DIR}&port={PORT}"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FIXTURE_MARKER = "pg2parquet_fixture_loaded"
+FIXTURE = os.path.join(REPO, "ci", "pg", "init.sql")
+MARKER_PREFIX = "pg2parquet_fixture_"
+
+
+def fixture_marker(sql: str) -> str:
+    """The marker table of a cluster loaded with fixture text ``sql``."""
+    return MARKER_PREFIX + hashlib.sha256(sql.encode()).hexdigest()[:12]
+
+
+def _fixture_sql() -> str:
+    with open(FIXTURE) as f:
+        return f.read()
 
 
 def _as_pg_user(argv: list[str]) -> list[str]:
@@ -55,13 +70,17 @@ def is_up() -> bool:
 
 
 def fixture_loaded() -> bool:
-    r = psql(f"SELECT 1 FROM pg_tables WHERE tablename = '{FIXTURE_MARKER}'")
+    """The cluster holds the current text of ``ci/pg/init.sql``."""
+    marker = fixture_marker(_fixture_sql())
+    r = psql(f"SELECT 1 FROM pg_tables WHERE tablename = '{marker}'")
     return r.returncode == 0 and "1" in r.stdout
 
 
 def load_fixture() -> None:
-    with open(os.path.join(REPO, "ci", "pg", "init.sql")) as f:
-        sql = f.read()
+    """(Re)load ``ci/pg/init.sql`` and mark the cluster with its hash,
+    dropping the marker of any fixture text loaded before."""
+    sql = _fixture_sql()
+    marker = fixture_marker(sql)
     has_vector = psql(
         "SELECT 1 FROM pg_available_extensions WHERE name = 'vector'"
     ).stdout.count("1 row")
@@ -74,12 +93,15 @@ def load_fixture() -> None:
     preamble = (
         "DROP TABLE IF EXISTS plain, exotic CASCADE;\n"
         "DROP TYPE IF EXISTS mood, dims CASCADE;\n"
+        "DO $$ DECLARE t text; BEGIN\n"
+        f"  FOR t IN SELECT tablename FROM pg_tables WHERE tablename LIKE '{MARKER_PREFIX}%'\n"
+        "  LOOP EXECUTE format('DROP TABLE %I', t); END LOOP;\n"
+        "END $$;\n"
     )
-    marker = f"\nCREATE TABLE {FIXTURE_MARKER} (ok bool);\n"
     r = _run(
         ["psql", "-h", SOCKET_DIR, "-p", str(PORT), "-U", "postgres",
          "-X", "-q", "-v", "ON_ERROR_STOP=1"],
-        input=preamble + sql + marker,
+        input=preamble + sql + f"\nCREATE TABLE {marker} (ok bool);\n",
     )
     if r.returncode != 0:
         raise RuntimeError(f"fixture load failed: {r.stderr[:800]}")
