@@ -5,7 +5,8 @@ level_index + parquet_writer.rs). All of that machinery is internal to
 Spark's ParquetOutputWriter; what we reproduce is the *configuration
 surface*:
 
-- compression codec map incl. levels (main.rs:228-250; zstd level 3 default)
+- compression codec map incl. levels (main.rs:228-250; zstd level 3 default,
+  gzip levels 0-9)
 - row-group sizing: 500 MiB raw / parquet.block.size (postgres_cloner.rs:305)
 - overwrite-on-exists as an atomic replace (main.rs output_file docs): every
   export is staged at ``<parent>/.<name>._tmp`` and published by
@@ -18,8 +19,9 @@ surface*:
   at 100 TB you want many files — single_file=False default keeps the
   parallel writer, one file per task)
 
-Deviations (documented, value-preserving): LZO unsupported by Spark's
-writer (hard error, same contract); `created_by` metadata not settable.
+Deviations (documented, value-preserving): LZO and Brotli unsupported by
+Spark's writer (hard error, same contract); `created_by` metadata not
+settable.
 
 Ordering (SURVEY §7.2): with single_file=True and sort_by, one shuffle
 gathers the input into one partition that is sorted within itself; with
@@ -41,7 +43,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from pg2parquet_spark.options import ExportOptions
+from pg2parquet_spark.options import GZIP_LEVELS, ExportOptions
 
 
 @dataclass(frozen=True)
@@ -134,14 +136,15 @@ def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> Non
     directory ``path``."""
     from pg2parquet_spark.progress import ProgressReporter
 
-    codec = options.spark_codec  # raises for lzo — same error contract as writer absence
+    codec = options.spark_codec  # raises for lzo and brotli — Spark has no writer for them
     writer = df.write.option("compression", codec).option(
         "parquet.block.size", str(options.row_group_bytes)
     )
-    if options.compression == "zstd" and options.compression_level is not None:
-        writer = writer.option(
-            "parquet.compression.codec.zstd.level", str(options.compression_level)
-        )
+    level = options.compression_level
+    if level is not None and options.compression == "zstd":
+        writer = writer.option("parquet.compression.codec.zstd.level", str(level))
+    elif level is not None:  # gzip: ExportOptions refuses a level with any other codec
+        writer = writer.option("zlib.compress.level", GZIP_LEVELS[level])
     if options.partition_by:
         # hive-style layout: readers get partition pruning on these columns
         writer = writer.partitionBy(*options.partition_by)
@@ -262,7 +265,7 @@ def _rewrite_one_float16(
     libhdfs is installed, so the pass fails on an ``s3a://`` export.
     The rewrite keeps the file's layout: one output row group per source
     row group (Spark already sized them by ``row_group_bytes``), written
-    with the export's codec and zstd ``level``. Crash safety: a task killed
+    with the export's codec and ``level``. Crash safety: a task killed
     mid-write (speculation, preemption, OOM) must not leave a truncated file
     for the retry to trip over, so the rewrite lands at ``<path>.f16tmp``
     and is renamed into place. A retry that finds a stale tmp simply
@@ -292,9 +295,8 @@ def _rewrite_one_float16(
     src = pq.ParquetFile(fsys.open_input_file(path))
     schema = pa.schema([narrow(f) for f in src.schema_arrow])
     tmp = path + ".f16tmp"
-    compression = "none" if codec == "uncompressed" else codec
     with pq.ParquetWriter(
-        tmp, schema, filesystem=fsys, compression=compression, compression_level=level
+        tmp, schema, filesystem=fsys, compression=codec, compression_level=level
     ) as out:
         for i in range(src.num_row_groups):
             group = src.read_row_group(i).cast(schema)
@@ -324,11 +326,12 @@ def _narrow_to_float16(
     if not files:
         return files
     wanted = frozenset(options.float16_columns)
-    codec = options.spark_codec  # same name space as pyarrow's
-    # Spark's zstd default is level 3, pyarrow's is 1: pass Spark's explicitly
-    level = None
-    if options.compression == "zstd":
-        level = 3 if options.compression_level is None else options.compression_level
+    codec = options.compression  # pyarrow's codec names are the reference's
+    # Spark's default levels (zstd 3, zlib's 6) are not pyarrow's (zstd 1,
+    # gzip 9): pass Spark's explicitly
+    level = options.compression_level
+    if level is None:
+        level = {"zstd": 3, "gzip": 6}.get(codec)
     uris = [uri for uri, _size in files]
     done = (
         spark.sparkContext.parallelize(uris, len(uris))

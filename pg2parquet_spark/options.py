@@ -7,7 +7,8 @@ defaults), `cli/src/postgres_cloner.rs:40-51` (SchemaSettings struct),
 Spark deviations (value-preserving, annotation-level only — see README):
 - ENUM/JSON/UUID/INTERVAL/Float16 Parquet logical annotations can't be
   emitted by Spark's writer; values are identical.
-- LZO is not supported by Spark's Parquet writer → explicit error.
+- LZO and Brotli are not supported by Spark's Parquet writer → explicit
+  error. ``lz4`` writes LZ4_RAW, as parquet-rs and pyarrow do (see README).
 - Decimal precision caps at 38 (the reference's own default; >38 requires
   string mode, same workaround its tests use for numeric(140,100)).
 """
@@ -25,15 +26,20 @@ ARRAY_HANDLING = ("plain", "dims", "dims-lb")
 FLOAT16_HANDLING = ("float32", "float16")
 COMPRESSIONS = ("none", "snappy", "gzip", "lzo", "brotli", "lz4", "zstd")
 
-# Spark writer codec names (parquet.compression). LZO intentionally absent.
+# Spark writer codec names (parquet.compression). LZO and Brotli absent:
+# Spark ships no codec for either.
 _SPARK_CODECS = {
     "none": "uncompressed",
     "snappy": "snappy",
     "gzip": "gzip",
-    "brotli": "brotli",
-    "lz4": "lz4",
+    "lz4": "lz4_raw",
     "zstd": "zstd",
 }
+# Hadoop's zlib level names (writer option ``zlib.compress.level``), by level
+GZIP_LEVELS = (
+    "NO_COMPRESSION", "BEST_SPEED", "TWO", "THREE", "FOUR",
+    "FIVE", "SIX", "SEVEN", "EIGHT", "BEST_COMPRESSION",
+)
 
 
 def _check(value: str, allowed: tuple[str, ...], what: str) -> str:
@@ -61,7 +67,7 @@ class ExportOptions:
     # narrows exactly these columns to Parquet FLOAT16 (FLBA-2) via pyarrow.
     float16_columns: tuple[str, ...] = ()
     compression: str = "zstd"           # main.rs:59-64 (default zstd)
-    compression_level: int | None = None  # zstd default level 3 in the reference
+    compression_level: int | None = None  # zstd or gzip (0-9); zstd default 3
     # Ours-only (the reference is single-file by construction; at scale you
     # want many files — default keeps Spark's parallel writer):
     single_file: bool = False
@@ -84,6 +90,16 @@ class ExportOptions:
         _check(self.array_handling, ARRAY_HANDLING, "array_handling")
         _check(self.float16_handling, FLOAT16_HANDLING, "float16_handling")
         _check(self.compression, COMPRESSIONS, "compression")
+        if self.compression_level is not None:
+            if self.compression in ("none", "snappy", "lz4"):
+                raise ValueError(
+                    f"compression_level is read by zstd and gzip only; with "
+                    f"{self.compression!r} it would be ignored"
+                )
+            if self.compression == "gzip" and not 0 <= self.compression_level < len(GZIP_LEVELS):
+                raise ValueError(
+                    f"invalid gzip compression_level {self.compression_level}; expected 0-9"
+                )
         if self.single_file and self.partition_by:
             raise ValueError("single_file and partition_by are mutually exclusive")
         if self.float16_handling == "float16" and not self.float16_columns:
@@ -114,6 +130,6 @@ class ExportOptions:
             raise ValueError(
                 f"compression {self.compression!r} is not supported by Spark's "
                 "Parquet writer (the reference supports it via parquet-rs; "
-                "use zstd/snappy/gzip/lz4/brotli/none)"
+                "use zstd/snappy/gzip/lz4/none)"
             )
         return codec

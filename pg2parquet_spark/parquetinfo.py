@@ -1,18 +1,17 @@
 """Debug tooling mirroring the reference's hidden subcommand
 ``pg2parquet parquet-info <file>`` (parquetinfo.rs:36-70): dump schema,
-row-group/column metadata, and a bounded sample of values. The write
+row-group/column metadata, and the first records of each file. The write
 summary (WriterStats) is the ``ExportReport`` that ``export()`` returns.
 """
 
 from __future__ import annotations
 
-
-_MAX_RECORDS = 300  # sampled per file, the reference's cap
+_SHOWN = 10  # records printed per file, from row group 0; full data via readers
 
 
 def parquet_info(path: str) -> str:
-    """Human-readable dump: schema + per-row-group column stats + values
-    (at most ``_MAX_RECORDS``)."""
+    """Human-readable dump: schema + per-row-group column stats + the first
+    ``_SHOWN`` records of row group 0 and that group's row count."""
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
@@ -38,11 +37,14 @@ def parquet_info(path: str) -> str:
                         f"    {c.path_in_schema}: {c.compression} "
                         f"compressed={c.total_compressed_size} raw={c.total_uncompressed_size}"
                     )
-            sample = pf.read_row_group(0).slice(0, _MAX_RECORDS).to_pylist() if pf.num_row_groups else []
-            for i, row in enumerate(sample):
+            if not pf.num_row_groups:
+                continue
+            # decode only the rows printed, not the whole group
+            head = next(pf.iter_batches(batch_size=_SHOWN, row_groups=[0]), None)
+            for i, row in enumerate(head.to_pylist() if head is not None else []):
                 out.append(f"  [{i}] {row}")
-                if i >= 9:  # keep the console dump bounded; full data via readers
-                    out.append(f"  … ({len(sample)} sampled records)")
-                    break
+            rows = pf.metadata.row_group(0).num_rows
+            if rows > _SHOWN:
+                out.append(f"  … ({rows} records in row group 0)")
     return "\n".join(out)
 

@@ -12,13 +12,16 @@ thread polls
   work; the
   in-flight ``_temporary`` task files count, which is exactly "written so
   far" while the job runs), and
-- task completion of the active jobs from ``SparkStatusTracker`` (the
-  public API; per-task row counts are not exposed to Python, so the live
-  row meter is task-granular — the exact row total is in the
-  ``ExportReport`` that ``export()`` returns).
+- task completion of the jobs the enclosed action starts. The meter tags
+  them with a Spark job tag of its own (set on the entering thread, which
+  Spark carries into the jobs that thread starts), so concurrent exports
+  each count only their own tasks. Per-task row counts are not exposed, so
+  the live row meter is task-granular — the exact row total is in the
+  ``ExportReport`` that ``export()`` returns.
 
-Everything prints to stderr so stdout stays machine-readable (the CLI and
-bench print JSON there).
+It is the only progress output: ``get_spark`` turns off Spark's console
+stage bars. Everything prints to stderr so stdout stays machine-readable
+(the CLI prints its report there).
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from __future__ import annotations
 import sys
 import threading
 import time
+import uuid
 from collections.abc import Callable
 
 from pg2parquet_spark.export import data_files
@@ -33,7 +37,8 @@ from pg2parquet_spark.export import data_files
 
 class ProgressReporter:
     """Context manager: emits one progress line per ``interval_s`` during the
-    enclosed Spark action, plus a final line on exit.
+    enclosed Spark action, plus a final line on exit. The action must run
+    on the thread that enters the context: that thread carries the tag.
 
     ``sink`` receives each formatted line (default: stderr print) — tests
     inject a list-appender to capture output.
@@ -54,6 +59,7 @@ class ProgressReporter:
         self._thread: threading.Thread | None = None
         self._t0 = 0.0
         self._bytes = 0
+        self._tag = f"pg2parquet-export-{uuid.uuid4().hex}"
 
     # -- probes ------------------------------------------------------------
     def _bytes_written(self) -> int:
@@ -66,10 +72,13 @@ class ProgressReporter:
         return self._bytes
 
     def _task_progress(self) -> tuple[int, int]:
+        """Tasks done and in all of the tagged jobs, finished ones included.
+        PySpark's ``StatusTracker`` has no by-tag lookup; the JVM's has."""
         try:
-            st = self._spark.sparkContext.statusTracker()
+            sc = self._spark.sparkContext
+            st = sc.statusTracker()
             done = total = 0
-            for jid in st.getActiveJobsIds():
+            for jid in sc._jsc.sc().statusTracker().getJobIdsForTag(self._tag):
                 info = st.getJobInfo(jid)
                 if info is None:
                     continue
@@ -88,8 +97,7 @@ class ProgressReporter:
         elapsed = max(time.monotonic() - self._t0, 1e-9)
         mib = self._bytes_written() / (1024 * 1024)
         rate = mib / elapsed
-        done, total = self._task_progress()
-        tasks = "done" if final else f"tasks {done}/{total}"
+        tasks = "done" if final else "tasks %d/%d" % self._task_progress()
         self._sink(
             f"[export] {elapsed:6.1f}s  {mib:9.1f} MiB written  "
             f"{rate:7.1f} MiB/s  {tasks}"
@@ -100,6 +108,7 @@ class ProgressReporter:
             self._tick()
 
     def __enter__(self) -> "ProgressReporter":
+        self._spark.sparkContext.addJobTag(self._tag)
         self._t0 = time.monotonic()
         self._thread = threading.Thread(
             target=self._run, name="export-progress", daemon=True
@@ -108,6 +117,7 @@ class ProgressReporter:
         return self
 
     def __exit__(self, *exc) -> None:
+        self._spark.sparkContext.removeJobTag(self._tag)
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout=5)

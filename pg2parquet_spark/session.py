@@ -4,7 +4,8 @@ Local mode is the test bed (one JVM, N threads); the conf choices are the
 ones that matter on a real cluster too:
 
 - AQE and Parquet filter pushdown: Spark's defaults, so not set here,
-- a launcher's (``spark-submit``'s) master and driver memory stand,
+- a launcher's (``spark-submit``'s) master, driver memory and console
+  progress bars stand,
 - shuffle partitions sized to the parallelism at hand (not the 200 default),
 - UTC session timezone (oracle comparisons; the reference writes UTC-adjusted
   timestamptz, SURVEY §1.3),
@@ -29,8 +30,9 @@ def get_spark(app_name: str = "pg2parquet_spark", cpus: int | None = None) -> Sp
     """Build (or reuse) a SparkSession with the engine's tuned defaults;
     shuffles get one partition per ``cpus``. Unless a launcher started the
     JVM (it sets ``PYSPARK_GATEWAY_PORT``), the session is ``local[cpus]``
-    with a ``SPARK_GRAFT_DRIVER_MEM`` (24g) heap; under one, shuffle
-    partitions still follow ``cpus``, not the launcher's cores."""
+    with a ``SPARK_GRAFT_DRIVER_MEM`` (24g) heap and no console stage bars;
+    under one, shuffle partitions still follow ``cpus``, not the launcher's
+    cores."""
     cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
@@ -40,8 +42,11 @@ def get_spark(app_name: str = "pg2parquet_spark", cpus: int | None = None) -> Sp
         .config("spark.ui.enabled", "false")
     )
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+        # no console stage bars: export()'s meter is the progress output
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+            .config("spark.ui.showConsoleProgress", "false")
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from pg2parquet_spark.tables import NANOS_AS_LONG, events_ts
+
 _EXT_FORMAT = {
     ".parquet": "parquet",
     ".csv": "csv",
@@ -53,8 +55,8 @@ def register_file_views(spark: SparkSession, directory: str) -> list[str]:
     """Register every recognized file in ``directory`` as a temp view named
     after its stem. Mixed formats coexist; parquet wins on stem collisions."""
     # events-style fixtures carry TIMESTAMP(NANOS) parquet columns, which the
-    # vectorized reader rejects without this conf (see tables._events)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # vectorized reader rejects without this conf (see tables.events_ts)
+    spark.conf.set(NANOS_AS_LONG, "true")
     chosen: dict[str, str] = {}
     for fname in sorted(os.listdir(directory)):
         stem, ext = os.path.splitext(fname)
@@ -65,12 +67,7 @@ def register_file_views(spark: SparkSession, directory: str) -> list[str]:
         chosen[stem] = os.path.join(directory, fname)
     for stem, path in chosen.items():
         df = read_table(spark, path)
-        if stem == "events" and dict(df.dtypes).get("ts") == "bigint":
-            # nanos-as-long twin of tables._events for parquet event fixtures
-            from pyspark.sql import functions as F
-
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
-            )
+        if stem == "events":
+            df = events_ts(df)
         df.createOrReplaceTempView(stem)
     return sorted(chosen)

@@ -44,25 +44,35 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _TABLE_MEMO[key]
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.ts has shipped as parquet TIMESTAMP(NANOS) in some corpus
-    generations — Spark's vectorized reader rejects that, so it is read as a
-    long (legacy conf) and rebuilt into an NTZ timestamp (the corpus has no
-    sub-microsecond components, so ns→µs is lossless). Generations that ship
-    µs timestamps load natively; both land on the same timestamp_ntz type."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, LongType):
-        # integer DIV, not `/`: epoch-nanos ≈ 1.7e18 exceeds double's 2^53
-        # exact range, so float division would round the last µs digit
-        return df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
-        )
-    if isinstance(ts_type, TimestampNTZType):
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` read as epoch nanos, rebuilt into an NTZ timestamp; a
+    ``ts`` of any other type passes through.
+
+    Some corpus generations ship ts as parquet TIMESTAMP(NANOS). Spark's
+    vectorized reader rejects that unless :data:`NANOS_AS_LONG` was set
+    before the read, and then yields a long. The corpus has no
+    sub-microsecond components, so ns→µs is lossless."""
+    from pyspark.sql import functions as F
+
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    # integer DIV, not `/`: epoch-nanos ≈ 1.7e18 exceeds double's 2^53
+    # exact range, so float division would round the last µs digit
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz"))
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events with ``ts`` as timestamp_ntz in every corpus generation: nanos
+    through :func:`events_ts`, NTZ µs as read, UTC-adjusted µs cast."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampNTZType
+
+    spark.conf.set(NANOS_AS_LONG, "true")
+    df = events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    if isinstance(df.schema["ts"].dataType, TimestampNTZType):
         return df
     return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 

@@ -22,18 +22,52 @@ from pg2parquet_spark.tables import register_views, table
 
 @pytest.mark.parametrize("codec", ["zstd", "snappy", "gzip", "none", "lz4"])
 def test_roundtrip_codecs(spark, sf_dir, tmp_path, codec):
+    """Every codec reads back through Spark and through DuckDB, which
+    refuses Hadoop-framed LZ4: ``lz4`` must write LZ4_RAW."""
+    import duckdb
+
     df = table(spark, sf_dir, "nation")
     out = str(tmp_path / f"n_{codec}.parquet")
     export(df, out, ExportOptions(compression=codec))
+    want = sorted(r.n_name for r in df.collect())
     back = spark.read.parquet(out)
-    assert sorted(r.n_name for r in back.collect()) == sorted(
-        r.n_name for r in df.collect()
-    )
+    assert sorted(r.n_name for r in back.collect()) == want
+    got = duckdb.sql(f"SELECT n_name FROM read_parquet('{out}/*.parquet')").fetchall()
+    assert sorted(n for (n,) in got) == want
 
 
 def test_lzo_rejected():
     with pytest.raises(ValueError, match="not supported by Spark"):
         ExportOptions(compression="lzo").spark_codec
+
+
+def test_brotli_rejected():
+    """Spark ships no Brotli codec: refused up front, like LZO, not by a
+    ClassNotFoundException in the write job."""
+    with pytest.raises(ValueError, match="not supported by Spark"):
+        ExportOptions(compression="brotli").spark_codec
+
+
+@pytest.mark.parametrize("codec", ["none", "snappy", "lz4"])
+def test_compression_level_refused_where_ignored(codec):
+    with pytest.raises(ValueError, match="would be ignored"):
+        ExportOptions(compression=codec, compression_level=3)
+
+
+def test_gzip_level_changes_the_output(spark, tmp_path):
+    """The gzip level reaches the writer: level 0 stores, level 1 deflates."""
+    df = spark.range(20_000).select(F.sha2((F.col("id") % 100).cast("string"), 256).alias("h"))
+
+    def size(level: int) -> int:
+        out = str(tmp_path / f"gz{level}")
+        return export(
+            df, out, ExportOptions(compression="gzip", compression_level=level, single_file=True),
+            quiet=True,
+        ).bytes
+
+    assert size(0) > 2 * size(1)
+    with pytest.raises(ValueError, match="0-9"):
+        ExportOptions(compression="gzip", compression_level=10)
 
 
 def test_precision_over_38_rejected():
@@ -409,6 +443,32 @@ def test_cli_export_fixture_mode(spark, sf_dir, tmp_path):
     ])
     assert rc == 0
     assert spark.read.parquet(out).count() == 7
+    # the fixture views the CLI registered read events as tables.table does
+    events = table(spark, sf_dir, "events")
+    assert spark.table("events").schema == events.schema
+    assert spark.table("events").exceptAll(events).count() == 0
+    assert events.exceptAll(spark.table("events")).count() == 0
+
+
+def test_cli_quiet_prints_no_progress(tmp_path):
+    """``--quiet`` prints no progress: neither the meter's ``[export]`` lines
+    nor Spark's console stage bars, on a write long enough for both."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    views = tmp_path / "views"
+    views.mkdir()
+    slow = "SELECT id, reflect('java.lang.Thread', 'sleep', CAST(1500 AS BIGINT)) AS s FROM range(0, 4, 1, 2)"
+    r = subprocess.run(
+        [sys.executable, "-m", "pg2parquet_spark.cli", "export", "-o", str(tmp_path / "out"),
+         "--input-dir", str(views), "-q", slow, "--quiet"],
+        capture_output=True, text=True, timeout=300, cwd=repo,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "[Stage" not in r.stderr and "[export]" not in r.stderr, r.stderr[-2000:]
+    assert pq.read_table(str(tmp_path / "out")).num_rows == 4
 
 
 def test_cli_exports_to_a_file_uri(spark, sf_dir, tmp_path, capsys):
@@ -683,7 +743,9 @@ def test_float16_mode_emits_flba2(spark, tmp_path):
     MULTI-file on purpose: the narrowing pass ships the file list to
     executors (one Spark task per file — `_rewrite_one_float16` RAISES if it
     ever runs driver-side via its TaskContext guard), so a 3-file dataset
-    proves the distributed path rewrites every file, not just the first."""
+    proves the distributed path rewrites every file, not just the first.
+    The rewrite keeps the export's codec in pyarrow's naming, where ``lz4``
+    is LZ4_RAW as in Spark's writer."""
     df = spark.createDataFrame(
         [(1, 1.5, [0.5, 2.25]), (2, -3.0, [1.0]), (3, 0.25, [4.0])],
         "id long, val float, emb array<float>",
@@ -695,7 +757,7 @@ def test_float16_mode_emits_flba2(spark, tmp_path):
         ExportOptions(
             float16_handling="float16",
             float16_columns=("val", "emb"),
-            compression="zstd",
+            compression="lz4",
         ),
         quiet=True,
     )
@@ -706,6 +768,9 @@ def test_float16_mode_emits_flba2(spark, tmp_path):
         schema = str(pq.ParquetFile(f).schema)
         assert schema.count("fixed_len_byte_array(2)") == 2
         assert "(Float16)" in schema
+        meta = pq.ParquetFile(f).metadata  # a file of an empty partition has no group
+        for group in map(meta.row_group, range(meta.num_row_groups)):
+            assert {group.column(c).compression for c in range(group.num_columns)} == {"LZ4"}
     back = pq.read_table(out).sort_by("id")
     # f16-representable values survive the round trip exactly
     assert [float(x.as_py()) for x in back["val"]] == [1.5, -3.0, 0.25]
@@ -761,6 +826,37 @@ def test_progress_reporter_emits_during_write(spark, sf_dir, tmp_path):
     assert "done" in lines[-1]  # final summary line
     # the final tick sees the committed bytes
     assert any(not l.split("MiB written")[0].rstrip().endswith(" 0.0") for l in lines)
+
+
+def test_meter_counts_only_its_own_tasks(spark, tmp_path):
+    """The meter counts the tasks of the jobs its own thread starts: never
+    those of an 8-task job another thread runs at the same time."""
+    import re
+    import threading
+    import time
+
+    from pg2parquet_spark.progress import ProgressReporter
+
+    def sleepy(tasks: int):
+        return spark.range(0, tasks, 1, tasks).selectExpr(
+            "id", "reflect('java.lang.Thread', 'sleep', CAST(1000 AS BIGINT)) AS s"
+        )
+
+    other = threading.Thread(target=lambda: sleepy(8).write.format("noop").mode("overwrite").save())
+    other.start()
+    try:
+        deadline = time.monotonic() + 60
+        while not spark.sparkContext.statusTracker().getActiveJobsIds():
+            assert time.monotonic() < deadline, "the other job never started"
+            time.sleep(0.05)
+        lines: list[str] = []
+        with ProgressReporter(spark, str(tmp_path / "own"), interval_s=0.05, sink=lines.append):
+            sleepy(2).write.parquet(str(tmp_path / "own"))
+    finally:
+        other.join(timeout=120)
+    assert not other.is_alive()
+    totals = [int(t) for l in lines for t in re.findall(r"tasks \d+/(\d+)", l)]
+    assert totals and max(totals) == 2, lines
 
 
 def test_export_default_meter_on_stderr(spark, sf_dir, tmp_path, capsys):
@@ -853,6 +949,20 @@ def test_parquet_info_lists_what_readers_read(tmp_path):
         info = parquet_info(target)
         assert info.count("file: ") == 2 and "_temporary" not in info, info
         assert "part-0.parquet" in info and "k=1/part-1.parquet" in info
+
+
+def test_parquet_info_prints_ten_records_and_the_group_count(tmp_path):
+    import pyarrow as pa
+
+    from pg2parquet_spark.parquetinfo import parquet_info
+
+    target = tmp_path / "k.parquet"
+    pq.write_table(pa.table({"k": list(range(1000))}), target)
+    info = parquet_info(str(target))
+    assert [l.strip() for l in info.splitlines() if l.lstrip().startswith("[")] == [
+        f"[{i}] {{'k': {i}}}" for i in range(10)
+    ]
+    assert info.splitlines()[-1] == "  … (1000 records in row group 0)"
 
 
 def test_livepg_marker_follows_the_fixture_text():
