@@ -39,7 +39,9 @@ import time
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager, nullcontext, suppress
 from dataclasses import dataclass
+from urllib.parse import quote, urlsplit
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -105,6 +107,16 @@ def _export(
 
     t0 = time.monotonic()
     spark = df.sparkSession
+    scheme = urlsplit(path).scheme
+    if options.float16_handling == "float16" and scheme:  # no scheme: local
+        try:
+            _filesystem(path)
+        except (pa.ArrowException, OSError) as exc:  # OSError: no libhdfs
+            # refused before the write job, not after it
+            raise ValueError(
+                f"float16_handling='float16' cannot narrow files under {scheme}://: "
+                f"pyarrow opens no filesystem for it ({exc})"
+            ) from exc
     if options.single_file and options.sort_by:
         df = df.repartition(1).sortWithinPartitions(*options.sort_by)
     elif options.sort_by:
@@ -133,11 +145,14 @@ def _export(
 
 def _write(df: DataFrame, path: str, options: ExportOptions, quiet: bool) -> None:
     """One write job of the (already laid out) ``df`` into the fresh
-    directory ``path``."""
+    directory ``path``. A ``timestamp`` (PG ``timestamptz``) column is
+    written as the reference writes it, INT64 ``Timestamp(isAdjustedToUTC,
+    MICROS)``, not Spark's default INT96: the session conf is set, and kept,
+    since the writer ignores it as a write option."""
     from pg2parquet_spark.progress import ProgressReporter
 
-    codec = options.spark_codec  # raises for lzo and brotli — Spark has no writer for them
-    writer = df.write.option("compression", codec).option(
+    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    writer = df.write.option("compression", options.spark_codec).option(
         "parquet.block.size", str(options.row_group_bytes)
     )
     level = options.compression_level
@@ -241,10 +256,11 @@ def _publish(spark: SparkSession, path: str) -> Iterator[str]:
 
 
 def _filesystem(uri: str):
-    """(pyarrow filesystem, path) for a full file URI; a seam for tests."""
+    """(pyarrow filesystem, path) for a full file URI as Hadoop prints it:
+    raw, so it is percent-encoded first. A seam for tests."""
     from pyarrow import fs as pafs
 
-    return pafs.FileSystem.from_uri(uri)
+    return pafs.FileSystem.from_uri(quote(uri, safe=":/@!$&'()*+,;="))
 
 
 def _rewrite_one_float16(
@@ -259,10 +275,9 @@ def _rewrite_one_float16(
     contract (and the pytest relies on it).
 
     ``uri`` is the file's full URI as the export's Hadoop listing printed it
-    (``file:/…``), so its scheme and authority pick the pyarrow filesystem;
-    Hadoop prints the path raw, so it is percent-encoded first. pyarrow
-    knows no ``s3a://`` (``ArrowInvalid``) and opens ``hdfs://`` only where
-    libhdfs is installed, so the pass fails on an ``s3a://`` export.
+    (``file:/…``), so its scheme and authority pick the pyarrow filesystem.
+    pyarrow knows no ``s3a://`` and opens ``hdfs://`` only where libhdfs is
+    installed: `_export` refuses such a path before it writes.
     The rewrite keeps the file's layout: one output row group per source
     row group (Spark already sized them by ``row_group_bytes``), written
     with the export's codec and ``level``. Crash safety: a task killed
@@ -271,16 +286,12 @@ def _rewrite_one_float16(
     and is renamed into place. A retry that finds a stale tmp simply
     overwrites it.
     """
-    import posixpath
-    from urllib.parse import quote
-
-    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark import TaskContext
 
     if TaskContext.get() is None:
         raise RuntimeError("float16 narrowing must run as a Spark task, not on the driver")
-    fsys, path = _filesystem(quote(uri, safe=":/@!$&'()*+,;="))
+    fsys, path = _filesystem(uri)
 
     def narrow(field: pa.Field) -> pa.Field:
         if field.name not in wanted:

@@ -7,8 +7,6 @@ covers the sink path end-to-end, not just in pytest.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -16,6 +14,7 @@ from pg2parquet_spark.export import export
 from pg2parquet_spark.options import ExportOptions
 from pg2parquet_spark.registry import register
 from pg2parquet_spark.tables import table
+from pg2parquet_spark.tmpdirs import memo_tmpdir
 
 
 @register(
@@ -32,8 +31,6 @@ GROUP BY l_returnflag
     "Values must survive the write/read cycle bit-exactly.",
 )
 def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pg2parquet_spark.tmpdirs import memo_tmpdir
-
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 30)
     # memoized dir per corpus; export() re-writes (mode=overwrite) every
     # invocation — the write IS the query, only the mkdtemp churn is gone
@@ -100,8 +97,6 @@ def _supplier_roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame
     sup = table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    from pg2parquet_spark.tmpdirs import memo_tmpdir
-
     base, _ = memo_tmpdir(f"pg2parquet_src_{fmt}", sf_dir)
     out = base + f"/supplier.{fmt}"
     (
@@ -263,9 +258,6 @@ FROM region
     )
 
 
-_EVO_MEMO: dict[str, str] = {}
-
-
 @register(
     "source_schema_evolution",
     oracle="""
@@ -287,12 +279,11 @@ FROM orders
     "paths share this read code.",
 )
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the evolved two-schema directory is written ONCE per sf_dir (memoized
-    # like _STOP_MEMO) — selfcheck/scaleprobe/plan-sweep re-invocations read
-    # the cached directory instead of leaking a fresh mkdtemp each call
-    if sf_dir not in _EVO_MEMO:
+    # the evolved two-schema directory is written ONCE per sf_dir
+    # (memo_tmpdir) — selfcheck/plan-sweep re-invocations read the cached
+    # directory instead of leaking a fresh mkdtemp each call
+    def build(out: str) -> None:
         orders = table(spark, sf_dir, "orders")
-        out = tempfile.mkdtemp(prefix="pg2parquet_evo_")
         old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_custkey"
         )
@@ -301,8 +292,9 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         old.write.mode("append").parquet(out)
         new.write.mode("append").parquet(out)
-        _EVO_MEMO[sf_dir] = out
-    back = spark.read.option("mergeSchema", "true").parquet(_EVO_MEMO[sf_dir])
+
+    out, _ = memo_tmpdir("pg2parquet_evo", sf_dir, populate=build)
+    back = spark.read.option("mergeSchema", "true").parquet(out)
     return back.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.count("o_totalprice").cast("bigint").alias("n_with_price"),

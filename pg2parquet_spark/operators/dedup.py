@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pg2parquet_spark.operators.similarity import EMB_DIM, dot_sql
 from pg2parquet_spark.operators.text import (
     normalize_text,
     token_shingles,
@@ -777,16 +778,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- embedding cosine pairs --
-def _dot_sql(a: str, b: str, dim: int, zero_based: bool) -> str:
-    off = -1 if zero_based else 0
-    return " + ".join(
-        f"CAST({a}[{i + off}] AS DOUBLE) * CAST({b}[{i + off}] AS DOUBLE)"
-        for i in range(1, dim + 1)
-    )
-
-
-EMB_DIM = 64
-
 # Independent sign-LSH hash tables for candidate generation: disjoint
 # deterministic hyperplane sets (plane ids shifted per table), MULTI-PROBE:
 # each table also probes the 4 buckets at Hamming distance 1 from a vector's
@@ -839,7 +830,7 @@ def _emb_pair_union_sql() -> str:
         )
         joins.append(
             f"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
   FROM (SELECT vec_id, embedding, unnest([{probes}]) AS pk FROM bk) a
   JOIN bk b ON a.pk = b.k{t} AND a.vec_id < b.vec_id"""
         )
@@ -850,9 +841,9 @@ def _emb_pair_union_sql() -> str:
     "dedup_embedding_cosine_exact",
     oracle=f"""
 SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}
+WHERE {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}
 """,
     doc="EXACT embedding-cosine near-dup pairs: ALL pairs with cos_sim >= "
     f"{_EMB_COS_THRESHOLD}, no candidate pruning. Quadratic BY CONTRACT — the "
@@ -1264,7 +1255,7 @@ def _adapt_oracle_sql(
     for t in range(len(offsets)):
         joins.append(
             f"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
   FROM (SELECT bk.vec_id, bk.embedding, xor(bk.k{t}, pm.m) AS pk
           FROM bkr bk JOIN occ{t} ON bk.k{t} = occ{t}.key, pm
          WHERE (bk.bits <= 5 OR bk.rn{t} <= {bucket_cap})
@@ -1794,7 +1785,7 @@ def _ivf_chain_sql(nprobe: int = _IVF_NPROBE) -> str:
     cells per vector, MATERIALIZED — consumed by both pair-join sides and
     by the cell audit). The SQL twin of ``_ivf_assignments``; ``nprobe``
     selects the arm (2 = primary tier, 4 = recall arm)."""
-    d = _dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
+    d = dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
     return f"""par AS (SELECT {_ivf_k_case('COUNT(*)')} AS k FROM embeddings),
 sd AS (SELECT vec_id, embedding, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
        FROM embeddings WHERE vec_id % {_IVF_SEED_MOD} = {_IVF_SEED_REM}),
@@ -1820,7 +1811,7 @@ pairs AS (
   WHERE a.rnc <= {cap} AND b.rnc <= {cap}),
 scored AS (
   SELECT p.a_id, p.b_id,
-         {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
+         {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id)
@@ -2378,7 +2369,7 @@ def _ivf_asym_chain_sql(nprobe: int, seed_rems: tuple[int, ...]) -> str:
     count (and with it the reservation footprint) drops ~T-fold, values
     are branch-for-branch identical (disjoint rem classes ⇒ per-tbl
     ROW_NUMBERs and rankings match the per-branch ones exactly)."""
-    d = _dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
+    d = dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
     vals = ", ".join(f"({i}, {rem})" for i, rem in enumerate(seed_rems))
     return f"""par AS (SELECT {_ivf_k_case('COUNT(*)')} AS k FROM embeddings),
 tbls AS (SELECT * FROM (VALUES {vals}) AS v(tbl, rem)),
@@ -2432,7 +2423,7 @@ WITH {ctes},
 pairs AS (SELECT DISTINCT a_id, b_id FROM ({union})),
 scored AS (
   SELECT p.a_id, p.b_id,
-         {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
+         {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id)
@@ -2918,11 +2909,11 @@ ivf AS MATERIALIZED (
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id
-  WHERE {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
+  WHERE {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
 ex AS MATERIALIZED (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
+  WHERE {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ex) AS n_exact,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM ivf) AS n_ivf,
        CAST(COUNT(*) AS BIGINT) AS n_hit,
@@ -3015,11 +3006,11 @@ ivf AS MATERIALIZED (
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id
-  WHERE {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
+  WHERE {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
 ex AS MATERIALIZED (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
+  WHERE {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ex) AS n_exact,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM ivf) AS n_ivf,
        CAST(COUNT(*) AS BIGINT) AS n_hit,
@@ -3165,7 +3156,7 @@ def _emb_inc_oracle_sql() -> str:
     for t in range(len(_EMB_LSH_OFFSETS)):
         joins.append(
             f"""SELECT n.vec_id AS new_id, o.vec_id AS old_id,
-       {_dot_sql('n.embedding', 'o.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('n.embedding', 'o.embedding', EMB_DIM, False)} AS cos_sim
   FROM (SELECT bk.vec_id, bk.embedding, xor(bk.k{t}, pm.m) AS pk
           FROM newb bk LEFT JOIN occ{t} ON bk.k{t} = occ{t}.key, pm
          WHERE pm.m = 0 OR bk.bits <= 5 OR COALESCE(occ{t}.c, 0) <= {_EMB_PROBE_OCC_BOUND}) n

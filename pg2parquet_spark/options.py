@@ -8,7 +8,8 @@ Spark deviations (value-preserving, annotation-level only — see README):
 - ENUM/JSON/UUID/INTERVAL/Float16 Parquet logical annotations can't be
   emitted by Spark's writer; values are identical.
 - LZO and Brotli are not supported by Spark's Parquet writer → explicit
-  error. ``lz4`` writes LZ4_RAW, as parquet-rs and pyarrow do (see README).
+  error when the options are built. ``lz4`` writes LZ4_RAW, as parquet-rs
+  and pyarrow do (see README).
 - Decimal precision caps at 38 (the reference's own default; >38 requires
   string mode, same workaround its tests use for numeric(140,100)).
 """
@@ -90,6 +91,12 @@ class ExportOptions:
         _check(self.array_handling, ARRAY_HANDLING, "array_handling")
         _check(self.float16_handling, FLOAT16_HANDLING, "float16_handling")
         _check(self.compression, COMPRESSIONS, "compression")
+        if self.compression not in _SPARK_CODECS:
+            raise ValueError(
+                f"compression {self.compression!r} is not supported by Spark's "
+                "Parquet writer (the reference supports it via parquet-rs; "
+                "use zstd/snappy/gzip/lz4/none)"
+            )
         if self.compression_level is not None:
             if self.compression in ("none", "snappy", "lz4"):
                 raise ValueError(
@@ -125,11 +132,4 @@ class ExportOptions:
 
     @property
     def spark_codec(self) -> str:
-        codec = _SPARK_CODECS.get(self.compression)
-        if codec is None:
-            raise ValueError(
-                f"compression {self.compression!r} is not supported by Spark's "
-                "Parquet writer (the reference supports it via parquet-rs; "
-                "use zstd/snappy/gzip/lz4/none)"
-            )
-        return codec
+        return _SPARK_CODECS[self.compression]

@@ -59,8 +59,6 @@ def _canon_cell(v):
         return v  # Decimal compares numerically against Decimal
     if isinstance(v, (list, tuple)):
         return tuple(_canon_cell(x) for x in v)
-    if type(v).__name__ == "ndarray":
-        return tuple(_canon_cell(x) for x in v.tolist())
     return v
 
 

@@ -7,8 +7,9 @@ ones that matter on a real cluster too:
 - a launcher's (``spark-submit``'s) master, driver memory and console
   progress bars stand,
 - shuffle partitions sized to the parallelism at hand (not the 200 default),
-- UTC session timezone (oracle comparisons; the reference writes UTC-adjusted
-  timestamptz, SURVEY §1.3),
+- UTC session timezone (oracle comparisons; ``timestamptz`` is written
+  UTC-adjusted as the reference writes it, SURVEY §1.3, by
+  ``export._write``, which sets the conf on any session it writes with),
 - Arrow for any pandas interchange (the slow-path UDFs are Arrow-batched).
 """
 

@@ -13,6 +13,10 @@ Scale design:
   ``spark.range(N, numPartitions=N)``, so each range gets its own task with
   no shuffle, and N executors hold N server-side COPY streams in parallel.
   Ranges are uniform in key space, not row count.
+- **One runner**: every ``psql`` the package starts, the driver's probe
+  and catalog reads as well as each task's COPY, goes through `_psql`. It
+  streams stdout, fails with psql's stderr, and kills psql when its
+  consumer stops early or fails.
 - **Arrow batches**: the executor cuts the COPY stream into blocks of
   whole rows (a row of any length fits), decodes each with ``pyarrow.csv``
   into text columns and hands the batches to the JVM (``mapInArrow``).
@@ -51,6 +55,7 @@ import shutil
 import subprocess
 import tempfile
 from collections.abc import Iterator
+from contextlib import closing, suppress
 from dataclasses import dataclass
 from urllib.parse import unquote
 
@@ -209,7 +214,8 @@ def _copy(sql: str) -> list[str]:
 
 # quoted values may span lines; an empty line is a one-column row holding NULL
 _PARSE = pacsv.ParseOptions(newlines_in_values=True, ignore_empty_lines=False)
-# bytes per decode; a longer row gets a block of its own
+# bytes per read of psql's stdout, and so per decode; a longer row gets a
+# block of its own
 _BLOCK = 1 << 20
 
 
@@ -251,12 +257,13 @@ def _row_end(data: bytes, quoted: bool) -> int:
     return -1
 
 
-def _row_blocks(stream) -> Iterator[bytes]:
-    """Cut a COPY CSV stream into blocks of whole rows, about ``_BLOCK``
-    bytes each, so pyarrow never sees a row straddle two blocks."""
-    head: list[bytes] = []  # the row still open across reads
+def _row_blocks(chunks: Iterator[bytes]) -> Iterator[bytes]:
+    """Cut a COPY CSV stream, read as ``chunks``, into blocks of whole rows,
+    one per chunk that ends a row, so pyarrow never sees a row straddle two
+    blocks."""
+    head: list[bytes] = []  # the row still open across chunks
     quoted = False
-    while data := stream.read(_BLOCK):
+    for data in chunks:
         cut = _row_end(data, quoted)
         if cut < 0:
             head.append(data)
@@ -286,28 +293,49 @@ def _text_rows(raw: bytes) -> list[tuple[str | None, ...]]:
     return list(zip(*table.to_pydict().values()))
 
 
-def _run_psql(
+def _psql(
     command: tuple[list[str], dict[str, str]], args: list[str], script: bytes = b""
-) -> bytes:
-    """The driver's one ``psql`` call: ``psql_command``'s result plus
-    ``args``, with ``script`` on stdin. Returns stdout."""
+) -> Iterator[bytes]:
+    """The package's one ``psql`` spawn, on the driver and on executors:
+    ``psql_command``'s result plus ``args``, its ``PG*`` variables merged
+    into this process's environment, and ``script`` on stdin (else none).
+    Yields stdout in chunks of ``_BLOCK`` bytes, so a COPY streams in
+    bounded memory however hot its range is.
+
+    stderr spools to a temp file (a pipe could deadlock if psql filled it
+    while stdout drains); a nonzero exit raises ``RuntimeError`` with its
+    start. A consumer that stops early (``limit``) or fails closes the
+    generator, and the ``finally`` kills psql: no child outlives its task.
+    """
     argv, env = command
-    proc = subprocess.run(
-        argv + args, input=script, capture_output=True, env={**os.environ, **env}
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(
-            f"psql failed (rc={proc.returncode}): "
-            f"{proc.stderr.decode(errors='replace').strip()[:500]}"
-        )
-    return proc.stdout
+    with tempfile.TemporaryFile() as errf, subprocess.Popen(
+        argv + args,
+        stdin=subprocess.PIPE if script else subprocess.DEVNULL,
+        stdout=subprocess.PIPE, stderr=errf, env={**os.environ, **env},
+    ) as proc:
+        try:
+            if script:
+                proc.stdin.write(script)  # a few bytes: only buffered
+                with suppress(BrokenPipeError):  # psql failed first: rc says why
+                    proc.stdin.close()
+            while chunk := proc.stdout.read(_BLOCK):
+                yield chunk
+            if (rc := proc.wait()) != 0:
+                errf.seek(0)
+                raise RuntimeError(
+                    f"psql failed (rc={rc}): "
+                    f"{errf.read().decode(errors='replace').strip()[:500]}"
+                )
+        finally:
+            if proc.poll() is None:
+                proc.kill()
 
 
 def run_sql(conn: PostgresConnection, sql: str) -> list[tuple[str | None, ...]]:
     """Driver-side catalog/DDL helper: run ``sql`` through one COPY and
     return rows as tuples of (text | None). Meant for bounded catalog reads
     such as ENUM_LABELS_SQL, never table data."""
-    return _text_rows(_run_psql(psql_command(conn), _copy(sql)))
+    return _text_rows(b"".join(_psql(psql_command(conn), _copy(sql))))
 
 
 # psql's script reader runs meta-commands (``\!`` included) wherever they
@@ -325,10 +353,10 @@ def _describe(command: tuple[list[str], dict[str, str]], query: str) -> list[tup
     its base type. The leading constant column keeps psql printing rows for
     a statement with no columns of its own: it would print a translated
     notice instead."""
-    rows = _text_rows(_run_psql(command, [
+    rows = _text_rows(b"".join(_psql(command, [
         "-t", "--csv", "-1", "-c", f"PREPARE p AS SELECT NULL AS _, * FROM {_subquery(query)} q",
         "-f", "-",
-    ], _GDESC))
+    ], _GDESC)))
     if len(rows) < 2:
         raise ValueError(f"query has no columns to export: {query}")
     return rows[1:]  # type: ignore[return-value]
@@ -381,38 +409,6 @@ def _range_queries(
     return [f"SELECT * FROM {_subquery(query)} q WHERE {p}" for p in preds]
 
 
-def _stream_copy(command: tuple[list[str], dict[str, str]], sql: str, names: list[str]):
-    """Executor side: stream one COPY through psql as Arrow batches.
-    ``command`` is the driver's ``psql_command``; its ``PG*`` variables merge
-    into this executor's own environment.
-
-    The pipe is consumed block by block, so executor memory stays bounded
-    however hot the range is. stderr spools to a temp file (a PIPE could
-    deadlock if psql filled it while we drain stdout). A consumer that
-    stops early (``limit``) or fails closes the generator, and the
-    ``finally`` kills psql: no child outlives its task.
-    """
-    argv, env = command
-    with tempfile.TemporaryFile() as errf:
-        proc = subprocess.Popen(
-            argv + _copy(sql),
-            stdout=subprocess.PIPE, stderr=errf, env={**os.environ, **env},
-        )
-        try:
-            for rows in _row_blocks(proc.stdout):
-                yield from _decode(rows, names).to_batches()
-            if proc.wait() != 0:
-                errf.seek(0)
-                raise RuntimeError(
-                    "psql COPY failed: "
-                    f"{errf.read().decode(errors='replace').strip()[:500]}"
-                )
-        finally:
-            if proc.poll() is None:
-                proc.kill()
-                proc.wait()
-
-
 def read(
     spark: SparkSession,
     conn: PostgresConnection,
@@ -427,7 +423,8 @@ def read(
     (main.rs:252-260).
 
     The driver runs one ``psql`` probe before the scan, for both modes:
-    `_describe` of the statement it will COPY. ``table=`` reads return
+    `_describe` of the statement it will COPY. Each task then streams its
+    range's COPY through the same runner, `_psql`. ``table=`` reads return
     typed columns: `_cast_plan` types plain scalars and ``numeric``
     JVM-side, and everything else stays text for the typemap parsers.
     ``query=`` reads take only the column names, so every column arrives
@@ -465,10 +462,12 @@ def read(
     names = [c for c, _ in cols]
     text_schema = T.StructType([T.StructField(c, T.StringType()) for c in names])
 
-    def _fetch(batches):
+    def _fetch(batches):  # executor side: each range's COPY as Arrow batches
         for batch in batches:
             for part_id in batch.column("id").to_pylist():
-                yield from _stream_copy(command, part_queries[part_id], names)
+                with closing(_psql(command, _copy(part_queries[part_id]))) as chunks:
+                    for rows in _row_blocks(chunks):
+                        yield from _decode(rows, names).to_batches()
 
     # one range per task, no Exchange: range i lands alone in partition i
     n = len(part_queries)

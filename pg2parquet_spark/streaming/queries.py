@@ -1,12 +1,12 @@
 """Structured Streaming operators (beyond-reference surface — the reference
 is batch-only, SURVEY §2.B "Streaming: absent").
 
-Both queries drive a real streaming pipeline over the events parquet via
-`readStream` + `processAllAvailable` into a memory sink, then return the
-sink table. Their DuckDB oracles are the *batch* equivalents, so the
-correctness gate proves streaming results == batch results on the same
-input — the property that matters when the same pipeline later points at
-Kafka.
+Every query drives a real streaming pipeline over a parquet landing dir
+via `readStream`, run to completion by `_run_stream` (into a memory sink,
+or foreachBatch), and returns what the sink holds. Their DuckDB oracles
+are the *batch* equivalents, so the correctness gate proves streaming
+results == batch results on the same input — the property that matters
+when the same pipeline later points at Kafka.
 
 Scale notes: the hourly aggregate is a classic watermark + tumbling-window
 shape (state per window×type is bounded); session_window keeps per-user
@@ -17,12 +17,18 @@ transformation.
 
 from __future__ import annotations
 
+import glob
 import itertools
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg2parquet_spark.registry import register
+from pg2parquet_spark.tables import NANOS_AS_LONG, events_ts, table
+from pg2parquet_spark.tmpdirs import memo_tmpdir
 
 _counter = itertools.count()
 
@@ -55,21 +61,14 @@ class _state_partitions:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of tables._events — tolerates both corpus generations
-    (ts as nanos-long vs native µs timestamp), mirroring tables._events."""
-    import os
-    import tempfile
-
-    from pyspark.sql.types import LongType
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Streaming twin of tables._events: both corpus generations (ts as
+    nanos-long or as a µs timestamp) go through tables.events_ts."""
+    spark.conf.set(NANOS_AS_LONG, "true")
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
     # FileStreamSource requires a directory; expose the single fixture file
     # through a temp dir (in production this is the landing directory/Kafka).
     # Memoized per sf_dir — one symlink dir per corpus per process, not one
     # per invocation (r6 review: /tmp churn on every selfcheck pass).
-    from pg2parquet_spark.tmpdirs import memo_tmpdir
-
     stream_dir, _ = memo_tmpdir(
         "events_stream",
         sf_dir,
@@ -80,23 +79,29 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(static.schema).parquet(stream_dir)
     # watermarks require TIMESTAMP (LTZ); session TZ is pinned UTC so values
     # match the batch NTZ view — outputs cast back to NTZ for the oracle
-    if isinstance(static.schema["ts"].dataType, LongType):
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events_ts(stream).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _run_to_memory(agg: DataFrame, name: str) -> None:
-    with _state_partitions(agg.sparkSession):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
+def _run_stream(
+    df: DataFrame, prefix: str = "", mode: str = "complete", foreach_batch=None
+) -> DataFrame | None:
+    """The module's one stream run: start ``df``'s query with
+    `_state_partitions`, process everything available, stop it. The sink is
+    a fresh memory table ``<prefix>_<n>`` in output ``mode``, which is
+    returned, or with ``foreach_batch`` that function per micro-batch."""
+    name = None if foreach_batch else f"{prefix}_{next(_counter)}"
+    writer = df.writeStream
+    if name is None:
+        writer = writer.foreachBatch(foreach_batch)
+    else:
+        writer = writer.outputMode(mode).format("memory").queryName(name)
+    with _state_partitions(df.sparkSession):
+        q = writer.start()
         try:
             q.processAllAvailable()
         finally:
             q.stop()
+    return name and df.sparkSession.table(name)
 
 
 @register(
@@ -121,9 +126,7 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    name = f"stream_hourly_{next(_counter)}"
-    _run_to_memory(agg, name)
-    return spark.table(name).select(
+    return _run_stream(agg, "stream_hourly").select(
         F.col("w.start").cast("timestamp_ntz").alias("hour"),
         "event_type",
         "n_events",
@@ -157,10 +160,8 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events_in_session"))
     )
-    name = f"stream_sessions_{next(_counter)}"
-    _run_to_memory(sessions, name)
     return (
-        spark.table(name)
+        _run_stream(sessions, "stream_sessions")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
@@ -216,15 +217,8 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"stream_stateful_{next(_counter)}"
-    with _state_partitions(spark):
-        q = agg.writeStream.outputMode("update").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     # update mode may emit a row per micro-batch; keep the final state per user
-    latest = spark.table(name)
+    latest = _run_stream(agg, "stream_stateful", "update")
     return (
         latest.groupBy("user_id")
         .agg(
@@ -273,15 +267,8 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id")  # the post-agg needs only the key; the memory sink
     # materializes every pair row on the driver, so shipping one BIGINT per
     # pair instead of (user, 2 ts, join dup key) cuts sink volume ~4x
-    name = f"stream_cpjoin_{next(_counter)}"
-    with _state_partitions(spark):
-        q = pairs.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     return (
-        spark.table(name)
+        _run_stream(pairs, "stream_cpjoin", "append")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -305,11 +292,6 @@ FROM normed
 )
 def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    import os
-    import tempfile
-
-    from pg2parquet_spark.tmpdirs import memo_tmpdir
-
     stream_dir, _ = memo_tmpdir(
         "docs_stream",
         sf_dir,
@@ -326,10 +308,9 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniq = hashed.dropDuplicates(["content_hash"]).agg(
         F.count(F.lit(1)).alias("n_unique")
     )
-    name = f"stream_dedup_{next(_counter)}"
-    _run_to_memory(uniq, name)
+    got = _run_stream(uniq, "stream_dedup")
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    return spark.table(name).select(
+    return got.select(
         "n_unique", F.lit(n_docs).cast("bigint").alias("n_docs")
     )
 
@@ -363,21 +344,12 @@ HAVING date_trunc('hour', e.ts) + INTERVAL 1 HOUR <= p.mx - INTERVAL 30 MINUTE
     "lets the same pipeline point at an unbounded Kafka topic.",
 )
 def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-
-    from pg2parquet_spark.tables import table as _table
-
-    ev = _table(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts")).collect()[0][0]
     newest = F.col("ts") > F.lit(mx) - F.expr("INTERVAL 1 HOUR")
     late = (F.col("event_id") % 7 == 0) & (
         F.col("ts") < F.lit(mx) - F.expr("INTERVAL 2 HOURS")
     )
-    from pg2parquet_spark.tmpdirs import memo_tmpdir
-
     # the 3-batch landing dir is deterministic per corpus: build it once per
     # process (memoized), and reap the staging scratch after the move
     def _build_batches(stream_dir: str) -> None:
@@ -387,7 +359,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             d = f"{stage_dir}/b{i}"
             part.coalesce(1).write.mode("overwrite").parquet(d)
             dst = f"{stream_dir}/batch{i}.parquet"
-            shutil.move(_glob.glob(f"{d}/part-*.parquet")[0], dst)
+            shutil.move(glob.glob(f"{d}/part-*.parquet")[0], dst)
             os.utime(dst, (1000 * i, 1000 * i))
         shutil.rmtree(stage_dir, ignore_errors=True)
 
@@ -406,14 +378,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    name = f"stream_late_{next(_counter)}"
-    with _state_partitions(spark):
-        q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return _run_stream(agg, "stream_late", "append").select(
         F.col("w.start").cast("timestamp_ntz").alias("window_start"),
         "event_type",
         "n_events",
@@ -441,10 +406,8 @@ GROUP BY 1, 2
     "deployment.",
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pg2parquet_spark.tables import table as _table
-
     ev = _events_stream(spark, sf_dir)
-    cust = _table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = ev.join(F.broadcast(cust), ev["user_id"] == cust["c_custkey"])
     agg = joined.groupBy(
         F.col("c_mktsegment").alias("segment"), F.col("event_type")
@@ -452,9 +415,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    name = f"stream_enrich_{next(_counter)}"
-    _run_to_memory(agg, name)
-    return spark.table(name)
+    return _run_stream(agg, "stream_enrich")
 
 
 @register(
@@ -492,9 +453,7 @@ def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("user_id").alias("sum_uid"),
         )
     )
-    name = f"stream_sliding_{next(_counter)}"
-    _run_to_memory(agg, name)
-    return spark.table(name).select(
+    return _run_stream(agg, "stream_sliding").select(
         F.col("w.start").cast("timestamp_ntz").alias("win_start"),
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("sum_uid").cast("bigint").alias("sum_uid"),
@@ -524,29 +483,14 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     dd = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    name = f"stream_ddww_{next(_counter)}"
-    with _state_partitions(spark):
-        q = (
-            dd.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     return (
-        spark.table(name)
+        _run_stream(dd, "stream_ddww", "append")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     )
 
 
 # ------------------------------------------------- foreachBatch sink path --
-_MB_MEMO: dict[str, str] = {}
-
-
 def _events_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events as a stream that arrives in MULTIPLE micro-batches: the fixture
     is re-written once per sf_dir (memoized, like the evolved-schema dir)
@@ -555,16 +499,11 @@ def _events_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, unlike the single-file fixture whose whole corpus lands in one
     batch. ts is normalized through tables.table, so the rewritten files
     carry a plain µs timestamp."""
-    import tempfile
-
-    from pg2parquet_spark.tables import table
-
-    if sf_dir not in _MB_MEMO:
-        out = tempfile.mkdtemp(prefix="events_mb_")
+    def build(out: str) -> None:
         ev = table(spark, sf_dir, "events")
         ev.repartition(3, F.col("user_id") % 3).write.mode("overwrite").parquet(out)
-        _MB_MEMO[sf_dir] = out
-    out = _MB_MEMO[sf_dir]
+
+    out, _ = memo_tmpdir("events_mb", sf_dir, populate=build)
     schema = spark.read.parquet(out).schema
     return (
         spark.readStream.schema(schema)
@@ -593,10 +532,6 @@ FROM events GROUP BY user_id
     "exactly (integer cents — no float accumulation drift).",
 )
 def stream_foreachbatch_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from pg2parquet_spark.tmpdirs import memo_tmpdir
-
     ev = _events_stream_multibatch(spark, sf_dir)
     # the sink dir is memoized (no per-invocation mkdtemp) but must start
     # EMPTY every run — the stream appends batch-stamped partials, and a
@@ -620,12 +555,7 @@ def stream_foreachbatch_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink_dir)
         )
 
-    with _state_partitions(spark):
-        q = ev.writeStream.foreachBatch(write_partials).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _run_stream(ev, foreach_batch=write_partials)
     partials = spark.read.parquet(sink_dir)
     return partials.groupBy("user_id").agg(
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -694,20 +624,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     ).select("user_id", (F.col("purchase_ts").isNull()).alias("expired"))
-    name = f"stream_louter_{next(_counter)}"
-    with _state_partitions(spark):
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     return (
-        spark.table(name)
+        _run_stream(pairs, "stream_louter", "append")
         .groupBy("user_id")
         .agg(
             F.sum((~F.col("expired")).cast("bigint")).cast("bigint").alias("n_pairs"),
@@ -756,14 +674,11 @@ FROM assign WHERE rn = 1 GROUP BY cid
     "count — is bit-identical to the batch oracle: streaming == batch.",
 )
 def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pg2parquet_spark.operators.similarity import (
         CENTROID_FILTER,
         _N_CENTROIDS,
         dot_col,
     )
-    from pg2parquet_spark.tmpdirs import memo_tmpdir
 
     static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     stream_dir, _ = memo_tmpdir(
@@ -801,9 +716,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = assigned.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assigned")
     )
-    name = f"stream_ivf_{next(_counter)}"
-    _run_to_memory(agg, name)
-    return spark.table(name).select(
+    return _run_stream(agg, "stream_ivf").select(
         "cid", F.col("n_assigned").cast("bigint").alias("n_assigned")
     )
 

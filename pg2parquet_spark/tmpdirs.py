@@ -1,17 +1,15 @@
 """Process-lifetime memoized temp dirs for fixture-writing queries.
 
-Ten registered queries build an on-disk fixture (a streaming landing dir, a
-partitioned/bucketed/z-ordered layout, a sink output) as part of their
-contract. Before r7 each invocation called ``tempfile.mkdtemp`` — every
-selfcheck/scaleprobe/plan sweep leaked a fresh /tmp directory per query per
-pass (r5/r6 review item). The fixtures are deterministic per ``sf_dir`` (or
-per (kind, sf_dir) key), so the directory is memoized for the life of the
-process, mirroring the ``_EVO_MEMO``/``_MB_MEMO`` pattern those modules
-already used: first call creates and populates, later calls reuse. Queries
-whose write IS the behavior under test (sink_roundtrip, layout writes)
-still re-write every invocation — into the SAME directory with
-mode("overwrite") — so the end-to-end write path stays exercised without
-directory churn.
+Registered queries build on-disk fixtures (a streaming landing dir, an
+evolved-schema dir, a partitioned/bucketed/z-ordered layout, a sink
+output) as part of their contract. The fixtures are deterministic per
+``sf_dir`` (or per (kind, sf_dir) key), so :func:`memo_tmpdir` is the one
+place that makes their directories: the first call creates and populates
+one, later calls in the process reuse it, and no selfcheck or plan sweep
+leaks a fresh /tmp directory per query per pass. Queries whose write IS
+the behavior under test (sink_roundtrip, layout writes) still re-write
+every invocation — into the SAME directory with mode("overwrite") — so the
+end-to-end write path stays exercised without directory churn.
 
 Corpus dirs are immutable in this harness; a production deployment would
 key the memo by snapshot id.

@@ -292,12 +292,11 @@ def test_read_refuses_split_arguments_without_a_partition_column(spark):
                         lower_bound=1, upper_bound=100, num_partitions=n)
 
 
-def test_copy_row_blocks_keep_rows_whole(monkeypatch):
+def test_copy_row_blocks_keep_rows_whole():
     """The COPY decoder cuts its stream only between rows: a newline or a
     quote inside a quoted field never ends a block, and a row longer than a
-    block arrives whole, whatever the block size."""
-    import io
-
+    block arrives whole, whatever the size of the chunks psql's stdout is
+    read in."""
     from pg2parquet_spark.sources import pgcopy
 
     def pg_csv(v):
@@ -311,8 +310,8 @@ def test_copy_row_blocks_keep_rows_whole(monkeypatch):
     rows = [(str(i), v) for i, v in enumerate(values)]
     raw = "".join(f"{i},{pg_csv(v)}\n" for i, v in rows).encode()
     for block in (1, 2, 3, 5, 8, 13, 64, 1 << 20):
-        monkeypatch.setattr(pgcopy, "_BLOCK", block)
-        blocks = list(pgcopy._row_blocks(io.BytesIO(raw)))
+        chunks = (raw[i : i + block] for i in range(0, len(raw), block))
+        blocks = list(pgcopy._row_blocks(chunks))
         assert b"".join(blocks) == raw
         got = [r for b in blocks for r in zip(*pgcopy._decode(b, ["i", "v"]).to_pydict().values())]
         assert got == rows, block
@@ -502,6 +501,21 @@ def test_cli_options_come_from_the_given_flags(spark, monkeypatch):
         ExportOptions(),
         ExportOptions(numeric_handling="string", partition_by=("a", "b")),
     ]
+
+
+def test_cli_refuses_lzo_before_starting_spark(monkeypatch):
+    """An unsupported codec is refused when the options are built, before
+    the CLI starts Spark or probes PostgreSQL."""
+    from pg2parquet_spark import session
+    from pg2parquet_spark.cli import build_parser, run_export
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    args = build_parser().parse_args(["export", "-o", "x", "-t", "t", "--compression", "lzo"])
+    with pytest.raises(ValueError, match="not supported by Spark"):
+        run_export(args)
 
 
 def test_cli_rejects_query_and_table():
@@ -809,6 +823,15 @@ def test_float16_columns_require_float16_mode():
     """Nor are the columns: under float32 nothing would narrow them."""
     with pytest.raises(ValueError, match="would be ignored"):
         ExportOptions(float16_columns=("v",))
+
+
+def test_float16_export_to_an_unopenable_scheme_is_refused_before_writing(spark):
+    """pyarrow opens no ``s3a://`` filesystem, so the float16 pass could not
+    finish there: the export refuses the path before any write job."""
+    df = spark.createDataFrame([(1, 1.5)], "id long, v float")
+    opts = ExportOptions(float16_handling="float16", float16_columns=("v",))
+    with pytest.raises(ValueError, match="cannot narrow files under s3a://"):
+        export(df, "s3a://bucket/out", opts, quiet=True)
 
 
 def test_progress_reporter_emits_during_write(spark, sf_dir, tmp_path):
@@ -1409,7 +1432,9 @@ def test_fixture_queries_reuse_tmpdirs_across_invocations(spark):
         "stream_dedup_exact",        # docs_stream symlink dir
         "stream_ivf_assign",         # emb_stream symlink dir
         "stream_late_data",          # 3-batch landing dir (+ reaped staging)
-        "stream_foreachbatch_partials",  # memoized sink dir, cleared per run
+        "stream_foreachbatch_partials",  # memoized sink dir, cleared per run,
+                                         # and the 3-file events_mb dir
+        "source_schema_evolution",   # evolved two-schema dir
         "layout_partition_prune",
         "layout_zorder_cluster",
         "sink_roundtrip",
@@ -1433,7 +1458,8 @@ def test_fixture_queries_reuse_tmpdirs_across_invocations(spark):
         if d.startswith(
             (
                 "events_stream_", "docs_stream_", "events_late_",
-                "fb_partials_", "pg2parquet_part_", "pg2parquet_zorder_",
+                "fb_partials_", "events_mb_", "pg2parquet_evo_",
+                "pg2parquet_part_", "pg2parquet_zorder_",
                 "pg2parquet_sink_", "pg2parquet_src_",
             )
         )

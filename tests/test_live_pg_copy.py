@@ -33,6 +33,8 @@ Wire-proven here (vs the string/fixture unit tests):
 from __future__ import annotations
 
 import dataclasses
+import glob
+import json
 import os
 import re
 import shutil
@@ -234,18 +236,57 @@ def test_describe_types_through_typmods_and_domains(spark, live_pg):
     assert df.filter(F.col("s").isNull()).count() == 1
 
 
+def test_timestamptz_exports_as_utc_adjusted_int64_micros(spark, live_pg, tmp_path):
+    """A ``timestamptz`` column is written as the reference writes it:
+    INT64 ``Timestamp(isAdjustedToUTC=true, MICROS)``, which DuckDB reads as
+    ``TIMESTAMP WITH TIME ZONE``, holding PG's own epoch to the µs, before
+    1970 and NULL included."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg2parquet_spark.export import export
+    from pg2parquet_spark.sources import pgcopy
+
+    b"".join(pgcopy._psql(pgcopy.psql_command(live_pg), ["-c", (
+        "DROP TABLE IF EXISTS tstz; CREATE TABLE tstz (id int, ts timestamptz); "
+        "INSERT INTO tstz VALUES (1, '2024-03-15 12:34:56.789012+02'), "
+        "(2, '1969-07-20 20:17:40.000001+00'), (3, '1901-12-13 20:45:52.123456-05'), "
+        "(4, NULL)"
+    )]))
+    out = str(tmp_path / "tstz")
+    export(pgcopy.read(spark, live_pg, table="tstz"), out, quiet=True)
+    for f in glob.glob(f"{out}/*.parquet"):
+        col = pq.ParquetFile(f).schema.column(1)
+        kind = json.loads(col.logical_type.to_json())
+        assert col.physical_type == "INT64"
+        assert (kind["Type"], kind["isAdjustedToUTC"], kind["timeUnit"]) == (
+            "Timestamp", True, "microseconds"
+        )
+    ((duck,),) = duckdb.sql(f"SELECT typeof(ts) FROM read_parquet('{out}/*.parquet') LIMIT 1").fetchall()
+    assert duck == "TIMESTAMP WITH TIME ZONE"
+    back = pq.read_table(out)
+    got = dict(zip(back["id"].to_pylist(), back["ts"].cast(pa.int64()).to_pylist()))
+    truth = pgcopy.run_sql(
+        live_pg, "SELECT id, (extract(epoch FROM ts) * 1000000)::bigint FROM tstz"
+    )
+    assert got == {int(i): us and int(us) for i, us in truth}
+    assert got[2] < 0 and got[4] is None
+
+
 def test_read_runs_one_driver_psql(spark, live_pg, monkeypatch):
     """A ``table=`` and a ``query=`` read each start exactly one psql on
     the driver: the describe probe."""
     from pg2parquet_spark.sources import pgcopy
 
-    calls, real_run = [], subprocess.run
+    calls = []
 
-    def run(argv, *a, **k):
-        calls.append(argv[0])
-        return real_run(argv, *a, **k)
+    class Popen(subprocess.Popen):  # subprocess.run spawns through it too
+        def __init__(self, argv, *a, **k):
+            calls.append(argv[0])
+            super().__init__(argv, *a, **k)
 
-    monkeypatch.setattr(subprocess, "run", run)
+    monkeypatch.setattr(subprocess, "Popen", Popen)
     pgcopy.read(spark, live_pg, table="plain")
     pgcopy.read(spark, live_pg, query="SELECT id FROM plain")
     assert calls == ["psql", "psql"]
@@ -290,9 +331,9 @@ def test_copy_text_ignores_the_sessions_text_settings(spark, live_pg):
         "%20-c%20IntervalStyle%3Dsql_standard"
     )
     style = "SELECT current_setting('DateStyle'), current_setting('extra_float_digits')"
-    assert pgcopy._text_rows(pgcopy._run_psql(pgcopy.psql_command(conn), [
+    assert pgcopy._text_rows(b"".join(pgcopy._psql(pgcopy.psql_command(conn), [
         "-t", "--csv", "-c", style,
-    ])) == [("SQL, DMY", "0")]
+    ]))) == [("SQL, DMY", "0")]
 
     def rows(c):
         return sorted(pgcopy.read(spark, c, table="plain").collect())

@@ -1324,6 +1324,35 @@ def test_stream_state_partition_scope_restores_session_conf(spark, sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
 
+def test_events_stream_reads_a_nanos_corpus(spark, tmp_path):
+    """A corpus whose events.ts is parquet TIMESTAMP(NANOS) streams through
+    the nanos-as-long branch of tables.events_ts: the stream's ts are the
+    same instants as the batch table's, and as the nanos written, to the µs."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg2parquet_spark.streaming import queries as sq
+
+    base = dt.datetime(2024, 3, 10, 23, 59, 59, tzinfo=dt.timezone.utc)
+    nanos = [int(base.timestamp()) * 10**9 + k * 60_123_456_000 for k in range(-2, 3)]
+    nanos.append(-86_400_000_001_000)  # before 1970, with a µs component
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(nanos)), pa.int64()),
+        "ts": pa.array(nanos, pa.timestamp("ns")),
+    }), str(tmp_path / "events.parquet"))
+    sf = str(tmp_path)
+    got = sq._run_stream(sq._events_stream(spark, sf), "nanos_probe", "append")
+    assert dict(got.dtypes)["ts"] == "timestamp"
+    stream = {r.event_id: r.us for r in got.select("event_id", F.unix_micros("ts").alias("us")).collect()}
+    batch = table(spark, sf, "events").select(
+        "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
+    )
+    assert stream == {r.event_id: r.us for r in batch.collect()}
+    assert stream == {i: ns // 1000 for i, ns in enumerate(nanos)}
+
+
 def test_hll_rollup_merge_consistency(spark, sf_dir):
     """Register-merge property: the 'ALL' row must equal the estimate from
     scratch over all events (cell-wise MAX commutes with union), and every
@@ -1407,12 +1436,7 @@ def test_multibatch_fixture_delivers_multiple_batches(spark, sf_dir):
     def count_batch(df, bid):
         seen.append((bid, df.count()))
 
-    with sq._state_partitions(spark):
-        q = ev.writeStream.foreachBatch(count_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    sq._run_stream(ev, foreach_batch=count_batch)
     assert len(seen) >= 2, seen
     assert sum(n for _, n in seen) == load(spark, sf_dir, "events").count()
     # residue-hash collisions can leave one of the 3 files empty; the fixture

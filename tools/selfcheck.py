@@ -18,13 +18,7 @@ import math
 import os
 import sys
 
-import duckdb
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 
 def norm_cell(v) -> str:
@@ -69,6 +63,7 @@ def main() -> int:
     filters = sys.argv[1:]
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
+    from pg2parquet_spark.oracle import duckdb_connection
     from pg2parquet_spark.session import get_spark
 
     spark = get_spark(app_name="selfcheck")
@@ -83,40 +78,6 @@ def main() -> int:
     spark.conf.set("spark.sql.codegen.fallback", "false")
     qs = entry.queries()
     oracles = entry.oracle_sql()
-
-    def fresh_con():
-        # ONE DuckDB connection PER QUERY, not per run (r11): the r11
-        # full-registry run showed a heavy oracle (the 12-chain mt12
-        # recall eval) exhausting the shared connection's buffer manager
-        # and POISONING it — every later query errored "bad allocation"
-        # even though each passes alone. Per-query connections mirror
-        # pg2parquet_spark.oracle.run_compare (the driver-style compare)
-        # and make oracle failures independent. Threads are capped so a
-        # many-branch plan's per-operator reservations stay bounded
-        # (shared constant with the driver-style compare harness).
-        from pg2parquet_spark.oracle import ORACLE_DUCKDB_THREADS
-
-        c = duckdb.connect()
-        c.execute(f"SET threads TO {ORACLE_DUCKDB_THREADS}")
-        for t in TABLES:
-            # tolerate partial corpora (the synth scaling dirs carry only
-            # the tables their probe needs); queries over a missing table
-            # fail loudly at execution, which is the right place
-            path = f"{SF_DIR}/{t}.parquet"
-            if not os.path.exists(path):
-                continue
-            # Spark-written corpora (the synth scaling dirs) are parquet
-            # DIRECTORIES of part files; driver testdata are single files
-            if os.path.isdir(path):
-                path = f"{path}/*.parquet"
-            c.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-        return c
-
-    for t in TABLES:
-        if not os.path.exists(f"{SF_DIR}/{t}.parquet"):
-            print(f"NOTE  {t}.parquet absent in {SF_DIR}; view skipped")
 
     names = [n for n in sorted(qs) if not filters or any(f in n for f in filters)]
     failures = []
@@ -136,7 +97,10 @@ def main() -> int:
             sdf = qs[name](spark, SF_DIR)
             s_rows = [tuple(r) for r in sdf.collect()]
             s_cols = sdf.columns
-            con = fresh_con()
+            # ONE DuckDB connection PER QUERY, as run_compare opens: a heavy
+            # oracle can exhaust a shared connection's buffer manager and
+            # poison it for every later query ("bad allocation")
+            con = duckdb_connection(SF_DIR)
             try:
                 rel = con.execute(oracles[name])
                 d_cols = [d[0] for d in rel.description]
