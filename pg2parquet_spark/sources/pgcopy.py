@@ -19,15 +19,20 @@ Scale design:
   consumer stops early or fails.
 - **Arrow batches**: the executor cuts the COPY stream into blocks of
   whole rows (a row of any length fits), decodes each with ``pyarrow.csv``
-  into text columns and hands the batches to the JVM (``mapInArrow``).
-  `_cast_plan` types them JVM-side in one codegen'd projection.
+  and hands the batches to the JVM (``mapInArrow``). A ``table=`` read's
+  integer, float, boolean, date and timestamp columns leave the Python
+  worker typed, each value parsed once (as the reference's ``myfrom.rs``
+  does). `_cast_plan` types what is left JVM-side in one codegen'd
+  projection: ``numeric``, and the temporal text of a block pyarrow refuses
+  (BC, past 9999, ``infinity``, a seconds-precision UTC offset).
 - **NULL fidelity**: COPY's CSV NULL is an unquoted empty field, while an
   empty string goes out quoted (``""``). The decoder reads only unquoted
   empty fields as NULL, so NULL and ``''`` stay distinct with no sentinel.
 - **Pinned text**: every COPY session (each task's and :func:`run_sql`'s)
-  first sets ``datestyle = ISO``, ``intervalstyle = postgres`` and
-  ``extra_float_digits = 3``, so the text a server, database, role or URL
-  ``options`` would render otherwise never reaches `_cast_plan` or Parquet.
+  first sets ``datestyle = ISO``, ``intervalstyle = postgres``,
+  ``extra_float_digits = 3`` and ``bytea_output = hex``, so the text a
+  server, database, role or URL ``options`` would render otherwise never
+  reaches the decoder, `_cast_plan` or Parquet.
 - **One schema probe**: before the scan the driver asks PostgreSQL to
   describe the statement it will COPY (`_describe`), as the reference
   compiles its schema from ``client.prepare(query)`` →
@@ -61,7 +66,7 @@ from urllib.parse import unquote
 
 import pyarrow as pa
 import pyarrow.csv as pacsv
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -204,10 +209,12 @@ def psql_command(conn: PostgresConnection) -> tuple[list[str], dict[str, str]]:
 def _copy(sql: str) -> list[str]:
     """psql's args for a COPY in PG's default CSV dialect (NULL is an
     unquoted empty field), after a ``-c`` that pins the session's text
-    settings as pg_dump does: `_cast_plan` reads ISO dates, and a float
-    keeps every digit only with extra_float_digits >= 1 (0 before PG 12)."""
+    settings as pg_dump does: the decoder reads ISO dates, a float keeps
+    every digit only with extra_float_digits >= 1 (0 before PG 12), and
+    bytea goes out as hex, never as ``escape``'s octal."""
     return [
-        "-c", "SET datestyle = ISO; SET intervalstyle = postgres; SET extra_float_digits = 3",
+        "-c", "SET datestyle = ISO; SET intervalstyle = postgres; "
+        "SET extra_float_digits = 3; SET bytea_output = hex",
         "-c", f"COPY {_subquery(sql)} TO STDOUT (FORMAT csv)",
     ]
 
@@ -219,13 +226,18 @@ _PARSE = pacsv.ParseOptions(newlines_in_values=True, ignore_empty_lines=False)
 _BLOCK = 1 << 20
 
 
-def _decode(rows: bytes, names: list[str]) -> pa.Table:
-    """Decode whole CSV rows into text columns ``names`` as one pyarrow
-    block: only an unquoted empty field is NULL.
+def _decode(
+    rows: bytes, names: list[str], types: dict[str, pa.DataType] | None = None
+) -> pa.Table:
+    """Decode whole CSV rows into columns ``names`` as one pyarrow block:
+    a column in ``types`` parses as that Arrow type (a boolean from PG's
+    ``t``/``f``), any other as text, and only an unquoted empty field is
+    NULL.
 
     Single-threaded: a threaded pyarrow CSV read in the driver can abort
     its interpreter at exit (seen with numpy loaded).
     """
+    types = types or {}
     return pacsv.read_csv(
         pa.BufferReader(rows),
         read_options=pacsv.ReadOptions(
@@ -233,12 +245,41 @@ def _decode(rows: bytes, names: list[str]) -> pa.Table:
         ),
         parse_options=_PARSE,
         convert_options=pacsv.ConvertOptions(
-            column_types={name: pa.string() for name in names},
+            column_types={name: types.get(name, pa.string()) for name in names},
             null_values=[""],
+            true_values=["t"],
+            false_values=["f"],
             strings_can_be_null=True,
             quoted_strings_can_be_null=False,
         ),
     )
+
+
+def _decode_typed(
+    rows: bytes, names: list[str], types: dict[str, pa.DataType], texts: dict[str, str]
+) -> pa.Table:
+    """One block of a typed read: columns ``names`` decoded per ``types``,
+    then a text companion per temporal column (``texts`` maps each to its
+    companion's name).
+
+    pyarrow refuses some temporal text a JVM cast reads: a BC date, a year
+    past 9999, a UTC offset with seconds (a zone's local mean time, such as
+    Amsterdam's +00:19:32 in 1900), ``infinity``. A block it refuses
+    decodes again with its temporal columns as text; their typed columns
+    go out NULL and the text goes to the companions, for `_cast_plan`. In
+    every other block the companions are NULL.
+    """
+    try:
+        table, refused = _decode(rows, names, types), False
+    except pa.ArrowInvalid:
+        kept = {name: t for name, t in types.items() if name not in texts}
+        table, refused = _decode(rows, names, kept), True
+    n = table.num_rows
+    typed = [
+        pa.nulls(n, types[name]) if refused and name in texts else table[name] for name in names
+    ]
+    text = [table[name] if refused else pa.nulls(n, pa.string()) for name in texts]
+    return pa.Table.from_arrays(typed + text, names=names + list(texts.values()))
 
 
 def _row_end(data: bytes, quoted: bool) -> int:
@@ -362,20 +403,24 @@ def _describe(command: tuple[list[str], dict[str, str]], query: str) -> list[tup
     return rows[1:]  # type: ignore[return-value]
 
 
-# format_type name, typmod stripped → Spark type. Everything absent from this
-# map (arrays, enums, ranges, composites, varchar, ...) transports as text,
-# which is what the exotic rewrite path wants — the typemap parsers take it
-# from there. ``numeric`` is typed by the typemap's decimal conversion.
-_PG_TO_SPARK: dict[str, str] = {
-    "smallint": "smallint",
-    "integer": "int",
-    "bigint": "bigint",
-    "real": "float",
-    "double precision": "double",
-    "boolean": "boolean",
-    "date": "date",
-    "timestamp without time zone": "timestamp_ntz",
-    "timestamp with time zone": "timestamp",
+# format_type name, typmod stripped → (the Arrow type pyarrow's CSV decoder
+# parses on the executor, the Spark type mapInArrow declares for it): these
+# columns leave the Python worker typed. Everything absent from this map
+# transports as text. ``numeric`` is typed JVM-side by the typemap's decimal
+# conversion: pyarrow 16.1's decimal128(38,18) parse wraps 1e30 silently and
+# takes 1e20, which that type cannot hold. Arrays, enums, ranges, composites,
+# varchar, ... are what the exotic rewrite path wants as text: the typemap
+# parsers take it from there.
+_TYPED: dict[str, tuple[pa.DataType, T.DataType]] = {
+    "smallint": (pa.int16(), T.ShortType()),
+    "integer": (pa.int32(), T.IntegerType()),
+    "bigint": (pa.int64(), T.LongType()),
+    "real": (pa.float32(), T.FloatType()),
+    "double precision": (pa.float64(), T.DoubleType()),
+    "boolean": (pa.bool_(), T.BooleanType()),
+    "date": (pa.date32(), T.DateType()),
+    "timestamp without time zone": (pa.timestamp("us"), T.TimestampNTZType()),
+    "timestamp with time zone": (pa.timestamp("us", "UTC"), T.TimestampType()),
 }
 _TYPMOD = re.compile(r"\(\d+(,\d+)?\)")
 
@@ -425,10 +470,10 @@ def read(
     The driver runs one ``psql`` probe before the scan, for both modes:
     `_describe` of the statement it will COPY. Each task then streams its
     range's COPY through the same runner, `_psql`. ``table=`` reads return
-    typed columns: `_cast_plan` types plain scalars and ``numeric``
-    JVM-side, and everything else stays text for the typemap parsers.
-    ``query=`` reads take only the column names, so every column arrives
-    as text.
+    typed columns: the executor's decoder types the `_TYPED` scalars,
+    `_cast_plan` types ``numeric`` and refused temporal text JVM-side, and
+    everything else stays text for the typemap parsers. ``query=`` reads
+    take only the column names, so every column arrives as text.
     """
     if (query is None) == (table is None):
         raise ValueError("exactly one of query= or table= must be given")
@@ -459,42 +504,57 @@ def read(
     else:
         part_queries = [query]
 
+    cols = [(c, _TYPMOD.sub("", t)) for c, t in cols]
     names = [c for c, _ in cols]
-    text_schema = T.StructType([T.StructField(c, T.StringType()) for c in names])
+    if repeated := sorted({c for c in names if names.count(c) > 1}):
+        raise ValueError(f"column names {repeated} repeat (Spark needs them unique): {query}")
+    types = {c: _TYPED[t][0] for c, t in cols if t in _TYPED}
+    # temporal column → its hidden text companion, named longer than every
+    # column so that it clashes with none
+    width = max(map(len, names)) + 1
+    texts = {c: f"{c} text".ljust(width, "_") for c, t in types.items() if pa.types.is_temporal(t)}
+    schema = T.StructType(
+        [T.StructField(c, _TYPED[t][1] if t in _TYPED else T.StringType()) for c, t in cols]
+        + [T.StructField(text, T.StringType()) for text in texts.values()]
+    )
 
     def _fetch(batches):  # executor side: each range's COPY as Arrow batches
         for batch in batches:
             for part_id in batch.column("id").to_pylist():
                 with closing(_psql(command, _copy(part_queries[part_id]))) as chunks:
                     for rows in _row_blocks(chunks):
-                        yield from _decode(rows, names).to_batches()
+                        yield from _decode_typed(rows, names, types, texts).to_batches()
 
     # one range per task, no Exchange: range i lands alone in partition i
     n = len(part_queries)
-    raw = spark.range(0, n, 1, n).mapInArrow(_fetch, schema=text_schema)
-    return raw.select(*[_cast_plan(c, t) for c, t in cols])
+    raw = spark.range(0, n, 1, n).mapInArrow(_fetch, schema=schema)
+    # only numeric and temporal columns get an expression: each costs py4j calls
+    plans = {c: _cast_plan(c, t, texts.get(c)) for c, t in cols if t == "numeric" or c in texts}
+    return raw.withColumns(plans).drop(*texts.values()) if plans else raw
 
 
-def _cast_plan(col: str, pg_type: str):
-    """JVM-side typing of transported text — codegen'd, never Python.
-    ``numeric`` NaN and overflow become NULL (the reference's decimal mode),
-    a BC date keeps PG's day, and a date or timestamp no cast takes
+def _ref(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")  # whole: a dot is no field access
+
+
+def _cast_plan(col: str, pg_type: str, companion: str | None) -> Column:
+    """JVM-side typing of what the executor leaves untyped — codegen'd,
+    never Python. ``numeric`` text goes through the decimal(38,18)
+    conversion: NaN and overflow become NULL (the reference's decimal mode).
+    A date or timestamp arrives typed, or NULL with its value in the
+    ``companion`` column where pyarrow refused the block; that text is cast
+    here: a BC date keeps PG's day, and a value no cast takes
     (``infinity``, BC timestamps) fails the read naming the column."""
-    text = F.col("`" + col.replace("`", "``") + "`")  # whole: a dot is no field access
-    pg_type = _TYPMOD.sub("", pg_type)
     if pg_type == "numeric":
-        return numeric_to_decimal(text, 38, 18).alias(col)
-    spark_t = _PG_TO_SPARK.get(pg_type)
-    if spark_t is None:
-        return text
-    if spark_t not in ("date", "timestamp_ntz", "timestamp"):
-        return text.cast(spark_t).alias(col)  # PG's text of these always casts
+        return numeric_to_decimal(_ref(col), 38, 18)
+    spark_t = _TYPED[pg_type][1]
+    text = _ref(companion)
     typed = text.try_cast(spark_t)
-    if spark_t == "date":  # a cast reads PG's "YYYY-MM-DD BC" as AD
+    if pg_type == "date":  # a cast reads PG's "YYYY-MM-DD BC" as AD
         typed = F.when(text.endswith(" BC"), F.to_date(text, "yyyy-MM-dd G")).otherwise(typed)
     refused = F.raise_error(F.concat(
         F.lit(f"column {col!r}: cannot convert PostgreSQL {pg_type} value '"),
-        text, F.lit(f"' to {spark_t}"),
+        text, F.lit(f"' to {spark_t.simpleString()}"),
     ))
     # coalesce evaluates the cast once; a CASE over it would cast twice
-    return F.coalesce(typed, F.when(text.isNotNull(), refused)).alias(col)
+    return F.coalesce(_ref(col), typed, F.when(text.isNotNull(), refused))

@@ -320,6 +320,44 @@ def test_copy_row_blocks_keep_rows_whole():
     assert pgcopy._text_rows(b'x\n""\n\n') == [("x",), ("",), (None,)]
 
 
+def test_copy_typed_blocks_ship_refused_temporal_text():
+    """A block whose date text pyarrow refuses (``infinity``, the year
+    10000) ships every temporal column as text in its companion, NULL in
+    the typed column, and its other columns still typed. An ordinary
+    block's companions are all NULL."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from pg2parquet_spark.sources import pgcopy
+
+    names = ["id", "d", "t", "s"]
+    types = {"id": pa.int64(), "d": pa.date32(), "t": pa.timestamp("us", "UTC")}
+    texts = {"d": "d text", "t": "t text"}
+    schema = pa.schema([
+        ("id", pa.int64()), ("d", pa.date32()), ("t", pa.timestamp("us", "UTC")),
+        ("s", pa.string()), ("d text", pa.string()), ("t text", pa.string()),
+    ])
+    ordinary = pgcopy._decode_typed(
+        b"1,2024-01-02,2024-01-02 03:04:05+02,a\n2,,,\n", names, types, texts
+    )
+    assert ordinary.schema == schema
+    assert ordinary["d"].to_pylist() == [dt.date(2024, 1, 2), None]
+    assert ordinary["t"].to_pylist() == [
+        dt.datetime(2024, 1, 2, 1, 4, 5, tzinfo=dt.timezone.utc), None
+    ]
+    assert ordinary["d text"].null_count == ordinary["t text"].null_count == 2
+    for odd in ("infinity", "10000-01-01"):
+        rows = f"1,2024-01-02,2024-01-02 03:04:05+02,a\n2,{odd},,\n3,,,b\n".encode()
+        block = pgcopy._decode_typed(rows, names, types, texts)
+        assert block.schema == schema
+        assert block["id"].to_pylist() == [1, 2, 3]
+        assert block["s"].to_pylist() == ["a", None, "b"]
+        assert block["d"].null_count == block["t"].null_count == 3
+        assert block["d text"].to_pylist() == ["2024-01-02", odd, None]
+        assert block["t text"].to_pylist() == ["2024-01-02 03:04:05+02", None, None]
+
+
 def test_rewrite_query_for_exotics():
     """COPY already renders every column as its type's text: the rewrite
     casts nothing and only adds each multidim array's dims after it."""

@@ -88,6 +88,16 @@ def test_copy_table_scan_transports_typed_rows(spark, live_pg):
     assert types["created"] == "date"
     row = df.filter(F.col("id") == 7).collect()[0]
     assert row.name == "row_7" and row.score == 3.5
+    # the executor ships these typed: MapInArrow already outputs them, and
+    # the projection above it casts none of them from text
+    project = df._jdf.queryExecution().optimizedPlan()
+    scan = project.child()
+    assert scan.nodeName() == "MapInArrow", scan.toString()
+    out = [scan.output().apply(i) for i in range(scan.output().size())]
+    shipped = {a.name(): a.dataType().simpleString() for a in out}
+    assert (shipped["id"], shipped["score"], shipped["created"]) == ("bigint", "double", "date")
+    projection = project.toString().partition("\n")[0]
+    assert not re.search(r"cast\((id|score|created)#", projection), projection
 
 
 def test_copy_partitioned_read_preserves_all_rows(spark, live_pg):
@@ -328,19 +338,30 @@ def test_copy_text_ignores_the_sessions_text_settings(spark, live_pg):
     conn = pgcopy.PostgresConnection(
         url="postgres://postgres@%2Ftmp:55432/postgres?options="
         "-c%20DateStyle%3DSQL%2CDMY%20-c%20extra_float_digits%3D0"
-        "%20-c%20IntervalStyle%3Dsql_standard"
+        "%20-c%20IntervalStyle%3Dsql_standard%20-c%20bytea_output%3Descape"
     )
-    style = "SELECT current_setting('DateStyle'), current_setting('extra_float_digits')"
+    style = (
+        "SELECT current_setting('DateStyle'), current_setting('extra_float_digits'), "
+        "current_setting('bytea_output')"
+    )
     assert pgcopy._text_rows(b"".join(pgcopy._psql(pgcopy.psql_command(conn), [
         "-t", "--csv", "-c", style,
-    ]))) == [("SQL, DMY", "0")]
+    ]))) == [("SQL, DMY", "0", "escape")]
 
     def rows(c):
         return sorted(pgcopy.read(spark, c, table="plain").collect())
 
     assert rows(conn) == rows(live_pg)
-    got = pgcopy.run_sql(conn, "SELECT DATE '2024-03-15', 1.2345678::real, interval '1 year 2 mons'")
-    assert got == [("2024-03-15", "1.2345678", "1 year 2 mons")]
+    got = pgcopy.run_sql(
+        conn,
+        "SELECT DATE '2024-03-15', 1.2345678::real, interval '1 year 2 mons', '\\x00ff41'::bytea",
+    )
+    assert got == [("2024-03-15", "1.2345678", "1 year 2 mons", "\\x00ff41")]
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS bytea_text; "
+        "CREATE TABLE bytea_text AS SELECT '\\x00ff41'::bytea AS b"
+    ))
+    assert [r.b for r in pgcopy.read(spark, conn, table="bytea_text").collect()] == ["\\x00ff41"]
 
 
 def test_zero_column_query_names_the_query(spark, live_pg):
@@ -350,6 +371,15 @@ def test_zero_column_query_names_the_query(spark, live_pg):
 
     with pytest.raises(ValueError, match="SELECT FROM plain"):
         pgcopy.read(spark, live_pg, query="SELECT FROM plain")
+
+
+def test_repeated_column_name_is_refused_at_read(spark, live_pg):
+    """Spark addresses columns by name: a query that returns one name twice
+    is refused before any task runs, naming it."""
+    from pg2parquet_spark.sources import pgcopy
+
+    with pytest.raises(ValueError, match=r"\['a'\] repeat"):
+        pgcopy.read(spark, live_pg, query="SELECT 1 AS a, 2 AS a, 3 AS b")
 
 
 def test_exotic_rewrite_roundtrip_live(spark, live_pg):
@@ -739,6 +769,105 @@ def test_bc_dates_keep_the_day_pg_stores(spark, live_pg, tmp_path):
     back = pq.read_table(out)
     days = back["d"].cast(pa.int32()).to_pylist()
     assert dict(zip(back["id"].to_pylist(), days)) == truth
+
+
+def test_typed_scalars_read_to_pg_truth(spark, live_pg):
+    """Integers at their extremes, ``real`` and ``double precision``
+    specials and ``boolean`` read through ``table=`` to their Spark types,
+    with PG's own text and ``float4send``/``float8send`` bits."""
+    import math
+    import struct
+
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS typed_scalars; "
+        "CREATE TABLE typed_scalars (id int, s smallint, i integer, b bigint, "
+        "r real, d double precision, flag boolean); "
+        "INSERT INTO typed_scalars VALUES "
+        "(1, -32768, -2147483648, -9223372036854775808, 1.2345678, 'NaN', true), "
+        "(2, 32767, 2147483647, 9223372036854775807, 'NaN', 'Infinity', false), "
+        "(3, 0, 0, 0, '-Infinity', '-Infinity', NULL), "
+        "(4, NULL, NULL, NULL, '-0', '-0', true), "
+        "(5, -1, 1, -1, 1e-40, 5e-324, false), "
+        "(6, 1, -1, 1, NULL, 1e-310, NULL), "
+        "(7, 2, 3, 4, 3.4028235e38, NULL, NULL)"
+    ))
+    df = pgcopy.read(spark, live_pg, table="typed_scalars")
+    assert dict(df.dtypes) == {
+        "id": "int", "s": "smallint", "i": "int", "b": "bigint",
+        "r": "float", "d": "double", "flag": "boolean",
+    }
+    truth = pgcopy.run_sql(live_pg, (
+        "SELECT id, s, i, b, encode(float4send(r), 'hex'), encode(float8send(d), 'hex'), flag "
+        "FROM typed_scalars ORDER BY id"
+    ))
+
+    def same_float(fmt, value, bits):
+        if bits is None:
+            return value is None
+        want = struct.unpack(fmt, bytes.fromhex(bits))[0]
+        if math.isnan(want):
+            return math.isnan(value)
+        return struct.pack(fmt, value) == bytes.fromhex(bits)  # -0 is not 0
+
+    got = df.orderBy("id").collect()
+    assert len(got) == len(truth) == 7
+    for row, (id_, s, i, b, r, d, flag) in zip(got, truth):
+        want = [None if v is None else int(v) for v in (id_, s, i, b)]
+        assert [row.id, row.s, row.i, row.b] == want
+        assert same_float(">f", row.r, r), (row.id, row.r, r)
+        assert same_float(">d", row.d, d), (row.id, row.d, d)
+        assert row.flag == {"t": True, "f": False, None: None}[flag]
+
+
+def test_refused_temporal_text_reads_to_pg_values(spark, live_pg):
+    """Temporal text pyarrow's decoder refuses reads to PG's own value: a
+    BC date, the year 10000 as a date and as a timestamp, and a 1900
+    ``timestamptz`` that PG renders with Amsterdam's LMT offset. Ordinary
+    values in the same 1 MiB decode block, and in the blocks after it, read
+    to PG's values too."""
+    from decimal import Decimal
+
+    from pg2parquet_spark.sources import pgcopy
+
+    _psql(live_pg, (
+        "DROP TABLE IF EXISTS temporal_blocks; "
+        "CREATE TABLE temporal_blocks (id int, d date, ts timestamp, tz timestamptz, pad text); "
+        "INSERT INTO temporal_blocks SELECT g, "
+        "CASE g WHEN 2 THEN DATE '0044-03-15 BC' WHEN 3 THEN DATE '10000-01-01' "
+        "WHEN 4 THEN NULL ELSE DATE '2000-01-01' + g END, "
+        "CASE g WHEN 3 THEN TIMESTAMP '10000-01-01 00:00:00' WHEN 4 THEN NULL "
+        "ELSE TIMESTAMP '2000-01-01 00:00:00.5' + g * INTERVAL '1 hour 1.25 second' END, "
+        "CASE g WHEN 5 THEN TIMESTAMPTZ '1900-01-01 00:00:00+00' WHEN 4 THEN NULL "
+        "ELSE TIMESTAMPTZ '2000-01-01 00:00:00+00' + g * INTERVAL '7 hours 0.001 second' END, "
+        "repeat('x', 200) FROM generate_series(1, 12000) g"
+    ))
+    conn = pgcopy.PostgresConnection(
+        url="postgres://postgres@%2Ftmp:55432/postgres?options=-c%20TimeZone%3DEurope%2FAmsterdam"
+    )
+    (rendered,), = pgcopy.run_sql(conn, "SELECT tz FROM temporal_blocks WHERE id = 5")
+    assert re.search(r"[+-]\d\d:\d\d:\d\d$", rendered), rendered  # an offset pyarrow refuses
+    ((pad,),) = pgcopy.run_sql(conn, "SELECT sum(octet_length(pad)) FROM temporal_blocks")
+    assert int(pad) > 2 * pgcopy._BLOCK  # at least two decode blocks
+    truth = {
+        int(i): (
+            None if d is None else int(d),
+            *(None if e is None else int(Decimal(e) * 1_000_000) for e in (ts, tz)),
+        )
+        for i, d, ts, tz in pgcopy.run_sql(live_pg, (
+            "SELECT id, d - DATE '1970-01-01', extract(epoch FROM ts), extract(epoch FROM tz) "
+            "FROM temporal_blocks"
+        ))
+    }
+    df = pgcopy.read(spark, conn, table="temporal_blocks")
+    assert (dict(df.dtypes)["ts"], dict(df.dtypes)["tz"]) == ("timestamp_ntz", "timestamp")
+    got = df.select(
+        "id", F.unix_date("d"),
+        F.unix_micros(F.col("ts").cast("timestamp")),  # the session is UTC: the NTZ micros
+        F.unix_micros("tz"),
+    ).collect()
+    assert {r[0]: tuple(r[1:]) for r in got} == truth
 
 
 @pytest.mark.parametrize("pg_type, value", [
