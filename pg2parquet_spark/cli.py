@@ -20,6 +20,7 @@ import argparse
 import dataclasses
 import sys
 
+from pg2parquet_spark import __version__
 from pg2parquet_spark.options import (
     ARRAY_HANDLING,
     COMPRESSIONS,
@@ -35,7 +36,7 @@ from pg2parquet_spark.options import (
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="pg2parquet-spark")
-    p.add_argument("--version", action="version", version="pg2parquet-spark 0.1.0")
+    p.add_argument("--version", action="version", version=f"pg2parquet-spark {__version__}")
     sub = p.add_subparsers(dest="command", required=True)
     e = sub.add_parser("export", help="Export a table or query result to Parquet")
     e.add_argument("-o", "--output-file", required=True)
@@ -47,7 +48,7 @@ def build_parser() -> argparse.ArgumentParser:
     e.add_argument("-H", "--host")
     e.add_argument("-U", "--user")
     e.add_argument("-d", "--dbname")
-    e.add_argument("-p", "--port", type=int, default=5432)
+    e.add_argument("-p", "--port", type=int, help="default 5432")
     e.add_argument("--password")
     e.add_argument("--sslmode", choices=["disable", "prefer", "require"])
     # ours: fixture-dir source for PG-less runs
@@ -98,7 +99,7 @@ def run_export(args: argparse.Namespace) -> int:
         from pg2parquet_spark.sources import pgcopy
 
         conn = pgcopy.PostgresConnection(
-            url=args.connection, host=args.host, port=args.port,
+            url=args.connection, host=args.host, port=args.port or 5432,
             dbname=args.dbname, user=args.user, password=args.password,
             sslmode=args.sslmode,
         )
@@ -117,9 +118,30 @@ def run_export(args: argparse.Namespace) -> int:
     return 0
 
 
+# flags that only a PostgreSQL source reads, by their ``args`` attribute
+_PG_ONLY = {
+    "connection": "-c/--connection",
+    "host": "-H/--host",
+    "user": "-U/--user",
+    "dbname": "-d/--dbname",
+    "port": "-p/--port",
+    "password": "--password",
+    "sslmode": "--sslmode",
+    "partition_column": "--partition-column",
+    "lower_bound": "--lower-bound",
+    "upper_bound": "--upper-bound",
+    "num_partitions": "--num-partitions",
+}
+
+
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
     if args.command == "export":
+        if args.input_dir:
+            given = [flag for attr, flag in _PG_ONLY.items() if getattr(args, attr) is not None]
+            if given:
+                parser.error(f"{', '.join(given)} would be ignored with --input-dir")
         return run_export(args)
     if args.command == "parquet-info":
         from pg2parquet_spark.parquetinfo import parquet_info

@@ -870,11 +870,11 @@ def _exact_pair_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract the BNLJ build side already imposed, stated by the operator
     doc since r2 ("quadratic BY CONTRACT... only runnable when one side
     fits in memory") — and a mapInPandas kernel scores each corpus batch
-    against it with the dimension-ordered fold (acc += a[:,d]·b[d,:]ᵀ),
-    so every pair's sum keeps the oracle's left-assoc IEEE order
-    (the _score_bucket_blocks argument) while only thresholded survivors
-    ever become rows. Used by dedup_embedding_cosine_exact and (ids only)
-    the IVF recall evals' truth arm."""
+    against it with the dimension-ordered fold (_dot_block), so every
+    pair's sum keeps the oracle's left-assoc IEEE order while only
+    thresholded survivors ever become rows. Used by
+    dedup_embedding_cosine_exact and (ids only) the IVF recall evals'
+    truth arm."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -903,10 +903,7 @@ def _exact_pair_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             av = pdf["vec_id"].to_numpy(dtype=np.int64)
-            A = np.array(list(pdf["embedding"]), dtype=np.float64)
-            acc = np.zeros((A.shape[0], M.shape[0]))
-            for d in range(A.shape[1]):
-                acc += A[:, d : d + 1] * M[:, d][None, :]
+            acc = _dot_block(np.array(list(pdf["embedding"]), dtype=np.float64), M)
             mask = (acc >= threshold) & (av[:, None] < mv[None, :])
             ai, mi = np.nonzero(mask)
             yield pd.DataFrame(
@@ -953,7 +950,7 @@ def dedup_embedding_cosine_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFr
     # and one (tbl, pk) exchange feeds the grouped Arrow kernel that scores
     # all-rows × member blocks in numpy. Embedding bytes cross exactly ONE
     # exchange; candidate pairs exist only as matrix entries
-    # (_score_bucket_blocks; the IVF cell-block shape, r12 VERDICT #1).
+    # (_score_blocks; the IVF cell-block shape, r12 VERDICT #1).
     bk = emb.selectExpr(
         "vec_id",
         "embedding",
@@ -974,7 +971,7 @@ def dedup_embedding_cosine_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFr
                                 if m == 0
                                 else F.col(f"k{t}").bitwiseXOR(F.lit(m))
                             ).alias("pk"),
-                            F.lit(1 if m == 0 else 0).alias("pr"),
+                            F.lit(1 if m == 0 else 0).alias("member"),
                         )
                         for m in _EMB_PROBE_MASKS
                     ]
@@ -984,52 +981,63 @@ def dedup_embedding_cosine_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFr
         )
     )
     rows = bk.select("vec_id", "embedding", F.explode(ent).alias("e")).select(
-        "vec_id", "embedding", "e.tbl", "e.pk", "e.pr"
+        "vec_id", "embedding", "e.tbl", "e.pk", "e.member"
     )
     # 3-column distinct == (a_id, b_id) distinct: cos_sim is deterministic
     # per pair (fixed-order fold), collapsing multi-table/probe collisions
     # exactly like the oracle's SELECT DISTINCT
-    return _score_bucket_blocks(rows, symmetric=True).distinct()
+    return _score_blocks(rows, ("tbl", "pk"), "lt").distinct()
 
 
-def _score_bucket_blocks(rows: DataFrame, symmetric: bool) -> DataFrame:
-    """Grouped exact scorer for the LSH family (r13) — the IVF cell-block
-    shape (_score_cell_triangles / _score_cell_blocks) transplanted per the
-    r12 VERDICT: ``rows`` = (vec_id, embedding, tbl, pk, pr) emission rows,
-    one per (vector, hash table, probed bucket); ``pr`` = 1 when the row is
-    a MEMBER of the bucket it lands in (its own key — eligible to RECEIVE
-    pairs), 0 when it is probe-only. One group per (tbl, pk) scores its
-    all-rows × member dot block in numpy and emits only thresholded
+def _dot_block(A, M):
+    """acc[i, j] = A[i]·M[j], folded dimension by dimension: every entry
+    accumulates ((0.0 + t1) + t2) + … exactly like the oracle's unrolled
+    left-assoc sum, never a BLAS matmul (whose reduction order is
+    unspecified) — so equal pairs score bit-identically in every build
+    and in DuckDB. The one exact-dot core of the embedding family: the
+    block scorer, the exact arm and the IVF centroid ranking."""
+    import numpy as np
+
+    acc = np.zeros((A.shape[0], M.shape[0]))
+    for d in range(A.shape[1]):
+        acc += A[:, d : d + 1] * M[:, d][None, :]
+    return acc
+
+
+def _score_blocks(rows: DataFrame, keys: tuple[str, ...], pairing: str) -> DataFrame:
+    """Grouped exact scorer of the embedding family (r11 cell blocks, r13
+    LSH buckets): ``rows`` = (vec_id, embedding, member, *keys), one row
+    per (vector, group it lands in); ``member`` = 1 when the row is a
+    MEMBER of its group (eligible to RECEIVE pairs), 0 when it is a
+    prober only. One group per ``keys`` value scores its dot block in
+    numpy (_dot_block) and emits only thresholded (a_id, b_id, cos_sim)
     survivors — candidate pairs exist only as matrix entries, never as
-    rows.
+    rows, so shuffle and Arrow mass are the emission rows, bounded by
+    probes × candidacy caps and independent of the pair mass the groups
+    hold. The caller passes the keys its last exchange already
+    partitions by, so the scorer reuses that exchange.
 
-    Why this replaced the candidate-pair tail (_score_candidate_pairs,
-    r8-r12): every candidate pair used to ride TWO ~540 B embedding
-    attaches through shuffle-hash joins, and cross the Python boundary as
-    two embeddings per pair — at the 60k synth point that was 24.5M pairs
-    of wide rows (the un-capped form sort-spilled ~72 GB before the r7
-    caps). Here the shuffled and Arrow mass is the EMISSION rows, bounded
-    by probes × candidacy caps per vector and independent of how much pair
-    mass the buckets hold (guide §2.3 "shuffle keys/metadata, move heavy
-    bytes once", §3 join removal, §4 batch the boundary). The r9 recall
-    tier's pre-score distinct is obsolete for the same reason: cross-table
-    candidate duplication now costs duplicate matrix entries (kernel
-    FLOPs), not duplicate wide rows.
+    ``pairing``:
+    - "lt": every row × member with a.vec_id < b.vec_id — the LSH builds
+      (a pair lands in the bucket of the larger id when the smaller
+      probes it) and the symmetric IVF arms (every row a member, the
+      cell's upper triangle);
+    - "directed": prober × member, emitted as (prober, member) — the
+      incremental ingest's (new, old);
+    - "ne": prober × member with a.vec_id <> b.vec_id, emitted as (min,
+      max) — the asymmetric IVF arms, whose vectors can be both home
+      (member) and prober of one cell.
 
-    Pair semantics per group (the old per-table join, verbatim):
-    symmetric — emit (a, b) for any row a, member b with a.vec_id <
-    b.vec_id (the a_id < b_id join residual; a pair lands in the group
-    keyed by the LARGER id's bucket when the smaller probes it, exactly
-    like cand = a-explode ⋈ b-members); asymmetric (incremental ingest) —
-    emit (new, old) for prober new (pr=0) × member old (pr=1), no id
-    order. Duplicate scoring across tables/probes is exact-idempotent
-    (same dimension-ordered fold → bit-identical cos_sim), so the final
-    3-column distinct collapses exactly the duplicates the oracle's
-    SELECT DISTINCT does."""
+    Duplicate scoring across tables/probes/cells is exact-idempotent
+    (same fold → bit-identical cos_sim), so the callers' final 3-column
+    distinct collapses exactly the duplicates the oracles' SELECT
+    DISTINCT does."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+    if pairing not in ("lt", "directed", "ne"):
+        raise ValueError(f"unknown pairing {pairing!r}")
     schema = StructType(
         [
             StructField("a_id", LongType()),
@@ -1047,29 +1055,29 @@ def _score_bucket_blocks(rows: DataFrame, symmetric: bool) -> DataFrame:
     )
 
     def score(pdf):
-        mm = pdf[pdf["pr"] == 1]
-        aa = pdf if symmetric else pdf[pdf["pr"] == 0]
-        if len(mm) == 0 or len(aa) == 0 or len(pdf) < 2:
+        member = pdf["member"].to_numpy() == 1
+        mm = pdf[member]
+        aa = pdf if pairing == "lt" else pdf[~member]
+        if len(mm) == 0 or len(aa) == 0:
             return empty
-        A = np.array(list(aa["embedding"]), dtype=np.float64)
-        M = np.array(list(mm["embedding"]), dtype=np.float64)
-        # dimension-ordered fold: acc[i,j] = ((0.0 + t1) + t2) + … keeps
-        # every pair's sum in the oracle's left-assoc IEEE order while
-        # vectorizing over the block (same argument as _score_cell_blocks)
-        acc = np.zeros((A.shape[0], M.shape[0]))
-        for d in range(A.shape[1]):
-            acc += A[:, d : d + 1] * M[:, d][None, :]
+        acc = _dot_block(
+            np.array(list(aa["embedding"]), dtype=np.float64),
+            np.array(list(mm["embedding"]), dtype=np.float64),
+        )
         av = aa["vec_id"].to_numpy(dtype=np.int64)
         mv = mm["vec_id"].to_numpy(dtype=np.int64)
         mask = acc >= threshold
-        if symmetric:
+        if pairing == "lt":
             mask &= av[:, None] < mv[None, :]
+        elif pairing == "ne":
+            mask &= av[:, None] != mv[None, :]
         ai, mi = np.nonzero(mask)
-        return pd.DataFrame(
-            {"a_id": av[ai], "b_id": mv[mi], "cos_sim": acc[ai, mi]}
-        )
+        a, b = av[ai], mv[mi]
+        if pairing == "ne":
+            a, b = np.minimum(a, b), np.maximum(a, b)
+        return pd.DataFrame({"a_id": a, "b_id": b, "cos_sim": acc[ai, mi]})
 
-    return rows.groupBy("tbl", "pk").applyInPandas(score, schema)
+    return rows.groupBy(*keys).applyInPandas(score, schema)
 
 
 # ----------------------------------- corpus-adaptive embedding LSH planes --
@@ -1225,8 +1233,9 @@ def _adapt_bk_sql(offsets: tuple[int, ...] = _EMB_LSH_OFFSETS) -> str:
     # pair join (8 references) and each key column unrolls ~600 arithmetic
     # terms — inlined per reference, DuckDB re-evaluates the whole chain 8x
     # and the 4-window bkr consumer turned that into a 40 s / multi-GB
-    # oracle on a 900-row corpus. Materializing evaluates it once (exactly
-    # like the Spark side's localCheckpoint of the same narrow rows).
+    # oracle on a 900-row corpus. Materializing evaluates it once (the
+    # Spark side's signature rows have one consumer chain, so it computes
+    # them once by construction).
     return f"""par AS (SELECT {_adapt_bits_case('COUNT(*)')} AS bits FROM embeddings),
 bkf AS (SELECT vec_id, embedding, {keys} FROM embeddings),
 bk AS MATERIALIZED (SELECT vec_id, embedding, bits, {kcols} FROM bkf, par)"""
@@ -1304,7 +1313,7 @@ SELECT DISTINCT a_id, b_id, cos_sim FROM pairs WHERE cos_sim >= {_EMB_COS_THRESH
     "bits (tools/scaleprobe.py). Execution shape (r13, the IVF cell-block "
     "transplant): capped rows emit one embedding-carrying row per gated "
     "probe mask and ONE (table, bucket) exchange feeds a grouped Arrow "
-    "kernel that scores all-rows × member blocks (_score_bucket_blocks) — "
+    "kernel that scores all-rows × member blocks (_score_blocks) — "
     "candidate pairs exist only as matrix entries, so shuffle and Arrow "
     "mass are O(N·probes·emb), independent of in-bucket pair mass. "
     "RECALL CONTRACT (r9, "
@@ -1517,19 +1526,6 @@ def _recall_audit_df(
     )
 
 
-def adaptive_lsh_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_cosine_lsh. Until r12 the registered
-    form localCheckpointed its signature table (it fed 8 join sides) and
-    this twin existed to expose the truncated lineage to the plan gates
-    (r6 ADVICE: the 1-row bit-width crossJoin must never pass by
-    invisibility). The r13 grouped-scorer build is one linear pipeline
-    with a single consumer of the signature rows — no checkpoint, nothing
-    truncated — so the twin is now identical to the registered plan; kept
-    so the gates' override table stays uniform across the family (the IVF
-    precedent)."""
-    return _adaptive_lsh_build(spark, sf_dir)
-
-
 # ------------------------------------ recall-tier embedding LSH (r9) -------
 # The measured recall contract (SCALING_r09_embrecall.md) prices the primary
 # adaptive LSH honestly: flat cost buys recall 0.67/0.07/0.005 at
@@ -1603,24 +1599,6 @@ _EMB_RECALL_PROBE_BUDGET = 1 + _ADAPT_MAX_BITS + (_ADAPT_MAX_BITS * (_ADAPT_MAX_
     "bucket-audit discipline.",
 )
 def dedup_embedding_cosine_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _adaptive_lsh_build(
-        spark,
-        sf_dir,
-        offsets=_EMB_RECALL_OFFSETS,
-        bucket_cap=_EMB_RECALL_BUCKET_CAP,
-        occ_bound=_EMB_RECALL_OCC_BOUND,
-        budget=_EMB_RECALL_PROBE_BUDGET,
-    )
-
-
-def recall_lsh_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_cosine_lsh_recall — same role as
-    adaptive_lsh_plan_audit for the primary (identical to the registered
-    plan since the r13 grouped-scorer build removed the checkpoint; kept
-    for gate-table uniformity). The r9 pre-score distinct is gone for the
-    reason _score_bucket_blocks documents: candidate duplication no longer
-    rides a per-pair embedding attach, so there is nothing to dedupe
-    before the kernel."""
     return _adaptive_lsh_build(
         spark,
         sf_dir,
@@ -1819,157 +1797,71 @@ SELECT DISTINCT a_id, b_id, cos_sim FROM scored WHERE cos_sim >= {_EMB_COS_THRES
 """
 
 
+def _ivf_par(emb: DataFrame) -> DataFrame:
+    """The 1-row corpus-adaptive k of the IVF tier — the oracle's ``par``."""
+    return emb.agg(F.count("*").alias("n")).select(F.expr(_ivf_k_case("n")).alias("k"))
+
+
 def _ivf_assignments(
     spark: SparkSession,
     sf_dir: str,
-    declarative: bool = False,
-    nprobe: int | None = None,
-    with_rank: bool = False,
+    nprobe: int = _IVF_NPROBE,
     seed_rem: int = _IVF_SEED_REM,
-):
-    """(embeddings, par, asg): asg = one narrow (vec_id, cid) row per
-    (vector, probed cell) — the Spark twin of the ``_ivf_chain_sql`` CTEs.
-    Shared by the pair build and the cell audit so both derive cells from
-    identical expressions. with_rank=True adds the probe rank column
-    ``pr`` (1 = nearest cell) — consumed by the asymmetric home/probe arm,
-    whose home side is exactly pr=1; rank emission costs nothing (the
-    kernel's argmax passes ARE the ranks, the window already computes pr).
-
-    Two execution paths with a TESTED row-for-row equality contract
-    (test_ivf_arrow_assignment_matches_declarative):
-
-    - default (Arrow kernel): the N·k assignment dots run in a numpy
-      mapInPandas kernel against a broadcast centroid matrix, through the
-      shared k-tiled exact score core (_ivf_rank_cells — dimension-ordered
-      accumulation so every dot keeps the oracle's left-assoc IEEE order,
-      argmax-and-mask top-nprobe reproducing the window's ORDER BY cd
-      DESC, cid; see its docstring for the r11 cache-tiling rationale).
-      Measured on the 60k-vector synth point the HOF-fold form spent ~2/3
-      of the query in the 123M interpreted zip_with/aggregate evals; the
-      kernel vectorizes them.
-    - declarative=True: broadcast-crossJoin + WindowGroupLimit top-2,
-      kept as the pure-Catalyst reference the kernel is tested against
-      (and the form a SQL-only deployment would run)."""
+) -> DataFrame:
+    """Declarative (vec_id, cid, pr) assignments, one row per (vector,
+    probed cell), ``pr`` = probe rank (1 = nearest cell): the Spark twin
+    of the ``_ivf_chain_sql`` CTEs as broadcast-crossJoin + WindowGroupLimit
+    top-nprobe. Kept as the pure-Catalyst reference the Arrow kernel
+    (_ivf_kernel) is tested against row for row
+    (test_ivf_arrow_assignment_matches_declarative,
+    test_ivf_ranked_assignment_matches_declarative), and the form a
+    SQL-only deployment would run."""
     from pyspark.sql import Window as W
 
     from pg2parquet_spark.operators.similarity import dot_col
 
-    # resolved at CALL time (not a def-time default) so experiment probes
-    # can still patch the module constant
-    if nprobe is None:
-        nprobe = _IVF_NPROBE
     emb = table(spark, sf_dir, "embeddings")
-    par = emb.agg(F.count("*").alias("n")).select(
-        F.expr(_ivf_k_case("n")).alias("k")
+    # centroid sample: ~n/13 rows — the global row_number is a
+    # one-partition window over the SAMPLE only (bounded: ≤16384 needed
+    # of ≤ n/13 rows), never over the corpus
+    sd = (
+        emb.filter(F.expr(f"vec_id % {_IVF_SEED_MOD} = {seed_rem}"))
+        .select("vec_id", "embedding")
+        .withColumn("rn", F.row_number().over(W.orderBy("vec_id")))
     )
-    if declarative:
-        # centroid sample: ~n/13 rows — the global row_number is a
-        # one-partition window over the SAMPLE only (bounded: ≤16384 needed
-        # of ≤ n/13 rows), never over the corpus
-        sd = (
-            emb.filter(F.expr(f"vec_id % {_IVF_SEED_MOD} = {seed_rem}"))
-            .select("vec_id", "embedding")
-            .withColumn("rn", F.row_number().over(W.orderBy("vec_id")))
+    cent = (
+        sd.crossJoin(F.broadcast(_ivf_par(emb)))
+        .filter(F.col("rn") <= F.col("k"))
+        .select(F.col("rn").alias("cid"), F.col("embedding").alias("cemb"))
+    )
+    # one corpus scan x broadcast centroids; narrow to (vec_id, cid,
+    # dot) BEFORE the top-2 window so WindowGroupLimit's partial mode
+    # keeps 2 rows/vector map-side and the exchange never carries N·k
+    # rows
+    scored = emb.crossJoin(F.broadcast(cent)).select(
+        "vec_id", "cid", dot_col("embedding", "cemb").alias("cd")
+    )
+    return (
+        scored.withColumn(
+            "pr",
+            F.row_number().over(
+                W.partitionBy("vec_id").orderBy(F.desc("cd"), F.asc("cid"))
+            ),
         )
-        cent = (
-            sd.crossJoin(F.broadcast(par))
-            .filter(F.col("rn") <= F.col("k"))
-            .select(F.col("rn").alias("cid"), F.col("embedding").alias("cemb"))
-        )
-        # one corpus scan x broadcast centroids; narrow to (vec_id, cid,
-        # dot) BEFORE the top-2 window so WindowGroupLimit's partial mode
-        # keeps 2 rows/vector map-side and the exchange never carries N·k
-        # rows
-        scored = emb.crossJoin(F.broadcast(cent)).select(
-            "vec_id", "cid", dot_col("embedding", "cemb").alias("cd")
-        )
-        asg = (
-            scored.withColumn(
-                "pr",
-                F.row_number().over(
-                    W.partitionBy("vec_id").orderBy(F.desc("cd"), F.asc("cid"))
-                ),
-            )
-            .filter(F.col("pr") <= nprobe)
-            .select("vec_id", "cid", *(["pr"] if with_rank else []))
-        )
-        return emb, par, asg
-
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    n = _ivf_corpus_n(spark, sf_dir, emb)
-    k = _IVF_K_BASE * (1 << sum(n > t for t in _IVF_K_THRESHOLDS))
-    # k x dim float64 matrix; row j is cid j+1 (the seed sample's global
-    # vec_id order = the oracle's ROW_NUMBER() OVER (ORDER BY vec_id)).
-    # Shipped as a BROADCAST variable, not a closure capture: a captured
-    # array rides the pickled function into EVERY task (k=16384 is 8 MiB —
-    # 10k tasks on a real cluster would ship ~80 GB from the driver), while
-    # a broadcast lands once per executor. Cached per (app, sf_dir, k) so
-    # repeated invocations within a session (pair build + audits + recall
-    # eval all re-derive assignments) reuse ONE broadcast instead of
-    # leaking a fresh 8 MiB copy each call; keying on applicationId keeps
-    # a restarted in-process session from touching a dead context's var.
-    bc = _ivf_centroid_bc(spark, sf_dir, emb, k, seed_rem)
-    fields = [StructField("vec_id", LongType()), StructField("cid", IntegerType())]
-    if with_rank:
-        fields.append(StructField("pr", IntegerType()))
-    schema = StructType(fields)
-
-    def assign(batches):
-        import numpy as np
-
-        C = bc.value
-        kk = C.shape[0]
-        if kk == 0:
-            # empty centroid sample (e.g. a micro corpus with no vec_id ≡
-            # seed_rem mod SEED_MOD): degrade to an empty assignment
-            # exactly like the declarative path and the oracle — C is a
-            # 1-D empty array here, so none of the 2-D kernel indexing
-            # below is legal (r9 ADVICE)
-            return
-        # chunk rows so the (rows x k) score block stays ~64 MiB at any dial
-        chunk = max(1, 8_000_000 // max(kk, 1))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.array(list(pdf["embedding"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_v, out_c, out_p = [], [], []
-            for s in range(0, A.shape[0], chunk):
-                Ae = A[s : s + chunk]
-                ranked = _ivf_rank_cells(Ae, C, nprobe)
-                for p in range(ranked.shape[1]):
-                    out_v.append(ids[s : s + chunk])
-                    out_c.append(ranked[:, p])
-                    if with_rank:
-                        out_p.append(
-                            np.full(Ae.shape[0], p + 1, dtype=np.int32)
-                        )
-            cols = {
-                "vec_id": np.concatenate(out_v),
-                "cid": np.concatenate(out_c),
-            }
-            if with_rank:
-                cols["pr"] = np.concatenate(out_p)
-            yield pd.DataFrame(cols)
-
-    asg = emb.select("vec_id", "embedding").mapInPandas(assign, schema)
-    return emb, par, asg
+        .filter(F.col("pr") <= nprobe)
+        .select("vec_id", "cid", "pr")
+    )
 
 
 def _ivf_rank_cells(Ae, C, nprobe: int):
     """Top-nprobe centroid ranking for one row chunk: (rows ×
     min(nprobe, k)) int32 matrix of 1-based cids ordered by (dot DESC,
-    cid ASC) — the shared score core of the single-table and fused
-    multi-table assignment kernels.
+    cid ASC) — the score core of the assignment kernel.
 
-    Exactness: every dot folds dimensions IN ORDER (acc[i,j] accumulates
-    ((0.0+t1)+t2)+... exactly like the oracle's unrolled sum and the HOF
-    aggregate — never a BLAS matmul, whose reduction order is
-    unspecified), and top-nprobe extraction is nprobe argmax-and-mask
-    passes (argmax returns the FIRST maximal column = lowest cid on exact
-    dot ties, matching the window's ORDER BY dot DESC, cid).
+    Exactness: every dot is the dimension-ordered fold (_dot_block), and
+    top-nprobe extraction is nprobe argmax-and-mask passes (argmax
+    returns the FIRST maximal column = lowest cid on exact dot ties,
+    matching the window's ORDER BY dot DESC, cid).
 
     Performance: the k axis is TILED so the accumulator tile stays
     cache-resident across the 64 dimension passes (r11). The untiled form
@@ -1988,12 +1880,7 @@ def _ivf_rank_cells(Ae, C, nprobe: int):
     # tile width: rows×tile×8 ≈ 1 MiB keeps the working tile in L2
     tile = max(8, min(kk, (1 << 17) // max(rows_n, 1)))
     for a in range(0, kk, tile):
-        b = min(a + tile, kk)
-        Ct = C[a:b]
-        at = np.zeros((rows_n, b - a))
-        for d in range(Ae.shape[1]):
-            at += Ae[:, d : d + 1] * Ct[:, d][None, :]
-        acc[:, a:b] = at
+        acc[:, a : a + tile] = _dot_block(Ae, C[a : a + tile])
     rows = np.arange(rows_n)
     width = min(nprobe, kk)
     ranked = np.empty((rows_n, width), dtype=np.int32)
@@ -2006,8 +1893,13 @@ def _ivf_rank_cells(Ae, C, nprobe: int):
 
 def _ivf_centroid_bc(spark, sf_dir, emb, k: int, seed_rem: int):
     """The per-(app, sf_dir, k, rem) centroid broadcast — one collect and
-    one broadcast per distinct key per session (shared by the single-table
-    kernel, the fused multi-table kernel, and every audit). A hit is served
+    one broadcast per distinct key per session (shared by every pair build
+    and audit that runs the kernel). The value is a k × dim float64
+    matrix whose row j is cid j+1 (the sample's vec_id order = the
+    oracle's ROW_NUMBER() OVER (ORDER BY vec_id)). A broadcast, not a
+    closure capture: a captured array rides the pickled function into
+    EVERY task (k=16384 is 8 MiB — 10k tasks would ship ~80 GB from the
+    driver), while a broadcast lands once per executor. A hit is served
     only if the input fingerprint still matches; on mismatch the stale
     broadcast is unpersisted and rebuilt (r10 ADVICE — a rewritten corpus
     at the same path must not be scored against dead centroids)."""
@@ -2042,83 +1934,111 @@ def _ivf_centroid_bc(spark, sf_dir, emb, k: int, seed_rem: int):
     return bc
 
 
-def _ivf_assignments_multi(
+def _ivf_kernel(
     spark: SparkSession,
     sf_dir: str,
     nprobe: int,
-    seed_rems: tuple[int, ...],
-):
-    """(emb, par, asg_all): ranked assignments for EVERY centroid table in
-    ONE corpus scan — asg_all = (tbl, vec_id, cid, pr) where tbl is the
-    seed remainder. The multi-table arm's tables differ only in their
-    broadcast centroid matrix, so running T separate kernels costs T
-    corpus scans for no reason; at 100 TB the scan dominates, so the fused
-    kernel loops the tables per Arrow batch instead (identical total
-    flops, 1/T the input IO). Per-table math is byte-for-byte the
-    single-table kernel's (dimension-ordered accumulation, argmax-and-mask
-    top-nprobe) — pinned by test_ivf_multi_assignment_matches_singles."""
+    seed_rems: tuple[int, ...] = (_IVF_SEED_REM,),
+    with_embedding: bool = False,
+) -> tuple[DataFrame, list[tuple[int, int]]]:
+    """The IVF assignment kernel: every centroid table's top-nprobe cells
+    for every vector, ranked in ONE corpus scan. A numpy mapInPandas
+    kernel scores each Arrow batch against each table's broadcast
+    centroid matrix through _ivf_rank_cells (bit-identical to the
+    declarative window, _ivf_assignments). The tables differ only in
+    their centroid matrix (seed remainder ``tbl``), so looping them per
+    batch costs the flops of T kernels for the input IO of one. Measured
+    on the 60k-vector synth point, the HOF-fold form it replaced spent
+    ~2/3 of the query in the 123M interpreted zip_with/aggregate evals.
+
+    Returns (rows, layout). ``layout`` lists (tbl, pr) for each position
+    of the flat per-vector cid list: tables in ``seed_rems`` order, ranks
+    1..min(nprobe, k) each. An empty centroid pool (a micro corpus with
+    no vec_id in its class) has no positions, so it yields no rows,
+    exactly like the declarative path and the oracle (r9 ADVICE). The
+    rows take one of two shapes:
+
+    - ``with_embedding``: one row per vector, (vec_id, embedding, cids)
+      with the flat cid list — the pair builds' shape. They explode it
+      JVM-side, so the embedding crosses the Python boundary once per
+      vector, not once per (table, rank), and rides the same row into
+      the one exchange that feeds the block scorer (r12: the heavy bytes
+      move ONCE, guide §8);
+    - otherwise one narrow (tbl, vec_id, cid, pr) row per (table, vector,
+      rank) — the audits' and tests' shape."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
     emb = table(spark, sf_dir, "embeddings")
-    par = emb.agg(F.count("*").alias("n")).select(
-        F.expr(_ivf_k_case("n")).alias("k")
-    )
     n = _ivf_corpus_n(spark, sf_dir, emb)
     k = _IVF_K_BASE * (1 << sum(n > t for t in _IVF_K_THRESHOLDS))
-    bcs = [(rem, _ivf_centroid_bc(spark, sf_dir, emb, k, rem))
-           for rem in seed_rems]
-    schema = StructType(
-        [
-            StructField("tbl", IntegerType()),
-            StructField("vec_id", LongType()),
-            StructField("cid", IntegerType()),
-            StructField("pr", IntegerType()),
-        ]
-    )
+    pools = [(rem, _ivf_centroid_bc(spark, sf_dir, emb, k, rem)) for rem in seed_rems]
+    live = [bc for _, bc in pools if bc.value.shape[0] > 0]
+    layout = [
+        (rem, p + 1)
+        for rem, bc in pools
+        for p in range(min(nprobe, bc.value.shape[0]))
+    ]
+    pos_tbl = np.array([t for t, _ in layout], dtype=np.int32)
+    pos_pr = np.array([p for _, p in layout], dtype=np.int32)
+    if with_embedding:
+        schema = StructType(
+            [
+                StructField("vec_id", LongType()),
+                StructField("embedding", emb.schema["embedding"].dataType),
+                StructField("cids", ArrayType(IntegerType())),
+            ]
+        )
+    else:
+        schema = StructType(
+            [
+                StructField("tbl", IntegerType()),
+                StructField("vec_id", LongType()),
+                StructField("cid", IntegerType()),
+                StructField("pr", IntegerType()),
+            ]
+        )
 
     def assign(batches):
         import numpy as np
+        import pandas as pd
 
-        tables = [(rem, b.value) for rem, b in bcs]
+        # rows are chunked so each (rows × k) score block stays ~64 MiB
+        tables = [(C, max(1, 8_000_000 // C.shape[0])) for C in (bc.value for bc in live)]
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or not tables:
                 continue
             A = np.array(list(pdf["embedding"]), dtype=np.float64)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_t, out_v, out_c, out_p = [], [], [], []
-            for rem, C in tables:
-                kk = C.shape[0]
-                if kk == 0:
-                    continue  # empty pool degrades per-table, like single
-                chunk = max(1, 8_000_000 // kk)
-                for s in range(0, A.shape[0], chunk):
-                    Ae = A[s : s + chunk]
-                    # shared k-tiled exact score core — see _ivf_rank_cells
-                    ranked = _ivf_rank_cells(Ae, C, nprobe)
-                    for p in range(ranked.shape[1]):
-                        out_t.append(
-                            np.full(Ae.shape[0], rem, dtype=np.int32)
-                        )
-                        out_v.append(ids[s : s + chunk])
-                        out_c.append(ranked[:, p])
-                        out_p.append(
-                            np.full(Ae.shape[0], p + 1, dtype=np.int32)
-                        )
-            if not out_v:
-                continue
-            yield pd.DataFrame(
-                {
-                    "tbl": np.concatenate(out_t),
-                    "vec_id": np.concatenate(out_v),
-                    "cid": np.concatenate(out_c),
-                    "pr": np.concatenate(out_p),
-                }
+            # (rows × positions) cids, columns in layout order
+            flat = np.concatenate(
+                [
+                    np.concatenate(
+                        [
+                            _ivf_rank_cells(A[s : s + chunk], C, nprobe)
+                            for s in range(0, A.shape[0], chunk)
+                        ]
+                    )
+                    for C, chunk in tables
+                ],
+                axis=1,
             )
+            if with_embedding:
+                yield pd.DataFrame(
+                    {"vec_id": ids, "embedding": pdf["embedding"], "cids": list(flat)}
+                )
+            else:
+                yield pd.DataFrame(
+                    {
+                        "tbl": np.repeat(pos_tbl, len(ids)),
+                        "vec_id": np.tile(ids, len(pos_tbl)),
+                        "cid": flat.T.ravel(),
+                        "pr": np.repeat(pos_pr, len(ids)),
+                    }
+                )
 
-    asg = emb.select("vec_id", "embedding").mapInPandas(assign, schema)
-    return emb, par, asg
+    rows = emb.select("vec_id", "embedding").mapInPandas(assign, schema)
+    return rows, layout
 
 
 @register(
@@ -2136,7 +2056,7 @@ def _ivf_assignments_multi(
     "dedup_embedding_ivf_cell_audit), scored as CELL BLOCKS since r11 "
     "(embeddings attach ONCE to the capped assignment rows and a grouped "
     "Arrow kernel scores each cell's i<j upper triangle in numpy — "
-    "_score_cell_triangles; candidate pairs exist only as matrix entries, "
+    "_score_blocks; candidate pairs exist only as matrix entries, "
     "never as rows, value-identical to the candidate-first form the "
     "oracle expresses). Why it exists: hyperplane LSH "
     "recall at a fixed probe budget decays exponentially with bucket width "
@@ -2153,86 +2073,28 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_pair_build(spark, sf_dir)
 
 
-def _ivf_member_rows(
-    spark: SparkSession, sf_dir: str, nprobe: int | None = None
-) -> DataFrame:
-    """(vec_id, embedding, cid) member rows for the symmetric arms — the
-    assignment kernel EMITS the embedding alongside its top-nprobe cid
-    array (one Arrow row per vector, cids as a primitive list — no
-    nprobe-fold duplication at the Python boundary), and a JVM-side
-    explode fans out the per-cell membership. r12 restructure: the
-    previous shape shipped narrow (vec_id, cid) rows through a cap
-    window, then re-attached embeddings with a shuffle-hash join — the
-    heavy embedding bytes crossed THREE exchanges (emb by vec_id, capped
-    by vec_id, wide by cid). Carrying the embedding from the kernel lets
-    the single (cid) exchange feed both the cap window and the grouped
-    scorer, so the heavy bytes move ONCE (guide §8's move-heavy-bytes-
-    once rule applied to the cell build)."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
-
-    nprobe = nprobe or _IVF_NPROBE
-    emb = table(spark, sf_dir, "embeddings")
-    n = _ivf_corpus_n(spark, sf_dir, emb)
-    k = _IVF_K_BASE * (1 << sum(n > t for t in _IVF_K_THRESHOLDS))
-    bc = _ivf_centroid_bc(spark, sf_dir, emb, k, _IVF_SEED_REM)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", emb.schema["embedding"].dataType),
-            StructField("cids", ArrayType(IntegerType())),
-        ]
-    )
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = bc.value
-        if C.shape[0] == 0:
-            return  # empty centroid sample: degrade to empty, like the oracle
-        chunk = max(1, 8_000_000 // max(C.shape[0], 1))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.array(list(pdf["embedding"]), dtype=np.float64)
-            outs = [
-                _ivf_rank_cells(A[s : s + chunk], C, nprobe)
-                for s in range(0, A.shape[0], chunk)
-            ]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "embedding": pdf["embedding"],
-                    "cids": list(np.concatenate(outs)),
-                }
-            )
-
-    asg = emb.select("vec_id", "embedding").mapInPandas(assign, schema)
-    return asg.select("vec_id", "embedding", F.explode("cids").alias("cid"))
-
-
 def _ivf_pair_build(
     spark: SparkSession,
     sf_dir: str,
-    nprobe: int | None = None,
+    nprobe: int = _IVF_NPROBE,
     cap: int = _IVF_CELL_CAP,
 ) -> DataFrame:
     """Shared pair build of the symmetric IVF arms: assignment (Arrow
-    kernel, embedding carried in-row — _ivf_member_rows) → per-cell
-    candidacy window → grouped triangle scorer REUSING the window's (cid)
-    partitioning.
+    kernel, embedding carried in-row — _ivf_kernel) → JVM-side explode to
+    one member row per (vector, probed cell) → per-cell candidacy window
+    → grouped block scorer REUSING the window's (cid) partitioning.
 
     Scored as CELL BLOCKS since r11 (r10 VERDICT #5): a grouped Arrow
-    kernel scores each cell's i<j upper triangle in numpy
-    (_score_cell_triangles) — candidate pairs exist only as matrix
-    entries, never as rows, so BOTH shuffle and Arrow mass are
+    kernel scores each cell's i<j upper triangle in numpy (_score_blocks,
+    "lt" pairing with every row a member) — candidate pairs exist only as
+    matrix entries, never as rows, so BOTH shuffle and Arrow mass are
     O(N·nprobe·emb) regardless of how much pair mass the cells hold.
     r12 plan shape: the member rows cross exactly ONE exchange
     (hash(cid) — the cap window's), which the groupBy-applyInPandas
     scorer reuses; the r11 form's shuffle-hash embedding attach (3
     exchanges of embedding-bearing rows + a localCheckpoint job for a
-    single-consumer subtree) is gone. Catalyst additionally pushes a
+    single-consumer subtree) is gone. Grouping by (tbl, cid) instead
+    would add an Exchange. Catalyst additionally pushes a
     WindowGroupLimit below the exchange, so over-cap members of a
     pathological mega-cell are dropped map-side before they shuffle.
     Value-identity argument as mt4: the per-pair dot folds dimensions in
@@ -2241,65 +2103,16 @@ def _ivf_pair_build(
     oracle's SELECT DISTINCT does."""
     from pyspark.sql import Window as W
 
-    rows = _ivf_member_rows(spark, sf_dir, nprobe)
+    wide, _ = _ivf_kernel(spark, sf_dir, nprobe, with_embedding=True)
+    rows = wide.select("vec_id", "embedding", F.explode("cids").alias("cid"))
     capped = (
         rows.withColumn(
             "rnc", F.row_number().over(W.partitionBy("cid").orderBy("vec_id"))
         )
         .filter(F.col("rnc") <= cap)
-        .select("vec_id", "cid", "embedding")
+        .select("vec_id", "cid", "embedding", F.lit(1).alias("member"))
     )
-    return _score_cell_triangles(capped).distinct()
-
-
-def _score_cell_triangles(wide: DataFrame) -> DataFrame:
-    """Grouped exact scorer for the SYMMETRIC arms: wide = (vec_id, cid,
-    embedding) capped rows; one group per cid scores the cell's i<j upper
-    triangle (the oracle's a.vec_id < b.vec_id) in numpy and emits only
-    thresholded survivors. Same dimension-ordered dot fold as
-    _score_cell_blocks."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("a_id", LongType()),
-            StructField("b_id", LongType()),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-    threshold = _EMB_COS_THRESHOLD
-
-    def score(pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {
-                    "a_id": np.array([], dtype=np.int64),
-                    "b_id": np.array([], dtype=np.int64),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
-        X = np.array(list(pdf["embedding"]), dtype=np.float64)
-        v = pdf["vec_id"].to_numpy(dtype=np.int64)
-        acc = np.zeros((X.shape[0], X.shape[0]))
-        for d in range(X.shape[1]):
-            acc += X[:, d : d + 1] * X[:, d][None, :]
-        mask = (acc >= threshold) & (v[:, None] < v[None, :])
-        ai, bi = np.nonzero(mask)
-        return pd.DataFrame(
-            {"a_id": v[ai], "b_id": v[bi], "cos_sim": acc[ai, bi]}
-        )
-
-    return wide.groupBy("cid").applyInPandas(score, schema)
-
-
-def ivf_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_ivf. Since the r12 restructure the
-    registered form no longer localCheckpoints (the member rows have ONE
-    consumer), so the twin is identical to the registered plan — kept so
-    the plan gates' override table stays uniform across the family."""
-    return _ivf_pair_build(spark, sf_dir)
+    return _score_blocks(capped, ("cid",), "lt").distinct()
 
 
 @register(
@@ -2320,12 +2133,6 @@ def ivf_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cap and observable via dedup_embedding_ivf_probe4_cell_audit.",
 )
 def dedup_embedding_ivf_probe4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_pair_build(spark, sf_dir, nprobe=_IVF4_NPROBE, cap=_IVF4_CELL_CAP)
-
-
-def ivf_probe4_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_ivf_probe4 (identical since r12 — see
-    ivf_plan_audit)."""
     return _ivf_pair_build(spark, sf_dir, nprobe=_IVF4_NPROBE, cap=_IVF4_CELL_CAP)
 
 
@@ -2355,7 +2162,7 @@ def _ivf_asym_chain_sql(nprobe: int, seed_rems: tuple[int, ...]) -> str:
     par→tbls→sd→cent→ad chain covering every centroid table, with the
     materialized assignment keeping the probe rank ``pr`` so the home side
     (pr=1) and the probe side (pr<=nprobe) derive from ONE scored ranking —
-    the SQL twin of _ivf_assignments_multi.
+    the SQL twin of _ivf_kernel.
 
     r12 restructure (r11 VERDICT #2): the previous generator UNROLLED one
     copy of this chain per table — ~8 plan operators × 12 tables for mt12.
@@ -2441,14 +2248,15 @@ def _ivf_asym_pair_build(
 ) -> DataFrame:
     """Asymmetric pair build, optionally multi-table, scored as CELL
     BLOCKS: ONE fused corpus scan ranks every table's assignments
-    (_ivf_member_rows_multi — the tables differ only in their broadcast
-    centroid matrix, so separate kernels would pay T corpus scans for
-    nothing) and EMITS the embedding in-row; ONE (tbl, cid) exchange
+    (_ivf_kernel — the tables differ only in their broadcast centroid
+    matrix, so separate kernels would pay T corpus scans for nothing) and
+    EMITS the embedding in-row; ONE (tbl, cid) exchange
     feeds a single window that derives BOTH candidacy ranks (rnp =
     row_number over all members, rhc = running count of home members —
     identical to the former two-window rnh/rnp pair because vec_id is
-    unique within a cell), the role tags explode map-side, and a grouped
-    Arrow kernel (_score_cell_blocks) scores each (tbl, cid) cell's
+    unique within a cell), the role tags explode map-side (home =
+    member 1, probe = 0; a vector can be both), and a grouped Arrow
+    kernel (_score_blocks, "ne" pairing) scores each (tbl, cid) cell's
     probe×home block IN KERNEL, reusing the window's partitioning —
     candidate pairs exist only as numpy matrix entries, never as rows.
     Only the thresholded SURVIVORS (~0.2% yield) reach the final
@@ -2478,111 +2286,12 @@ def _ivf_asym_pair_build(
 
     if probe_cap is None:
         probe_cap = _IVFA_HOME_CAP * nprobe
-    rows = _ivf_member_rows_multi(spark, sf_dir, nprobe, seed_rems)
-    # ONE window pass per (table, cell): rnp ranks every member (the probe
-    # candidacy), the running home-count ranks the pr=1 subset (the home
-    # candidacy — rank-within-subset == row_number over the filtered subset
-    # because members are unique per cell); role 0 = home (cap 96), role 1
-    # = probe (cap 768), a member can carry both
-    w = W.partitionBy("tbl", "cid").orderBy("vec_id")
-    ranked = rows.withColumn("rnp", F.row_number().over(w)).withColumn(
-        "rhc", F.sum(F.when(F.col("pr") == 1, 1).otherwise(0)).over(w)
-    )
-    tagged = ranked.select(
-        "tbl",
-        "cid",
-        F.col("vec_id").alias("vid"),
-        "embedding",
-        F.explode(
-            F.array_compact(
-                F.array(
-                    F.when((F.col("pr") == 1) & (F.col("rhc") <= home_cap), 0),
-                    F.when(F.col("rnp") <= probe_cap, 1),
-                )
-            )
-        ).alias("role"),
-    )
-    # collapse cross-direction / cross-cell / cross-table duplicates on the
-    # thresholded survivor set (cos_sim deterministic per pair → 3-column
-    # distinct == (a_id, b_id) distinct)
-    return _score_cell_blocks(tagged).distinct()
-
-
-def _ivf_member_rows_multi(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int,
-    seed_rems: tuple[int, ...],
-) -> DataFrame:
-    """(vec_id, embedding, tbl, cid, pr) member rows for EVERY centroid
-    table in ONE corpus scan — the multi-table twin of _ivf_member_rows.
-    The kernel emits one Arrow row per vector: the embedding plus a FLAT
-    primitive cid list (per-table top-nprobe rankings concatenated in
-    seed_rems order — no per-row Python dict building, no T·P-fold
-    embedding duplication at the boundary); (tbl, pr) are derived
-    JVM-side from the position because the layout is a compile-time
-    constant of (seed_rems, per-table widths). Per-table math is
-    byte-for-byte the single-table kernel's (dimension-ordered
-    accumulation, argmax-and-mask top-nprobe via the shared
-    _ivf_rank_cells core)."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
-
-    emb = table(spark, sf_dir, "embeddings")
-    n = _ivf_corpus_n(spark, sf_dir, emb)
-    k = _IVF_K_BASE * (1 << sum(n > t for t in _IVF_K_THRESHOLDS))
-    bcs = [
-        (rem, _ivf_centroid_bc(spark, sf_dir, emb, k, rem)) for rem in seed_rems
-    ]
-    # empty pools degrade per-table exactly like the unrolled form: they
-    # contribute no positions (and no rows) anywhere
-    live = [
-        (rem, bc, min(nprobe, bc.value.shape[0]))
-        for rem, bc in bcs
-        if bc.value.shape[0] > 0
-    ]
-    pos_tbl = [rem for rem, _, w in live for _ in range(w)]
-    pos_pr = [p + 1 for _, _, w in live for p in range(w)]
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", emb.schema["embedding"].dataType),
-            StructField("cids", ArrayType(IntegerType())),
-        ]
-    )
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        tables = [(b.value, w) for _, b, w in live]
-        for pdf in batches:
-            if len(pdf) == 0 or not tables:
-                continue
-            A = np.array(list(pdf["embedding"]), dtype=np.float64)
-            per_tbl = []
-            for C, _w in tables:
-                chunk = max(1, 8_000_000 // C.shape[0])
-                per_tbl.append(
-                    np.concatenate(
-                        [
-                            _ivf_rank_cells(A[s : s + chunk], C, nprobe)
-                            for s in range(0, A.shape[0], chunk)
-                        ]
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "embedding": pdf["embedding"],
-                    "cids": list(np.concatenate(per_tbl, axis=1)),
-                }
-            )
-
-    asg = emb.select("vec_id", "embedding").mapInPandas(assign, schema)
-    tbl_arr = F.array(*[F.lit(t) for t in pos_tbl])
-    pr_arr = F.array(*[F.lit(p) for p in pos_pr])
-    return asg.select(
+    wide, layout = _ivf_kernel(spark, sf_dir, nprobe, seed_rems, with_embedding=True)
+    # (tbl, pr) of each flat cid position, a compile-time constant of the
+    # layout, derived JVM-side from posexplode's index
+    tbl_arr = F.array(*[F.lit(t) for t, _ in layout])
+    pr_arr = F.array(*[F.lit(p) for _, p in layout])
+    rows = wide.select(
         "vec_id", "embedding", F.posexplode("cids").alias("pos", "cid")
     ).select(
         "vec_id",
@@ -2591,60 +2300,33 @@ def _ivf_member_rows_multi(
         F.element_at(pr_arr, F.col("pos") + 1).alias("pr"),
         "cid",
     )
-
-
-def _score_cell_blocks(tagged: DataFrame) -> DataFrame:
-    """Grouped exact scorer: tagged = (vid, tbl, cid, role, embedding)
-    rows, role 0 = home / 1 = probe; one group per (tbl, cid) cell scores
-    its probe×home dot block in numpy and emits only the thresholded,
-    orientation-normalized survivors. The per-pair dot keeps the oracle's
-    dimension order (acc[i,j] folds ((0.0+t1)+t2)+… — same bit-exactness
-    argument as _score_bucket_blocks); self-pairs are
-    masked in kernel (the oracle's p.vec_id <> h.vec_id). Arrow traffic is
-    the group rows themselves — bounded by the candidacy caps — never the
-    pair mass."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("a_id", LongType()),
-            StructField("b_id", LongType()),
-            StructField("cos_sim", DoubleType()),
-        ]
+    # ONE window pass per (table, cell): rnp ranks every member (the probe
+    # candidacy), the running home-count ranks the pr=1 subset (the home
+    # candidacy — rank-within-subset == row_number over the filtered subset
+    # because members are unique per cell); member 1 = home (cap 96),
+    # member 0 = probe (cap 768), a vector can carry both
+    w = W.partitionBy("tbl", "cid").orderBy("vec_id")
+    ranked = rows.withColumn("rnp", F.row_number().over(w)).withColumn(
+        "rhc", F.sum(F.when(F.col("pr") == 1, 1).otherwise(0)).over(w)
     )
-    threshold = _EMB_COS_THRESHOLD
-
-    def score(pdf):
-        hm = pdf[pdf["role"] == 0]
-        pm = pdf[pdf["role"] == 1]
-        if len(hm) == 0 or len(pm) == 0:
-            return pd.DataFrame(
-                {
-                    "a_id": np.array([], dtype=np.int64),
-                    "b_id": np.array([], dtype=np.int64),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
+    tagged = ranked.select(
+        "tbl",
+        "cid",
+        "vec_id",
+        "embedding",
+        F.explode(
+            F.array_compact(
+                F.array(
+                    F.when((F.col("pr") == 1) & (F.col("rhc") <= home_cap), 1),
+                    F.when(F.col("rnp") <= probe_cap, 0),
+                )
             )
-        P = np.array(list(pm["embedding"]), dtype=np.float64)
-        H = np.array(list(hm["embedding"]), dtype=np.float64)
-        acc = np.zeros((P.shape[0], H.shape[0]))
-        for d in range(P.shape[1]):
-            acc += P[:, d : d + 1] * H[:, d][None, :]
-        pv = pm["vid"].to_numpy(dtype=np.int64)
-        hv = hm["vid"].to_numpy(dtype=np.int64)
-        mask = (acc >= threshold) & (pv[:, None] != hv[None, :])
-        pi, hi = np.nonzero(mask)
-        return pd.DataFrame(
-            {
-                "a_id": np.minimum(pv[pi], hv[hi]),
-                "b_id": np.maximum(pv[pi], hv[hi]),
-                "cos_sim": acc[pi, hi],
-            }
-        )
-
-    return tagged.groupBy("tbl", "cid").applyInPandas(score, schema)
+        ).alias("member"),
+    )
+    # collapse cross-direction / cross-cell / cross-table duplicates on the
+    # thresholded survivor set (cos_sim deterministic per pair → 3-column
+    # distinct == (a_id, b_id) distinct)
+    return _score_blocks(tagged, ("tbl", "cid"), "ne").distinct()
 
 
 # Registered multi-table dials: the measured 60k design grid
@@ -2690,13 +2372,6 @@ _IVFMT_PROBE_CAP = _IVFA_HOME_CAP * _IVFMT_NPROBE  # 768 = 2x the P·occ band
     "exceeded the local disk budget at 600k).",
 )
 def dedup_embedding_ivf_mt4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_asym_pair_build(
-        spark, sf_dir, nprobe=_IVFMT_NPROBE, seed_rems=_IVFMT_REMS
-    )
-
-
-def ivf_mt4_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan twin of dedup_embedding_ivf_mt4."""
     return _ivf_asym_pair_build(
         spark, sf_dir, nprobe=_IVFMT_NPROBE, seed_rems=_IVFMT_REMS
     )
@@ -2760,7 +2435,7 @@ def _ivf_mt_cell_audit_df(
 ) -> DataFrame:
     """Shared multi-table cell-audit body (one row per centroid table) —
     the Spark twin of _ivf_mt_cell_audit_oracle_sql at any dial."""
-    _, par, asg = _ivf_assignments_multi(spark, sf_dir, nprobe, seed_rems)
+    asg, _ = _ivf_kernel(spark, sf_dir, nprobe, seed_rems)
     # the fused ranked rows feed two aggregate branches: checkpoint once so
     # the ONE-corpus-scan kernel runs once, not per branch
     asg = asg.localCheckpoint(eager=False)
@@ -2799,7 +2474,7 @@ def _ivf_mt_cell_audit_df(
     return (
         rems_df.join(stats_h, "tbl", "left")
         .join(stats_p, "tbl", "left")
-        .crossJoin(F.broadcast(par))
+        .crossJoin(F.broadcast(_ivf_par(table(spark, sf_dir, "embeddings"))))
         .select(
             F.col("tbl").cast("bigint").alias("seed_rem"),
             F.col("k").cast("bigint").alias("k"),
@@ -2832,10 +2507,10 @@ FROM cs
 def _ivf_cell_audit_df(
     spark: SparkSession,
     sf_dir: str,
-    nprobe: int | None = None,
+    nprobe: int = _IVF_NPROBE,
     cap: int = _IVF_CELL_CAP,
 ) -> DataFrame:
-    _, par, asg = _ivf_assignments(spark, sf_dir, nprobe=nprobe)
+    asg, _ = _ivf_kernel(spark, sf_dir, nprobe)
     cs = asg.groupBy("cid").agg(F.count(F.lit(1)).alias("sz"))
     over = F.col("sz") > cap
     return (
@@ -2847,7 +2522,7 @@ def _ivf_cell_audit_df(
             .cast("bigint")
             .alias("n_dropped_members"),
         )
-        .crossJoin(F.broadcast(par))
+        .crossJoin(F.broadcast(_ivf_par(table(spark, sf_dir, "embeddings"))))
         .select(
             F.col("k").cast("bigint").alias("k"),
             "n_cells",
@@ -3081,13 +2756,6 @@ def dedup_embedding_ivf_mt12(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_mt12_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan twin of dedup_embedding_ivf_mt12."""
-    return _ivf_asym_pair_build(
-        spark, sf_dir, nprobe=_IVFMT_NPROBE, seed_rems=_IVFMT12_REMS
-    )
-
-
 @register(
     "dedup_embedding_ivf_mt12_cell_audit",
     oracle=_ivf_mt_cell_audit_oracle_sql(
@@ -3200,18 +2868,10 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _incremental_lsh_build(spark, sf_dir)
 
 
-def incremental_lsh_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_incremental — identical to the
-    registered plan since the r13 grouped-scorer build removed the
-    checkpoint (single consumer chain); kept so the gates' override table
-    stays uniform (the 1-row bits crossJoin stays visible either way)."""
-    return _incremental_lsh_build(spark, sf_dir)
-
-
 def _incremental_lsh_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r13 grouped-scorer shape of the asymmetric ingest probe (the
     _adaptive_lsh_build transplant with home/probe roles instead of the
-    i<j triangle — the mt4 _score_cell_blocks analogy). One linear
+    i<j triangle — _score_blocks' "directed" pairing). One linear
     pipeline; the 4 per-table corpus-occupancy groupBys + 4 LEFT joins
     that gated the batch side are replaced by ONE (tbl, key) window over
     old+new rows together: corpus occupancy = windowed count of old-row
@@ -3282,12 +2942,12 @@ def _incremental_lsh_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.col("key")
     probe_arm = F.transform(
         gated,
-        lambda m: F.struct(key.bitwiseXOR(m).alias("pk"), F.lit(0).alias("pr")),
+        lambda m: F.struct(key.bitwiseXOR(m).alias("pk"), F.lit(0).alias("member")),
     )
     # un-capped old rows yield NULL (no array) — explode drops them
     member_arm = F.when(
         (F.col("bits") <= 5) | (F.col("rn_old") <= _EMB_BUCKET_CAP),
-        F.array(F.struct(key.alias("pk"), F.lit(1).alias("pr"))),
+        F.array(F.struct(key.alias("pk"), F.lit(1).alias("member"))),
     )
     rows = stats.select(
         "vec_id",
@@ -3296,9 +2956,9 @@ def _incremental_lsh_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.when(F.col("is_new"), probe_arm).otherwise(member_arm)
         ).alias("e"),
-    ).select("vec_id", "embedding", "tbl", "e.pk", "e.pr")
+    ).select("vec_id", "embedding", "tbl", "e.pk", "e.member")
     return (
-        _score_bucket_blocks(rows, symmetric=False)
+        _score_blocks(rows, ("tbl", "pk"), "directed")
         .distinct()
         .select(
             F.col("a_id").alias("new_id"), F.col("b_id").alias("old_id"), "cos_sim"
@@ -3470,11 +3130,11 @@ def _adaptive_lsh_build(
         # mask 0 ⇔ pk == own key ⇔ bucket MEMBER (receives pairs); the
         # member row doubles as its own-bucket prober, exactly like the
         # old a-side's mask-0 row
-        (F.col("pk") == F.col("key")).cast("int").alias("pr"),
+        (F.col("pk") == F.col("key")).cast("int").alias("member"),
     )
     # 3-column distinct == (a_id, b_id) distinct (deterministic cos_sim);
     # collapses cross-table/probe duplicates like the oracle's DISTINCT
-    return _score_bucket_blocks(rows, symmetric=True).distinct()
+    return _score_blocks(rows, ("tbl", "pk"), "lt").distinct()
 
 
 # ------------------------------------------- end-to-end curation pipeline --

@@ -37,7 +37,8 @@ from pg2parquet_spark.export import data_files
 
 class ProgressReporter:
     """Context manager: emits one progress line per ``interval_s`` during the
-    enclosed Spark action, plus a final line on exit. The action must run
+    enclosed Spark action, plus a final line on exit that ends in ``done``,
+    or in ``failed`` when the block raised. The action must run
     on the thread that enters the context: that thread carries the tag.
 
     ``sink`` receives each formatted line (default: stderr print) — tests
@@ -93,11 +94,13 @@ class ProgressReporter:
             return 0, 0
 
     # -- lifecycle ---------------------------------------------------------
-    def _tick(self, final: bool = False) -> None:
+    def _tick(self, final: str | None = None) -> None:
+        """One meter line; ``final`` replaces the task count with the
+        closing word (``done`` or ``failed``)."""
         elapsed = max(time.monotonic() - self._t0, 1e-9)
         mib = self._bytes_written() / (1024 * 1024)
         rate = mib / elapsed
-        tasks = "done" if final else "tasks %d/%d" % self._task_progress()
+        tasks = final or "tasks %d/%d" % self._task_progress()
         self._sink(
             f"[export] {elapsed:6.1f}s  {mib:9.1f} MiB written  "
             f"{rate:7.1f} MiB/s  {tasks}"
@@ -116,9 +119,9 @@ class ProgressReporter:
         self._thread.start()
         return self
 
-    def __exit__(self, *exc) -> None:
+    def __exit__(self, exc_type, exc, tb) -> None:
         self._spark.sparkContext.removeJobTag(self._tag)
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout=5)
-        self._tick(final=True)
+        self._tick(final="done" if exc_type is None else "failed")

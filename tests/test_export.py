@@ -541,6 +541,21 @@ def test_cli_options_come_from_the_given_flags(spark, monkeypatch):
     ]
 
 
+def test_cli_port_defaults_to_5432(spark, monkeypatch):
+    """``--port`` has no parser default (so --input-dir can tell it was
+    given); a PostgreSQL read without it still connects to 5432."""
+    from pg2parquet_spark import export as export_mod
+    from pg2parquet_spark.cli import main
+    from pg2parquet_spark.sources import pgcopy
+
+    conns = []
+    monkeypatch.setattr(pgcopy, "read", lambda _s, conn, **k: conns.append(conn) or spark.range(1))
+    monkeypatch.setattr(export_mod, "export", lambda *a, **k: None)
+    main(["export", "-o", "x", "-t", "t", "--quiet"])
+    main(["export", "-o", "x", "-t", "t", "-p", "6543", "--quiet"])
+    assert [c.port for c in conns] == [5432, 6543]
+
+
 def test_cli_refuses_lzo_before_starting_spark(monkeypatch):
     """An unsupported codec is refused when the options are built, before
     the CLI starts Spark or probes PostgreSQL."""
@@ -561,6 +576,41 @@ def test_cli_rejects_query_and_table():
 
     with pytest.raises(SystemExit):
         build_parser().parse_args(["export", "-o", "x", "-q", "a", "-t", "b"])
+
+
+@pytest.mark.parametrize(
+    "flag",
+    [
+        ["-c", "postgres://h/db"], ["-H", "h"], ["-U", "u"], ["-d", "db"],
+        ["-p", "5432"], ["--password", "pw"], ["--sslmode", "require"],
+        ["--partition-column", "id"], ["--lower-bound", "0"],
+        ["--upper-bound", "9"], ["--num-partitions", "4"],
+    ],
+)
+def test_cli_refuses_pg_flags_with_input_dir(flag, monkeypatch, capsys):
+    """A flag only a PostgreSQL source reads is refused under --input-dir
+    (exit 2, naming it) before Spark starts, instead of being ignored."""
+    from pg2parquet_spark import session
+    from pg2parquet_spark.cli import main
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as ex:
+        main(["export", "-o", "x", "--input-dir", "d", "-t", "t", *flag])
+    assert ex.value.code == 2
+    assert flag[0] in capsys.readouterr().err
+
+
+def test_cli_version_is_the_package_version(capsys):
+    import pg2parquet_spark
+    from pg2parquet_spark.cli import main
+
+    with pytest.raises(SystemExit) as ex:
+        main(["--version"])
+    assert ex.value.code == 0
+    assert capsys.readouterr().out.split() == ["pg2parquet-spark", pg2parquet_spark.__version__]
 
 
 # ---------------------------------------------------------- file sources --
@@ -887,6 +937,19 @@ def test_progress_reporter_emits_during_write(spark, sf_dir, tmp_path):
     assert "done" in lines[-1]  # final summary line
     # the final tick sees the committed bytes
     assert any(not l.split("MiB written")[0].rstrip().endswith(" 0.0") for l in lines)
+
+
+def test_progress_reporter_says_failed_when_the_block_raises(spark, tmp_path):
+    """A block that raises ends the meter with ``failed``, never ``done``,
+    and the exception still propagates."""
+    from pg2parquet_spark.progress import ProgressReporter
+
+    lines: list[str] = []
+    with pytest.raises(RuntimeError, match="boom"):
+        with ProgressReporter(spark, str(tmp_path / "none"), interval_s=60, sink=lines.append):
+            raise RuntimeError("boom")
+    assert len(lines) == 1, lines
+    assert lines[-1].endswith("failed") and "done" not in lines[-1], lines
 
 
 def test_meter_counts_only_its_own_tasks(spark, tmp_path):

@@ -372,7 +372,7 @@ def test_ivf_assignment_invariants(spark, sf_dir):
     cap inert on the isotropic fixture (no oversized cells, nothing
     dropped)."""
     n = table(spark, sf_dir, "embeddings").count()
-    _, _, asg = dedup._ivf_assignments(spark, sf_dir)
+    asg, _ = dedup._ivf_kernel(spark, sf_dir, dedup._IVF_NPROBE)
     per_vec = asg.groupBy("vec_id").count().collect()
     assert all(r["count"] == dedup._IVF_NPROBE for r in per_vec)
     assert len(per_vec) == n
@@ -413,14 +413,14 @@ def test_ivf_probe4_dominates_primary_arm_and_stays_exact(spark, sf_dir):
 
 def test_ivf_arrow_assignment_matches_declarative(spark, sf_dir):
     """The Arrow assignment kernel (dimension-ordered numpy accumulation +
-    stable argsort) must produce EXACTLY the declarative
+    argmax-and-mask top-nprobe) must produce EXACTLY the declarative
     crossJoin+WindowGroupLimit assignment, row for row — same dots (the
     fold order is preserved, never a BLAS matmul) and same tie-break
-    (stable argsort on -dot keeps ascending cid, like ORDER BY cd DESC,
-    cid). This is the contract that lets the registered query run the
-    kernel while the DuckDB oracle runs the SQL window."""
-    _, _, arrow = dedup._ivf_assignments(spark, sf_dir)
-    _, _, decl = dedup._ivf_assignments(spark, sf_dir, declarative=True)
+    (argmax takes the first maximal column, i.e. the lowest cid, like
+    ORDER BY cd DESC, cid). This is the contract that lets the registered
+    query run the kernel while the DuckDB oracle runs the SQL window."""
+    arrow, _ = dedup._ivf_kernel(spark, sf_dir, dedup._IVF_NPROBE)
+    decl = dedup._ivf_assignments(spark, sf_dir)
     a = {(r.vec_id, r.cid) for r in arrow.collect()}
     d = {(r.vec_id, r.cid) for r in decl.collect()}
     assert a == d
@@ -460,36 +460,32 @@ def test_ivf_mt4_pairs_exact_subset_and_dominates_probe4(spark, sf_dir):
 
 
 def test_ivf_ranked_assignment_matches_declarative(spark, sf_dir):
-    """with_rank=True twin of test_ivf_arrow_assignment_matches_declarative
-    at the mt4 arm's dials (nprobe=8, a non-default centroid pool): the
+    """Ranked twin of test_ivf_arrow_assignment_matches_declarative at
+    the mt4 arm's dials (nprobe=8, a non-default centroid pool): the
     kernel's argmax-pass index must equal the window's ROW_NUMBER rank,
     row for row — the contract that lets the registered mt4 query run the
     kernel while the DuckDB oracle ranks with the SQL window."""
-    _, _, arrow = dedup._ivf_assignments(
-        spark, sf_dir, nprobe=8, with_rank=True, seed_rem=1
-    )
-    _, _, decl = dedup._ivf_assignments(
-        spark, sf_dir, declarative=True, nprobe=8, with_rank=True, seed_rem=1
-    )
+    arrow, _ = dedup._ivf_kernel(spark, sf_dir, 8, seed_rems=(1,))
+    decl = dedup._ivf_assignments(spark, sf_dir, nprobe=8, seed_rem=1)
     a = {(r.vec_id, r.cid, r.pr) for r in arrow.collect()}
     d = {(r.vec_id, r.cid, r.pr) for r in decl.collect()}
     assert a == d
 
 
 def test_ivf_multi_assignment_matches_singles(spark, sf_dir):
-    """The fused one-corpus-scan multi-table kernel must produce, for each
-    table, EXACTLY the single-table kernel's ranked assignment (which is
-    itself pinned to the declarative window and the SQL oracle) — the
-    contract that lets mt4 scan the corpus once for all 4 tables."""
-    _, _, multi = dedup._ivf_assignments_multi(
+    """The kernel's fused one-corpus-scan pass over several centroid
+    tables must produce, for each table, EXACTLY its single-table ranked
+    assignment (which is itself pinned to the declarative window and the
+    SQL oracle) — the contract that lets mt4 scan the corpus once for all
+    4 tables."""
+    multi, _ = dedup._ivf_kernel(
         spark, sf_dir, dedup._IVFMT_NPROBE, dedup._IVFMT_REMS
     )
     got = {(r.tbl, r.vec_id, r.cid, r.pr) for r in multi.collect()}
     want = set()
     for rem in dedup._IVFMT_REMS:
-        _, _, single = dedup._ivf_assignments(
-            spark, sf_dir, nprobe=dedup._IVFMT_NPROBE,
-            with_rank=True, seed_rem=rem,
+        single, _ = dedup._ivf_kernel(
+            spark, sf_dir, dedup._IVFMT_NPROBE, seed_rems=(rem,)
         )
         want |= {(rem, r.vec_id, r.cid, r.pr) for r in single.collect()}
     assert got == want
@@ -508,10 +504,45 @@ def test_ivf_kernel_empty_centroid_sample_degrades_empty(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).write.parquet(f"{d}/embeddings.parquet")
-    _, _, kernel = dedup._ivf_assignments(spark, d)
-    _, _, decl = dedup._ivf_assignments(spark, d, declarative=True)
+    kernel, _ = dedup._ivf_kernel(spark, d, dedup._IVF_NPROBE)
+    decl = dedup._ivf_assignments(spark, d)
     assert kernel.count() == 0
     assert decl.count() == 0
+
+
+def test_block_scorer_pairings(spark):
+    """The grouped block scorer's three pairings on one hand-built group
+    of unit vectors (every cosine here clears the 0.4 threshold): "ne"
+    never pairs a vector that is both home and prober with itself and
+    emits (min, max); "directed" keeps (prober, member) = (new, old)
+    orientation even when new > old; "lt" emits only a < b, and a
+    prober-only row never receives."""
+    e1, e2, e3 = [1.0, 0.0], [0.8, 0.6], [0.6, 0.8]
+
+    def pairs(rows, pairing):
+        df = spark.createDataFrame(
+            [(0, *r) for r in rows],
+            "g int, vec_id long, embedding array<double>, member int",
+        )
+        return {
+            (r.a_id, r.b_id): r.cos_sim
+            for r in dedup._score_blocks(df, ("g",), pairing).collect()
+        }
+
+    # vector 1 is home (member) and prober at once; its self-dot is 1.0
+    ne = pairs([(1, e1, 1), (1, e1, 0), (2, e2, 0), (3, e3, 1)], "ne")
+    assert ne == {
+        (1, 3): pytest.approx(0.6),
+        (1, 2): pytest.approx(0.8),
+        (2, 3): pytest.approx(0.96),
+    }
+    directed = pairs([(3, e3, 0), (1, e1, 1), (2, e2, 1)], "directed")
+    assert directed == {(3, 1): pytest.approx(0.6), (3, 2): pytest.approx(0.96)}
+    lt = pairs(
+        [(0, e1, 0), (1, e1, 1), (2, e2, 1), (3, e3, 1), (5, e3, 0)], "lt"
+    )
+    assert set(lt) == {(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)}
+    assert all(a < b for a, b in lt)
 
 
 def test_ivf_occupancy_band_holds_at_every_edge():

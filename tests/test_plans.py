@@ -109,23 +109,19 @@ def test_dedup_embedding_cosine_lsh_is_bucketed_not_allpairs(spark):
     # bucket key; an all-pairs `a_id < b_id` BNLJ is the 100 TB killer
     # (dedup_embedding_cosine_exact keeps the quadratic CONTRACT but since
     # r13 executes it as a broadcast-matrix Arrow kernel, no join at all;
-    # only the _lsh variants are pinned here). The PRIMARY (adaptive) query localCheckpoints its signature
-    # table, truncating the visible plan — so this sweeps the FULL
-    # pre-checkpoint twin (r6 ADVICE: the BNLJ gate must not pass by
-    # invisibility): exactly ONE BroadcastNestedLoopJoin is allowed, the
-    # 1-row params broadcast that attaches the derived bit width, and the
-    # demoted fixed-plane variant stays BNLJ-free entirely.
-    from pg2parquet_spark.operators.dedup import _EMB_LSH_OFFSETS, adaptive_lsh_plan_audit
+    # only the _lsh variants are pinned here). This sweeps the PRIMARY
+    # (adaptive) query's registered plan, which since r13 is one linear
+    # pipeline with no checkpoint, so nothing is hidden from the gate (r6
+    # ADVICE: the BNLJ gate must not pass by invisibility): exactly ONE
+    # BroadcastNestedLoopJoin is allowed, the 1-row params broadcast that
+    # attaches the derived bit width, and the demoted fixed-plane variant
+    # stays BNLJ-free entirely.
+    from pg2parquet_spark.operators.dedup import _EMB_LSH_OFFSETS
 
-    full = (
-        adaptive_lsh_plan_audit(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # ONE logical 1-row broadcast; the un-checkpointed lineage duplicates
-    # that subtree into the signature table's consumers (up to 4 tables × 2
-    # join sides) — which is precisely why the registered form checkpoints.
+    full = plan_of(spark, "dedup_embedding_cosine_lsh")
+    # ONE logical 1-row broadcast; a lineage with several consumers of the
+    # signature rows would duplicate that subtree into each of them (up to
+    # 4 tables × 2 join sides in the r8-r12 candidate-join shape).
     # r7 ADVICE: pinning the EXACT duplication count coupled the test to
     # Spark's subtree-duplication behavior (CTE reuse / subquery dedup would
     # flip it with no real regression), so assert an upper bound instead and
@@ -687,20 +683,16 @@ _BNLJ_WHITELIST = {
     # the IVF recall evals left the whitelist in r13: their exact arm is
     # the Arrow kernel and the three 1-row count crossJoins collapsed into
     # ONE full-outer-join aggregate (_recall_eval_df) — no BNLJ remains
-    # 1-row params crossJoin (bits, a global COUNT aggregate) — hidden in
-    # the registered plan by localCheckpoint, so the discipline sweep audits
-    # the pre-checkpoint twin via _PLAN_AUDIT_OVERRIDES below (r6 ADVICE:
-    # whitelisted explicitly, never passed by invisibility)
+    # 1-row params crossJoin (bits, a global COUNT aggregate), visible in
+    # the registered plan: since r13 no build checkpoints its signature
+    # rows (r6 ADVICE: whitelisted explicitly, never passed by invisibility)
     "dedup_embedding_cosine_lsh",
-    # recall tier: same 1-row bits crossJoin, same checkpoint hiding —
-    # swept via its own pre-checkpoint twin (r9)
+    # recall tier: the same 1-row bits crossJoin (r9)
     "dedup_embedding_cosine_lsh_recall",
-    # same 1-row bits crossJoin as the pair build, but the audit never
-    # checkpoints, so its BNLJ is VISIBLE in the registered plan — honest
-    # crossJoin, whitelisted (the dedup_minhash_bucket_audit precedent)
+    # same 1-row bits crossJoin as the pair build — honest crossJoin,
+    # whitelisted (the dedup_minhash_bucket_audit precedent)
     "dedup_embedding_bucket_audit",
-    # same 1-row bits crossJoin, checkpoint-hidden like the pair build —
-    # swept via its pre-checkpoint twin (_plan_audit_overrides below)
+    # same 1-row bits crossJoin as the pair build
     "dedup_embedding_incremental",
     "ml_cluster_purity",          # k-row centroid table (kmeans assignment)
     "ml_kmeans_fixed",            # k-row centroid table per iteration
@@ -723,32 +715,6 @@ _BNLJ_WHITELIST = {
 }
 
 
-def _plan_audit_overrides():
-    """Queries whose REGISTERED plan is truncated (localCheckpoint cuts the
-    visible lineage): the discipline sweep and tools/plansnap.py audit the
-    full pre-checkpoint twin instead, so nothing escapes the gates by
-    invisibility."""
-    from pg2parquet_spark.operators.dedup import (
-        adaptive_lsh_plan_audit,
-        incremental_lsh_plan_audit,
-        ivf_mt4_plan_audit,
-        ivf_mt12_plan_audit,
-        ivf_plan_audit,
-        ivf_probe4_plan_audit,
-        recall_lsh_plan_audit,
-    )
-
-    return {
-        "dedup_embedding_cosine_lsh": adaptive_lsh_plan_audit,
-        "dedup_embedding_cosine_lsh_recall": recall_lsh_plan_audit,
-        "dedup_embedding_incremental": incremental_lsh_plan_audit,
-        "dedup_embedding_ivf": ivf_plan_audit,
-        "dedup_embedding_ivf_probe4": ivf_probe4_plan_audit,
-        "dedup_embedding_ivf_mt4": ivf_mt4_plan_audit,
-        "dedup_embedding_ivf_mt12": ivf_mt12_plan_audit,
-    }
-
-
 @pytest.mark.slowtier
 def test_registry_wide_plan_discipline(spark):
     """Mechanical sweep over EVERY registered query: no cartesian products,
@@ -756,15 +722,12 @@ def test_registry_wide_plan_discipline(spark):
     row-at-a-time Python (BatchEvalPython) anywhere — the only Python
     execution allowed is Arrow-batched (MapInPandas / ArrowEvalPython).
     A new operator that accidentally plans a scale-killer fails here even
-    while its values stay correct. Checkpoint-truncated queries are swept
-    through their full pre-checkpoint twin (_plan_audit_overrides)."""
+    while its values stay correct."""
     reg = load_all()
-    overrides = _plan_audit_overrides()
     offenders = {}
     stale_whitelist = set(_BNLJ_WHITELIST)
     for name, spec in reg.items():
-        fn = overrides.get(name, spec.fn)
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        plan = spec.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
         tags = []
         if "BatchEvalPython" in plan:
             tags.append("row-at-a-time-python")
@@ -841,13 +804,12 @@ def test_plan_snapshot(spark):
     import json
     import os
 
-    from tools.plansnap import SNAPSHOT, extra_plans, plan_signature
+    from tools.plansnap import SNAPSHOT, plan_signature
 
     with open(SNAPSHOT) as f:
         snap = json.load(f)
     reg = load_all()
     entries = {name: spec.fn for name, spec in reg.items()}
-    entries.update(extra_plans())
     missing = sorted(set(entries) - set(snap))
     assert not missing, f"queries missing from snapshot (rerun tools/plansnap.py): {missing}"
     drifted = {}

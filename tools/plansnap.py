@@ -48,30 +48,6 @@ def plan_signature(df) -> list[str]:
     return ops
 
 
-def extra_plans() -> dict:
-    """Audit twins snapshotted ALONGSIDE the registry: plans whose registered
-    form is truncated by localCheckpoint get their full pre-checkpoint
-    topology recorded under ``<name>#pre_checkpoint`` so a structural change
-    upstream of the checkpoint (e.g. the 1-row bit-width broadcast turning
-    into something unbounded) is caught even though the registered plan
-    cannot show it."""
-    from pg2parquet_spark.operators.dedup import (
-        adaptive_lsh_plan_audit,
-        incremental_lsh_plan_audit,
-        ivf_plan_audit,
-        ivf_probe4_plan_audit,
-        recall_lsh_plan_audit,
-    )
-
-    return {
-        "dedup_embedding_cosine_lsh#pre_checkpoint": adaptive_lsh_plan_audit,
-        "dedup_embedding_cosine_lsh_recall#pre_checkpoint": recall_lsh_plan_audit,
-        "dedup_embedding_incremental#pre_checkpoint": incremental_lsh_plan_audit,
-        "dedup_embedding_ivf#pre_checkpoint": ivf_plan_audit,
-        "dedup_embedding_ivf_probe4#pre_checkpoint": ivf_probe4_plan_audit,
-    }
-
-
 def main() -> None:
     from pg2parquet_spark.registry import load_all
     from pg2parquet_spark.session import get_spark
@@ -80,7 +56,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     snap = {}
     entries = {name: spec.fn for name, spec in load_all().items()}
-    entries.update(extra_plans())
     for name, fn in sorted(entries.items()):
         try:
             snap[name] = plan_signature(fn(spark, SF))
